@@ -34,6 +34,16 @@ Scale bounds: the long accumulator is safe while
 lineitem. Beyond that, or for hot skewed keys at 100 TB, use
 :func:`dsum_wide` (decimal(38,s) accumulator — exact at any cardinality,
 ~2.5× slower) for the few money columns that need it.
+
+The md5→integer hash lives here for the same reason. Every hash-coin,
+sketch cell and synthetic sky coordinate in the engine is an integer
+read from an md5 hex prefix, and the oracle must rebuild it bit for bit.
+So the decoding is engine-owned, not retyped per key: :func:`md5_int`
+(Spark ``conv``) and :func:`md5_int_sql` (DuckDB ``'0x'`` cast) decode
+the same hex chars ``off .. off+n-1`` of the same lowercase digest, and
+:func:`sky_radec` / :func:`sky_radec_sql` build the one synthetic sky
+catalog (RA/Dec in centi-degrees) from them. Widths stay ≤ 15 hex chars
+(60 bits), so both decode to a non-negative BIGINT.
 """
 
 from __future__ import annotations
@@ -91,3 +101,35 @@ def dsum_wide(col: Column | str, alias: str, scale: int = 4) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.sum(c.cast(f"decimal(28,{scale})")).cast("double").alias(alias)
+
+
+def md5_int(col: Column | str, off: int, n: int, dtype: str = "long") -> Column:
+    """Hex chars ``off .. off+n-1`` (1-based) of ``md5(col)`` as an integer,
+    cast to ``dtype``."""
+    assert 1 <= n <= 15, n
+    return F.conv(F.substring(F.md5(col), off, n), 16, 10).cast(dtype)
+
+
+def md5_int_sql(expr: str, off: int | str, n: int) -> str:
+    """DuckDB-side twin of :func:`md5_int`; ``off`` may be an SQL expression."""
+    assert 1 <= n <= 15, n
+    return f"CAST(('0x' || substr(md5({expr}), {off}, {n})) AS BIGINT)"
+
+
+def sky_radec(key_col: str, salt: str = "") -> tuple[Column, Column]:
+    """The synthetic sky position ``(ra_c, dec_c)`` of a catalog key, in
+    centi-degrees: RA from hex chars 1–6, Dec from hex chars 7–12 of
+    ``md5(salt || key)``. A salt draws an independent catalog."""
+    k = F.col(key_col).cast("string")
+    h = F.concat(F.lit(salt), k) if salt else k
+    return md5_int(h, 1, 6) % 36000, md5_int(h, 7, 6) % 18000 - 9000
+
+
+def sky_radec_sql(key_sql: str, salt: str = "") -> tuple[str, str]:
+    """DuckDB-side twin of :func:`sky_radec`."""
+    k = f"CAST({key_sql} AS VARCHAR)"
+    h = f"'{salt}' || {k}" if salt else k
+    return (
+        f"({md5_int_sql(h, 1, 6)} % 36000)",
+        f"({md5_int_sql(h, 7, 6)} % 18000 - 9000)",
+    )

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import fan_out, load_table
-from ..functions.exact import davg, davg_sql, dsum, dsum_sql
+from ..functions.exact import davg, davg_sql, dsum, dsum_sql, md5_int, md5_int_sql
 from ..registry import register
 
 _Q1_CUTOFF = "1998-09-02"
@@ -2406,7 +2406,7 @@ def agg_ddsketch_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: Deterministic-sketch trio (round 12): h48(x) = first-12-hex of
-#: md5(x) as a 48-bit integer — the agg_countmin_merge salted-md5
+#: md5(x) as a 48-bit integer (``md5_int(x, 1, 12)``) — the agg_countmin_merge salted-md5
 #: trick widened to 12 hex digits, so KMV/theta/HLL sketches become
 #: engine-reproducible and hash-verifiable (the CMS-promotion pattern:
 #: the rows-only `agg_approx_distinct`/`agg_hll_overlap` keys
@@ -2422,20 +2422,12 @@ _HLL_WBITS = 39       # rho domain: 38 suffix bits -> rho in [1, 39]
 _HLL_NUM = (0.7213 / (1.0 + 1.079 / 1024.0)) * float(1 << 59)
 
 
-def _h48(col):
-    """48-bit md5-prefix hash of a column — reproducible in any engine."""
-    return F.conv(
-        F.substring(F.md5(col.cast("string")), 1, 12), 16, 10
-    ).cast("long")
-
-
 @register(
     "agg_kmv_bottomk",
     oracle=f"""
 WITH hashed AS (
   SELECT DISTINCT o_orderpriority AS shard,
-         CAST(('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 12))
-              AS BIGINT) AS h
+         {md5_int_sql("CAST(o_orderkey AS VARCHAR)", 1, 12)} AS h
   FROM orders
 ),
 ranked AS (
@@ -2505,7 +2497,7 @@ def agg_kmv_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = (
         o.select(
             F.col("o_orderpriority").alias("shard"),
-            _h48(F.col("o_orderkey")).alias("h"),
+            md5_int(F.col("o_orderkey").cast("string"), 1, 12).alias("h"),
         )
         .groupBy("shard", "h")
         .agg(F.lit(1))
@@ -2573,9 +2565,8 @@ def agg_kmv_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH h AS (
   SELECT l_returnflag AS shard,
-         CAST(('0x' || substr(md5(CAST(l_orderkey AS VARCHAR) || '-' ||
-                                  CAST(l_linenumber AS VARCHAR)), 1, 12))
-              AS BIGINT) AS hv
+         {md5_int_sql("CAST(l_orderkey AS VARCHAR) || '-' || "
+                      "CAST(l_linenumber AS VARCHAR)", 1, 12)} AS hv
   FROM lineitem
 ),
 parts AS (
@@ -2693,11 +2684,13 @@ def agg_hll_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     h = dk.select(
         "shard",
-        _h48(
+        md5_int(
             F.concat(
                 F.col("l_orderkey").cast("string"), F.lit("-"),
                 F.col("l_linenumber").cast("string"),
-            )
+            ),
+            1,
+            12,
         ).alias("hv"),
     )
     parts = h.select(
@@ -2794,8 +2787,7 @@ def agg_hll_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH sides AS (
   SELECT CASE WHEN o_orderpriority = '1-URGENT' THEN 'A' ELSE 'B' END
            AS side,
-         CAST(('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 1, 12))
-              AS BIGINT) AS h,
+         {md5_int_sql("CAST(o_custkey AS VARCHAR)", 1, 12)} AS h,
          o_custkey AS k
   FROM orders
   WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')
@@ -2886,7 +2878,7 @@ def agg_theta_intersect_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("o_orderpriority") == "1-URGENT", F.lit("A"))
         .otherwise(F.lit("B"))
         .alias("side"),
-        _h48(F.col("o_custkey")).alias("h"),
+        md5_int(F.col("o_custkey").cast("string"), 1, 12).alias("h"),
         F.col("o_custkey").alias("k"),
     )
     hashed = sides.select("side", "h").distinct()

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.exact import md5_int, md5_int_sql
 from ..pipeline.dedup import _CC_ORACLE_CTES
 from ..registry import register
 
@@ -1777,9 +1778,8 @@ WITH e AS (
 ),
 kept AS (
   SELECT u, v FROM e
-  WHERE strpos('0123456789abcdef',
-               substr(md5(CAST(u AS VARCHAR) || ':' || CAST(v AS VARCHAR)
-                          || ':{_DOUL_SEED}'), 1, 1)) - 1 < {_DOUL_NUM}
+  WHERE {md5_int_sql("CAST(u AS VARCHAR) || ':' || CAST(v AS VARCHAR)"
+                     f" || ':{_DOUL_SEED}'", 1, 1)} < {_DOUL_NUM}
 ),
 tri AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS t
@@ -1821,22 +1821,17 @@ def graph_triangles_doulion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     coin = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("u").cast("string"),
-                        F.lit(":"),
-                        F.col("v").cast("string"),
-                        F.lit(f":{_DOUL_SEED}"),
-                    )
-                ),
-                1,
-                1,
+        md5_int(
+            F.concat(
+                F.col("u").cast("string"),
+                F.lit(":"),
+                F.col("v").cast("string"),
+                F.lit(f":{_DOUL_SEED}"),
             ),
-            16,
-            10,
-        ).cast("int")
+            1,
+            1,
+            dtype="int",
+        )
         < _DOUL_NUM
     )
     kept = e.where(coin)
@@ -1875,20 +1870,6 @@ _RW_SEEDS = 50
 _RW_STEPS = 3
 
 
-def _rw_hex8_duckdb(expr: str) -> str:
-    """First-8-hex-chars integer of md5(expr) (the privacy_dp_count
-    idiom, local copy so graph.py stays dependency-free)."""
-    return (
-        "("
-        + " + ".join(
-            f"(strpos('0123456789abcdef', substr(md5({expr}), {i + 1}, 1)) - 1)"
-            f" * {16 ** (7 - i)}"
-            for i in range(8)
-        )
-        + ")"
-    )
-
-
 @register(
     "graph_random_walks",
     oracle=f"""
@@ -1912,17 +1893,17 @@ seeds AS (
 s1 AS (
   SELECT s.n0, a.nbr AS n1 FROM seeds s
   JOIN adj a ON a.node = s.n0
-   AND a.rn = 1 + ({_rw_hex8_duckdb(f"CAST(s.n0 AS VARCHAR) || ':0:{_RW_SEED}'")} % a.deg)
+   AND a.rn = 1 + ({md5_int_sql(f"CAST(s.n0 AS VARCHAR) || ':0:{_RW_SEED}'", 1, 8)} % a.deg)
 ),
 s2 AS (
   SELECT s.n0, s.n1, a.nbr AS n2 FROM s1 s
   JOIN adj a ON a.node = s.n1
-   AND a.rn = 1 + ({_rw_hex8_duckdb(f"CAST(s.n1 AS VARCHAR) || ':1:{_RW_SEED}'")} % a.deg)
+   AND a.rn = 1 + ({md5_int_sql(f"CAST(s.n1 AS VARCHAR) || ':1:{_RW_SEED}'", 1, 8)} % a.deg)
 ),
 s3 AS (
   SELECT s.n0, s.n1, s.n2, a.nbr AS n3 FROM s2 s
   JOIN adj a ON a.node = s.n2
-   AND a.rn = 1 + ({_rw_hex8_duckdb(f"CAST(s.n2 AS VARCHAR) || ':2:{_RW_SEED}'")} % a.deg)
+   AND a.rn = 1 + ({md5_int_sql(f"CAST(s.n2 AS VARCHAR) || ':2:{_RW_SEED}'", 1, 8)} % a.deg)
 )
 SELECT n0, n1, n2, n3 FROM s3 ORDER BY n0
 """,
@@ -1967,20 +1948,9 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     for step in range(_RW_STEPS):
         prev = f"n{step}"
-        coin = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col(prev).cast("string"),
-                        F.lit(f":{step}:{_RW_SEED}"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        coin = md5_int(
+            F.concat(F.col(prev).cast("string"), F.lit(f":{step}:{_RW_SEED}")), 1, 8
+        )
         a = adj.select(
             F.col("node").alias("__node"),
             F.col("nbr").alias(f"n{step + 1}"),

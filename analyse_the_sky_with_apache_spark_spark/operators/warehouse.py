@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.exact import md5_int, md5_int_sql
 from ..registry import register
 
 
@@ -676,9 +677,8 @@ _CM_D, _CM_W = 4, 256
     oracle=f"""
 WITH rows_x_hashes AS (
   SELECT j,
-         CAST(('0x' || substr(md5(CAST(l_partkey AS VARCHAR) || '-' ||
-                                  CAST(j AS VARCHAR)), 1, 6)) AS BIGINT)
-           % {_CM_W} AS cell
+         {md5_int_sql("CAST(l_partkey AS VARCHAR) || '-' || CAST(j AS VARCHAR)",
+                      1, 6)} % {_CM_W} AS cell
   FROM lineitem, LATERAL unnest(generate_series(0, {_CM_D - 1})) t(j)
 )
 SELECT CAST(j AS BIGINT) AS j, cell, CAST(COUNT(*) AS BIGINT) AS cnt
@@ -708,23 +708,12 @@ def agg_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(
             F.array(
                 *[
-                    (
-                        F.conv(
-                            F.substring(
-                                F.md5(
-                                    F.concat(
-                                        F.col("l_partkey").cast("string"),
-                                        F.lit(f"-{j}"),
-                                    )
-                                ),
-                                1,
-                                6,
-                            ),
-                            16,
-                            10,
-                        ).cast("long")
-                        % _CM_W
+                    md5_int(
+                        F.concat(F.col("l_partkey").cast("string"), F.lit(f"-{j}")),
+                        1,
+                        6,
                     )
+                    % _CM_W
                     for j in range(_CM_D)
                 ]
             )
@@ -2016,28 +2005,13 @@ def interval_allen_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CMM_PROBE_MOD = 100
 
 
-def _cm_cell(key_col, j: int):
-    """The agg_countmin hash: cell_j(key) = first-6-hex-digits of
-    md5(key || '-' || j) mod w — reproducible in any engine."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(key_col.cast("string"), F.lit(f"-{j}"))),
-                1, 6,
-            ),
-            16, 10,
-        ).cast("long") % _CM_W
-    )
-
-
 @register(
     "agg_countmin_merge",
     oracle=f"""
 WITH matrix AS (
   SELECT j,
-         CAST(('0x' || substr(md5(CAST(l_partkey AS VARCHAR) || '-' ||
-                                  CAST(j AS VARCHAR)), 1, 6)) AS BIGINT)
-           % {_CM_W} AS cell,
+         {md5_int_sql("CAST(l_partkey AS VARCHAR) || '-' || CAST(j AS VARCHAR)",
+                      1, 6)} % {_CM_W} AS cell,
          CAST(COUNT(*) AS BIGINT) AS cnt
   FROM lineitem, LATERAL unnest(generate_series(0, {_CM_D - 1})) t(j)
   GROUP BY 1, 2
@@ -2048,9 +2022,8 @@ probes AS (
 ),
 probe_cells AS (
   SELECT k, j,
-         CAST(('0x' || substr(md5(CAST(k AS VARCHAR) || '-' ||
-                                  CAST(j AS VARCHAR)), 1, 6)) AS BIGINT)
-           % {_CM_W} AS cell
+         {md5_int_sql("CAST(k AS VARCHAR) || '-' || CAST(j AS VARCHAR)",
+                      1, 6)} % {_CM_W} AS cell
   FROM probes, LATERAL unnest(generate_series(0, {_CM_D - 1})) t(j)
 ),
 est AS (
@@ -2095,7 +2068,11 @@ def agg_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded = li.select(
         "l_returnflag",
         F.posexplode(
-            F.array(*[_cm_cell(F.col("l_partkey"), j) for j in range(_CM_D)])
+            F.array(*[
+                md5_int(F.concat(F.col("l_partkey").cast("string"), F.lit(f"-{j}")),
+                        1, 6) % _CM_W
+                for j in range(_CM_D)
+            ])
         ).alias("j", "cell"),
     )
     per_mode = exploded.groupBy(
@@ -2117,7 +2094,11 @@ def agg_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe_cells = probes.select(
         "k",
         F.posexplode(
-            F.array(*[_cm_cell(F.col("k"), j) for j in range(_CM_D)])
+            F.array(*[
+                md5_int(F.concat(F.col("k").cast("string"), F.lit(f"-{j}")), 1, 6)
+                % _CM_W
+                for j in range(_CM_D)
+            ])
         ).alias("j", "cell"),
     ).select("k", F.col("j").cast("long").alias("j"), "cell")
     est = (

@@ -32,7 +32,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.exact import md5_int, md5_int_sql, sky_radec, sky_radec_sql
 from ..registry import register
+
+#: The synthetic sky catalogs of the oracle SQL (centi-degrees): the
+#: customer sky, the supplier sky, and the salted 's'/'r' draws.
+_RA_SQL, _DEC_SQL = sky_radec_sql("c_custkey")
+_S_RA_SQL, _S_DEC_SQL = sky_radec_sql("s_suppkey")
+_SS_RA_SQL, _SS_DEC_SQL = sky_radec_sql("s_suppkey", salt="s")
+_R_RA_SQL, _R_DEC_SQL = sky_radec_sql("c_custkey", salt="r")
 
 #: band half-width in cents: match |c_acctbal - s_acctbal| <= 1.00.
 _EPS_CENTS = 100
@@ -315,10 +323,8 @@ ROUND(2*ASIN(SQRT(
     oracle=f"""
 WITH cat AS (
   SELECT c_custkey AS obj_id,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6)) AS BIGINT)
-           % 36000 AS ra_c,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 7, 6)) AS BIGINT)
-           % 18000 - 9000 AS dec_c
+         {_RA_SQL} AS ra_c,
+         {_DEC_SQL} AS dec_c
   FROM customer
 )
 SELECT a.obj_id AS ia, b.obj_id AS ib,
@@ -354,13 +360,11 @@ def xmatch_sphere(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: shuffle on cell id, AQE splits dense sky cells.
     """
     c = load_table(spark, sf_dir, "customer")
-    h = F.md5(F.col("c_custkey").cast("string"))
+    ra, dec = sky_radec("c_custkey")
     base = c.select(
         F.col("c_custkey").alias("obj_id"),
-        (F.conv(F.substring(h, 1, 6), 16, 10).cast("long") % 36000).alias("ra_c"),
-        (F.conv(F.substring(h, 7, 6), 16, 10).cast("long") % 18000 - 9000).alias(
-            "dec_c"
-        ),
+        ra.alias("ra_c"),
+        dec.alias("dec_c"),
     )
     return sphere_match(base)
 
@@ -432,10 +436,8 @@ ROUND(2*ASIN(SQRT(
     oracle=f"""
 WITH cat AS (
   SELECT c_custkey AS obj_id,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6)) AS BIGINT)
-           % 36000 AS ra_c,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 7, 6)) AS BIGINT)
-           % 18000 - 9000 AS dec_c
+         {_RA_SQL} AS ra_c,
+         {_DEC_SQL} AS dec_c
   FROM customer
 )
 SELECT obj_id, ra_c, dec_c, {_CONE_DIST} AS dist_rad
@@ -465,13 +467,11 @@ def cone_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the cone — the relational form of a HEALPix index lookup.
     """
     c = load_table(spark, sf_dir, "customer")
-    h = F.md5(F.col("c_custkey").cast("string"))
+    ra, dec = sky_radec("c_custkey")
     cat = c.select(
         F.col("c_custkey").alias("obj_id"),
-        (F.conv(F.substring(h, 1, 6), 16, 10).cast("long") % 36000).alias("ra_c"),
-        (F.conv(F.substring(h, 7, 6), 16, 10).cast("long") % 18000 - 9000).alias(
-            "dec_c"
-        ),
+        ra.alias("ra_c"),
+        dec.alias("dec_c"),
     )
     return cone_filter(cat)
 
@@ -642,12 +642,10 @@ _PIX_LEVELS = 3
 
 @register(
     "sky_pixel_rollup",
-    oracle="""
+    oracle=f"""
 WITH cat AS (
-  SELECT CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6)) AS BIGINT)
-           % 36000 AS ra_c,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 7, 6)) AS BIGINT)
-           % 18000 - 9000 AS dec_c
+  SELECT {_RA_SQL} AS ra_c,
+         {_DEC_SQL} AS dec_c
   FROM customer
 ), fine AS (
   SELECT (ra_c * 8) // 36000 AS x, ((dec_c + 9000) * 8) // 18000 AS y,
@@ -679,12 +677,10 @@ def sky_pixel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     COUNT's trivial merge in place of sketch union.
     """
     c = load_table(spark, sf_dir, "customer")
-    h = F.md5(F.col("c_custkey").cast("string"))
+    ra, dec = sky_radec("c_custkey")
     cat = c.select(
-        (F.conv(F.substring(h, 1, 6), 16, 10).cast("long") % 36000).alias("ra_c"),
-        (F.conv(F.substring(h, 7, 6), 16, 10).cast("long") % 18000 - 9000).alias(
-            "dec_c"
-        ),
+        ra.alias("ra_c"),
+        dec.alias("dec_c"),
     )
     fine = (
         cat.select(
@@ -826,14 +822,10 @@ _EPOCH_OFF = 10_000_000
     oracle=f"""
 WITH cat AS (
   SELECT c_custkey AS obj_id,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6)) AS BIGINT)
-           % 36000 AS ra_c,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 7, 6)) AS BIGINT)
-           % 18000 - 9000 AS dec_c,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 13, 4)) AS BIGINT)
-           % 81 - 40 AS pm_ra,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 17, 4)) AS BIGINT)
-           % 81 - 40 AS pm_dec
+         {_RA_SQL} AS ra_c,
+         {_DEC_SQL} AS dec_c,
+         {md5_int_sql("CAST(c_custkey AS VARCHAR)", 13, 4)} % 81 - 40 AS pm_ra,
+         {md5_int_sql("CAST(c_custkey AS VARCHAR)", 17, 4)} % 81 - 40 AS pm_dec
   FROM customer
 ), e1 AS (
   SELECT obj_id, ((ra_c + pm_ra) % 36000 + 36000) % 36000 AS ra_c,
@@ -872,19 +864,14 @@ def xmatch_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
     HEALPix note).
     """
     c = load_table(spark, sf_dir, "customer")
-    h = F.md5(F.col("c_custkey").cast("string"))
+    ra, dec = sky_radec("c_custkey")
+    key = F.col("c_custkey").cast("string")
     cat = c.select(
         F.col("c_custkey").alias("obj_id"),
-        (F.conv(F.substring(h, 1, 6), 16, 10).cast("long") % 36000).alias("ra_c"),
-        (F.conv(F.substring(h, 7, 6), 16, 10).cast("long") % 18000 - 9000).alias(
-            "dec_c"
-        ),
-        (F.conv(F.substring(h, 13, 4), 16, 10).cast("long") % 81 - 40).alias(
-            "pm_ra"
-        ),
-        (F.conv(F.substring(h, 17, 4), 16, 10).cast("long") % 81 - 40).alias(
-            "pm_dec"
-        ),
+        ra.alias("ra_c"),
+        dec.alias("dec_c"),
+        (md5_int(key, 13, 4) % 81 - 40).alias("pm_ra"),
+        (md5_int(key, 17, 4) % 81 - 40).alias("pm_dec"),
     )
     e0 = cat.select("obj_id", "ra_c", "dec_c")
     e1 = cat.select(
@@ -984,10 +971,8 @@ def lightcurve_sigma_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH cat AS (
   SELECT c_custkey AS obj_id,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6)) AS BIGINT)
-           % 36000 AS ra_c,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 7, 6)) AS BIGINT)
-           % 18000 - 9000 AS dec_c
+         {_RA_SQL} AS ra_c,
+         {_DEC_SQL} AS dec_c
   FROM customer
 )
 SELECT a.obj_id, CAST(COUNT(b.obj_id) AS BIGINT) AS n_neighbors
@@ -1011,13 +996,11 @@ def xmatch_neighbor_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     the object id.
     """
     c = load_table(spark, sf_dir, "customer")
-    h = F.md5(F.col("c_custkey").cast("string"))
+    ra, dec = sky_radec("c_custkey")
     base = c.select(
         F.col("c_custkey").alias("obj_id"),
-        (F.conv(F.substring(h, 1, 6), 16, 10).cast("long") % 36000).alias("ra_c"),
-        (F.conv(F.substring(h, 7, 6), 16, 10).cast("long") % 18000 - 9000).alias(
-            "dec_c"
-        ),
+        ra.alias("ra_c"),
+        dec.alias("dec_c"),
     )
     pairs = sphere_match(base)
     ends = pairs.select(F.col("ia").alias("obj_id")).unionAll(
@@ -1104,12 +1087,9 @@ def lightcurve_structure_function(spark: SparkSession, sf_dir: str) -> DataFrame
     oracle=f"""
 WITH cat AS (
   SELECT c_custkey AS obj_id,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6)) AS BIGINT)
-           % 36000 AS ra_c,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 7, 6)) AS BIGINT)
-           % 18000 - 9000 AS dec_c,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 21, 3)) AS BIGINT)
-           % 10 + 12 AS mag_bin
+         {_RA_SQL} AS ra_c,
+         {_DEC_SQL} AS dec_c,
+         {md5_int_sql("CAST(c_custkey AS VARCHAR)", 21, 3)} % 10 + 12 AS mag_bin
   FROM customer
 ), matched AS (
   SELECT DISTINCT a.obj_id
@@ -1139,16 +1119,13 @@ def xmatch_completeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     coordinates, so both engines bin identically.
     """
     c = load_table(spark, sf_dir, "customer")
-    h = F.md5(F.col("c_custkey").cast("string"))
+    ra, dec = sky_radec("c_custkey")
+    key = F.col("c_custkey").cast("string")
     cat = c.select(
         F.col("c_custkey").alias("obj_id"),
-        (F.conv(F.substring(h, 1, 6), 16, 10).cast("long") % 36000).alias("ra_c"),
-        (F.conv(F.substring(h, 7, 6), 16, 10).cast("long") % 18000 - 9000).alias(
-            "dec_c"
-        ),
-        (F.conv(F.substring(h, 21, 3), 16, 10).cast("long") % 10 + 12).alias(
-            "mag_bin"
-        ),
+        ra.alias("ra_c"),
+        dec.alias("dec_c"),
+        (md5_int(key, 21, 3) % 10 + 12).alias("mag_bin"),
     )
     pairs = sphere_match(cat.select("obj_id", "ra_c", "dec_c"))
     matched = (
@@ -1875,17 +1852,13 @@ _MASK_BAND = 3000
     oracle=f"""
 WITH c AS MATERIALIZED (
   SELECT c_custkey AS k,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6))
-              AS BIGINT) % 36000 AS ra,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 7, 6))
-              AS BIGINT) % 18000 - 9000 AS dec
+         {_RA_SQL} AS ra,
+         {_DEC_SQL} AS dec
   FROM customer
 ),
 m AS MATERIALIZED (
-  SELECT CAST(('0x' || substr(md5(CAST(s_suppkey AS VARCHAR)), 1, 6))
-              AS BIGINT) % 36000 AS ra,
-         CAST(('0x' || substr(md5(CAST(s_suppkey AS VARCHAR)), 7, 6))
-              AS BIGINT) % 18000 - 9000 AS dec
+  SELECT {_S_RA_SQL} AS ra,
+         {_S_DEC_SQL} AS dec
   FROM supplier
 ),
 flag AS MATERIALIZED (
@@ -1930,22 +1903,11 @@ def xmatch_mask_exclusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate with EXISTS — banding must change nothing but cost.
     """
     c = load_table(spark, sf_dir, "customer")
-    hex6c = lambda off: F.conv(
-        F.substring(F.md5(F.col("c_custkey").cast("string")), off, 6), 16, 10
-    ).cast("long")
-    obj = c.select(
-        F.col("c_custkey").alias("k"),
-        (hex6c(1) % 36000).alias("ra"),
-        (hex6c(7) % 18000 - 9000).alias("dec"),
-    )
+    ra, dec = sky_radec("c_custkey")
+    obj = c.select(F.col("c_custkey").alias("k"), ra.alias("ra"), dec.alias("dec"))
     s = load_table(spark, sf_dir, "supplier")
-    hex6s = lambda off: F.conv(
-        F.substring(F.md5(F.col("s_suppkey").cast("string")), off, 6), 16, 10
-    ).cast("long")
-    mask = s.select(
-        (hex6s(1) % 36000).alias("m_ra"),
-        (hex6s(7) % 18000 - 9000).alias("m_dec"),
-    )
+    m_ra, m_dec = sky_radec("s_suppkey")
+    mask = s.select(m_ra.alias("m_ra"), m_dec.alias("m_dec"))
     mask9 = mask.select(
         "m_ra",
         "m_dec",
@@ -3368,10 +3330,8 @@ ROUND((CAST({_GAL_L_NCP} AS DOUBLE) - DEGREES(ATAN2(
     oracle=f"""
 WITH cat AS (
   SELECT c_custkey AS obj_id,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6))
-              AS BIGINT) % 36000 AS ra_c,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 7, 6))
-              AS BIGINT) % 18000 - 9000 AS dec_c
+         {_RA_SQL} AS ra_c,
+         {_DEC_SQL} AS dec_c
   FROM customer
 ),
 gal AS (
@@ -3410,13 +3370,11 @@ def sky_galactic_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged.
     """
     c = load_table(spark, sf_dir, "customer")
-    h = F.md5(F.col("c_custkey").cast("string"))
+    ra, dec = sky_radec("c_custkey")
     cat = c.select(
         F.col("c_custkey").alias("obj_id"),
-        (F.conv(F.substring(h, 1, 6), 16, 10).cast("long") % 36000)
-        .alias("ra_c"),
-        (F.conv(F.substring(h, 7, 6), 16, 10).cast("long") % 18000 - 9000)
-        .alias("dec_c"),
+        ra.alias("ra_c"),
+        dec.alias("dec_c"),
     )
     gal = cat.select(
         "obj_id", "ra_c", "dec_c",
@@ -3440,10 +3398,8 @@ _TRK_CELL = 8
     oracle=f"""
 WITH cat AS (
   SELECT c_custkey AS obj_id,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6))
-              AS BIGINT) % 36000 AS ra0,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 7, 6))
-              AS BIGINT) % 18000 - 9000 AS dec0,
+         {_RA_SQL} AS ra0,
+         {_DEC_SQL} AS dec0,
          CASE WHEN c_custkey % 20 = 0
               THEN (c_custkey % 7) - 3 ELSE 0 END AS vra,
          CASE WHEN c_custkey % 20 = 0
@@ -3516,12 +3472,10 @@ def sky_tracklet_link(spark: SparkSession, sf_dir: str) -> DataFrame:
     `sphere_match`'s ring cells).
     """
     c = load_table(spark, sf_dir, "customer")
-    h = F.md5(F.col("c_custkey").cast("string"))
+    ra, dec = sky_radec("c_custkey")
     cat = c.select(
-        (F.conv(F.substring(h, 1, 6), 16, 10).cast("long") % 36000)
-        .alias("ra0"),
-        (F.conv(F.substring(h, 7, 6), 16, 10).cast("long") % 18000 - 9000)
-        .alias("dec0"),
+        ra.alias("ra0"),
+        dec.alias("dec0"),
         F.when(F.col("c_custkey") % 20 == 0, F.col("c_custkey") % 7 - 3)
         .otherwise(0).alias("vra"),
         F.when(F.col("c_custkey") % 20 == 0, F.col("c_custkey") % 5 - 2)
@@ -3655,10 +3609,8 @@ def _hpx_sql_oracle() -> str:
     return f"""
 WITH cat AS (
   SELECT c_custkey AS obj_id,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6))
-              AS BIGINT) % 36000 AS ra_c,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 7, 6))
-              AS BIGINT) % 18000 - 9000 AS dec_c
+         {_RA_SQL} AS ra_c,
+         {_DEC_SQL} AS dec_c
   FROM customer),
 z AS (
   SELECT obj_id, ra_c, dec_c, {z9} AS z9 FROM cat),
@@ -3697,13 +3649,11 @@ def sky_healpix_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     replication stays 3×3 in (ring, intra-ring) space.
     """
     c = load_table(spark, sf_dir, "customer")
-    h = F.md5(F.col("c_custkey").cast("string"))
+    ra, dec = sky_radec("c_custkey")
     cat = c.select(
         F.col("c_custkey").alias("obj_id"),
-        (F.conv(F.substring(h, 1, 6), 16, 10).cast("long") % 36000)
-        .alias("ra_c"),
-        (F.conv(F.substring(h, 7, 6), 16, 10).cast("long") % 18000 - 9000)
-        .alias("dec_c"),
+        ra.alias("ra_c"),
+        dec.alias("dec_c"),
     )
     z = cat.select(
         "obj_id", "ra_c",
@@ -3742,10 +3692,8 @@ def _tpt_bin_expr(dist_col: str) -> str:
     oracle=f"""
 WITH cat AS (
   SELECT c_custkey AS obj_id,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6))
-              AS BIGINT) % 36000 AS ra_c,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 7, 6))
-              AS BIGINT) % 18000 - 9000 AS dec_c
+         {_RA_SQL} AS ra_c,
+         {_DEC_SQL} AS dec_c
   FROM customer),
 pairs AS (
   SELECT {_SPH_HAVERSINE.replace("a_dec_c", "a.dec_c").replace("b_dec_c", "b.dec_c")
@@ -3785,13 +3733,11 @@ def sky_two_point_dd(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-point codes distribute this exact shape.
     """
     c = load_table(spark, sf_dir, "customer")
-    h = F.md5(F.col("c_custkey").cast("string"))
+    ra, dec = sky_radec("c_custkey")
     base = c.select(
         F.col("c_custkey").alias("obj_id"),
-        (F.conv(F.substring(h, 1, 6), 16, 10).cast("long") % 36000)
-        .alias("ra_c"),
-        (F.conv(F.substring(h, 7, 6), 16, 10).cast("long") % 18000 - 9000)
-        .alias("dec_c"),
+        ra.alias("ra_c"),
+        dec.alias("dec_c"),
     )
     pairs = sphere_match(base)
     return (
@@ -4000,17 +3946,13 @@ _CATM_ECHO_OFF = 50_000_000
 def _catm_detections_sql() -> str:
     return f"""
   SELECT c_custkey AS det_id,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6))
-              AS BIGINT) % 36000 AS ra_c,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 7, 6))
-              AS BIGINT) % 18000 - 9000 AS dec_c
+         {_RA_SQL} AS ra_c,
+         {_DEC_SQL} AS dec_c
   FROM customer
   UNION ALL
   SELECT c_custkey + {_CATM_ECHO_OFF},
-         (CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6))
-               AS BIGINT) % 36000 + 1) % 36000,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 7, 6))
-              AS BIGINT) % 18000 - 9000 - 1
+         ({_RA_SQL} + 1) % 36000,
+         {_DEC_SQL} - 1
   FROM customer WHERE c_custkey % 3 = 0
 """
 
@@ -4071,9 +4013,7 @@ def sky_catalog_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     coordinate sums <= n_det·36000 — trivial.
     """
     c = load_table(spark, sf_dir, "customer")
-    h = F.md5(F.col("c_custkey").cast("string"))
-    ra = F.conv(F.substring(h, 1, 6), 16, 10).cast("long") % 36000
-    dec = F.conv(F.substring(h, 7, 6), 16, 10).cast("long") % 18000 - 9000
+    ra, dec = sky_radec("c_custkey")
     base = c.select(
         F.col("c_custkey").alias("det_id"),
         ra.alias("ra_c"), dec.alias("dec_c"),
@@ -4145,10 +4085,8 @@ _EPR_CELLS = _SPH_CIRCLE // _EPR_EPS
 def _epr_cat_sql() -> str:
     return f"""
   SELECT c_custkey AS obj_id,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6))
-              AS BIGINT) % 36000 AS ra0,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 7, 6))
-              AS BIGINT) % 18000 - 9000 AS dec0,
+         {_RA_SQL} AS ra0,
+         {_DEC_SQL} AS dec0,
          CASE WHEN c_custkey % 20 = 0
               THEN (c_custkey % 7) - 3 ELSE 0 END AS vra,
          CASE WHEN c_custkey % 20 = 0
@@ -4229,13 +4167,11 @@ def xmatch_epoch_propagate(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection — at survey scale it fuses into the scan.
     """
     c = load_table(spark, sf_dir, "customer")
-    h = F.md5(F.col("c_custkey").cast("string"))
+    ra, dec = sky_radec("c_custkey")
     cat = c.select(
         F.col("c_custkey").alias("obj_id"),
-        (F.conv(F.substring(h, 1, 6), 16, 10).cast("long") % 36000)
-        .alias("ra0"),
-        (F.conv(F.substring(h, 7, 6), 16, 10).cast("long") % 18000 - 9000)
-        .alias("dec0"),
+        ra.alias("ra0"),
+        dec.alias("dec0"),
         F.when(F.col("c_custkey") % 20 == 0, F.col("c_custkey") % 7 - 3)
         .otherwise(0).cast("long").alias("vra"),
         F.when(F.col("c_custkey") % 20 == 0, F.col("c_custkey") % 5 - 2)
@@ -4421,8 +4357,7 @@ _OBS_MIN_ALT_C = 3000
     oracle=f"""
 WITH cat AS (
   SELECT c_custkey AS obj_id,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 7, 6))
-              AS BIGINT) % 18000 - 9000 AS dec_c
+         {_DEC_SQL} AS dec_c
   FROM customer
 ),
 alt AS (
@@ -4462,11 +4397,10 @@ def sky_observability(spark: SparkSession, sf_dir: str) -> DataFrame:
     with real hour angles) adds trig columns to the same scan.
     """
     c = load_table(spark, sf_dir, "customer")
-    h = F.md5(F.col("c_custkey").cast("string"))
+    _, dec = sky_radec("c_custkey")
     cat = c.select(
         F.col("c_custkey").alias("obj_id"),
-        (F.conv(F.substring(h, 7, 6), 16, 10).cast("long") % 18000 - 9000)
-        .alias("dec_c"),
+        dec.alias("dec_c"),
     )
     alt = cat.select(
         "obj_id", "dec_c",
@@ -4494,18 +4428,14 @@ def sky_observability(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH cat AS (
   SELECT c_custkey AS obj_id,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6))
-              AS BIGINT) % 36000 AS ra_c,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 7, 6))
-              AS BIGINT) % 18000 - 9000 AS dec_c
+         {_RA_SQL} AS ra_c,
+         {_DEC_SQL} AS dec_c
   FROM customer
 ),
 b AS (
   SELECT s_suppkey AS b_id,
-         CAST(('0x' || substr(md5('s' || CAST(s_suppkey AS VARCHAR)), 1, 6))
-              AS BIGINT) % 36000 AS ra_c,
-         CAST(('0x' || substr(md5('s' || CAST(s_suppkey AS VARCHAR)), 7, 6))
-              AS BIGINT) % 18000 - 9000 AS dec_c
+         {_SS_RA_SQL} AS ra_c,
+         {_SS_DEC_SQL} AS dec_c
   FROM supplier
 ),
 cand AS (
@@ -4545,34 +4475,32 @@ def xmatch_mutual_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mutual filter breaks exactly those many-to-one chains, which
     the fixture genuinely contains (pinned in tests).
 
-    The candidate search is the binned 3×3 mod-ring cell join; both
+    The candidate search is the binned 3×3 mod-ring cell join. Both
     argmin directions are ROW_NUMBER windows over the SAME candidate
-    table tie-broken by (d², partner id) on exact integer squared
-    distances (box metric on centi-degree coords with circular RA);
-    the mutual filter is one equi-join of the two 1-row-per-object
-    winners.
+    rows, tie-broken by (d², partner id) on exact integer squared
+    distances (box metric on centi-degree coords with circular RA):
+    ``rn_a`` partitions by a_id, ``rn_b`` by b_id. A pair is mutual
+    nearest iff it ranks first in both directions, so the mutual
+    filter is ``rn_a == 1 AND rn_b == 1`` on one lineage — no join
+    reconciles two winner tables.
 
-    100-TB posture: candidates shuffle on cell id; both windows and
-    the final join key on object ids — three exchanges total,
-    candidate-sized, never all-pairs. d² <= 2·200² — trivial ints.
+    100-TB posture: candidates shuffle on cell id; the two windows add
+    one exchange each, keyed on an object id — candidate-sized, never
+    all-pairs. d² <= 2·200² — trivial ints.
     """
     c = load_table(spark, sf_dir, "customer")
-    hc = F.md5(F.col("c_custkey").cast("string"))
+    c_ra, c_dec = sky_radec("c_custkey")
     cat = c.select(
         F.col("c_custkey").alias("a_id"),
-        (F.conv(F.substring(hc, 1, 6), 16, 10).cast("long") % 36000)
-        .alias("ra_c"),
-        (F.conv(F.substring(hc, 7, 6), 16, 10).cast("long") % 18000 - 9000)
-        .alias("dec_c"),
+        c_ra.alias("ra_c"),
+        c_dec.alias("dec_c"),
     )
     s = load_table(spark, sf_dir, "supplier")
-    hs = F.md5(F.concat(F.lit("s"), F.col("s_suppkey").cast("string")))
+    s_ra, s_dec = sky_radec("s_suppkey", salt="s")
     bcat = s.select(
         F.col("s_suppkey").alias("b_id"),
-        (F.conv(F.substring(hs, 1, 6), 16, 10).cast("long") % 36000)
-        .alias("ra_c"),
-        (F.conv(F.substring(hs, 7, 6), 16, 10).cast("long") % 18000 - 9000)
-        .alias("dec_c"),
+        s_ra.alias("ra_c"),
+        s_dec.alias("dec_c"),
     )
     eps, ncell = _SPH_EPS, _SPH_RA_CELLS
     a = cat.select(
@@ -4636,16 +4564,15 @@ _INJ_BIN_C = 50
     oracle=f"""
 WITH inj AS (
   SELECT c_custkey AS src_id,
-         {_INJ_MAG_LO_C} + CAST(('0x' || substr(
-             md5(CAST(c_custkey AS VARCHAR)), 13, 6)) AS BIGINT)
+         {_INJ_MAG_LO_C} + {md5_int_sql("CAST(c_custkey AS VARCHAR)", 13, 6)}
            % {_INJ_MAG_HI_C - _INJ_MAG_LO_C} AS mag_c
   FROM customer
 ),
 det AS (
   SELECT src_id, mag_c, (mag_c - {_INJ_MAG_LO_C}) // {_INJ_BIN_C} AS bin,
-         CASE WHEN mag_c * 10 + CAST(('0x' || substr(
-                  md5('n' || CAST(src_id AS VARCHAR)), 1, 6)) AS BIGINT)
-                  % 4000 - 2000 < 21500
+         CASE WHEN mag_c * 10
+                   + {md5_int_sql("'n' || CAST(src_id AS VARCHAR)", 1, 6)} % 4000
+                   - 2000 < 21500
               THEN 1 ELSE 0 END AS recovered
   FROM inj
 ),
@@ -4687,22 +4614,22 @@ def sky_injection_completeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     the groupBy key extends to (tile, bin) with the same plan.
     """
     c = load_table(spark, sf_dir, "customer")
-    h = F.md5(F.col("c_custkey").cast("string"))
+    key = F.col("c_custkey").cast("string")
     inj = c.select(
         F.col("c_custkey").alias("src_id"),
         (
             F.lit(_INJ_MAG_LO_C)
-            + F.conv(F.substring(h, 13, 6), 16, 10).cast("long")
+            + md5_int(key, 13, 6)
             % (_INJ_MAG_HI_C - _INJ_MAG_LO_C)
         ).alias("mag_c"),
     )
-    hn = F.md5(F.concat(F.lit("n"), F.col("src_id").cast("string")))
+    hn_key = F.concat(F.lit("n"), F.col("src_id").cast("string"))
     det = inj.select(
         "src_id", "mag_c",
         F.expr(f"(mag_c - {_INJ_MAG_LO_C}) div {_INJ_BIN_C}").alias("bin"),
         F.when(
             F.col("mag_c") * 10
-            + F.conv(F.substring(hn, 1, 6), 16, 10).cast("long") % 4000
+            + md5_int(hn_key, 1, 6) % 4000
             - 2000
             < 21500,
             1,
@@ -4756,17 +4683,13 @@ def _tpt_pairs_sql(a_src: str, b_src: str, self_pair: bool) -> str:
     oracle=f"""
 WITH dcat AS (
   SELECT c_custkey AS obj_id,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6))
-              AS BIGINT) % 36000 AS ra_c,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 7, 6))
-              AS BIGINT) % 18000 - 9000 AS dec_c
+         {_RA_SQL} AS ra_c,
+         {_DEC_SQL} AS dec_c
   FROM customer),
 rcat AS (
   SELECT c_custkey AS obj_id,
-         CAST(('0x' || substr(md5('r' || CAST(c_custkey AS VARCHAR)), 1, 6))
-              AS BIGINT) % 36000 AS ra_c,
-         CAST(('0x' || substr(md5('r' || CAST(c_custkey AS VARCHAR)), 7, 6))
-              AS BIGINT) % 18000 - 9000 AS dec_c
+         {_R_RA_SQL} AS ra_c,
+         {_R_DEC_SQL} AS dec_c
   FROM customer),
 dd AS ({_tpt_pairs_sql("dcat", "dcat", True)}),
 dr AS ({_tpt_pairs_sql("dcat", "rcat", False)}),
@@ -4824,15 +4747,9 @@ def sky_two_point_landy_szalay(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
 
     def cat(salt: str) -> DataFrame:
-        h = F.md5(
-            F.concat(F.lit(salt), F.col("c_custkey").cast("string"))
-        ) if salt else F.md5(F.col("c_custkey").cast("string"))
+        ra, dec = sky_radec("c_custkey", salt=salt)
         return c.select(
-            F.col("c_custkey").alias("obj_id"),
-            (F.conv(F.substring(h, 1, 6), 16, 10).cast("long") % 36000)
-            .alias("ra_c"),
-            (F.conv(F.substring(h, 7, 6), 16, 10).cast("long")
-             % 18000 - 9000).alias("dec_c"),
+            F.col("c_custkey").alias("obj_id"), ra.alias("ra_c"), dec.alias("dec_c")
         )
 
     dcat = cat("").localCheckpoint(eager=True)

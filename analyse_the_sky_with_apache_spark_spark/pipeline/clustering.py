@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.exact import md5_int, md5_int_sql, sky_radec, sky_radec_sql
 from ..registry import register
 
 _K = 10
@@ -710,16 +711,14 @@ def ml_linreg_normal(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: grid-density clustering: cell edge (centi-degrees) and max CC rounds.
 _GRID_CELL = 1200
 _GRID_MAX_ITERS = 12
+_GRID_RA_SQL, _GRID_DEC_SQL = sky_radec_sql("c_custkey")
 
 
 @register(
     "cluster_grid_density",
     oracle=f"""
 WITH RECURSIVE cat AS (
-  SELECT CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6)) AS BIGINT)
-           % 36000 AS ra_c,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 7, 6)) AS BIGINT)
-           % 18000 - 9000 AS dec_c
+  SELECT {_GRID_RA_SQL} AS ra_c, {_GRID_DEC_SQL} AS dec_c
   FROM customer
 ),
 cells AS (
@@ -780,13 +779,8 @@ def cluster_grid_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster ids are the component-minimum cell label.
     """
     c = load_table(spark, sf_dir, "customer")
-    hex6 = lambda off: F.conv(
-        F.substring(F.md5(F.col("c_custkey").cast("string")), off, 6), 16, 10
-    ).cast("long")
-    cat = c.select(
-        (hex6(1) % 36000).alias("ra_c"),
-        (hex6(7) % 18000 - 9000).alias("dec_c"),
-    )
+    ra, dec = sky_radec("c_custkey")
+    cat = c.select(ra.alias("ra_c"), dec.alias("dec_c"))
     cells = (
         cat.groupBy(
             (F.col("ra_c") / _GRID_CELL).cast("long").alias("x"),
@@ -1356,8 +1350,8 @@ def _isotonic_sql(tbl: str, hex4: str, div: str) -> str:
     windows, identical in both engines (verified == a reference PAV
     implementation). Interval averages are single double divisions of
     exact integer sums; min/max over those doubles are order-free.
-    Tokens: the hex-to-int expression (Spark ``conv``, DuckDB
-    ``'0x'||``) and integer division."""
+    Tokens: the hex-to-int expression (``md5_int_sql``) and integer
+    division."""
     binned = f"""
 WITH raw AS (
   SELECT (CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) {div} 4000000)
@@ -1398,19 +1392,11 @@ ORDER BY f.bin
 """
 
 
-_ISO_HEX_SPARK = (
-    "CAST(conv(substr(md5(CAST(o_orderkey AS STRING)), 1, 4), 16, 10)"
-    " AS BIGINT)"
-)
-_ISO_HEX_DUCK = (
-    "CAST(('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 4))"
-    " AS BIGINT)"
-)
-
-
 @register(
     "ml_isotonic_calibration",
-    oracle=_isotonic_sql("orders", _ISO_HEX_DUCK, "//"),
+    oracle=_isotonic_sql(
+        "orders", md5_int_sql("CAST(o_orderkey AS VARCHAR)", 1, 4), "//"
+    ),
 )
 def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Isotonic regression — the standard score-calibration step after
@@ -1439,7 +1425,7 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT)"
                 " div 4000000"
             )
-            + F.expr(_ISO_HEX_SPARK) % 7
+            + md5_int(F.col("o_orderkey").cast("string"), 1, 4) % 7
         ).alias("bin"),
         F.when(F.col("o_totalprice") > 200000.0, 1).otherwise(0)
         .alias("y"),

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import fan_out, load_table
+from ..functions.exact import md5_int, md5_int_sql
 from ..registry import register
 
 #: tokens per packed training sequence.
@@ -95,7 +96,7 @@ def doc_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT doc_id, lang, source
 FROM documents
-WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 6)) AS BIGINT)
+WHERE {md5_int_sql("CAST(doc_id AS VARCHAR)", 1, 6)}
       < 16777216 * (CASE lang
                       WHEN 'en' THEN {_MIX_RATES["en"]}
                       ELSE {_MIX_RATES["es"]} END)
@@ -116,9 +117,7 @@ def corpus_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent uniforms.
     """
     d = load_table(spark, sf_dir, "documents")
-    u24 = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 6), 16, 10
-    ).cast("long")
+    u24 = md5_int(F.col("doc_id").cast("string"), 1, 6)
     rate = F.when(F.col("lang") == "en", F.lit(_MIX_RATES["en"])).otherwise(
         F.lit(_MIX_RATES["es"])
     )
@@ -403,11 +402,9 @@ def corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     file list per shard, no global coordination.
     """
     d = load_table(spark, sf_dir, "documents")
-    hh = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("-epoch0")))
-    shard = (
-        F.conv(F.substring(hh, 1, 6), 16, 10).cast("long")
-        % _SHUFFLE_SHARDS
-    )
+    key = F.concat(F.col("doc_id").cast("string"), F.lit("-epoch0"))
+    hh = F.md5(key)
+    shard = md5_int(key, 1, 6) % _SHUFFLE_SHARDS
     w = Window.partitionBy("shard").orderBy("hh", "doc_id")
     return (
         d.select("doc_id", "lang", hh.alias("hh"), shard.alias("shard"))
@@ -944,11 +941,7 @@ _IRS_SEED = "irs5"
 WITH weighted AS (
   SELECT lang,
          LEAST(n_chars, {_IRS_CAP}) AS w,
-         ({" + ".join(
-             f"(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)"
-             f" || ':{_IRS_SEED}'), {i + 1}, 1)) - 1) * {16 ** (7 - i)}"
-             for i in range(8)
-         )}) AS u32
+         {md5_int_sql(f"CAST(doc_id AS VARCHAR) || ':{_IRS_SEED}'", 1, 8)} AS u32
   FROM documents
 )
 SELECT lang,
@@ -983,15 +976,9 @@ def corpus_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     w = F.least(F.col("n_chars"), F.lit(_IRS_CAP))
-    u32 = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(f":{_IRS_SEED}"))),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    u32 = md5_int(
+        F.concat(F.col("doc_id").cast("string"), F.lit(f":{_IRS_SEED}")), 1, 8
+    )
     keep = (u32 * _IRS_CAP) < (w.cast("long") * F.lit(4294967296).cast("long"))
     return (
         d.select("lang", w.alias("w"), keep.alias("keep"))
@@ -1479,9 +1466,9 @@ WITH toks AS (
 ),
 masked AS (
   SELECT doc_id, idx,
-         CASE WHEN CAST(('0x' || substr(
-                md5(CAST(doc_id AS VARCHAR) || ':' || CAST(idx AS VARCHAR)),
-                1, 6)) AS BIGINT) % 100 < {_SPAN_RATE_PCT}
+         CASE WHEN {md5_int_sql("CAST(doc_id AS VARCHAR) || ':' || "
+                                "CAST(idx AS VARCHAR)", 1, 6)}
+                   % 100 < {_SPAN_RATE_PCT}
               THEN 1 ELSE 0 END AS m
   FROM toks
 ),
@@ -1538,21 +1525,10 @@ def corpus_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.posexplode(F.split("text", " ")).alias("idx", "_w"),
     ).select("doc_id", "idx")
-    coin = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":",
-                        F.col("doc_id").cast("string"),
-                        F.col("idx").cast("string"),
-                    )
-                ),
-                1, 6,
-            ),
-            16, 10,
-        ).cast("long") % 100
-    )
+    coin = md5_int(
+        F.concat_ws(":", F.col("doc_id").cast("string"), F.col("idx").cast("string")),
+        1, 6,
+    ) % 100
     masked = toks.select(
         "doc_id", "idx",
         F.when(coin < _SPAN_RATE_PCT, 1).otherwise(0).alias("m"),

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import fan_out, load_table
+from ..functions.exact import md5_int_sql
 from ..registry import register
 
 
@@ -104,15 +105,14 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_simhash",
-    oracle="""
+    oracle=f"""
 WITH words AS (
   SELECT DISTINCT doc_id, w FROM (
     SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
 ),
 sums AS (
   SELECT doc_id, t.p,
-         SUM(2 * (((strpos('0123456789abcdef',
-                           substr(md5(w), (t.p // 4)::INT + 1, 1)) - 1)
+         SUM(2 * (({md5_int_sql("w", "(t.p // 4)::INT + 1", 1)}
                    >> (t.p % 4)::INT) & 1) - 1) AS s
   FROM words, range(0, 64) t(p)
   GROUP BY 1, 2

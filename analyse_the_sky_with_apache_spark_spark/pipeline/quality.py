@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.exact import md5_int, md5_int_sql
 from ..registry import register
 
 #: profiled columns of ``orders`` and how min/max canonicalize to a
@@ -272,13 +273,12 @@ def dq_rules_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "table_checksum",
-    oracle="""
+    oracle=f"""
 SELECT COUNT(*) AS n_rows,
-       CAST(SUM(CAST(('0x' || substr(md5(
-              CAST(o_orderkey AS VARCHAR) || '|' || o_orderstatus || '|' ||
-              CAST(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT)
-                   AS VARCHAR)
-            ), 1, 12)) AS BIGINT))
+       CAST(SUM({md5_int_sql(
+              "CAST(o_orderkey AS VARCHAR) || '|' || o_orderstatus || '|' || "
+              "CAST(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS VARCHAR)",
+              1, 12)})
             % 4611686018427387904 AS BIGINT) AS content_checksum
 FROM orders
 """,
@@ -308,7 +308,7 @@ def table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .cast("string"),
     )
-    h48 = F.conv(F.substring(F.md5(row_ser), 1, 12), 16, 10).cast("long")
+    h48 = md5_int(row_ser, 1, 12)
     return o.agg(
         F.count(F.lit(1)).alias("n_rows"),
         (F.sum(h48.cast("decimal(38,0)")) % F.lit(1 << 62))
@@ -972,21 +972,6 @@ _DP_EPSILON = 0.5
 _DP_SEED = "dp11"
 
 
-def _hex8_int_duckdb(expr: str) -> str:
-    """DuckDB expression for the first-8-hex-chars integer of md5(expr)
-    — digit-by-digit ``strpos`` lookup (the dedup_simhash idiom; DuckDB
-    has no hex→int conv)."""
-    return (
-        "("
-        + " + ".join(
-            f"(strpos('0123456789abcdef', substr(md5({expr}), {i + 1}, 1)) - 1)"
-            f" * {16 ** (7 - i)}"
-            for i in range(8)
-        )
-        + ")"
-    )
-
-
 @register(
     "privacy_dp_count",
     oracle=f"""
@@ -996,7 +981,7 @@ WITH cnt AS (
 ),
 coin AS (
   SELECT event_type, n,
-         ({_hex8_int_duckdb(f"event_type || ':{_DP_SEED}'")} + 0.5)
+         ({md5_int_sql(f"event_type || ':{_DP_SEED}'", 1, 8)} + 0.5)
            / 4294967296.0 AS u
   FROM cnt
 ),
@@ -1019,8 +1004,8 @@ def privacy_dp_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Differentially-private counts via the Laplace mechanism with a
     SEEDED noise draw: the uniform comes from the first 8 hex chars of
     ``md5(key:seed)`` (portable lowercase hex in every engine — the
-    sample_stratified_seeded coin, here read as a 32-bit integer:
-    Spark ``conv(hex,16,10)``, DuckDB digit-wise ``strpos``), then the
+    sample_stratified_seeded coin, here read as a 32-bit integer by
+    the ``md5_int`` / ``md5_int_sql`` twins), then the
     standard inverse-CDF transform −b·sign(u−½)·ln(1−2|u−½|) with
     b = 1/ε. Seeding makes the release reproducible across engines and
     runs — the property a privacy AUDIT needs (a production release
@@ -1036,13 +1021,7 @@ def privacy_dp_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     cnt = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("event_type"), F.lit(f":{_DP_SEED}"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
+        md5_int(F.concat(F.col("event_type"), F.lit(f":{_DP_SEED}")), 1, 8)
         + F.lit(0.5)
     ) / F.lit(4294967296.0)
     lap = (
@@ -1175,7 +1154,7 @@ def _dp_lap_duckdb(key_expr: str, tag: str, scale: float) -> str:
     """DuckDB expression: Laplace(scale) noise from the md5 coin of
     ``key_expr || tag`` — same inverse-CDF transform as
     privacy_dp_count, factored for the two draws this key needs."""
-    u = f"({_hex8_int_duckdb(f'{key_expr} || {tag!r}')} + 0.5) / 4294967296.0"
+    u = f"({md5_int_sql(f'{key_expr} || {tag!r}', 1, 8)} + 0.5) / 4294967296.0"
     return (
         f"(-{scale} * (CASE WHEN {u} >= 0.5 THEN 1.0 ELSE -1.0 END)"
         f" * ln(1.0 - 2.0 * abs({u} - 0.5)))"
@@ -1244,20 +1223,9 @@ def privacy_dp_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _lap(tag: str, scale: float):
         u = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col("event_type"),
-                            F.lit(f":{_DPM_SEED}:{tag}"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
+            md5_int(
+                F.concat(F.col("event_type"), F.lit(f":{_DPM_SEED}:{tag}")), 1, 8
+            )
             + F.lit(0.5)
         ) / F.lit(4294967296.0)
         return (
@@ -1310,7 +1278,8 @@ cnt AS (
 ),
 coin AS (
   SELECT bucket, n,
-         ({_hex8_int_duckdb(f"'hist:' || CAST(bucket AS VARCHAR) || ':{_DP_SEED}'")} + 0.5)
+         ({md5_int_sql(f"'hist:' || CAST(bucket AS VARCHAR) || ':{_DP_SEED}'",
+                       1, 8)} + 0.5)
            / 4294967296.0 AS u
   FROM cnt
 ),
@@ -1358,21 +1327,14 @@ def privacy_dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
     u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("hist:"),
-                        F.col("bucket").cast("string"),
-                        F.lit(f":{_DP_SEED}"),
-                    )
-                ),
-                1,
-                8,
+        md5_int(
+            F.concat(
+                F.lit("hist:"), F.col("bucket").cast("string"), F.lit(f":{_DP_SEED}")
             ),
-            16,
-            10,
-        ).cast("double")
+            1,
+            8,
+            dtype="double",
+        )
         + F.lit(0.5)
     ) / F.lit(4294967296.0)
     lap = (
@@ -1533,7 +1495,8 @@ scored AS (
          {_DPQ_EPS} / 2.0
            * (0.0 - ABS(c.cw - CEIL(CAST(s.q_micro AS DOUBLE) * 1e-6 * c.n)))
          - LN(0.0 - LN(
-             ({_hex8_int_duckdb("'" + _DPQ_SEED + ":' || CAST(s.q_micro AS VARCHAR) || ':' || CAST(c.b AS VARCHAR)")}
+             ({md5_int_sql(f"'{_DPQ_SEED}:' || CAST(s.q_micro AS VARCHAR)"
+                           " || ':' || CAST(c.b AS VARCHAR)", 1, 8)}
               + 0.5) / 4294967296.0))
            AS score
   FROM spec s CROSS JOIN cum c
@@ -1598,22 +1561,16 @@ def privacy_dp_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     target = F.ceil(F.col("q_micro").cast("double") * 1e-6 * F.col("n"))
     u01 = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(f"{_DPQ_SEED}:"),
-                        F.col("q_micro").cast("string"),
-                        F.lit(":"),
-                        F.col("b").cast("string"),
-                    )
-                ),
-                1,
-                8,
+        md5_int(
+            F.concat(
+                F.lit(f"{_DPQ_SEED}:"),
+                F.col("q_micro").cast("string"),
+                F.lit(":"),
+                F.col("b").cast("string"),
             ),
-            16,
-            10,
-        ).cast("long")
+            1,
+            8,
+        )
         + F.lit(0.5)
     ) / F.lit(4294967296.0)
     score = (
@@ -1663,7 +1620,7 @@ _RR_THRESH = 3_221_225_472  # 0.75 * 2^32
 WITH resp AS (
   SELECT event_type,
          CASE WHEN value > 500.0 THEN 1 ELSE 0 END AS truth,
-         CASE WHEN {_hex8_int_duckdb(f"CAST(event_id AS VARCHAR) || ':{_RR_SEED}'")}
+         CASE WHEN {md5_int_sql(f"CAST(event_id AS VARCHAR) || ':{_RR_SEED}'", 1, 8)}
                    < {_RR_THRESH}
               THEN CASE WHEN value > 500.0 THEN 1 ELSE 0 END
               ELSE 1 - CASE WHEN value > 500.0 THEN 1 ELSE 0 END END
@@ -1700,19 +1657,9 @@ def privacy_rr_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     truth = F.when(F.col("value") > 500.0, 1).otherwise(0)
-    coin = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("event_id").cast("string"), F.lit(f":{_RR_SEED}")
-                )
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    coin = md5_int(
+        F.concat(F.col("event_id").cast("string"), F.lit(f":{_RR_SEED}")), 1, 8
+    )
     reported = F.when(coin < _RR_THRESH, truth).otherwise(1 - truth)
     resp = ev.select(
         "event_type", truth.alias("truth"), reported.alias("reported")
@@ -1846,7 +1793,7 @@ WITH cnt AS (
 ),
 coin AS (
   SELECT user_id, n,
-         ({_hex8_int_duckdb(f"CAST(user_id AS VARCHAR) || ':{_DPTK_SEED}'")}
+         ({md5_int_sql(f"CAST(user_id AS VARCHAR) || ':{_DPTK_SEED}'", 1, 8)}
           + 0.5) / 4294967296.0 AS u
   FROM cnt
 ),
@@ -1896,18 +1843,9 @@ def privacy_dp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     cnt = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
     u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("user_id").cast("string"),
-                        F.lit(f":{_DPTK_SEED}"),
-                    )
-                ),
-                1, 8,
-            ),
-            16, 10,
-        ).cast("long")
+        md5_int(
+            F.concat(F.col("user_id").cast("string"), F.lit(f":{_DPTK_SEED}")), 1, 8
+        )
         + F.lit(0.5)
     ) / F.lit(4294967296.0)
     lap = (

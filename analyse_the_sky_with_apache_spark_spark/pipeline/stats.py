@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import fan_out, load_table
+from ..functions.exact import md5_int, md5_int_sql, sky_radec, sky_radec_sql
 from ..registry import register
 
 
@@ -1232,8 +1233,7 @@ WITH toks AS (
 ),
 hashed AS (
   SELECT doc_id,
-         CAST(CAST('0x' || substr(md5(w), 2, 8) AS BIGINT)
-              % {_FH_DIM} AS BIGINT) AS bucket,
+         CAST({md5_int_sql("w", 2, 8)} % {_FH_DIM} AS BIGINT) AS bucket,
          CASE WHEN substr(md5(w), 1, 1) IN ('8','9','a','b','c','d',
                                             'e','f')
               THEN -1 ELSE 1 END AS sign
@@ -1269,9 +1269,7 @@ def ml_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(F.split("text", " ")).alias("w")
     )
     h = F.md5("w")
-    bucket = (
-        F.conv(F.substring(h, 2, 8), 16, 10).cast("long") % _FH_DIM
-    ).alias("bucket")
+    bucket = (md5_int("w", 2, 8) % _FH_DIM).alias("bucket")
     sign = (
         F.when(
             F.substring(h, 1, 1).isin(
@@ -1784,8 +1782,8 @@ _BOOT_ORACLE = f"""
 WITH u AS (
   SELECT CAST(FLOOR(l_extendedprice * 100.0 + 0.5) AS BIGINT) AS cents,
          s.s * 8 + i.i AS b,
-         ('0x' || substr(md5({_BOOT_KEY_DUCK} || ':' || s.s::VARCHAR),
-                         4 * i.i::INT + 1, 4))::BIGINT AS u16
+         {md5_int_sql(f"{_BOOT_KEY_DUCK} || ':' || s.s::VARCHAR",
+                      "4 * i.i::INT + 1", 4)} AS u16
   FROM lineitem, range(0, 4) s(s), range(0, 8) i(i)
 ),
 rep AS (
@@ -2749,31 +2747,13 @@ _PERM_P = 200
 _PERM_SEED = "pt3"
 
 
-def _hex15_int_duckdb(digest: str, offset: int) -> str:
-    """DuckDB bigint from 15 hex chars of ``digest`` starting at
-    1-based ``offset`` — digit-wise ``strpos`` (DuckDB has no hex→int
-    conv; 15 hex = 60 bits, safely inside int64)."""
-    return (
-        "("
-        + " + ".join(
-            f"(strpos('0123456789abcdef', substr({digest}, {offset + i}, 1)) - 1)"
-            f" * {16 ** (14 - i)}"
-            for i in range(15)
-        )
-        + ")"
-    )
-
-
 def _perm_chunks_duckdb() -> str:
     """The 6 packed 60-bit coin chunks of the two per-row digests."""
     cols = []
     for d in (0, 1):
-        dig = f"md5(CAST(o_orderkey AS VARCHAR) || ':{_PERM_SEED}:{d}')"
+        key = f"CAST(o_orderkey AS VARCHAR) || ':{_PERM_SEED}:{d}'"
         for i in range(3):
-            cols.append(
-                f"CAST({_hex15_int_duckdb(dig, 1 + 15 * i)} AS BIGINT)"
-                f" AS c{d * 3 + i}"
-            )
+            cols.append(f"{md5_int_sql(key, 1 + 15 * i, 15)} AS c{d * 3 + i}")
     return ", ".join(cols)
 
 
@@ -2870,9 +2850,10 @@ def stat_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     obs = od.agg(_mean_diff_grid(F.col("grp_a")).alias("d0"))
     chunk_cols = [
-        F.expr(
-            f"cast(conv(substring(md5(concat(cast(o_orderkey as string),"
-            f" ':{_PERM_SEED}:{d}')), {1 + 15 * i}, 15), 16, 10) as bigint)"
+        md5_int(
+            F.concat(F.col("o_orderkey").cast("string"), F.lit(f":{_PERM_SEED}:{d}")),
+            1 + 15 * i,
+            15,
         ).alias(f"c{d * 3 + i}")
         for d in (0, 1)
         for i in range(3)
@@ -3957,8 +3938,8 @@ WITH u AS (
   SELECT l_quantity AS x,
          CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y,
          b.b,
-         ('0x' || substr(md5({_BOOT_KEY_DUCK} || ':bag'),
-                         4 * b.b::INT + 1, 4))::BIGINT AS u16
+         {md5_int_sql(f"{_BOOT_KEY_DUCK} || ':bag'", "4 * b.b::INT + 1", 4)}
+           AS u16
   FROM lineitem, range(0, {_BAG_B}) b(b)
 ),
 g AS (
@@ -10109,14 +10090,13 @@ def stat_sprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ml_expected_calibration_error",
-    oracle="""
+    oracle=f"""
 WITH scored AS (
-  SELECT CAST(('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 6))
-              AS BIGINT) % 1000000 AS conf_micro,
-         CASE WHEN CAST(('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)),
-                                        7, 6)) AS BIGINT) % 1000000
-                   < (CAST(('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)),
-                                           1, 6)) AS BIGINT) % 1000000)
+  SELECT {md5_int_sql("CAST(o_orderkey AS VARCHAR)", 1, 6)} % 1000000
+           AS conf_micro,
+         CASE WHEN {md5_int_sql("CAST(o_orderkey AS VARCHAR)", 7, 6)} % 1000000
+                   < ({md5_int_sql("CAST(o_orderkey AS VARCHAR)", 1, 6)}
+                      % 1000000)
                      * 9 // 10 + 50000
               THEN 1 ELSE 0 END AS y
   FROM orders
@@ -10157,11 +10137,9 @@ def ml_expected_calibration_error(spark: SparkSession, sf_dir: str) -> DataFrame
     any scale (the `ml_calibration_bins` note).
     """
     o = load_table(spark, sf_dir, "orders")
-    h = F.md5(F.col("o_orderkey").cast("string"))
-    conf = (
-        F.conv(F.substring(h, 1, 6), 16, 10).cast("long") % 1000000
-    )
-    coin = F.conv(F.substring(h, 7, 6), 16, 10).cast("long") % 1000000
+    key = F.col("o_orderkey").cast("string")
+    conf = md5_int(key, 1, 6) % 1000000
+    coin = md5_int(key, 7, 6) % 1000000
     scored = o.select(
         conf.alias("conf_micro"),
         F.when(coin < F.expr("conf_micro * 9 div 10") + 50000, 1)
@@ -10298,11 +10276,10 @@ def ts_croston_intermittent(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stat_circular_rayleigh",
-    oracle="""
+    oracle=f"""
 WITH cat AS (
   SELECT c_mktsegment AS seg,
-         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6))
-              AS BIGINT) % 36000 AS ra_c
+         {sky_radec_sql("c_custkey")[0]} AS ra_c
   FROM customer
 ),
 g AS (
@@ -10360,11 +10337,9 @@ def stat_circular_rayleigh(spark: SparkSession, sf_dir: str) -> DataFrame:
     past that the DECIMAL(38,0) lane (stat_spearman precedent).
     """
     c = load_table(spark, sf_dir, "customer")
-    h = F.md5(F.col("c_custkey").cast("string"))
     cat = c.select(
         F.col("c_mktsegment").alias("seg"),
-        (F.conv(F.substring(h, 1, 6), 16, 10).cast("long") % 36000)
-        .alias("ra_c"),
+        sky_radec("c_custkey")[0].alias("ra_c"),
     )
     rad = F.radians(F.col("ra_c").cast("double") / F.lit(100.0))
     g = cat.select(
@@ -10403,14 +10378,14 @@ def stat_circular_rayleigh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stat_deming_regression",
-    oracle="""
+    oracle=f"""
 WITH g AS (
   SELECT CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT)
-           + CAST(('0x' || substr(md5('a' || CAST(o_orderkey AS VARCHAR)),
-                                  1, 6)) AS BIGINT) % 2001 - 1000 AS x,
+           + {md5_int_sql("'a' || CAST(o_orderkey AS VARCHAR)", 1, 6)} % 2001
+           - 1000 AS x,
          CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT)
-           + CAST(('0x' || substr(md5('b' || CAST(o_orderkey AS VARCHAR)),
-                                  1, 6)) AS BIGINT) % 2001 - 1000 AS y
+           + {md5_int_sql("'b' || CAST(o_orderkey AS VARCHAR)", 1, 6)} % 2001
+           - 1000 AS y
   FROM orders
 ),
 m AS (
@@ -10475,12 +10450,8 @@ def stat_deming_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def noisy(tag: str):
-        h = F.md5(F.concat(F.lit(tag), F.col("o_orderkey").cast("string")))
-        return (
-            cents
-            + F.conv(F.substring(h, 1, 6), 16, 10).cast("long") % 2001
-            - 1000
-        )
+        key = F.concat(F.lit(tag), F.col("o_orderkey").cast("string"))
+        return cents + md5_int(key, 1, 6) % 2001 - 1000
 
     g = o.select(noisy("a").alias("x"), noisy("b").alias("y"))
     m = g.agg(

@@ -12,7 +12,9 @@ Discipline enforced by convention (SURVEY.md §5.3):
 - alias every computed column identically in Spark and SQL;
 - round float aggregates in BOTH sides;
 - fully tie-break every ordered/LIMIT query;
-- cast date-like timestamps to date.
+- cast date-like timestamps to date;
+- derive integers from md5 only through the ``functions.exact`` twins
+  (``md5_int``/``md5_int_sql``, ``sky_radec``/``sky_radec_sql``).
 """
 
 from __future__ import annotations
@@ -64,231 +66,7 @@ _loaded = False
 #: (confirmed in rounds 4 AND 5: CORRECTNESS_r0N == that round's
 #: ``_PRIORITY`` window, 50/50 hash-green each time), so insertion order
 #: is the lever that decides which keys get a driver row.
-#:
-#: After r01∪…∪r05, 135 oracle-backed keys had never been driver-sampled.
-#: ``_ROTATION`` below is the committed retirement schedule (VERDICT r5
-#: task 2): three pages drawn round-robin across families in descending
-#: never-sampled count, so every page touches every dark family. Each
-#: round's rotation is now a one-line edit: advance ``_PRIORITY`` to the
-#: next page (padding the final short page with rows-only→oracle
-#: promotions or fresh keys as they land). Every page-1 key carries an
-#: oracle, so CORRECTNESS_r06 should be 50 hash rows / 0 ``no_oracle``.
-#: Already-sampled keys go last; they keep local regression coverage
-#: (tests/test_oracle_differential.py and tools/check.py's full gate).
-
-#: Page 3 — the round-8 window, retired 2026-08-16 (CORRECTNESS_r08:
-#: 50/50 hash-green). Kept for documentation; no longer scheduled.
-_RETIRED_R8 = (
-    "scan_txn_log_incremental", "emb_knn_graph", "q22_dormant_customers",
-    "agg_higher_moments", "corpus_dataset_card",
-    "dedup_sorted_neighborhood", "dq_volume_anomaly", "ml_target_encoding",
-    "sql_pipe_syntax", "graph_local_clustering",
-    "join_cardinality_estimate", "retention_decay_fit",
-    "xmatch_likelihood_ratio", "text_langid_confusion",
-    "q17_small_quantity", "ts_forecast_eval_naive", "text_zipf_fit",
-    "txn_log_compact", "bitmap_audience_jaccard", "corpus_split_leakage",
-    "dedup_survivor_policy", "dq_partition_skew",
-    "stat_ratio_delta_method", "sql_filter_clause", "graph_louvain_move",
-    "join_multi_exists_flags", "events_stickiness_dau_mau",
-    "xmatch_photometric_offset", "text_ngram_lm", "q20_promo_suppliers",
-    "events_heatmap", "corpus_curriculum_order", "dedup_substring_cut",
-    "privacy_t_closeness", "ml_psi_drift",
-    # round-6 additions + the rows-only→oracle promotion, padding the
-    # short final page (none has ever been driver-sampled)
-    "text_line_dedup", "stat_benjamini_hochberg", "graph_adamic_adar",
-    "corpus_domain_mix_weights", "stat_wilson_ci",
-    "sample_stratified_seeded",
-    "mv_join_maintenance", "ml_average_precision", "stat_effect_sizes",
-    "txn_log_vacuum", "ml_pr_curve", "sink_pyds",
-    "funnel_unordered", "ts_granger_lite", "sql_variables",
-)
-
-#: Page 2 — the round-7 window, retired 2026-08-15 (CORRECTNESS_r07:
-#: 50/50 hash-green). Kept for documentation; no longer scheduled.
-_RETIRED_R7 = (
-    "graph_bfs_hops", "join_null_safe", "attribution_linear",
-    "xmatch_completeness", "text_boilerplate", "q13_customer_distribution",
-    "ts_order_gaps", "text_repetition", "scan_log_regexp",
-    "sim_knn_per_query", "q14_promo_revenue", "mm_image_tiles",
-    "api_pandas_on_spark", "stream_pyds_source", "sample_systematic",
-    "kmeans_one_round", "agg_restatement", "corpus_quality_pipeline",
-    "semantic_dedup_pipeline", "slo_burn_rate", "ml_calibration_bins",
-    "sql_named_params", "graph_modularity", "join_bloom_prefilter",
-    "basket_apriori_triples", "sky_variability_pipeline",
-    "text_sentiment_lexicon", "q15_top_supplier", "ts_hampel_filter",
-    "join_set_similarity", "scan_txn_log_time_travel",
-    "emb_matryoshka_recall", "q19_disjunctive", "mm_scene_cuts",
-    "udf_arrow_optimized", "stream_upsert_sink", "time_rollup_cascade",
-    "corpus_kl_divergence", "dedup_minhash_eval", "privacy_l_diversity",
-    "ml_feature_hashing", "sql_lateral_alias", "graph_assortativity",
-    "join_asof_nearest", "basket_rules_confidence", "ts_spectral_power",
-    "text_dup_shingle_fraction", "q16_supplier_cnt",
-    "ts_decompose_residuals", "text_perplexity",
-)
-
-#: Page 4 — the round-9 window, retired 2026-08-16 (CORRECTNESS_r09:
-#: 50/50 hash-green). Kept for documentation; no longer scheduled.
-_RETIRED_R9 = (
-    "agg_histogram_equiwidth", "graph_reciprocity", "ts_peak_detection",
-    "ml_mrr", "stat_cohens_kappa", "stat_cramers_v", "text_readability",
-    "dq_freshness", "privacy_dp_count", "ml_kfold_assign",
-    "stat_permutation_test", "text_keyword_rake", "udtf_table_partition_by",
-    "sample_bottom_k", "corpus_importance_resample", "ts_downsample_lttb",
-    "sql_identifier_clause", "stat_levene", "interval_allen_relations",
-    "text_cdc_chunking", "dq_reconciliation", "dedup_blocking_multipass",
-    "graph_hits_one_round", "privacy_dp_mean", "ml_lift_curve",
-    "xmatch_three_way", "graph_triangles_doulion",
-    # round-7 additions
-    "txn_log_conflict_detect", "graph_adamic_adar_capped",
-    "txn_log_schema_evolution", "graph_jaccard_similarity",
-    "corpus_source_overlap", "text_oov_rate",
-    "xmatch_mask_exclusion", "privacy_dp_histogram",
-    "ts_holt_linear", "ml_split_histogram", "txn_log_checkpoint",
-    "lightcurve_bls_box", "udtf_cogrouped_map", "sink_parquet_bloom",
-    "set_union_byname", "scan_file_metadata", "lightcurve_pdm_theta",
-    "lightcurve_eta_von_neumann", "ts_dtw_distance",
-    "scan_deletion_vectors", "ts_kalman_1d", "ml_gbt_stump_boost",
-    "lightcurve_string_length",
-)
-
-#: Page 5 — the round-10 window, retired 2026-08-16 (CORRECTNESS_r10:
-#: 50/50 hash-green). Kept for documentation; no longer scheduled.
-_RETIRED_R10 = (
-    "dq_benford_firstdigit",
-    "ts_sax_symbolize",
-    "ml_isotonic_calibration",
-    "win_time_range_frame",
-    "txn_log_partition_evolution",
-    "corpus_bpe_merges",
-    "ts_matrix_profile",
-    "ml_kaplan_meier",
-    "stat_logrank_test",
-    "text_bpe_apply",
-    "stat_cmh_test",
-    "anomaly_esd_rounds",
-    "graph_pagerank",
-    "sim_mmr_diversify",
-    "ml_linreg_normal",
-    "stream_join_then_agg",
-    "emb_pca",
-    "stream_chained_agg",
-    "kmeans_lloyd",
-    "stream_stream_left_join",
-    "stream_watermark_late",
-    "sim_rerank_two_stage",
-    "sim_hard_negative_mine",
-    "ml_train_split_audit",
-    "agg_grid_quantiles",
-    "stat_mutual_information",
-    "privacy_dp_quantile",
-    "lightcurve_lomb_scargle",
-    "corpus_filter_ablation",
-    "graph_random_walks",
-    "ml_bagged_stumps",
-    "ts_segmented_trend",
-    "events_markov_anomaly",
-    "graph_ktruss_peel",
-    # swapped in at round-10 rotation so the window covers every
-    # still-dark family (operators.warehouse / pipeline.dedup /
-    # functions.scalar — test_window_covers_the_dark_families);
-    # the three stats keys they displace moved to R11/R12, where
-    # pipeline.stats remains represented many times over.
-    "txn_log_wap_publish",
-    "ts_pacf_durbin",
-    "corpus_mix_epochs",
-    "privacy_rr_aggregate",
-    "dedup_jaro_winkler",
-    "stat_kruskal_wallis",
-    "stat_friedman_test",
-    "ts_permutation_entropy",
-    "agg_countmin_merge",
-    "ml_knn_classify",
-    "ml_brier_decomposition",
-    "ts_hurst_rs",
-    "text_heaps_law",
-    "text_rouge_overlap",
-    "graph_harmonic_closeness",
-    "fn_xml",
-)
-
-#: Page 6 — the round-11 window, retired 2026-08-17 (CORRECTNESS_r11:
-#: 50/50 hash-green). Kept for documentation; no longer scheduled.
-#: The 47 seed keys were padded to 50 with three round-11 keys —
-#: corpus_span_corruption, cdc_apply_compact and dedup_semantic_rep —
-#: keeping pipeline.corpus, operators.warehouse and pipeline.dedup
-#: represented among the never-sampled families (the earlier
-#: R12-head borrow of stat_durbin_watson / ts_spectral_entropy /
-#: stat_jarque_bera was returned to the R12 page before round-11
-#: close; ADVICE r11 flagged the stale comment, corrected here).
-_RETIRED_R11 = (
-    "stat_hodges_lehmann",
-    "stat_fisher_exact",
-    "stat_runs_test",
-    "stat_qq_deciles",
-    "ml_learning_curve",
-    "ts_cointegration_egr",
-    "graph_bipartite_projection",
-    "privacy_microaggregation",
-    "ml_threshold_sweep", "stat_power_analysis", "ts_additive_model_fit",
-    "stat_anderson_darling", "stat_ljung_box",
-    "ts_sample_entropy", "stat_bayes_ab_posterior",
-    "stat_tost_equivalence", "events_cuped_variance_reduction",
-    "stream_stateful_timeout",
-    "win_rolling_regression_slope", "graph_katz_bounded",
-    "ml_woe_iv", "graph_rich_club", "xmatch_offset_false_rate",
-    "ml_cox_one_step", "sql_star_except",
-    "mm_payload_dedup", "mm_modality_router",
-    "ts_forecast_backtest",
-    "stat_mcnemar", "events_poisson_rate_test",
-    "sink_json_roundtrip",
-    "stat_cochran_q", "stat_dunn_posthoc", "stat_page_trend",
-    # round-9 additions
-    "scan_fits", "scan_fits_header", "agg_kll_sketch_merge",
-    "audit_cross_run_determinism", "stream_rate_limit", "scan_fits_image",
-    "agg_hll_sketch_merge", "ts_mann_kendall", "stat_bartlett",
-    "stat_breusch_pagan", "stream_pyds_sink", "ts_adf_unitroot",
-    "ml_pinball_loss",
-    # padding to 50: three round-11 keys that keep pipeline.dedup,
-    # operators.warehouse and pipeline.corpus represented among the
-    # never-sampled families (test_window_covers_the_dark_families);
-    # the R12-head pulls this page briefly borrowed (durbin-watson,
-    # spectral-entropy, jarque-bera) returned to the R12 head.
-    "corpus_span_corruption", "cdc_apply_compact", "dedup_semantic_rep",
-)
-
-#: Page 7 — the round-12 window, retired 2026-08-18 (CORRECTNESS_r12:
-#: 46 hash-green + the 4 scheduled rows-only smoke rows). Kept for
-#: documentation; no longer scheduled.
-_RETIRED_R12 = (
-    "stat_jarque_bera", "ts_spectral_entropy", "stat_durbin_watson",
-    "graph_betweenness_sampled", "sky_coadd_tiles",
-    "privacy_dp_topk", "graph_effective_diameter",
-    "stream_update_mode_emissions", "ts_burstiness",
-    "ml_chi2_feature_select",
-    # rows-only keys, scheduled for driver visibility (VERDICT r10 task 3)
-    "scan_parquet_footer_stats", "agg_hll_overlap", "agg_kll_quantiles",
-    "ann_recall_eval",
-    # round-11 additions
-    "sky_healpix_ring", "sky_two_point_dd", "lightcurve_chi2_constant",
-    "ts_ewma_crossover", "ts_pettitt_test", "stat_mood_median",
-    "kmeans_spherical_round",
-    "mm_audio_gain_normalize", "stream_window_distinct",
-    "graph_sssp_bounded", "retrieval_rrf_fusion", "lightcurve_flare_runs",
-    "mm_keyframe_select", "ts_seasonal_mann_kendall",
-    "sky_catalog_merge", "xmatch_epoch_propagate",
-    "stream_cdc_apply", "stat_sprt_sequential",
-    "lightcurve_phase_coverage",
-    # round-10 additions
-    "sky_source_extract", "sky_wcs_xmatch", "stream_cms_sink_merge",
-    "lightcurve_stetson_jk", "xmatch_proper_motion", "sky_mag_cmd",
-    "sim_range_search", "mm_audio_vad", "mm_image_ahash",
-    "sky_galactic_transform", "sky_tracklet_link",
-    "stream_dedup_index_merge", "sky_aperture_photometry",
-    "sky_diff_image_transients", "ml_linear_attribution",
-    "ts_burst_viterbi",
-    # padding to 50: the R13 page head key (VERDICT r11 task 1)
-    "sky_observability",
-)
+#: Retired windows live in git history and the CORRECTNESS_rNN files.
 
 #: Deliberate re-samples occupying round-13 window slots (VERDICT r12
 #: items 1 and 4: "the next driver window should sample every key
@@ -346,63 +124,6 @@ _PRIORITY = (
 #: Page 9 — round-14 window seed. Every key landing from here on joins
 #: THIS page at birth; pad to 50 with promotions when it becomes live.
 _ROTATION_R14 = ()
-
-#: Page 1 — the round-6 window, retired 2026-08-15 (CORRECTNESS_r06:
-#: 50/50 hash-green). Kept for documentation; no longer scheduled —
-#: these keys are now covered by their driver rows.
-_RETIRED_R6 = (
-    "agg_incremental_maintenance",  # operators.aggregations
-    "corpus_group_sample",  # pipeline.corpus
-    "dedup_fuzzy_levenshtein",  # pipeline.dedup
-    "dq_rules_report",  # pipeline.quality
-    "ml_naive_bayes_train",  # pipeline.stats
-    "fn_collation",  # functions.scalar
-    "graph_components_twostar",  # operators.graph
-    "join_asof_tolerance",  # operators.joins
-    "compaction_plan",  # operators.warehouse
-    "xmatch_neighbor_density",  # operators.xmatch
-    "chunk_dedup_pipeline",  # pipeline.text
-    "q7_volume_shipping",  # workloads2
-    "path_common_sequences",  # operators.windows
-    "text_bm25",  # pipeline.retrieval
-    "scan_binaryfile",  # sources.scans
-    "emb_outliers",  # pipeline.similarity
-    "q4_order_priority",  # workloads
-    "emb_pca_covariance",  # pipeline.multimodal
-    "udtf_analyze",  # pipeline.udfs
-    "stream_topk_windowed",  # streaming.queries
-    "zorder_layout",  # operators.sorts
-    "cluster_grid_density",  # pipeline.clustering
-    "stat_crosstab",  # operators.aggregations
-    "text_contamination",  # pipeline.corpus
-    "dedup_containment",  # pipeline.dedup
-    "dq_referential_integrity",  # pipeline.quality
-    "ml_logreg_irls_stats",  # pipeline.stats
-    "fn_crypto",  # functions.scalar
-    "graph_common_neighbors",  # operators.graph
-    "join_lateral_topk",  # operators.joins
-    "session_bounce_rate",  # operators.warehouse
-    "lightcurve_structure_function",  # operators.xmatch
-    "text_word_pmi",  # pipeline.text
-    "q11_important_parts",  # workloads2
-    "ts_state_transitions",  # operators.windows
-    "text_inverted_index",  # pipeline.retrieval
-    "scan_xml",  # sources.scans
-    "emb_bit_hamming",  # pipeline.similarity
-    "q12_late_lines",  # workloads
-    "mm_audio_chunks",  # pipeline.multimodal
-    "udf_sql",  # pipeline.udfs
-    "stream_checkpoint_resume",  # streaming.queries
-    "sample_weighted",  # operators.sorts
-    "ml_linreg_suffstats",  # pipeline.clustering
-    "bitmap_funnel_users",  # operators.aggregations
-    "corpus_shuffle",  # pipeline.corpus
-    "corpus_dedup_pipeline",  # pipeline.dedup
-    "emb_drift_monitor",  # pipeline.quality
-    "ml_decision_stump",  # pipeline.stats
-    "fn_business_days",  # functions.scalar
-)
-
 
 
 def _ordered(d: dict) -> dict:

@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.exact import dsum, dsum_sql
+from ..functions.exact import dsum, dsum_sql, md5_int, md5_int_sql
 from ..registry import register
 from .replay import checkpoint_dir, run_stream, stage_events
 
@@ -1276,9 +1276,8 @@ _SCMS_PROBE_MOD = 50
     oracle=f"""
 WITH matrix AS (
   SELECT j,
-         CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR) || '-' ||
-                                  CAST(j AS VARCHAR)), 1, 6)) AS BIGINT)
-           % 256 AS cell,
+         {md5_int_sql("CAST(user_id AS VARCHAR) || '-' || CAST(j AS VARCHAR)",
+                      1, 6)} % 256 AS cell,
          CAST(COUNT(*) AS BIGINT) AS cnt
   FROM events, LATERAL unnest(generate_series(0, 3)) t(j)
   GROUP BY 1, 2
@@ -1289,9 +1288,8 @@ probes AS (
 ),
 probe_cells AS (
   SELECT k, j,
-         CAST(('0x' || substr(md5(CAST(k AS VARCHAR) || '-' ||
-                                  CAST(j AS VARCHAR)), 1, 6)) AS BIGINT)
-           % 256 AS cell
+         {md5_int_sql("CAST(k AS VARCHAR) || '-' || CAST(j AS VARCHAR)",
+                      1, 6)} % 256 AS cell
   FROM probes, LATERAL unnest(generate_series(0, 3)) t(j)
 ),
 est AS (
@@ -1323,7 +1321,7 @@ def stream_cms_sink_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix.
 
     Because micro-batches partition the event stream exactly and the
-    salted-md5 cell hash (`operators.warehouse._cm_cell`) is engine-
+    salted-md5 cell hash (the `agg_countmin` one) is engine-
     reproducible, the merged matrix must equal DuckDB's single-pass
     rebuild over the whole table — the verification is EXACT per probe
     key (estimate, exact count and overcount all hash-checked). A lost
@@ -1340,7 +1338,7 @@ def stream_cms_sink_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from ..catalog import load_table
-    from ..operators.warehouse import _CM_D, _cm_cell
+    from ..operators.warehouse import _CM_D, _CM_W
     from ..sources.scans import _SCRATCH
 
     src = stage_events(spark, sf_dir, n_files=4)
@@ -1351,7 +1349,11 @@ def stream_cms_sink_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             df.select(
                 F.posexplode(
                     F.array(*[
-                        _cm_cell(F.col("user_id"), j) for j in range(_CM_D)
+                        md5_int(
+                            F.concat(F.col("user_id").cast("string"), F.lit(f"-{j}")),
+                            1, 6,
+                        ) % _CM_W
+                        for j in range(_CM_D)
                     ])
                 ).alias("j", "cell")
             )
@@ -1383,7 +1385,11 @@ def stream_cms_sink_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe_cells = probes.select(
         "k",
         F.posexplode(
-            F.array(*[_cm_cell(F.col("k"), j) for j in range(_CM_D)])
+            F.array(*[
+                md5_int(F.concat(F.col("k").cast("string"), F.lit(f"-{j}")), 1, 6)
+                % _CM_W
+                for j in range(_CM_D)
+            ])
         ).alias("j", "cell"),
     ).select("k", F.col("j").cast("long").alias("j"), "cell")
     est = (
