@@ -2158,7 +2158,7 @@ def agg_kll_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # table per flag ('ALL' scope rows duplicated under each flag key)
     # instead of an OR-condition join, which would plan a
     # BroadcastNestedLoopJoin over every fact row x 12 estimate rows —
-    # the test_plan_sweep no-cartesian gate caught exactly that.
+    # the whole-registry BNL plan lint caught exactly that.
     flag_keys = per_flag.select(F.col("scope").alias("flag_key")).distinct()
     est = per_flag.withColumn("flag_key", F.col("scope")).unionByName(
         global_all.join(F.broadcast(flag_keys), F.lit(True))
@@ -2662,27 +2662,10 @@ def agg_hll_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     against a pure-python rebuild.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    # r13 (VERDICT r12 task 3): BOTH branches are functions of the
-    # DISTINCT (returnflag, orderkey, linenumber) set — the HLL
-    # registers max-aggregate a hash of (okey, lnum), so duplicate rows
-    # add nothing, and the exact branch counts distinct keys. Dedup
-    # ONCE, materialize the narrow 3-column table eagerly
-    # (ReuseExchange never fires across separate consumers under AQE —
-    # the r12 measured revert), and run all three aggregates off the
-    # checkpointed table: one lineitem scan + one distinct exchange
-    # replaces three scans and two independent countDistinct
-    # expansions. At 100 TB the checkpoint holds only the 3-column
-    # distinct projection (guide §8: decide with small rows).
-    dk = (
-        li.select(
-            F.col("l_returnflag").alias("shard"),
-            "l_orderkey",
-            "l_linenumber",
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
+    pk = li.select(
+        F.col("l_returnflag").alias("shard"), "l_orderkey", "l_linenumber"
     )
-    h = dk.select(
+    h = pk.select(
         "shard",
         md5_int(
             F.concat(
@@ -2752,20 +2735,12 @@ def agg_hll_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("e_raw_micro"))
         .alias("est_micro"),
     )
-    # r12 note: a shared-distinct rewrite WITHOUT materialization was
-    # tried and REVERTED (ReuseExchange does not fire across the two
-    # consumers under AQE — the distinct lineage ran twice, ~1.6×
-    # slower). The r13 form above sidesteps that with an eager
-    # localCheckpoint: both counts below read the materialized blocks.
-    # countDistinct(key) over the distinct-pair table is exactly
-    # countDistinct(key) over lineitem (per shard and globally) — no
-    # injectivity assumption on okey*8+lnum is needed.
     key = (F.col("l_orderkey") * 8 + F.col("l_linenumber"))
     exact = (
-        dk.groupBy("shard")
+        pk.groupBy("shard")
         .agg(F.countDistinct(key).cast("long").alias("exact_distinct"))
         .unionByName(
-            dk.agg(
+            pk.agg(
                 F.countDistinct(key).cast("long").alias("exact_distinct")
             ).select(F.lit("~ALL").alias("shard"), "exact_distinct")
         )

@@ -787,20 +787,24 @@ _KCORE_K, _KCORE_ROUNDS = 2, 6
 
 
 def _kcore_oracle() -> str:
-    """Bounded k-core peel as unrolled CTE rounds (pagerank precedent)."""
+    """Bounded k-core peel as unrolled CTE rounds (pagerank precedent).
+
+    Every CTE is MATERIALIZED: round ``n{i}`` reads ``n{i-1}`` three
+    times inside a correlated subquery, so an inlining planner
+    (DuckDB 1.0) grows the work about threefold per round."""
     ctes = [
-        """e AS (
+        """e AS MATERIALIZED (
   SELECT a.l_partkey AS u, b.l_partkey AS v
   FROM lineitem a
   JOIN lineitem b ON a.l_orderkey = b.l_orderkey
                  AND a.l_partkey < b.l_partkey
   GROUP BY 1, 2 HAVING COUNT(*) >= 2
 ),
-n0 AS (SELECT u AS node FROM e UNION SELECT v FROM e)"""
+n0 AS MATERIALIZED (SELECT u AS node FROM e UNION SELECT v FROM e)"""
     ]
     for i in range(1, _KCORE_ROUNDS + 1):
         ctes.append(
-            """n{i} AS (
+            """n{i} AS MATERIALIZED (
   SELECT node FROM n{p}
   WHERE (SELECT COUNT(*) FROM e
          JOIN n{p} x ON x.node = e.u

@@ -1231,15 +1231,17 @@ def sky_variability_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-partition percentile buffer, where a plain aggregate gets
     # map-side partials and no sort. Reshape per the verdict's
     # prescription: aggregate med/n once per user (ONE exchange) and
-    # BROADCAST the tiny 3-column result (its size is |users|, not
-    # |events|) back onto the scan for the MAD aggregate — no second
-    # shuffle and no sort of events. No checkpoint on med: it has
-    # exactly one consumer (the broadcast build), so materializing it
-    # would only add a driver action. The n >= 30 filter moves onto the
-    # med table (an inner join drops those users' events before the MAD
-    # pass; they could never reach the shortlist). Identical rounding
-    # and tie-breaks. At catalog scale (|users| past the broadcast cap)
-    # drop the hint and let AQE pick the join.
+    # join the small result (|users| rows, not |events|) back onto the
+    # scan for the MAD aggregate — no sort of events. The planner picks
+    # the join: under the broadcast threshold AQE, having measured med's
+    # stage (its percentile buffers carry every value), broadcasts the
+    # event side and streams med, which keeps med's user_id partitioning
+    # and drops the post-join exchange; past it, AQE chooses on the
+    # measured sizes. No checkpoint on med: it has exactly one consumer,
+    # so materializing it would only add a Spark job. The n >= 30
+    # filter moves onto the med table (an inner join drops those users'
+    # events before the MAD pass; they could never reach the
+    # shortlist). Identical rounding and tie-breaks.
     med = (
         ev.groupBy("user_id")
         .agg(
@@ -1249,7 +1251,7 @@ def sky_variability_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n") >= 30)
     )
     cand = (
-        ev.join(F.broadcast(med), "user_id")
+        ev.join(med, "user_id")
         .groupBy("user_id")
         .agg(
             F.max("med").alias("med"),

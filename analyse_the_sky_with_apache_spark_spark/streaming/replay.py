@@ -129,7 +129,9 @@ def run_stream(
     name: str = "stream_q",
 ) -> DataFrame:
     """Run a streaming DataFrame to completion into a memory sink and
-    return the sink table (a batch DataFrame of the final result)."""
+    return the sink table (a batch DataFrame of the final result). The
+    sink's temporary view is dropped once resolved; the returned frame
+    keeps the sink's rows."""
     qname = f"{name}_{uuid.uuid4().hex[:8]}"
     q = (
         transformed.writeStream.format("memory")
@@ -140,4 +142,6 @@ def run_stream(
         .start()
     )
     q.awaitTermination()
-    return spark.table(qname)
+    res = spark.table(qname)
+    spark.catalog.dropTempView(qname)
+    return res

@@ -67,3 +67,4 @@ def assert_matches_oracle(spark, duck, fn, sql, sf_dir=SF_DIR):
 
     df = fn(spark, sf_dir)
     compare_spark_duck(df, duck.execute(sql))
+    return df

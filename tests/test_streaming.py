@@ -43,6 +43,21 @@ def test_watermark_emits_fewer_windows_than_batch(spark):
         assert batch_map[r["window_start"]] == r["n"]
 
 
+def test_run_stream_drops_its_sink_view(spark):
+    """run_stream leaves no memory-sink temporary view behind, and the
+    frame it returns still collects, also through a further orderBy."""
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    df = queries()["stream_session"](spark, SF_DIR)
+    assert temp_views() == before
+    rows = df.collect()
+    assert rows
+    assert len(df.orderBy(*df.columns).collect()) == len(rows)
+
+
 def test_crafted_late_row_is_dropped(spark):
     """Three micro-batches: batch 0 advances the max event time, batch 1
     lets the watermark (published one batch behind) finalize and emit the
