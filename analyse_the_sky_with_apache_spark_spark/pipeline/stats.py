@@ -8505,7 +8505,7 @@ def stat_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
         * (F.lit(1.0) / F.col("na") + F.lit(1.0) / F.col("nb"))
     )
     pairs = (
-        a.join(b, F.col("grp_a") < F.col("grp_b"))
+        a.join(F.broadcast(b), F.col("grp_a") < F.col("grp_b"))
         .crossJoin(F.broadcast(tot))
         .select(
             "grp_a", "grp_b", "na", "nb",

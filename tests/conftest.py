@@ -27,6 +27,11 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 # is the gate for exactly that claim). Env still wins: setdefault only.
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 
+#: registry key -> plan text (AQE Final Plan plus Initial Plan) of the
+#: frame the oracle-differential pass executed for it; the per-key plan
+#: sweep reads it back instead of building and running the key again.
+EXECUTED_PLANS: dict[str, str] = {}
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -22,7 +22,7 @@ import pytest
 
 from analyse_the_sky_with_apache_spark_spark import registry
 from analyse_the_sky_with_apache_spark_spark.plans.checks import plan_of
-from tests.conftest import SF_DIR, assert_matches_oracle
+from tests.conftest import EXECUTED_PLANS, SF_DIR, assert_matches_oracle
 
 registry.load_all_modules()
 _QUERIES = registry.queries()
@@ -408,9 +408,8 @@ def _global_order_windows(plan: str) -> int:
     return n
 
 
-def _lint_plan(key: str, df) -> None:
-    """The three plan lints, on the plan of the frame the test executed."""
-    plan = plan_of(df, "simple")
+def _lint_joins(key: str, plan: str) -> None:
+    """No CartesianProduct; a BroadcastNestedLoopJoin only if allowlisted."""
     assert "CartesianProduct" not in plan, f"{key} plans a cartesian"
     if "BroadcastNestedLoopJoin" in plan and key not in _BNL_ALLOWED:
         pytest.fail(
@@ -418,6 +417,10 @@ def _lint_plan(key: str, df) -> None:
             f"deliberate-BNL whitelist — either fix the join or "
             f"document why the nested loop is bounded"
         )
+
+
+def _lint_windows(key: str, plan: str) -> None:
+    """A global-order Window exactly when the key is allowlisted."""
     n = _global_order_windows(plan)
     if n and key not in _GLOBAL_WINDOW_ALLOWED:
         pytest.fail(
@@ -432,6 +435,14 @@ def _lint_plan(key: str, df) -> None:
             f"{key} no longer plans a global-order Window — drop it from "
             f"_GLOBAL_WINDOW_ALLOWED to keep the inventory exact"
         )
+
+
+def _lint_plan(key: str, df) -> None:
+    """The three plan lints, on the plan of the frame the test executed.
+    The plan is kept in EXECUTED_PLANS for tests/test_plan_sweep.py."""
+    plan = EXECUTED_PLANS[key] = plan_of(df, "simple")
+    _lint_joins(key, plan)
+    _lint_windows(key, plan)
 
 
 @pytest.mark.parametrize("key", _CHECKED)
