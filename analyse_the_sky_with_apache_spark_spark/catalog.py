@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .session import ensure_confs
@@ -78,7 +78,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def fan_out(df: DataFrame, *cols: str) -> DataFrame:
+def fan_out(df: DataFrame, *cols: "str | Column") -> DataFrame:
     """Spread an under-split scan across the session's cores (guide §2.5).
 
     The local fixtures are single-row-group parquet files, so a scan is
@@ -93,8 +93,9 @@ def fan_out(df: DataFrame, *cols: str) -> DataFrame:
     regime the fan-out was measured in: when the input arrives with
     fewer partitions than the session has cores.
 
-    ``cols`` keeps a keyed fan-out keyed (a hash exchange a downstream
-    window/groupBy on the same key can reuse); no cols → round-robin.
+    ``cols`` (names or expressions) keeps a keyed fan-out keyed (a hash
+    exchange a downstream window/groupBy on the same key can reuse); no
+    cols → round-robin.
     The partition probe plans the subtree once (`.rdd` is lazy — no job
     runs); at these call sites the input is a scan + narrow projection,
     so the probe costs milliseconds of planning, not data.

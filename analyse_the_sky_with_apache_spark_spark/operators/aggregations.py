@@ -2653,19 +2653,37 @@ def agg_hll_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixtures land in the linear-counting regime and sf0.01 in the raw
     regime, exercising both sides.
 
-    100-TB posture: the sketch is a <=1024-row integer vector per
-    shard — built with one map-side-combinable groupBy-max over the
-    hashed scan, merged by one groupBy-max over |shards|·1024 rows;
-    no raw key ever crosses the shuffle twice. pytest pins the
+    100-TB posture: one lineage over one 3-column projection of
+    lineitem (shard, orderkey, linenumber), hash-partitioned on k8 =
+    orderkey*8 + linenumber by `catalog.fan_out` only when the scan
+    arrives under-split, so the md5 and rho run once per row on every
+    core. The sketch is a <=1024-row integer vector per shard,
+    built with one map-side-combinable groupBy-max; each register row
+    is exploded to {shard, '~ALL'} and reduced by a second groupBy-max
+    over at most 2·|shards|·1024 rows, so the merge never reads raw
+    rows. The exact counts read the same k8-partitioned rows: the
+    exploded (tag, k8) distinct is partition-local (the k8 hash
+    partitioning already clusters it) and only per-partition counts
+    cross the shuffle; on a pre-split scan no fan-out fires and that
+    distinct shuffles (tag, k8) once. Both branches read the one
+    fan-out exchange (a ReusedExchange), so lineitem is scanned and
+    shuffled once and each row is hashed once. pytest pins the
     estimate within the published 1.04/sqrt(m) ~ 3.25% stderr band
     against exact distinct counts and cross-checks every register
     against a pure-python rebuild.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    pk = li.select(
-        F.col("l_returnflag").alias("shard"), "l_orderkey", "l_linenumber"
-    )
-    h = pk.select(
+    # k8 is computed above the fan-out, so both branches prune it to the
+    # same three columns and share one exchange; the projection aliases
+    # the partitioning expression, so k8 still clusters the distinct.
+    k8 = F.col("l_orderkey") * 8 + F.col("l_linenumber")
+    rows = fan_out(
+        li.select(
+            F.col("l_returnflag").alias("shard"), "l_orderkey", "l_linenumber"
+        ),
+        k8,
+    ).withColumn("k8", k8)
+    h = rows.select(
         "shard",
         md5_int(
             F.concat(
@@ -2684,22 +2702,19 @@ def agg_hll_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     rho = parts.select(
         "shard", "bucket",
         F.when(F.col("w") == 0, F.lit(_HLL_WBITS))
-        .otherwise(
-            F.lit(_HLL_WBITS)
-            - F.length(F.conv(F.col("w").cast("string"), 10, 2))
-        )
+        .otherwise(F.lit(_HLL_WBITS) - F.length(F.bin("w")))
         .cast("int")
         .alias("rho"),
     )
     regs = rho.groupBy("shard", "bucket").agg(
         F.max("rho").cast("int").alias("r")
     )
-    merged = (
-        regs.groupBy("bucket")
+    tags = F.explode(F.array("shard", F.lit("~ALL"))).alias("shard")
+    allregs = (
+        regs.select(tags, "bucket", "r")
+        .groupBy("shard", "bucket")
         .agg(F.max("r").cast("int").alias("r"))
-        .select(F.lit("~ALL").alias("shard"), "bucket", "r")
     )
-    allregs = regs.unionByName(merged)
     stats = allregs.groupBy("shard").agg(
         F.count(F.lit(1)).cast("long").alias("present"),
         F.sum(
@@ -2735,15 +2750,11 @@ def agg_hll_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("e_raw_micro"))
         .alias("est_micro"),
     )
-    key = (F.col("l_orderkey") * 8 + F.col("l_linenumber"))
     exact = (
-        pk.groupBy("shard")
-        .agg(F.countDistinct(key).cast("long").alias("exact_distinct"))
-        .unionByName(
-            pk.agg(
-                F.countDistinct(key).cast("long").alias("exact_distinct")
-            ).select(F.lit("~ALL").alias("shard"), "exact_distinct")
-        )
+        rows.select(tags, "k8")
+        .distinct()
+        .groupBy("shard")
+        .agg(F.count("k8").alias("exact_distinct"))
     )
     return (
         est.join(exact, "shard")

@@ -1463,6 +1463,17 @@ def sim_hard_negative_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KNN_CLS_STRIDE, _KNN_CLS_CAP, _KNN_CLS_K = 20, 4000, 5
 
 
+def _require_nonzero(ids: np.ndarray, n2: np.ndarray, side: str) -> None:
+    """A vector that grids to all zeros has no cosine: numpy yields NaN,
+    which Spark's descending sort would rank FIRST. Refuse it by id."""
+    zero = ids[n2 == 0]
+    if len(zero):
+        raise ValueError(
+            f"ml_knn_classify: {side} vector vec_id {int(zero[0])} grids "
+            "to all zeros; its cosine is undefined"
+        )
+
+
 @register(
     "ml_knn_classify",
     oracle=f"""
@@ -1571,6 +1582,7 @@ def ml_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         + 0.5
     ).astype(np.int64)
     q_n2 = (q_g * q_g).sum(axis=1)
+    _require_nonzero(q_ids, q_n2, "query")
 
     def batch_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1583,6 +1595,7 @@ def ml_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + 0.5
             ).astype(np.int64)
             c_n2 = (c_g * c_g).sum(axis=1)
+            _require_nonzero(c_ids, c_n2, "candidate")
             dots = c_g @ q_g.T  # exact int64: |dot| <= 64 * (5.3e5)^2
             cos = dots.astype(np.float64) / np.sqrt(
                 c_n2.astype(np.float64)[:, None]

@@ -115,9 +115,7 @@ _PRIORITY = (
     "sky_injection_completeness", "agg_ddsketch_quantile",
     "sky_two_point_landy_szalay",
     # round-12 additions (deterministic-sketch promotions of the
-    # rows-only HLL/approx-distinct family — the CMS pattern);
-    # agg_hll_deterministic also carries an r13 rewrite (shared-distinct
-    # checkpoint)
+    # rows-only HLL/approx-distinct family — the CMS pattern)
     "agg_kmv_bottomk", "agg_hll_deterministic", "agg_theta_intersect_kmv",
 ) + _RESAMPLE_R13
 

@@ -13,6 +13,9 @@ import itertools
 from collections import defaultdict
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 
 from analyse_the_sky_with_apache_spark_spark.catalog import load_table
 from analyse_the_sky_with_apache_spark_spark.registry import queries
@@ -560,3 +563,25 @@ def test_txn_log_conflict_detect_verdicts(spark):
         r = rows[txn]
         assert r["commit_ok"] and r["n_conflicts"] == 0
         assert r["conflicting_files"] == "" and r["rows_at_risk"] == 0
+
+
+@pytest.mark.parametrize("zero_id", [20, 7])
+def test_knn_classify_refuses_zero_vectors(spark, tmp_path, zero_id):
+    """ml_knn_classify's cosine needs nonzero norms: a zero query
+    (vec_id % 20 == 0) or candidate vector is refused by its vec_id
+    rather than scored NaN (which a descending sort ranks first)."""
+    rng = np.random.default_rng(0)
+    emb = rng.uniform(-1, 1, size=(40, 4)).astype(np.float32)
+    emb[zero_id] = 0.0
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(40), pa.int64()),
+                "embedding": pa.array(emb.tolist(), pa.list_(pa.float32())),
+                "label": pa.array([i % 3 for i in range(40)], pa.int32()),
+            }
+        ),
+        tmp_path / "embeddings.parquet",
+    )
+    with pytest.raises(Exception, match=rf"vec_id {zero_id} grids to all zeros"):
+        queries()["ml_knn_classify"](spark, str(tmp_path)).collect()

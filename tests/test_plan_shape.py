@@ -582,3 +582,22 @@ def test_nested_pruning_reads_only_referenced_leaves(spark):
     assert "customer" not in schema_line
     assert "status" not in schema_line
     assert "PushedFilters: [IsNotNull(detail.priority)" in plan
+
+
+def test_hll_hashes_each_lineitem_row_once(spark):
+    """agg_hll_deterministic is one fanned-out lineage: the md5 runs in
+    one projection, the '~ALL' registers merge from the per-shard
+    register table, and the exact counts read the same k8-partitioned
+    rows — no branch re-scans and re-hashes lineitem."""
+    from analyse_the_sky_with_apache_spark_spark.registry import queries
+
+    df = queries()["agg_hll_deterministic"](spark, SF_DIR)
+    df.collect()
+    final = _plan(df, "simple").split("== Initial Plan ==")[0]
+    assert "== Final Plan ==" in final
+    assert final.count("md5(") == 1
+    scans = [
+        line for line in final.splitlines()
+        if "FileScan" in line and "lineitem.parquet" in line
+    ]
+    assert 1 <= len(scans) <= 2

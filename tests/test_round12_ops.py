@@ -12,6 +12,8 @@ from __future__ import annotations
 import hashlib
 import math
 
+import duckdb
+import pyarrow as pa
 import pyarrow.parquet as pq
 
 from analyse_the_sky_with_apache_spark_spark.operators.aggregations import (
@@ -22,10 +24,11 @@ from analyse_the_sky_with_apache_spark_spark.operators.aggregations import (
     _KMV_K,
 )
 from analyse_the_sky_with_apache_spark_spark.registry import (
+    ORACLE,
     QUERIES,
     load_all_modules,
 )
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, assert_matches_oracle
 
 load_all_modules()
 
@@ -177,6 +180,44 @@ def test_hll_merge_is_registerwise_max():
         assert merged[b] == max(
             d.get(b, 0) for k, d in regs.items() if k != "~ALL"
         )
+
+
+def test_hll_edge_cases_match_oracle(spark, tmp_path):
+    """Null shards, one key under two shards, and exact-key collisions.
+
+    (1, 1) sits under two return flags, so it counts once in '~ALL';
+    the null-flag row forms no shard but feeds the '~ALL' registers
+    and count; (3, 9) and (4, 1) share ``l_orderkey*8 + l_linenumber``
+    = 33, as do (5, 12) and the null-flag (6, 4) at 52, so the exact
+    count sees one key where the hash sees two.
+    """
+    rows = [(1, 1, "A"), (1, 1, "N"), (2, 3, None), (3, 9, "R"),
+            (4, 1, "R"), (5, 12, "A"), (6, 4, None)]
+    rows += [(100 + i, 1 + i % 7, "NRA"[i % 3]) for i in range(40)]
+    pq.write_table(
+        pa.table(
+            {
+                "l_orderkey": pa.array([r[0] for r in rows], pa.int64()),
+                "l_linenumber": pa.array([r[1] for r in rows], pa.int32()),
+                "l_returnflag": pa.array([r[2] for r in rows], pa.string()),
+            }
+        ),
+        tmp_path / "lineitem.parquet",
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW lineitem AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/lineitem.parquet')"
+    )
+    try:
+        df = assert_matches_oracle(
+            spark, con, QUERIES["agg_hll_deterministic"],
+            ORACLE["agg_hll_deterministic"], sf_dir=str(tmp_path),
+        )
+    finally:
+        con.close()
+    got = {r["shard"]: r["exact_distinct"] for r in df.collect()}
+    assert got == {"A": 15, "N": 15, "R": 14, "~ALL": 44}
 
 
 # -------------------------------------------------------------- theta

@@ -1,41 +1,37 @@
 #!/bin/bash
-# Interleaved paired A/B for a noisy host: alternates BEFORE (stashed)
-# and AFTER (working tree) states N times, timing the same key list
-# with tools/ab_bench.py each round. Paired rounds bracket environment
+# Interleaved paired A/B for a noisy host: alternates BEFORE (HEAD) and
+# AFTER (the working tree) N times, timing the same key list with
+# tools/ab_bench.py each round. Paired rounds bracket environment
 # drift; compare per-key medians of the A and B columns.
 # Usage: tools/ab_paired.sh N "key1 key2 ..." OUT_PREFIX
 #
-# r13 hardening (ADVICE r12): require a dirty tree (a clean tree makes
-# `git stash` a no-op, so "before" would time the AFTER code and the
-# `pop` would abort), stash untracked files too (-u, so a brand-new
-# module can't silently contaminate the baseline), and pop the stash on
-# ANY exit so a mid-round bench failure can't strand the changes.
+# BEFORE runs from a temporary detached `git worktree` of HEAD, removed
+# on any exit, so the working tree is never rewritten and files the
+# bench regenerates cannot collide with a restore. A clean tree is
+# refused: both sides would time the same code.
 set -e
 N=${1:-3}
 KEYS=$2
 OUT=${3:-/tmp/abp}
-cd /root/repo
-if git diff --quiet && git diff --cached --quiet \
-    && [ -z "$(git ls-files --others --exclude-standard)" ]; then
+ROOT=$(cd "$(dirname "$0")/.." && pwd)
+cd "$ROOT"
+if git diff --quiet HEAD && [ -z "$(git ls-files --others --exclude-standard)" ]; then
   echo "ab_paired: working tree is clean — nothing to A/B" >&2
   exit 2
 fi
-STASHED=0
-restore() {
-  if [ "$STASHED" = 1 ]; then
-    git stash pop >/dev/null || echo "ab_paired: stash pop FAILED — run 'git stash pop' by hand" >&2
-    STASHED=0
-  fi
+BEFORE=$(mktemp -d "${TMPDIR:-/tmp}/ab_paired.XXXXXX")
+cleanup() {
+  git worktree remove --force "$BEFORE" >/dev/null 2>&1 || rm -rf "$BEFORE"
+  git worktree prune
 }
-trap restore EXIT
+trap cleanup EXIT
+git worktree add --quiet --detach "$BEFORE" HEAD
 for i in $(seq 1 "$N"); do
-  git stash -u >/dev/null
-  STASHED=1
-  SPARK_GRAFT_BENCH_RUNS=3 python tools/ab_bench.py $KEYS 2>/dev/null \
+  (cd "$BEFORE" && PYTHONPATH="$BEFORE" SPARK_GRAFT_BENCH_RUNS=3 \
+    python tools/ab_bench.py $KEYS 2>/dev/null) \
     | tail -1 > "${OUT}_before_$i.json"
-  git stash pop >/dev/null
-  STASHED=0
-  SPARK_GRAFT_BENCH_RUNS=3 python tools/ab_bench.py $KEYS 2>/dev/null \
+  PYTHONPATH="$ROOT" SPARK_GRAFT_BENCH_RUNS=3 \
+    python tools/ab_bench.py $KEYS 2>/dev/null \
     | tail -1 > "${OUT}_after_$i.json"
   echo "round $i done"
 done
