@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import fan_out, load_table
+from ..catalog import fan_out, load_table, session_checkpoint
 from ..functions.exact import md5_int_sql
 from ..registry import register
 
@@ -602,23 +602,14 @@ def minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session → {sf_dir → eagerly-materialized band table}. Both minhash
-#: rungs (self-join dedup, incremental ingest) start from the same
-#: signature build — the dominant cost (2 md5 per shingle); at 100 TB
-#: this is the persisted LSH index, the cache is its in-session form.
-_BANDS_CACHE: dict = {}
-
-
 def minhash_bands_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import ensure_confs
-
-    ensure_confs(spark)  # cache hits skip load_table's conf re-apply
-    per_session = _BANDS_CACHE.setdefault(spark, {})
-    df = per_session.get(sf_dir)
-    if df is None:
-        df = minhash_bands(spark, sf_dir).localCheckpoint(eager=True)
-        per_session[sf_dir] = df
-    return df
+    """The session's materialized band table. Both minhash rungs
+    (self-join dedup, incremental ingest) start from the same signature
+    build — the dominant cost (2 md5 per shingle); at 100 TB this is the
+    persisted LSH index."""
+    return session_checkpoint(
+        spark, ("minhash_bands", sf_dir), lambda: minhash_bands(spark, sf_dir)
+    )
 
 
 #: oracle twin of ``minhash_bands`` — the shared CTE chain ending at

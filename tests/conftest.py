@@ -11,8 +11,8 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from analyse_the_sky_with_apache_spark_spark.catalog import TABLES
 from analyse_the_sky_with_apache_spark_spark.session import get_spark
+from tools.canon import duck_views
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -42,11 +42,7 @@ def spark():
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    duck_views(con, SF_DIR)
     yield con
     con.close()
 

@@ -1,0 +1,135 @@
+"""The co-purchase graph: one definition per engine.
+
+``operators/graph.py`` builds its edge table in Spark with ``_edges``
+(both ways round: ``_adjacency``) and renders the same edge set for the
+DuckDB oracles with ``_e_sql`` / ``_adj_sql``. These tests check that
+the twins agree, and lint the module so no kernel or oracle retypes the
+lineitem self-join or the adjacency union by hand again.
+"""
+
+from __future__ import annotations
+
+import ast
+import os
+import re
+
+import pytest
+
+from analyse_the_sky_with_apache_spark_spark.catalog import session_checkpoint
+from analyse_the_sky_with_apache_spark_spark.operators.graph import (
+    _DIRECTED_E_SQL,
+    _adj_sql,
+    _adjacency,
+    _directed_edges,
+    _e_sql,
+    _edges_cached,
+)
+from tests.conftest import SF_DIR
+
+
+@pytest.mark.parametrize("strong", [False, True])
+def test_edge_twins_agree(spark, duck, strong):
+    e = _edges_cached(spark, SF_DIR, strong)
+    got = sorted(tuple(r) for r in e.select("u", "v").collect())
+    want = sorted(duck.execute(f"WITH {_e_sql(strong)} SELECT u, v FROM e").fetchall())
+    assert got and got == want
+    adj = sorted(
+        tuple(r)
+        for r in _adjacency(spark, SF_DIR, strong).select("node", "nbr").collect()
+    )
+    assert adj == sorted(
+        duck.execute(
+            f"WITH {_e_sql(strong)}, {_adj_sql()} SELECT node, nbr FROM adj"
+        ).fetchall()
+    )
+    assert len(adj) == 2 * len(got)
+
+
+def test_strong_edges_carry_their_pair_count(spark, duck):
+    got = sorted(tuple(r) for r in _edges_cached(spark, SF_DIR, strong=True).collect())
+    want = duck.execute(
+        "SELECT a.l_partkey, b.l_partkey, COUNT(*) FROM lineitem a"
+        " JOIN lineitem b ON a.l_orderkey = b.l_orderkey"
+        " AND a.l_partkey < b.l_partkey GROUP BY 1, 2 HAVING COUNT(*) >= 2"
+        " ORDER BY 1, 2"
+    ).fetchall()
+    assert got and got == want
+
+
+def test_directed_edge_twins_agree(spark, duck):
+    got = sorted(tuple(r) for r in _directed_edges(spark, SF_DIR).collect())
+    want = sorted(duck.execute(f"WITH {_DIRECTED_E_SQL} SELECT u, v FROM e").fetchall())
+    assert got and got == want
+
+
+def test_session_checkpoint_builds_once(spark):
+    calls = []
+
+    def build():
+        calls.append(1)
+        return spark.range(3)
+
+    key = ("test_session_checkpoint_builds_once",)
+    first = session_checkpoint(spark, key, build)
+    assert session_checkpoint(spark, key, build) is first
+    assert calls == [1] and first.count() == 3
+
+
+#: hand-typed graph idioms, compared with all whitespace removed, and the
+#: top-level definitions allowed to hold each one.
+_IDIOMS = {
+    # the undirected co-purchase self-join, SQL and Spark
+    "a.l_partkey<b.l_partkey": {"_e_sql", "graph_sssp_bounded"},
+    'F.col("a.l_partkey")<F.col("b.l_partkey")': {"_edges"},
+    # the directed one
+    "a.l_linenumber<b.l_linenumber": {"_DIRECTED_E_SQL"},
+    'F.col("a.l_linenumber")<F.col("b.l_linenumber")': {"_directed_edges"},
+    # the both-ways adjacency union (neighbor column nb or nbr)
+    'F.col("u").alias("node"),F.col("v").alias("nb': {"_adjacency"},
+}
+
+
+def _top_level_sources(path: str) -> dict[str, str]:
+    """Top-level name -> its source (decorators included), whitespace
+    stripped."""
+    with open(path, encoding="utf-8") as f:
+        src = f.read()
+    lines = src.splitlines()
+    out = {}
+    for node in ast.parse(src).body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            name = node.name
+        elif isinstance(node, ast.Assign) and isinstance(node.targets[0], ast.Name):
+            name = node.targets[0].id
+        else:
+            continue
+        decorators = getattr(node, "decorator_list", [])
+        first = min([node.lineno] + [d.lineno for d in decorators])
+        out[name] = re.sub(r"\s+", "", "\n".join(lines[first - 1 : node.end_lineno]))
+    return out
+
+
+def test_graph_idioms_only_in_their_twins():
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "analyse_the_sky_with_apache_spark_spark",
+        "operators",
+        "graph.py",
+    )
+    with open(path, encoding="utf-8") as f:
+        flat = re.sub(r"\s+", "", f.read())
+    sources = _top_level_sources(path)
+    hits = []
+    for idiom, allowed in _IDIOMS.items():
+        placed = sum(sources[name].count(idiom) for name in allowed)
+        assert placed, f"{idiom} is missing from {sorted(allowed)}"
+        for name, body in sources.items():
+            if name not in allowed and idiom in body:
+                hits.append(f"{name}: {idiom} x{body.count(idiom)}")
+        # nothing outside a top-level definition either
+        assert flat.count(idiom) == sum(b.count(idiom) for b in sources.values()), idiom
+    assert not hits, (
+        "build the co-purchase graph through operators.graph's twins "
+        "(_edges / _e_sql, _directed_edges / _DIRECTED_E_SQL, _adjacency):\n"
+        + "\n".join(hits)
+    )

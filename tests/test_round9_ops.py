@@ -143,12 +143,12 @@ def test_betweenness_vs_pure_python_brandes(spark):
 
     from analyse_the_sky_with_apache_spark_spark.operators.graph import (
         _BC_SOURCES,
-        _strong_edges_cached,
+        _edges_cached,
     )
 
     edges = [
         (r["u"], r["v"])
-        for r in _strong_edges_cached(spark, SF_DIR).collect()
+        for r in _edges_cached(spark, SF_DIR, strong=True).collect()
     ]
     adj = defaultdict(set)
     for u, v in edges:

@@ -47,6 +47,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from analyse_the_sky_with_apache_spark_spark.catalog import TABLES
+
 #: cell types the driver's hasher cannot process (pandas factorize crash).
 _NESTED = (list, tuple, dict, set, np.ndarray, bytearray, memoryview)
 
@@ -154,6 +156,16 @@ def compare_canonical(s_pdf: pd.DataFrame, d_pdf: pd.DataFrame) -> None:
                     f"column {c}: values differ; first @{i}: "
                     f"spark={a.iloc[i]!r} duck={b.iloc[i]!r}"
                 )
+
+
+def duck_views(con, sf_dir: str) -> None:
+    """Expose every fixture table of ``sf_dir`` to DuckDB connection
+    ``con`` as a view of the same name — the tables the oracles query."""
+    for t in TABLES:
+        con.execute(
+            f"CREATE OR REPLACE VIEW {t} AS "
+            f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
 
 
 def compare_spark_duck(df, rel) -> int:

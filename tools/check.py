@@ -22,9 +22,8 @@ import duckdb
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from analyse_the_sky_with_apache_spark_spark import registry  # noqa: E402
-from analyse_the_sky_with_apache_spark_spark.catalog import TABLES  # noqa: E402
 from analyse_the_sky_with_apache_spark_spark.session import get_spark  # noqa: E402
-from tools.canon import OracleCompareError, compare_spark_duck  # noqa: E402
+from tools.canon import OracleCompareError, compare_spark_duck, duck_views  # noqa: E402
 
 
 def main() -> int:
@@ -42,11 +41,7 @@ def main() -> int:
     else:
         spark = get_spark("check")
     con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    duck_views(con, sf_dir)
 
     qs, oracles = registry.queries(), registry.oracle_sql()
     n_pass = n_fail = n_rows_only = 0

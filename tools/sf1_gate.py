@@ -29,19 +29,14 @@ import duckdb
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from analyse_the_sky_with_apache_spark_spark import registry  # noqa: E402
-from analyse_the_sky_with_apache_spark_spark.catalog import TABLES  # noqa: E402
 from analyse_the_sky_with_apache_spark_spark.session import get_spark  # noqa: E402
-from tools.canon import OracleCompareError, compare_spark_duck  # noqa: E402
+from tools.canon import OracleCompareError, compare_spark_duck, duck_views  # noqa: E402
 
 
 def _run_keys(spark, sf_dir, keys, budget_s, tier):
     """Run one tier; returns (results dict, slow list)."""
     con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    duck_views(con, sf_dir)
     qs, oracles = registry.queries(), registry.oracle_sql()
     results: dict[str, dict] = {}
     slow: list[str] = []
@@ -96,7 +91,11 @@ def _run_keys(spark, sf_dir, keys, budget_s, tier):
 
 def main() -> int:
     args = sys.argv[1:]
-    sf1 = args[0] if len(args) > 0 else "/root/repo/.scale/sf1"
+    sf1 = args[0] if len(args) > 0 else os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        ".scale",
+        "sf1",
+    )
     tier2 = args[1] if len(args) > 1 else "/root/testdata/sf0.1"
     budget = float(args[2]) if len(args) > 2 else 150.0
 
