@@ -6,15 +6,22 @@ tree and DuckDB's aggregation associate additions differently, so
 break an exact value-hash even after ``round()`` when the true value sits
 near a rounding boundary (SURVEY.md §5.3 hazard 2).
 
-The fix used engine-wide: **scaled-integer accumulation**. Per row,
-``FLOOR(x * 10^s + 0.5)`` is deterministic IEEE arithmetic — both engines
-evaluate the same multiply tree on the same double; the input carries ≤ s
-decimal digits, so the scaled value sits within ulps of an integer and
-never near a .5 boundary, making the +0.5/floor round-to-grid identical
-everywhere (positive or negative). The integer SUM is exact in any
-association order, and the final ``CAST(sum AS DOUBLE) / 10^s`` is a
-single, identical division in both engines. Result: bit-identical
-aggregates with no rounding hazard.
+The fix used engine-wide: **scaled-integer accumulation** on one
+fixed-point grid. :func:`grid` (Spark) and :func:`grid_sql` (DuckDB and
+Spark SQL text) are the one place that decision is made: ``x`` at scale
+``s`` is ``CAST(FLOOR(x * 10^s + 0.5) AS BIGINT)``, and no module types
+the idiom by hand (``tests/test_grid_twins.py`` lints for it). Per row
+that is deterministic IEEE arithmetic — both engines evaluate the same
+multiply tree on the same double; the input carries ≤ s decimal digits,
+so the scaled value sits within ulps of an integer and never near a .5
+boundary, making the +0.5/floor round-to-grid identical everywhere
+(positive or negative). The integer SUM is exact in any association
+order, and the final ``CAST(sum AS DOUBLE) / 10^s`` is a single,
+identical division in both engines (:func:`dsum` / :func:`davg` and
+their ``_sql`` twins). Result: bit-identical aggregates with no rounding
+hazard. At ``s = 0`` neither twin multiplies: a ``* 1.0`` is not folded
+away by Catalyst, so it would change the plan of every integer-grid
+site.
 
 FLOOR, not ROUND: Spark's ROUND(double) routes through BigDecimal
 HALF_UP (an allocation per value — measured 2.2× slower on the Q1
@@ -31,9 +38,9 @@ inside whole-stage codegen as primitive arithmetic.
 Scale bounds: the long accumulator is safe while
 ``n_rows × max|x| × 10^s < 2^63`` — for the largest fixture expression
 (charge ≈ 1.2e5 × 10^6) that is ~7.6e13 rows, i.e. multi-petabyte
-lineitem. Beyond that, or for hot skewed keys at 100 TB, use
-:func:`dsum_wide` (decimal(38,s) accumulator — exact at any cardinality,
-~2.5× slower) for the few money columns that need it.
+lineitem. Beyond that, or for hot skewed keys at 100 TB, the remedy is a
+decimal(38,s) accumulator (exact at any cardinality, ~2.5× slower) for
+the few money columns that need it.
 
 The md5→integer hash lives here for the same reason. Every hash-coin,
 sketch cell and synthetic sky coordinate in the engine is an integer
@@ -52,15 +59,22 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def _scaled(col: Column | str, scale: int) -> Column:
+def grid(col: Column | str, s: int) -> Column:
+    """``col`` on the fixed-point grid ``10^-s``: ``floor(col * 10^s + 0.5)``,
+    a long. The Spark twin of :func:`grid_sql`."""
     c = F.col(col) if isinstance(col, str) else col
-    # F.floor on double already yields LongType in Spark
-    return F.floor(c * F.lit(float(10**scale)) + F.lit(0.5))
+    return F.floor((c * float(10**s) if s else c) + 0.5)
+
+
+def grid_sql(expr: str, s: int) -> str:
+    """DuckDB-side twin of :func:`grid` (same text works in Spark SQL)."""
+    scaled = f"({expr}) * {float(10**s)}" if s else f"({expr})"
+    return f"CAST(FLOOR({scaled} + 0.5) AS BIGINT)"
 
 
 def dsum(col: Column | str, alias: str, scale: int = 4) -> Column:
     """Order-independent SUM(double) via exact scaled-long accumulation."""
-    return (F.sum(_scaled(col, scale)).cast("double") / F.lit(float(10**scale))).alias(
+    return (F.sum(grid(col, scale)).cast("double") / F.lit(float(10**scale))).alias(
         alias
     )
 
@@ -68,7 +82,7 @@ def dsum(col: Column | str, alias: str, scale: int = 4) -> Column:
 def davg(col: Column | str, alias: str, scale: int = 6) -> Column:
     """Order-independent AVG(double): exact scaled sum / scale / count."""
     return (
-        F.sum(_scaled(col, scale)).cast("double")
+        F.sum(grid(col, scale)).cast("double")
         / F.lit(float(10**scale))
         / F.count(F.lit(1))
     ).alias(alias)
@@ -76,31 +90,18 @@ def davg(col: Column | str, alias: str, scale: int = 6) -> Column:
 
 def dsum_sql(expr: str, alias: str, scale: int = 4) -> str:
     """DuckDB-side twin of :func:`dsum` (same text works in Spark SQL)."""
-    s = float(10**scale)
     return (
-        f"CAST(SUM(CAST(FLOOR(({expr}) * {s} + 0.5) AS BIGINT)) AS DOUBLE)"
-        f" / {s} AS {alias}"
+        f"CAST(SUM({grid_sql(expr, scale)}) AS DOUBLE)"
+        f" / {float(10**scale)} AS {alias}"
     )
 
 
 def davg_sql(expr: str, alias: str, scale: int = 6) -> str:
     """DuckDB-side twin of :func:`davg`."""
-    s = float(10**scale)
     return (
-        f"CAST(SUM(CAST(FLOOR(({expr}) * {s} + 0.5) AS BIGINT)) AS DOUBLE)"
-        f" / {s} / COUNT(*) AS {alias}"
+        f"CAST(SUM({grid_sql(expr, scale)}) AS DOUBLE)"
+        f" / {float(10**scale)} / COUNT(*) AS {alias}"
     )
-
-
-def dsum_wide(col: Column | str, alias: str, scale: int = 4) -> Column:
-    """Exact SUM for cardinalities past the long accumulator's bound.
-
-    decimal(38,s) accumulation — exact at any scale factor, but off the
-    codegen'd primitive fast path (~2.5× slower). Reserve for the rare
-    100-TB aggregate whose scaled sum could exceed 2^63.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(f"decimal(28,{scale})")).cast("double").alias(alias)
 
 
 def md5_int(col: Column | str, off: int, n: int, dtype: str = "long") -> Column:

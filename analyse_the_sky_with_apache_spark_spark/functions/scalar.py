@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
+from .exact import grid_sql
 
 
 @register(
@@ -777,12 +778,10 @@ def sql_named_params(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sql_lateral_alias",
-    oracle="""
+    oracle=f"""
 SELECT l_orderkey, l_linenumber,
-       CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100.0 + 0.5)
-            AS BIGINT) AS net_cents,
-       CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100.0 + 0.5)
-            AS BIGINT) * 2 AS doubled
+       {grid_sql('l_extendedprice * (1 - l_discount)', 2)} AS net_cents,
+       {grid_sql('l_extendedprice * (1 - l_discount)', 2)} * 2 AS doubled
 FROM lineitem
 WHERE l_quantity < CAST(3.0 AS DOUBLE)
 """,
@@ -798,10 +797,9 @@ def sql_lateral_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(
-        """
+        f"""
         SELECT l_orderkey, l_linenumber,
-               CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100.0 + 0.5)
-                    AS BIGINT) AS net_cents,
+               {grid_sql('l_extendedprice * (1 - l_discount)', 2)} AS net_cents,
                net_cents * 2 AS doubled
         FROM lineitem
         WHERE l_quantity < CAST(3.0 AS DOUBLE)
@@ -811,9 +809,9 @@ def sql_lateral_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sql_group_by_all",
-    oracle="""
+    oracle=f"""
 SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-       CAST(SUM(CAST(FLOOR(l_quantity + 0.5) AS BIGINT)) AS BIGINT)
+       CAST(SUM({grid_sql('l_quantity', 0)}) AS BIGINT)
          AS total_qty
 FROM lineitem
 GROUP BY ALL
@@ -829,9 +827,9 @@ def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(
-        """
+        f"""
         SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-               CAST(SUM(CAST(FLOOR(l_quantity + 0.5) AS BIGINT)) AS BIGINT)
+               CAST(SUM({grid_sql('l_quantity', 0)}) AS BIGINT)
                  AS total_qty
         FROM lineitem
         GROUP BY ALL
@@ -841,10 +839,10 @@ def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sql_pipe_syntax",
-    oracle="""
+    oracle=f"""
 SELECT l_returnflag, COUNT(*) AS n,
-       CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100.0 + 0.5)
-                     AS BIGINT)) AS DOUBLE) / 100.0 AS revenue
+       CAST(SUM({grid_sql('l_extendedprice * (1 - l_discount)', 2)}) AS DOUBLE) / 100.0
+         AS revenue
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1997-01-01'
 GROUP BY l_returnflag
@@ -864,12 +862,11 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(
-        """
+        f"""
         FROM lineitem
         |> WHERE l_shipdate >= TIMESTAMP '1997-01-01'
         |> AGGREGATE COUNT(*) AS n,
-                     CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount)
-                                         * 100.0 + 0.5) AS BIGINT))
+                     CAST(SUM({grid_sql('l_extendedprice * (1 - l_discount)', 2)})
                           AS DOUBLE) / 100.0 AS revenue
            GROUP BY l_returnflag
         |> SELECT l_returnflag, n, revenue
@@ -881,11 +878,11 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sql_filter_clause",
-    oracle="""
+    oracle=f"""
 SELECT l_returnflag,
        COUNT(*) AS n_all,
        COUNT(*) FILTER (WHERE l_quantity >= CAST(25.0 AS DOUBLE)) AS n_big,
-       CAST(SUM(CAST(FLOOR(l_extendedprice * 100.0 + 0.5) AS BIGINT))
+       CAST(SUM({grid_sql('l_extendedprice', 2)})
             FILTER (WHERE l_discount > CAST(0.05 AS DOUBLE)) AS BIGINT)
          AS cents_discounted
 FROM lineitem
@@ -906,12 +903,12 @@ def sql_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(
-        """
+        f"""
         SELECT l_returnflag,
                COUNT(*) AS n_all,
                COUNT(*) FILTER (WHERE l_quantity >= CAST(25.0 AS DOUBLE))
                  AS n_big,
-               CAST(SUM(CAST(FLOOR(l_extendedprice * 100.0 + 0.5) AS BIGINT))
+               CAST(SUM({grid_sql('l_extendedprice', 2)})
                     FILTER (WHERE l_discount > CAST(0.05 AS DOUBLE)) AS BIGINT)
                  AS cents_discounted
         FROM lineitem
@@ -1024,10 +1021,10 @@ def sql_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sql_identifier_clause",
-    oracle="""
+    oracle=f"""
 SELECT o_orderstatus,
        CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT))
+       CAST(SUM({grid_sql('o_totalprice', 2)})
             AS BIGINT) AS sum_cents
 FROM orders
 GROUP BY o_orderstatus
@@ -1049,11 +1046,10 @@ def sql_identifier_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_views(spark, sf_dir)
     return spark.sql(
-        """
+        f"""
         SELECT IDENTIFIER(:grp) AS o_orderstatus,
                CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(CAST(FLOOR(IDENTIFIER(:val) * 100.0 + 0.5)
-                             AS BIGINT)) AS BIGINT) AS sum_cents
+               CAST(SUM({grid_sql('IDENTIFIER(:val)', 2)}) AS BIGINT) AS sum_cents
         FROM IDENTIFIER(:tbl)
         GROUP BY IDENTIFIER(:grp)
         ORDER BY IDENTIFIER(:grp)

@@ -13,7 +13,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import fan_out, load_table
-from ..functions.exact import davg, davg_sql, dsum, dsum_sql, md5_int, md5_int_sql
+from ..functions.exact import (
+    davg,
+    davg_sql,
+    dsum,
+    dsum_sql,
+    grid,
+    grid_sql,
+    md5_int,
+    md5_int_sql,
+)
 from ..registry import register
 
 _Q1_CUTOFF = "1998-09-02"
@@ -850,9 +859,9 @@ def agg_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "agg_sum_distinct",
-    oracle="""
+    oracle=f"""
 SELECT l_returnflag,
-       CAST(SUM(DISTINCT CAST(FLOOR(l_quantity * 100.0 + 0.5) AS BIGINT))
+       CAST(SUM(DISTINCT {grid_sql('l_quantity', 2)})
             AS BIGINT) AS sum_distinct_qty_cents,
        CAST(SUM(DISTINCT l_linenumber) AS BIGINT) AS sum_distinct_line,
        COUNT(*) AS n
@@ -870,9 +879,7 @@ def agg_sum_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
-        F.sum_distinct(
-            F.floor(F.col("l_quantity") * 100.0 + F.lit(0.5))
-        ).alias("sum_distinct_qty_cents"),
+        F.sum_distinct(grid("l_quantity", 2)).alias("sum_distinct_qty_cents"),
         F.sum_distinct(F.col("l_linenumber").cast("long")).alias(
             "sum_distinct_line"
         ),
@@ -923,10 +930,8 @@ def agg_salted_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.groupBy("l_returnflag", "l_linestatus", salt)
         .agg(
             F.count(F.lit(1)).alias("pn"),
-            F.sum(F.floor(F.col("l_quantity") * 100.0 + F.lit(0.5))).alias("pq"),
-            F.sum(
-                F.floor(F.col("l_extendedprice") * 10000.0 + F.lit(0.5))
-            ).alias("pp"),
+            F.sum(grid("l_quantity", 2)).alias("pq"),
+            F.sum(grid("l_extendedprice", 4)).alias("pp"),
         )
     )
     return (
@@ -968,7 +973,7 @@ def agg_incremental_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     splits lineitem 90/10 by hash to play base and delta.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    cents = F.floor(F.col("l_extendedprice") * F.lit(100.0) + F.lit(0.5))
+    cents = grid("l_extendedprice", 2)
     is_delta = F.abs(F.hash("l_orderkey", "l_linenumber")) % 10 == 0
 
     def partial(df: DataFrame) -> DataFrame:
@@ -1198,7 +1203,7 @@ def agg_restatement(spark: SparkSession, sf_dir: str) -> DataFrame:
     base ⊕ retractions, and the hash match proves the algebra.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    cents = F.floor(F.col("l_extendedprice") * F.lit(100.0) + F.lit(0.5))
+    cents = grid("l_extendedprice", 2)
     void = (F.col("l_returnflag") == "R") & (F.col("l_quantity") < 2.0)
 
     base = li.groupBy("l_returnflag").agg(
@@ -1227,11 +1232,11 @@ def agg_restatement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "time_rollup_cascade",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS day,
          COUNT(*) AS n,
-         CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('o_totalprice', 2)})
               AS BIGINT) AS cents
   FROM orders GROUP BY 1
 )
@@ -1266,9 +1271,7 @@ def time_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate").cast("date").alias("day")
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5))
-        ).alias("cents"),
+        F.sum(grid("o_totalprice", 2)).alias("cents"),
     )
     def level(df, grain, bucket_col):
         return df.select(
@@ -1293,18 +1296,17 @@ def time_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "agg_higher_moments",
-    oracle="""
+    oracle=f"""
 WITH s AS (
   SELECT l_returnflag,
          COUNT(*) AS n,
-         CAST(SUM(CAST(FLOOR(l_quantity * 10000.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('l_quantity', 4)})
               AS BIGINT) AS s1,
-         CAST(SUM(CAST(FLOOR(l_quantity * l_quantity * 10000.0 + 0.5)
-                       AS BIGINT)) AS BIGINT) AS s2,
-         CAST(SUM(CAST(FLOOR(l_quantity * l_quantity * l_quantity
-                             * 10000.0 + 0.5) AS BIGINT)) AS BIGINT) AS s3,
-         CAST(SUM(CAST(FLOOR(l_quantity * l_quantity * l_quantity
-                             * l_quantity * 10000.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('l_quantity * l_quantity', 4)}) AS BIGINT) AS s2,
+         CAST(SUM({grid_sql('l_quantity * l_quantity * l_quantity', 4)}) AS BIGINT)
+           AS s3,
+         CAST(SUM({grid_sql('''l_quantity * l_quantity * l_quantity
+                             * l_quantity''', 4)})
               AS BIGINT) AS s4
   FROM lineitem GROUP BY l_returnflag
 )
@@ -1341,9 +1343,7 @@ def agg_higher_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
         expr = q
         for _ in range(p - 1):
             expr = expr * q
-        return F.sum(
-            F.floor(expr * F.lit(1e4) + F.lit(0.5))
-        ).alias(name)
+        return F.sum(grid(expr, 4)).alias(name)
 
     s = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1489,10 +1489,10 @@ def events_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "agg_weighted_median",
-    oracle="""
+    oracle=f"""
 WITH g AS (
   SELECT l_returnflag AS rf, l_extendedprice AS v,
-         CAST(SUM(CAST(FLOOR(l_quantity * 100.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('l_quantity', 2)})
               AS BIGINT) AS w
   FROM lineitem GROUP BY l_returnflag, l_extendedprice
 ),
@@ -1528,11 +1528,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_returnflag").alias("rf"),
         F.col("l_extendedprice").alias("v"),
     ).agg(
-        F.sum(
-            F.floor(F.col("l_quantity") * F.lit(100.0) + F.lit(0.5)).cast(
-                "long"
-            )
-        ).alias("w")
+        F.sum(grid("l_quantity", 2)).alias("w")
     )
     wc = Window.partitionBy("rf").orderBy("v")
     wt = Window.partitionBy("rf")
@@ -1556,7 +1552,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "agg_entropy",
-    oracle="""
+    oracle=f"""
 WITH c AS (
   SELECT user_id, event_type, COUNT(*) AS c
   FROM events GROUP BY user_id, event_type
@@ -1567,10 +1563,10 @@ t AS (
   FROM c GROUP BY user_id
 )
 SELECT c.user_id, MIN(t.n_types) AS n_types,
-       CAST(CAST(SUM(CAST(FLOOR(
+       CAST(CAST(SUM({grid_sql('''
          -(CAST(c.c AS DOUBLE) / t.tot)
-           * ln(CAST(c.c AS DOUBLE) / t.tot) * 1000000000.0 + 0.5)
-         AS BIGINT)) AS BIGINT) AS DOUBLE) / 1000000000.0 AS entropy_nats
+           * ln(CAST(c.c AS DOUBLE) / t.tot)''', 9)}) AS BIGINT) AS DOUBLE)
+         / 1000000000.0 AS entropy_nats
 FROM c JOIN t USING (user_id)
 GROUP BY c.user_id
 HAVING MIN(t.tot) >= 20
@@ -1599,7 +1595,7 @@ def agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").alias("tot"), F.count(F.lit(1)).alias("n_types")
     )
     p = F.col("c").cast("double") / F.col("tot")
-    term_g = F.floor(-p * F.log(p) * F.lit(1e9) + F.lit(0.5)).cast("long")
+    term_g = grid(-p * F.log(p), 9)
     return (
         c.join(t, "user_id")
         .groupBy("user_id")
@@ -1617,7 +1613,7 @@ def agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "agg_winsorized_mean",
-    oracle="""
+    oracle=f"""
 WITH r AS (
   SELECT l_returnflag AS rf, l_extendedprice AS px,
          ROW_NUMBER() OVER (PARTITION BY l_returnflag
@@ -1633,8 +1629,7 @@ q AS (
 ),
 w AS (
   SELECT l.l_returnflag AS rf,
-         CAST(FLOOR(LEAST(GREATEST(l.l_extendedprice, q.p05), q.p95)
-                    * 100.0 + 0.5) AS BIGINT) AS wc
+         {grid_sql('LEAST(GREATEST(l.l_extendedprice, q.p05), q.p95)', 2)} AS wc
   FROM lineitem l JOIN q ON l.l_returnflag = q.rf
 )
 SELECT rf AS l_returnflag, CAST(COUNT(*) AS BIGINT) AS n,
@@ -1682,15 +1677,9 @@ def agg_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(q), li.l_returnflag == q.rf
     ).select(
         "rf",
-        F.floor(
-            F.least(
-                F.greatest(F.col("l_extendedprice"), F.col("p05")),
-                F.col("p95"),
-            )
-            * F.lit(100.0)
-            + F.lit(0.5)
+        grid(
+            F.least(F.greatest(F.col("l_extendedprice"), F.col("p05")), F.col("p95")), 2
         )
-        .cast("long")
         .alias("wc"),
     )
     return w.groupBy(F.col("rf").alias("l_returnflag")).agg(
@@ -1708,7 +1697,7 @@ _HIST_BUCKETS = 20
     "agg_histogram_equiwidth",
     oracle=f"""
 WITH cents AS (
-  SELECT CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS v
+  SELECT {grid_sql('o_totalprice', 2)} AS v
   FROM orders
 ),
 bounds AS (
@@ -1752,9 +1741,7 @@ def agg_histogram_equiwidth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     od = load_table(spark, sf_dir, "orders")
     cents = od.select(
-        F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5))
-        .cast("long")
-        .alias("v")
+        grid("o_totalprice", 2).alias("v")
     )
     bounds = cents.agg(
         F.min("v").alias("lo"), F.max("v").alias("hi")
@@ -2283,10 +2270,10 @@ _DDS_QS = (50, 95, 99)
 
 @register(
     "agg_ddsketch_quantile",
-    oracle="""
+    oracle=f"""
 WITH v AS (
   SELECT l_returnflag AS shard,
-         CAST(FLOOR(ln(l_extendedprice) * 1000000000.0 + 0.5) AS BIGINT)
+         {grid_sql('ln(l_extendedprice)', 9)}
            AS ln9
   FROM lineitem WHERE l_extendedprice > 0
 ),
@@ -2320,8 +2307,8 @@ pick AS (
 )
 SELECT CAST(q AS BIGINT) AS q_pct, n,
        CAST(bucket AS BIGINT) AS bucket,
-       CAST(FLOOR(2.0 * exp(CAST(bucket + 1 AS DOUBLE) * 0.019802627296)
-                  / (1.02 + 1.0) * 1000000.0 + 0.5) AS BIGINT)
+       {grid_sql('''2.0 * exp(CAST(bucket + 1 AS DOUBLE) * 0.019802627296)
+                  / (1.02 + 1.0)''', 6)}
          AS est_micro
 FROM pick ORDER BY q_pct
 """,
@@ -2361,8 +2348,7 @@ def agg_ddsketch_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     v = li.filter(F.col("l_extendedprice") > 0).select(
         F.col("l_returnflag").alias("shard"),
-        F.floor(F.log(F.col("l_extendedprice")) * F.lit(1e9) + F.lit(0.5))
-        .cast("long").alias("ln9"),
+        grid(F.log(F.col("l_extendedprice")), 9).alias("ln9"),
     )
     b = v.select(
         "shard",
@@ -2396,12 +2382,13 @@ def agg_ddsketch_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pick.select(
         F.col("q").cast("long").alias("q_pct"), "n",
         F.col("bucket").cast("long").alias("bucket"),
-        F.floor(
+        grid(
             F.lit(2.0)
             * F.exp((F.col("bucket") + F.lit(1)).cast("double")
                     * F.lit(0.019802627296))
-            / F.lit(1.02 + 1.0) * F.lit(1e6) + F.lit(0.5)
-        ).cast("long").alias("est_micro"),
+            / F.lit(1.02 + 1.0),
+            6,
+        ).alias("est_micro"),
     ).orderBy("q_pct")
 
 
@@ -2601,7 +2588,7 @@ readoff AS (
 ),
 raw AS (
   SELECT shard, present, v_zero,
-         CAST(FLOOR({_HLL_NUM!r} / s_total * 1000000.0 + 0.5) AS BIGINT)
+         {grid_sql(f'{_HLL_NUM!r} / s_total', 6)}
            AS e_raw_micro
   FROM readoff
 ),
@@ -2610,9 +2597,8 @@ est AS (
          CASE WHEN e_raw_micro <= CAST({(5 * _HLL_M // 2) * 1000000}
                                        AS BIGINT)
                    AND v_zero > 0
-              THEN CAST(FLOOR({float(_HLL_M)!r} *
-                              ln({float(_HLL_M)!r} / v_zero)
-                              * 1000000.0 + 0.5) AS BIGINT)
+              THEN {grid_sql(f'''{float(_HLL_M)!r} *
+                              ln({float(_HLL_M)!r} / v_zero)''', 6)}
               ELSE e_raw_micro END AS est_micro
   FROM raw
 ),
@@ -2732,20 +2718,16 @@ def agg_hll_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     raw = readoff.select(
         "shard", "present", "v_zero",
-        F.floor(
-            F.lit(_HLL_NUM) / F.col("s_total") * F.lit(1e6) + F.lit(0.5)
-        ).cast("long").alias("e_raw_micro"),
+        grid(F.lit(_HLL_NUM) / F.col("s_total"), 6).alias("e_raw_micro"),
     )
     est = raw.select(
         "shard", "present",
         F.when(
             (F.col("e_raw_micro") <= F.lit((5 * _HLL_M // 2) * 1000000))
             & (F.col("v_zero") > 0),
-            F.floor(
-                F.lit(float(_HLL_M))
-                * F.log(F.lit(float(_HLL_M)) / F.col("v_zero"))
-                * F.lit(1e6) + F.lit(0.5)
-            ).cast("long"),
+            grid(
+                F.lit(float(_HLL_M)) * F.log(F.lit(float(_HLL_M)) / F.col("v_zero")), 6
+            ),
         )
         .otherwise(F.col("e_raw_micro"))
         .alias("est_micro"),

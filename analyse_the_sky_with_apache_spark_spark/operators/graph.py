@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, session_checkpoint
-from ..functions.exact import md5_int, md5_int_sql
+from ..functions.exact import grid, grid_sql, md5_int, md5_int_sql
 from ..pipeline.dedup import _CC_ORACLE_CTES
 from ..registry import register
 
@@ -953,7 +953,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MODULARITY_ORACLE = _LPA_CTE + """,
+_MODULARITY_ORACLE = _LPA_CTE + f""",
 m AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM e),
 intra AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_intra, la.lbl AS lbl
@@ -966,10 +966,9 @@ deg AS (
 ),
 terms AS (
   SELECT d.lbl,
-         CAST(FLOOR((CAST(COALESCE(i.n_intra, 0) AS DOUBLE) / m.m
+         {grid_sql('''(CAST(COALESCE(i.n_intra, 0) AS DOUBLE) / m.m
                      - (CAST(d.d_c AS DOUBLE) / (2 * m.m))
-                       * (CAST(d.d_c AS DOUBLE) / (2 * m.m)))
-                    * 1000000000000.0 + 0.5) AS BIGINT) AS term_g
+                       * (CAST(d.d_c AS DOUBLE) / (2 * m.m)))''', 12)} AS term_g
   FROM deg d LEFT JOIN intra i ON i.lbl = d.lbl CROSS JOIN m
 )
 SELECT CAST(COUNT(*) AS BIGINT) AS n_communities,
@@ -1015,9 +1014,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     frac = F.coalesce(F.col("n_intra"), F.lit(0)).cast("double") / F.col("m")
     half = F.col("d_c").cast("double") / (F.lit(2) * F.col("m"))
-    term_g = F.floor(
-        (frac - half * half) * F.lit(1e12) + F.lit(0.5)
-    ).cast("long")
+    term_g = grid(frac - half * half, 12)
     terms = (
         deg.join(intra, "lbl", "left")
         .crossJoin(F.broadcast(m))
@@ -1622,8 +1619,7 @@ tri AS (
 SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM e) AS n_edges,
        (SELECT CAST(COUNT(*) AS BIGINT) FROM kept) AS n_kept,
        t AS sampled_triangles,
-       CAST(FLOOR(CAST(t AS DOUBLE) * 4096.0 / {_DOUL_NUM ** 3} + 0.5)
-            AS BIGINT) AS est_triangles
+       {grid_sql(f'CAST(t AS DOUBLE) * 4096.0 / {_DOUL_NUM ** 3}', 0)} AS est_triangles
 FROM tri
 """,
 )
@@ -1677,13 +1673,12 @@ def graph_triangles_doulion(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_edges",
             "n_kept",
             F.col("t").alias("sampled_triangles"),
-            F.floor(
+            grid(
                 F.col("t").cast("double")
                 * F.lit(4096.0)
-                / F.lit(float(_DOUL_NUM ** 3))
-                + F.lit(0.5)
+                / F.lit(float(_DOUL_NUM ** 3)),
+                0,
             )
-            .cast("long")
             .alias("est_triangles"),
         )
     )
@@ -2085,9 +2080,8 @@ ek AS (
 )
 SELECT nk.k, nk.n_k, COALESCE(ek.e_k, 0) AS e_k,
        CASE WHEN nk.n_k >= 2 THEN
-         CAST(FLOOR(2.0 * COALESCE(ek.e_k, 0)
-                    / (CAST(nk.n_k AS DOUBLE) * (nk.n_k - 1))
-                    * 1000000.0 + 0.5) AS BIGINT)
+         {grid_sql('''2.0 * COALESCE(ek.e_k, 0)
+                    / (CAST(nk.n_k AS DOUBLE) * (nk.n_k - 1))''', 6)}
        ELSE NULL END AS phi_micro
 FROM nk LEFT JOIN ek ON nk.k = ek.k
 ORDER BY nk.k
@@ -2128,11 +2122,11 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     phi = F.when(
         F.col("n_k") >= 2,
-        F.floor(
+        grid(
             F.lit(2.0) * F.coalesce(F.col("e_k"), F.lit(0))
-            / (F.col("n_k").cast("double") * (F.col("n_k") - 1))
-            * F.lit(1e6) + F.lit(0.5)
-        ).cast("long"),
+            / (F.col("n_k").cast("double") * (F.col("n_k") - 1)),
+            6,
+        ),
     )
     return (
         nk.join(ek, "k", "left")

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.exact import dsum, dsum_sql
+from ..functions.exact import dsum, dsum_sql, grid, grid_sql
 from ..registry import register
 from .asof import asof_join
 
@@ -526,13 +526,13 @@ def join_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "join_null_safe",
-    oracle="""
+    oracle=f"""
 WITH a AS (
   SELECT nullif(l_returnflag, 'N') AS flag, COUNT(*) AS n_items
   FROM lineitem GROUP BY 1
 ), b AS (
   SELECT nullif(l_returnflag, 'N') AS flag,
-         CAST(SUM(CAST(FLOOR(l_quantity * 100.0 + 0.5) AS BIGINT)) AS BIGINT)
+         CAST(SUM({grid_sql('l_quantity', 2)}) AS BIGINT)
            AS sq
   FROM lineitem GROUP BY 1
 )
@@ -553,7 +553,7 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag = F.nullif(F.col("l_returnflag"), F.lit("N")).alias("flag")
     a = li.groupBy(flag).agg(F.count(F.lit(1)).alias("n_items"))
     b = li.groupBy(flag).agg(
-        F.sum(F.floor(F.col("l_quantity") * 100.0 + F.lit(0.5))).alias("sq")
+        F.sum(grid("l_quantity", 2)).alias("sq")
     )
     return a.join(b, a["flag"].eqNullSafe(b["flag"])).select(
         a["flag"], "n_items", "sq"
@@ -567,10 +567,10 @@ _BLOOM_K = 3
 
 @register(
     "join_bloom_prefilter",
-    oracle="""
+    oracle=f"""
 SELECT CAST(COUNT(*) AS BIGINT) AS n_lines,
-       CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 10000.0 + 0.5)
-                     AS BIGINT)) AS DOUBLE) / 10000.0 AS revenue
+       CAST(SUM({grid_sql('l_extendedprice * (1 - l_discount)', 4)}) AS DOUBLE)
+         / 10000.0 AS revenue
 FROM lineitem
 WHERE l_orderkey IN (
   SELECT o_orderkey FROM orders

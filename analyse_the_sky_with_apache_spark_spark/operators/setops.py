@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.exact import grid, grid_sql
 from ..registry import register
 
 
@@ -117,10 +118,10 @@ def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "set_union_byname",
-    oracle="""
+    oracle=f"""
 SELECT * FROM (
   SELECT o_orderkey AS key,
-         CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents,
+         {grid_sql('o_totalprice', 2)} AS cents,
          'orders' AS src
   FROM orders)
 UNION ALL BY NAME
@@ -141,9 +142,7 @@ def set_union_byname(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("key"),
-        F.floor(F.col("o_totalprice") * 100.0 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
+        grid("o_totalprice", 2).alias("cents"),
         F.lit("orders").alias("src"),
     )
     c = load_table(spark, sf_dir, "customer").select(

@@ -19,8 +19,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.exact import md5_int, md5_int_sql
+from ..functions.exact import grid, grid_sql, md5_int, md5_int_sql
 from ..registry import register
+from .windows import session_starts_sql
 
 
 @register(
@@ -406,13 +407,13 @@ def basket_item_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rfm_segmentation",
-    oracle="""
+    oracle=f"""
 WITH rfm AS (
   SELECT o_custkey,
          datediff('day', CAST(MAX(o_orderdate) AS DATE), DATE '2002-01-01')
            AS recency_days,
          COUNT(*) AS frequency,
-         CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('o_totalprice', 2)})
               AS BIGINT) AS monetary_cents
   FROM orders GROUP BY o_custkey
 )
@@ -443,9 +444,7 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("o_orderdate").cast("date"),
         ).alias("recency_days"),
         F.count(F.lit(1)).alias("frequency"),
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100.0 + F.lit(0.5))
-        ).alias("monetary_cents"),
+        F.sum(grid("o_totalprice", 2)).alias("monetary_cents"),
     )
     return rfm.select(
         "o_custkey",
@@ -726,7 +725,7 @@ def agg_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "attribution_last_touch",
-    oracle="""
+    oracle=f"""
 WITH ev AS (
   SELECT user_id, event_id, ts, event_type, value
   FROM events WHERE event_type IN ('click', 'purchase')
@@ -748,7 +747,7 @@ SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
        CAST(SUM(CASE WHEN last_click IS NOT NULL
                       AND epoch_us(ts) - epoch_us(last_click)
                           <= 604800000000
-                     THEN CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT)
+                     THEN {grid_sql('value', 6)}
                      ELSE 0 END) AS DOUBLE) / 1000000.0
          AS attributed_value
 FROM w
@@ -796,7 +795,7 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(
                     F.when(
                         attributed,
-                        F.floor(F.col("value") * F.lit(1e6) + F.lit(0.5)),
+                        grid("value", 6),
                     ).otherwise(F.lit(0))
                 ).cast("double")
                 / F.lit(1e6)
@@ -1016,15 +1015,8 @@ def funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "session_bounce_rate",
-    oracle="""
-WITH x AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN LAG(ts) OVER w IS NULL
-                OR epoch_us(ts) - epoch_us(LAG(ts) OVER w) >= 1800000000
-              THEN 1 ELSE 0 END AS new_s
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+    oracle=f"""
+WITH {session_starts_sql("event_id")},
 y AS (
   SELECT user_id, ts,
          SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -1451,7 +1443,7 @@ def basket_rules_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "retention_decay_fit",
-    oracle="""
+    oracle=f"""
 WITH act AS (
   SELECT user_id,
          CAST(FLOOR(epoch(CAST(ts AS TIMESTAMP)) / 604800.0) AS BIGINT)
@@ -1471,8 +1463,7 @@ ret AS (
 base AS (SELECT CAST(n_active AS BIGINT) AS n0 FROM ret WHERE offset_w = 0),
 pts AS (
   SELECT offset_w AS x,
-         CAST(FLOOR(ln(CAST(n_active AS DOUBLE) / n0) * 1000000000.0
-                    + 0.5) AS BIGINT) AS yg
+         {grid_sql('ln(CAST(n_active AS DOUBLE) / n0)', 9)} AS yg
   FROM ret CROSS JOIN base
   WHERE offset_w >= 1 AND n_active > 0
 ),
@@ -1542,13 +1533,7 @@ def retention_decay_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where((F.col("offset_w") >= 1) & (F.col("n_active") > 0))
         .select(
             F.col("offset_w").alias("x"),
-            F.floor(
-                F.log(F.col("n_active").cast("double") / F.col("n0"))
-                * F.lit(1e9)
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("yg"),
+            grid(F.log(F.col("n_active").cast("double") / F.col("n0")), 9).alias("yg"),
         )
     )
     s = pts.agg(
@@ -2125,10 +2110,10 @@ def agg_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "cdc_apply_compact",
-    oracle="""
+    oracle=f"""
 WITH cdc AS (
   SELECT o_orderkey AS k, 1 AS lsn, 'U' AS op,
-         CAST(FLOOR(o_totalprice * 110.0 + 0.5) AS BIGINT) AS price_cents
+         {grid_sql('o_totalprice * 110.0', 0)} AS price_cents
   FROM orders WHERE o_orderkey % 7 = 0
   UNION ALL
   SELECT o_orderkey, 2, 'D', CAST(0 AS BIGINT)
@@ -2149,7 +2134,7 @@ compacted AS (
 ),
 tgt AS (
   SELECT o_orderkey AS k,
-         CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS price_cents
+         {grid_sql('o_totalprice', 2)} AS price_cents
   FROM orders
 ),
 merged AS (
@@ -2198,8 +2183,7 @@ def cdc_apply_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.filter(F.col("o_orderkey") % 7 == 0).select(
             F.col("o_orderkey").alias("k"), F.lit(1).alias("lsn"),
             F.lit("U").alias("op"),
-            F.floor(F.col("o_totalprice") * F.lit(110.0) + F.lit(0.5))
-            .cast("long").alias("price_cents"),
+            grid(F.col("o_totalprice") * F.lit(110.0), 0).alias("price_cents"),
         )
         .unionAll(
             o.filter(F.col("o_orderkey") % 21 == 0).select(
@@ -2232,8 +2216,7 @@ def cdc_apply_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tgt = o.select(
         F.col("o_orderkey").alias("tk"),
-        F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5))
-        .cast("long").alias("t_cents"),
+        grid("o_totalprice", 2).alias("t_cents"),
     )
     merged = tgt.join(
         compacted, tgt.tk == compacted.k, "full_outer"

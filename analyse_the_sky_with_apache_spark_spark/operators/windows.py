@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.exact import dsum, dsum_sql
+from ..functions.exact import dsum, dsum_sql, grid, grid_sql
 from ..registry import register
 
 
@@ -239,17 +239,25 @@ def win_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "sessionize_batch",
-    oracle=f"""
-WITH x AS (
-  SELECT user_id, ts, value, event_id,
+def session_starts_sql(cols: str) -> str:
+    """The ``x`` CTE of the 30-minute sessionizers (DuckDB text): each
+    event as ``user_id, ts, <cols>`` with ``new_s`` = 1 where a session
+    starts — the user's first event, or one 30 minutes or more after the
+    previous event in ``(ts, event_id)`` order."""
+    return f"""x AS (
+  SELECT user_id, ts, {cols},
          CASE WHEN LAG(ts) OVER w IS NULL
                 OR epoch_us(ts) - epoch_us(LAG(ts) OVER w) >= 1800000000
               THEN 1 ELSE 0 END AS new_s
   FROM events
   WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+)"""
+
+
+@register(
+    "sessionize_batch",
+    oracle=f"""
+WITH {session_starts_sql("value, event_id")},
 y AS (
   SELECT user_id, ts, value,
          -- CAST: DuckDB window SUM(int) yields HUGEINT, which the driver's
@@ -675,10 +683,10 @@ def win_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "win_pareto_abc",
-    oracle="""
+    oracle=f"""
 WITH spend AS (
   SELECT o_custkey,
-         CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('o_totalprice', 2)})
               AS BIGINT) AS cents
   FROM orders GROUP BY o_custkey
 ), ranked AS (
@@ -710,9 +718,7 @@ def win_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load_table(spark, sf_dir, "orders")
     spend = o.groupBy("o_custkey").agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100.0 + F.lit(0.5))
-        ).alias("cents")
+        F.sum(grid("o_totalprice", 2)).alias("cents")
     )
     w_run = (
         Window.orderBy(F.col("cents").desc(), "o_custkey")
@@ -743,11 +749,11 @@ def win_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts_seasonal_index",
-    oracle="""
+    oracle=f"""
 WITH m AS (
   SELECT CAST(isodow(ts) - 1 AS BIGINT) AS weekday,
          COUNT(*) AS n,
-         CAST(SUM(CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT)
+         CAST(SUM({grid_sql('value', 6)}) AS BIGINT)
            AS sv
   FROM events GROUP BY 1
 ), tot AS (
@@ -775,9 +781,7 @@ def ts_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     m = ev.groupBy(F.weekday("ts").cast("long").alias("weekday")).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.floor(F.col("value") * 1000000.0 + F.lit(0.5))
-        ).alias("sv"),
+        F.sum(grid("value", 6)).alias("sv"),
     )
     tot = m.agg(
         F.sum("n").alias("tn"), F.sum("sv").alias("tsv")
@@ -797,11 +801,11 @@ def ts_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "win_year_over_year",
-    oracle="""
+    oracle=f"""
 WITH m AS (
   SELECT CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS yr,
          CAST(EXTRACT(month FROM o_orderdate) AS BIGINT) AS mo,
-         CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('o_totalprice', 2)})
               AS BIGINT) AS cents
   FROM orders GROUP BY 1, 2
 )
@@ -827,9 +831,7 @@ def win_year_over_year(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.year("o_orderdate").cast("long").alias("yr"),
         F.month("o_orderdate").cast("long").alias("mo"),
     ).agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100.0 + F.lit(0.5))
-        ).alias("cents")
+        F.sum(grid("o_totalprice", 2)).alias("cents")
     )
     w = Window.partitionBy("mo").orderBy("yr")
     prev = F.lag("cents").over(w)
@@ -896,7 +898,7 @@ _EWMA_NUM, _EWMA_DEN = 2, 10
     oracle=f"""
 WITH RECURSIVE x AS (
   SELECT user_id, ts, event_id, value,
-         CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT) AS v,
+         {grid_sql('value', 6)} AS v,
          ROW_NUMBER() OVER (PARTITION BY user_id
                             ORDER BY ts, event_id) AS rn
   FROM events
@@ -1079,15 +1081,15 @@ def ts_cross_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts_changepoint",
-    oracle="""
+    oracle=f"""
 WITH x AS (
   SELECT user_id, ts, event_id,
-         CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT) AS v,
+         {grid_sql('value', 6)} AS v,
          ROW_NUMBER() OVER w AS k,
-         CAST(SUM(CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('value', 6)})
               OVER (PARTITION BY user_id ORDER BY ts, event_id
                     ROWS UNBOUNDED PRECEDING) AS BIGINT) AS run,
-         CAST(SUM(CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('value', 6)})
               OVER (PARTITION BY user_id) AS BIGINT) AS tot,
          CAST(COUNT(*) OVER (PARTITION BY user_id) AS BIGINT) AS n
   FROM events
@@ -1126,10 +1128,10 @@ def ts_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: one shuffle on the entity key, state per row is two
     longs; the per-user reduce carries one struct. Overflow bound:
     |n·run| < n²·max|v|·10⁶ — safe to ~4·10⁹ rows per user at |v|≤10³
-    (dsum_wide posture past that).
+    (a decimal(38,s) accumulator past that).
     """
     ev = load_table(spark, sf_dir, "events")
-    v = F.floor(F.col("value") * 1_000_000.0 + F.lit(0.5)).cast("long")
+    v = grid("value", 6)
     wk = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wall = Window.partitionBy("user_id")
     x = ev.select(
@@ -1229,15 +1231,8 @@ def win_rolling_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "path_common_sequences",
-    oracle="""
-WITH x AS (
-  SELECT user_id, ts, event_id, event_type,
-         CASE WHEN LAG(ts) OVER w IS NULL
-                OR epoch_us(ts) - epoch_us(LAG(ts) OVER w) >= 1800000000
-              THEN 1 ELSE 0 END AS new_s
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+    oracle=f"""
+WITH {session_starts_sql("event_id, event_type")},
 y AS (
   SELECT user_id, ts, event_id, event_type,
          SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -1315,10 +1310,10 @@ def path_common_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts_max_drawdown",
-    oracle="""
+    oracle=f"""
 WITH cum AS (
   SELECT user_id, ts, event_id,
-         CAST(SUM(CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('value', 6)})
               OVER (PARTITION BY user_id ORDER BY ts, event_id
                     ROWS UNBOUNDED PRECEDING) AS BIGINT) AS bal
   FROM events
@@ -1351,7 +1346,7 @@ def ts_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     are all integer arithmetic — both engines agree to the bit, with
     the one double division at the very end.
     """
-    micro = F.floor(F.col("value") * F.lit(1e6) + F.lit(0.5))
+    micro = grid("value", 6)
     wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
     run = wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     bal = F.sum(micro).over(run).alias("bal")
@@ -1437,11 +1432,11 @@ def ts_state_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts_running_vwap",
-    oracle="""
+    oracle=f"""
 WITH t AS (
   SELECT user_id, ts, event_id,
          CAST(date_trunc('day', ts) AS DATE) AS day,
-         CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT) AS pv_micro
+         {grid_sql('value', 6)} AS pv_micro
   FROM events WHERE event_type = 'purchase'
 ),
 r AS (
@@ -1479,7 +1474,7 @@ def ts_running_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         "event_id",
         F.col("ts").cast("date").alias("day"),
-        F.floor(F.col("value") * F.lit(1e6) + F.lit(0.5)).alias("pv_micro"),
+        grid("value", 6).alias("pv_micro"),
     )
     w = (
         Window.partitionBy("user_id", "day")
@@ -1626,11 +1621,11 @@ def ts_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts_theil_sen",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT strftime(CAST(o_orderdate AS DATE), '%Y-%m') AS month,
          CAST(day(CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
-         CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('o_totalprice', 2)})
               AS BIGINT) AS cents
   FROM orders GROUP BY 1, 2
 ),
@@ -1681,11 +1676,7 @@ def ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("d"),
     ).agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)).cast(
-                "long"
-            )
-        ).alias("cents")
+        F.sum(grid("o_totalprice", 2)).alias("cents")
     )
     a = daily.alias("a")
     b = daily.alias("b")
@@ -1728,14 +1719,7 @@ _SESSION_CAP_US = 7_200_000_000
 @register(
     "sessionize_capped",
     oracle=f"""
-WITH x AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN LAG(ts) OVER w IS NULL
-                OR epoch_us(ts) - epoch_us(LAG(ts) OVER w) >= 1800000000
-              THEN 1 ELSE 0 END AS new_s
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+WITH {session_starts_sql("event_id")},
 y AS (
   SELECT user_id, ts,
          CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -1795,11 +1779,11 @@ def sessionize_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "win_ratio_to_report",
-    oracle="""
+    oracle=f"""
 WITH m AS (
   SELECT strftime(CAST(o_orderdate AS DATE), '%Y') AS year,
          strftime(CAST(o_orderdate AS DATE), '%Y-%m') AS month,
-         CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('o_totalprice', 2)})
               AS BIGINT) AS cents
   FROM orders GROUP BY 1, 2
 )
@@ -1833,11 +1817,7 @@ def win_ratio_to_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "month"
         ),
     ).agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)).cast(
-                "long"
-            )
-        ).alias("cents")
+        F.sum(grid("o_totalprice", 2)).alias("cents")
     )
     wy = Window.partitionBy("year")
     return m.select(
@@ -1859,7 +1839,7 @@ _ACF_LAGS = 7
     oracle=f"""
 WITH daily AS (
   SELECT CAST(o_orderdate AS DATE) AS day,
-         CAST(SUM(CAST(FLOOR(o_totalprice + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('o_totalprice', 0)})
               AS BIGINT) AS cents
   FROM orders GROUP BY 1
 ),
@@ -1904,9 +1884,7 @@ def ts_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") + F.lit(0.5)).cast("long")
-        ).alias("cents")
+        F.sum(grid("o_totalprice", 0)).alias("cents")
     )
     a = daily.select(
         "day",
@@ -1947,10 +1925,10 @@ def ts_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts_bollinger_bands",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT CAST(o_orderdate AS DATE) AS day,
-         CAST(SUM(CAST(FLOOR(o_totalprice + 0.5) AS BIGINT)) AS BIGINT)
+         CAST(SUM({grid_sql('o_totalprice', 0)}) AS BIGINT)
            AS units
   FROM orders GROUP BY 1
 ),
@@ -1999,9 +1977,7 @@ def ts_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") + F.lit(0.5)).cast("long")
-        ).alias("units")
+        F.sum(grid("o_totalprice", 0)).alias("units")
     )
     tw = Window.orderBy("day").rowsBetween(-19, 0)
     # units² overflows int64 once daily volume passes ~3·10⁹ (caught by
@@ -2120,10 +2096,10 @@ def ts_hampel_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts_decompose_residuals",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT CAST(o_orderdate AS DATE) AS day,
-         CAST(SUM(CAST(FLOOR(o_totalprice + 0.5) AS BIGINT)) AS BIGINT)
+         CAST(SUM({grid_sql('o_totalprice', 0)}) AS BIGINT)
            AS units
   FROM orders GROUP BY 1
 ),
@@ -2143,7 +2119,7 @@ detr AS (
 ),
 seas AS (
   SELECT dow,
-         CAST(SUM(CAST(FLOOR(resid1 * 100.0 + 0.5) AS BIGINT)) AS BIGINT)
+         CAST(SUM({grid_sql('resid1', 2)}) AS BIGINT)
            AS sg,
          CAST(COUNT(*) AS BIGINT) AS sn
   FROM detr GROUP BY dow
@@ -2156,9 +2132,9 @@ resid AS (
 ),
 sigma AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(CAST(FLOOR(resid * 100.0 + 0.5) AS BIGINT)) AS BIGINT)
+         CAST(SUM({grid_sql('resid', 2)}) AS BIGINT)
            AS r1,
-         CAST(SUM(CAST(FLOOR(resid * resid * 100.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('resid * resid', 2)})
               AS BIGINT) AS r2
   FROM resid
 )
@@ -2190,9 +2166,7 @@ def ts_decompose_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") + F.lit(0.5)).cast("long")
-        ).alias("units")
+        F.sum(grid("o_totalprice", 0)).alias("units")
     )
     tw = Window.orderBy("day").rowsBetween(-14, 14)
     trend = daily.select(
@@ -2211,11 +2185,7 @@ def ts_decompose_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("resid1"),
     )
     seas = detr.groupBy("dow").agg(
-        F.sum(
-            F.floor(F.col("resid1") * F.lit(100.0) + F.lit(0.5)).cast(
-                "long"
-            )
-        ).alias("sg"),
+        F.sum(grid("resid1", 2)).alias("sg"),
         F.count(F.lit(1)).alias("sn"),
     )
     seasonal = F.col("sg").cast("double") / F.lit(100.0) / F.col("sn")
@@ -2233,14 +2203,8 @@ def ts_decompose_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     d38 = "decimal(38,0)"
     sigma = resid.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.floor(F.col("resid") * F.lit(100.0) + F.lit(0.5)).cast(d38)
-        ).alias("r1"),
-        F.sum(
-            F.floor(
-                F.col("resid") * F.col("resid") * F.lit(100.0) + F.lit(0.5)
-            ).cast(d38)
-        ).alias("r2"),
+        F.sum(grid("resid", 2).cast(d38)).alias("r1"),
+        F.sum(grid(F.col("resid") * F.col("resid"), 2).cast(d38)).alias("r2"),
     )
     mean_r = F.col("r1").cast("double") / F.lit(100.0) / F.col("n")
     sd_r = F.sqrt(
@@ -2267,10 +2231,10 @@ def ts_decompose_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts_forecast_eval_naive",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT CAST(o_orderdate AS DATE) AS day,
-         CAST(SUM(CAST(FLOOR(o_totalprice + 0.5) AS BIGINT)) AS BIGINT)
+         CAST(SUM({grid_sql('o_totalprice', 0)}) AS BIGINT)
            AS units
   FROM orders GROUP BY 1
 ),
@@ -2310,9 +2274,7 @@ def ts_forecast_eval_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") + F.lit(0.5)).cast("long")
-        ).alias("units")
+        F.sum(grid("o_totalprice", 0)).alias("units")
     )
     a = daily.alias("a")
     f = daily.select(
@@ -2599,10 +2561,10 @@ def ts_granger_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts_peak_detection",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT CAST(o_orderdate AS DATE) AS d,
-         CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('o_totalprice', 2)})
               AS BIGINT) AS r
   FROM orders GROUP BY CAST(o_orderdate AS DATE)
 ),
@@ -2647,11 +2609,7 @@ def ts_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         od.groupBy(F.col("o_orderdate").cast("date").alias("d"))
         .agg(
-            F.sum(
-                F.floor(
-                    F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)
-                ).cast("long")
-            ).alias("r")
+            F.sum(grid("o_totalprice", 2)).alias("r")
         )
     )
     tot = daily.agg(
@@ -2697,7 +2655,7 @@ _LTTB_B = 60
 WITH daily AS (
   SELECT CAST(o_orderdate AS DATE) AS d,
          CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS x,
-         CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('o_totalprice', 2)})
               AS BIGINT) AS y
   FROM orders GROUP BY 1, 2
 ),
@@ -2783,11 +2741,7 @@ def ts_downsample_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("x"),
     ).agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)).cast(
-                "long"
-            )
-        ).alias("y")
+        F.sum(grid("o_totalprice", 2)).alias("y")
     )
     wn = Window.orderBy("d")
     numbered = daily.select(
@@ -2990,7 +2944,7 @@ b AS (
   SELECT event_type,
          (({epoch_fn}(ts) - bounds.mn) * {_DTW_NB})
            {div} (bounds.mx - bounds.mn + 1) AS bucket,
-         CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS f
+         {grid_sql('value', 2)} AS f
   FROM {tbl}, bounds),
 sb AS (
   SELECT event_type, bucket, CAST(SUM(f) AS BIGINT) AS cents
@@ -3089,7 +3043,7 @@ def ts_dtw_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             f"((unix_micros(ts) - mn) * {_DTW_NB}) div (mx - mn + 1)"
         ).alias("bucket"),
-        F.floor(F.col("value") * 100.0 + F.lit(0.5)).cast("long").alias("f"),
+        grid("value", 2).alias("f"),
     )
     sb = b.groupBy("event_type", "bucket").agg(F.sum("f").alias("cents"))
     arr = (
@@ -3145,7 +3099,7 @@ def _kalman_oracle_sql(tbl: str) -> str:
     return f"""
 WITH RECURSIVE obs AS MATERIALIZED (
   SELECT event_type,
-         CAST(CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS DOUBLE) AS z,
+         CAST({grid_sql('value', 2)} AS DOUBLE) AS z,
          ROW_NUMBER() OVER (PARTITION BY event_type
                             ORDER BY ts, event_id) AS rn
   FROM {tbl}),
@@ -3214,9 +3168,7 @@ def ts_kalman_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "ts",
         "event_id",
-        F.floor(F.col("value") * 100.0 + F.lit(0.5))
-        .cast("long")
-        .cast("double")
+        grid("value", 2).cast("double")
         .alias("z"),
     )
     return obs.groupBy("event_type").applyInPandas(
@@ -3234,7 +3186,7 @@ b AS (
   SELECT event_type,
          ((epoch_us(ts) - bounds.mn) * {_DTW_NB})
            // (bounds.mx - bounds.mn + 1) AS bucket,
-         CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS f
+         {grid_sql('value', 2)} AS f
   FROM events, bounds),
 paa AS (
   SELECT event_type, bucket,
@@ -3285,7 +3237,7 @@ def ts_sax_symbolize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             f"((unix_micros(ts) - mn) * {_DTW_NB}) div (mx - mn + 1)"
         ).alias("bucket"),
-        F.floor(F.col("value") * 100.0 + F.lit(0.5)).cast("long").alias("f"),
+        grid("value", 2).alias("f"),
     )
     paa = b.groupBy("event_type", "bucket").agg(
         F.expr("CAST(SUM(f) AS BIGINT) div CAST(COUNT(*) AS BIGINT)").alias(
@@ -3328,7 +3280,7 @@ def _time_range_sql(tbl: str) -> str:
     return f"""
 SELECT user_id, event_id, ts,
        CAST(COUNT(*) OVER w AS BIGINT) AS n_6h,
-       CAST(SUM(CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT)) OVER w
+       CAST(SUM({grid_sql('value', 2)}) OVER w
             AS BIGINT) AS cents_6h
 FROM {tbl}
 WINDOW w AS (PARTITION BY user_id ORDER BY ts
@@ -3362,7 +3314,7 @@ def win_time_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamps are equal microsecond keys, so the peer sets match).
     """
     ev = load_table(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)).cast("long")
+    cents = grid("value", 2)
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.unix_micros(F.col("ts")))
@@ -3403,7 +3355,7 @@ b AS (
   SELECT event_type,
          (({epoch_fn}(ts) - bounds.mn) * {_DTW_NB})
            {div} (bounds.mx - bounds.mn + 1) AS bucket,
-         CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS f
+         {grid_sql('value', 2)} AS f
   FROM {tbl}, bounds),
 paa AS (
   SELECT event_type, bucket,
@@ -3463,8 +3415,7 @@ def ts_matrix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             f"((unix_micros(ts) - mn) * {_DTW_NB}) div (mx - mn + 1)"
         ).alias("bucket"),
-        F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)).cast("long")
-        .alias("f"),
+        grid("value", 2).alias("f"),
     )
     paa = b.groupBy("event_type", "bucket").agg(
         F.expr(
@@ -3541,9 +3492,8 @@ trans AS (
 ),
 model AS (
   SELECT prev_type, event_type,
-         CAST(FLOOR(LN(CAST(c AS DOUBLE)
-                       / SUM(c) OVER (PARTITION BY prev_type))
-                    * 1000000.0 + 0.5) AS BIGINT) AS logp_micro
+         {grid_sql('''LN(CAST(c AS DOUBLE)
+                       / SUM(c) OVER (PARTITION BY prev_type))''', 6)} AS logp_micro
   FROM trans
 ),
 scored AS (
@@ -3594,15 +3544,13 @@ def events_markov_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     model = trans.select(
         "prev_type",
         "event_type",
-        F.floor(
+        grid(
             F.log(
                 F.col("c").cast("double")
                 / F.sum("c").over(Window.partitionBy("prev_type"))
-            )
-            * F.lit(1e6)
-            + F.lit(0.5)
+            ),
+            6,
         )
-        .cast("long")
         .alias("logp_micro"),
     )
     scored = (
@@ -3629,11 +3577,11 @@ def events_markov_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "win_rolling_regression_slope",
-    oracle="""
+    oracle=f"""
 WITH d AS (
   SELECT event_type,
          CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS t,
-         CAST(SUM(CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('value', 6)})
               AS BIGINT) // CAST(COUNT(*) AS BIGINT) AS y
   FROM events GROUP BY 1, 2
 ),
@@ -3649,11 +3597,11 @@ w AS (
                  ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
 )
 SELECT event_type, t AS day,
-       CAST(FLOOR((CAST(n AS DOUBLE) * CAST(sty AS DOUBLE)
+       {grid_sql('''(CAST(n AS DOUBLE) * CAST(sty AS DOUBLE)
                    - CAST(st AS DOUBLE) * CAST(sy AS DOUBLE))
                   / (CAST(n AS DOUBLE) * CAST(stt AS DOUBLE)
-                     - CAST(st AS DOUBLE) * CAST(st AS DOUBLE))
-                  * 1000.0 + 0.5) AS BIGINT) AS slope_milli_micro
+                     - CAST(st AS DOUBLE) * CAST(st AS DOUBLE))''', 3)}
+                   AS slope_milli_micro
 FROM w WHERE n = 7
 ORDER BY event_type, day
 """,
@@ -3680,7 +3628,7 @@ def win_rolling_regression_slope(
         F.expr("CAST(unix_micros(ts) div 86400000000 AS BIGINT)").alias("t"),
     ).agg(
         F.expr(
-            "CAST(sum(CAST(floor(value * 1000000.0 + 0.5) AS BIGINT)) "
+            f"CAST(sum({grid_sql('value', 6)}) "
             "AS BIGINT) div CAST(count(1) AS BIGINT)"
         ).alias("y")
     )
@@ -3708,8 +3656,7 @@ def win_rolling_regression_slope(
         .select(
             "event_type",
             F.col("t").alias("day"),
-            F.floor(slope * F.lit(1000.0) + F.lit(0.5))
-            .cast("long").alias("slope_milli_micro"),
+            grid(slope, 3).alias("slope_milli_micro"),
         )
         .orderBy("event_type", "day")
     )
@@ -3717,7 +3664,7 @@ def win_rolling_regression_slope(
 
 @register(
     "ts_burstiness",
-    oracle="""
+    oracle=f"""
 WITH o AS (
   SELECT epoch_us(ts) AS t, event_id,
          LAG(epoch_us(ts)) OVER (ORDER BY epoch_us(ts), event_id) AS tp
@@ -3759,10 +3706,9 @@ stat AS (
   FROM s
 )
 SELECT n AS n_gaps,
-       CAST(FLOOR(mu * 1000.0 + 0.5) AS BIGINT) AS mean_gap_micro_ms,
-       CAST(FLOOR((sigma - mu) / (sigma + mu) * 1000000.0 + 0.5)
-            AS BIGINT) AS burstiness_micro,
-       CAST(FLOOR(mem * 1000000.0 + 0.5) AS BIGINT) AS memory_micro,
+       {grid_sql('mu', 3)} AS mean_gap_micro_ms,
+       {grid_sql('(sigma - mu) / (sigma + mu)', 6)} AS burstiness_micro,
+       {grid_sql('mem', 6)} AS memory_micro,
        (sigma - mu) / (sigma + mu) > 0.0 AS burstier_than_poisson
 FROM stat
 """,
@@ -3831,11 +3777,8 @@ def ts_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = (sigma - mu) / (sigma + mu)
     return s.select(
         F.col("n").alias("n_gaps"),
-        F.floor(mu * F.lit(1e3) + F.lit(0.5)).cast("long")
-        .alias("mean_gap_micro_ms"),
-        F.floor(b * F.lit(1e6) + F.lit(0.5)).cast("long")
-        .alias("burstiness_micro"),
-        F.floor(mem * F.lit(1e6) + F.lit(0.5)).cast("long")
-        .alias("memory_micro"),
+        grid(mu, 3).alias("mean_gap_micro_ms"),
+        grid(b, 6).alias("burstiness_micro"),
+        grid(mem, 6).alias("memory_micro"),
         (b > F.lit(0.0)).alias("burstier_than_poisson"),
     )

@@ -32,7 +32,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.exact import md5_int, md5_int_sql, sky_radec, sky_radec_sql
+from ..functions.exact import (
+    grid,
+    grid_sql,
+    md5_int,
+    md5_int_sql,
+    sky_radec,
+    sky_radec_sql,
+)
 from ..registry import register
 
 #: The synthetic sky catalogs of the oracle SQL (centi-degrees): the
@@ -498,7 +505,7 @@ _FOLD_BIN_US = _FOLD_P_US // 10
 SELECT event_type,
        (epoch_us(ts) % {_FOLD_P_US}) // {_FOLD_BIN_US} AS phase_bin,
        COUNT(*) AS n_obs,
-       CAST(SUM(CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
+       CAST(SUM({grid_sql('value', 6)}) AS DOUBLE)
          / 1000000.0 / COUNT(*) AS mean_value
 FROM events
 GROUP BY event_type, (epoch_us(ts) % {_FOLD_P_US}) // {_FOLD_BIN_US}
@@ -523,7 +530,7 @@ def lightcurve_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.groupBy("event_type", phase_bin).agg(
         F.count(F.lit(1)).alias("n_obs"),
         (
-            F.sum(F.floor(F.col("value") * 1000000.0 + F.lit(0.5)))
+            F.sum(grid("value", 6))
             .cast("double")
             / 1000000.0
             / F.count(F.lit(1))
@@ -1020,7 +1027,7 @@ _SF_MAX_LAG_D = 7
     oracle=f"""
 WITH daily AS (
   SELECT user_id, CAST(ts AS DATE) AS day,
-         CAST(SUM(CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT)
+         CAST(SUM({grid_sql('value', 6)}) AS BIGINT)
            AS sv,
          COUNT(*) AS n
   FROM events GROUP BY 1, 2
@@ -1058,9 +1065,7 @@ def lightcurve_structure_function(spark: SparkSession, sf_dir: str) -> DataFrame
     daily = ev.groupBy(
         "user_id", F.to_date("ts").alias("day")
     ).agg(
-        F.sum(
-            F.floor(F.col("value") * 1000000.0 + F.lit(0.5))
-        ).alias("sv"),
+        F.sum(grid("value", 6)).alias("sv"),
         F.count(F.lit(1)).alias("n"),
     )
     a, b = daily.alias("a"), daily.alias("b")
@@ -1317,7 +1322,7 @@ _DFT_PERIODS_D = (3, 5, 7, 11)
 WITH daily AS (
   SELECT event_type,
          epoch_us(date_trunc('day', ts)) // 86400000000 AS day_idx,
-         SUM(CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT)) AS cv
+         SUM({grid_sql('value', 2)}) AS cv
   FROM events GROUP BY 1, 2
 ),
 base AS (
@@ -1327,10 +1332,8 @@ base AS (
 ),
 terms AS (
   SELECT event_type, p.period_d,
-         CAST(FLOOR(v * cos(2 * pi() * t / p.period_d) * 1000000.0 + 0.5)
-              AS BIGINT) AS c_term,
-         CAST(FLOOR(v * sin(2 * pi() * t / p.period_d) * 1000000.0 + 0.5)
-              AS BIGINT) AS s_term
+         {grid_sql('v * cos(2 * pi() * t / p.period_d)', 6)} AS c_term,
+         {grid_sql('v * sin(2 * pi() * t / p.period_d)', 6)} AS s_term
   FROM base,
        (SELECT UNNEST([{", ".join(str(p) for p in _DFT_PERIODS_D)}])
           AS period_d) p
@@ -1369,9 +1372,7 @@ def ts_spectral_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("day_idx"),
         )
         .agg(
-            F.sum(
-                F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
-            ).alias("cv")
+            F.sum(grid("value", 2)).alias("cv")
         )
     )
     from pyspark.sql import Window
@@ -1391,8 +1392,8 @@ def ts_spectral_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("period_d"),
     )
     angle = 2 * math.pi * F.col("t") / F.col("period_d")
-    c_term = F.floor(F.col("v") * F.cos(angle) * F.lit(1e6) + F.lit(0.5))
-    s_term = F.floor(F.col("v") * F.sin(angle) * F.lit(1e6) + F.lit(0.5))
+    c_term = grid(F.col("v") * F.cos(angle), 6)
+    s_term = grid(F.col("v") * F.sin(angle), 6)
     return terms.groupBy("event_type", "period_d").agg(
         (F.sum(c_term).cast("double") / F.lit(1e6)).alias("re_part"),
         (F.sum(s_term).cast("double") / F.lit(1e6)).alias("im_part"),
@@ -1416,10 +1417,8 @@ def _lr_oracle() -> str:
 WITH pairs AS ({pairs}),
 n AS (SELECT COUNT(*) AS n_obj FROM customer)
 SELECT ia, ib, dist_rad,
-       CAST(FLOOR(exp(-(dist_rad * dist_rad) / {s2})
-                  * 1000000000000.0 + 0.5) AS BIGINT) AS w_pico,
-       CAST(CAST(FLOOR(exp(-(dist_rad * dist_rad) / {s2})
-                       * 1000000000000.0 + 0.5) AS BIGINT) AS DOUBLE)
+       {grid_sql(f'exp(-(dist_rad * dist_rad) / {s2})', 12)} AS w_pico,
+       CAST({grid_sql(f'exp(-(dist_rad * dist_rad) / {s2})', 12)} AS DOUBLE)
        / 1000000000000.0
        / ({s2} * pi() * (CAST(n_obj AS DOUBLE) / (4.0 * pi()))) AS lr
 FROM pairs, n
@@ -1446,11 +1445,7 @@ def xmatch_likelihood_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     n = c.agg(F.count(F.lit(1)).alias("n_obj"))
     s2 = 2.0 * _LR_SIGMA * _LR_SIGMA
-    w_pico = F.floor(
-        F.exp(-(F.col("dist_rad") * F.col("dist_rad")) / F.lit(s2))
-        * F.lit(1e12)
-        + F.lit(0.5)
-    )
+    w_pico = grid(F.exp(-(F.col("dist_rad") * F.col("dist_rad")) / F.lit(s2)), 12)
     import math as _m
 
     return (
@@ -1692,7 +1687,7 @@ def xmatch_photometric_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sky_lognlogs",
-    oracle="""
+    oracle=f"""
 WITH m AS (
   SELECT CAST(FLOOR(c_acctbal / 500.0) AS BIGINT) AS mag_bin
   FROM customer WHERE c_acctbal > 0
@@ -1704,8 +1699,7 @@ c AS (
   FROM h
 )
 SELECT mag_bin, n, n_brighter,
-       CAST(CAST(FLOOR(log10(CAST(n_brighter AS DOUBLE)) * 1000000.0
-                       + 0.5) AS BIGINT) AS DOUBLE) / 1000000.0
+       CAST({grid_sql('log10(CAST(n_brighter AS DOUBLE))', 6)} AS DOUBLE) / 1000000.0
          AS log_n_cum
 FROM c
 """,
@@ -1738,10 +1732,7 @@ def sky_lognlogs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mag_bin", "n", F.sum("n").over(wc).alias("n_brighter")
     )
     log_n = (
-        F.floor(
-            F.log10(F.col("n_brighter").cast("double")) * F.lit(1e6)
-            + F.lit(0.5)
-        ).cast("double")
+        grid(F.log10(F.col("n_brighter").cast("double")), 6).cast("double")
         / F.lit(1e6)
     )
     return c.select("mag_bin", "n", "n_brighter", log_n.alias("log_n_cum"))
@@ -1979,7 +1970,7 @@ WITH b AS (
   SELECT event_type, p.p_us,
          ({epoch_fn}(ts) % p.p_us) {div} (p.p_us {div} {_BLS_NBINS})
            AS bin,
-         CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT) AS f
+         {grid_sql('value', 6)} AS f
   FROM {tbl}, (VALUES {vals}) AS p(p_us)),
 agg AS (
   SELECT event_type, p_us, bin,
@@ -2053,8 +2044,7 @@ def lightcurve_bls_box(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             f"(unix_micros(ts) % p_us) div (p_us div {_BLS_NBINS})"
         ).alias("bin"),
-        F.floor(F.col("value") * F.lit(1e6) + F.lit(0.5)).cast("long")
-        .alias("f"),
+        grid("value", 6).alias("f"),
     )
     agg = b.groupBy("event_type", "p_us", "bin").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -2126,7 +2116,7 @@ WITH b AS (
   SELECT event_type, p.p_us,
          ({epoch_fn}(ts) % p.p_us) {div} (p.p_us {div} {_PDM_NBINS})
            AS bin,
-         CAST(FLOOR(value * 10.0 + 0.5) AS BIGINT) AS f
+         {grid_sql('value', 1)} AS f
   FROM {tbl}, (VALUES {vals}) AS p(p_us)),
 agg AS (
   SELECT event_type, p_us, bin,
@@ -2202,8 +2192,7 @@ def lightcurve_pdm_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             f"(unix_micros(ts) % p_us) div (p_us div {_PDM_NBINS})"
         ).alias("bin"),
-        F.floor(F.col("value") * F.lit(10.0) + F.lit(0.5)).cast("long")
-        .alias("f"),
+        grid("value", 1).alias("f"),
     )
     agg = b.groupBy("event_type", "p_us", "bin").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -2265,8 +2254,8 @@ def _eta_sql(tbl: str) -> str:
     return f"""
 WITH v AS (
   SELECT event_type,
-         CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS f,
-         LAG(CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT))
+         {grid_sql('value', 2)} AS f,
+         LAG({grid_sql('value', 2)})
            OVER (PARTITION BY event_type ORDER BY ts, event_id) AS fp
   FROM {tbl}),
 s AS (
@@ -2308,7 +2297,7 @@ def lightcurve_eta_von_neumann(spark: SparkSession, sf_dir: str) -> DataFrame:
     form) with the eta double mirrored operand-for-operand.
     """
     ev = load_table(spark, sf_dir, "events")
-    f = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)).cast("long")
+    f = grid("value", 2)
     w = Window.partitionBy("event_type").orderBy("ts", "event_id")
     v = ev.select("event_type", f.alias("f"), F.lag(f).over(w).alias("fp"))
     s = v.groupBy("event_type").agg(
@@ -2348,13 +2337,13 @@ def _string_length_sql(tbl: str, epoch_fn: str, div: str) -> str:
     return f"""
 WITH mm AS (
   SELECT event_type,
-         MIN(CAST(FLOOR(value * 10.0 + 0.5) AS BIGINT)) AS mn,
-         MAX(CAST(FLOOR(value * 10.0 + 0.5) AS BIGINT)) AS mx
+         MIN({grid_sql('value', 1)}) AS mn,
+         MAX({grid_sql('value', 1)}) AS mx
   FROM {tbl} GROUP BY event_type),
 b AS (
   SELECT e.event_type, p.p_us,
          ((({epoch_fn}(ts) % p.p_us) * 10000) {div} p.p_us) AS phg,
-         (((CAST(FLOOR(value * 10.0 + 0.5) AS BIGINT) - mm.mn) * 10000)
+         ((({grid_sql('value', 1)} - mm.mn) * 10000)
             {div} (mm.mx - mm.mn + 1)) AS mg,
          event_id
   FROM {tbl} e JOIN mm ON mm.event_type = e.event_type,
@@ -2406,7 +2395,7 @@ def lightcurve_string_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     day_us = 86400 * 1_000_000
     ev = load_table(spark, sf_dir, "events")
-    v10 = F.floor(F.col("value") * F.lit(10.0) + F.lit(0.5)).cast("long")
+    v10 = grid("value", 1)
     mm = ev.groupBy("event_type").agg(
         F.min(v10).alias("mn"), F.max(v10).alias("mx")
     )
@@ -2422,7 +2411,7 @@ def lightcurve_string_length(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "((unix_micros(ts) % p_us) * 10000) div p_us"
             ).alias("phg"),
             F.expr(
-                "(((CAST(FLOOR(value * 10.0 + 0.5) AS BIGINT) - mn)"
+                f"((({grid_sql('value', 1)} - mn)"
                 " * 10000) div (mx - mn + 1))"
             ).alias("mg"),
             "event_id",
@@ -2465,7 +2454,7 @@ def lightcurve_string_length(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: Lomb–Scargle trial periods (days) — irregular-sampling periodogram.
 _LS_PERIODS_D = (2.5, 3.0, 4.0, 5.0, 7.0, 9.0, 11.0, 14.0)
-_LS_GRID = 1_000_000.0
+_LS_S = 6  # per-term grid scale before any sum
 
 
 @register(
@@ -2473,30 +2462,23 @@ _LS_GRID = 1_000_000.0
     oracle=f"""
 WITH pts AS (
   SELECT CAST(epoch_us(ts) AS DOUBLE) / 86400000000.0 AS t,
-         CAST(CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS DOUBLE) / 100.0
+         CAST({grid_sql('value', 2)} AS DOUBLE) / 100.0
            AS y
   FROM events WHERE event_type = 'purchase'
 ),
 terms AS (
   SELECT p.period_d,
-         CAST(FLOOR(y * cos(2.0 * pi() * t / p.period_d) * 1000000.0 + 0.5)
-              AS BIGINT) AS yc,
-         CAST(FLOOR(y * sin(2.0 * pi() * t / p.period_d) * 1000000.0 + 0.5)
-              AS BIGINT) AS ys,
-         CAST(FLOOR(cos(2.0 * pi() * t / p.period_d) * 1000000.0 + 0.5)
-              AS BIGINT) AS c1,
-         CAST(FLOOR(sin(2.0 * pi() * t / p.period_d) * 1000000.0 + 0.5)
-              AS BIGINT) AS s1,
-         CAST(FLOOR(cos(2.0 * pi() * t / p.period_d)
-                    * cos(2.0 * pi() * t / p.period_d) * 1000000.0 + 0.5)
-              AS BIGINT) AS cc,
-         CAST(FLOOR(sin(2.0 * pi() * t / p.period_d)
-                    * sin(2.0 * pi() * t / p.period_d) * 1000000.0 + 0.5)
-              AS BIGINT) AS ss,
-         CAST(FLOOR(sin(2.0 * pi() * t / p.period_d)
-                    * cos(2.0 * pi() * t / p.period_d) * 1000000.0 + 0.5)
-              AS BIGINT) AS sc,
-         CAST(FLOOR(y * 1000000.0 + 0.5) AS BIGINT) AS yg
+         {grid_sql('y * cos(2.0 * pi() * t / p.period_d)', 6)} AS yc,
+         {grid_sql('y * sin(2.0 * pi() * t / p.period_d)', 6)} AS ys,
+         {grid_sql('cos(2.0 * pi() * t / p.period_d)', 6)} AS c1,
+         {grid_sql('sin(2.0 * pi() * t / p.period_d)', 6)} AS s1,
+         {grid_sql('''cos(2.0 * pi() * t / p.period_d)
+                    * cos(2.0 * pi() * t / p.period_d)''', 6)} AS cc,
+         {grid_sql('''sin(2.0 * pi() * t / p.period_d)
+                    * sin(2.0 * pi() * t / p.period_d)''', 6)} AS ss,
+         {grid_sql('''sin(2.0 * pi() * t / p.period_d)
+                    * cos(2.0 * pi() * t / p.period_d)''', 6)} AS sc,
+         {grid_sql('y', 6)} AS yg
   FROM pts,
        (SELECT UNNEST([{", ".join(str(p) for p in _LS_PERIODS_D)}])
           AS period_d) p
@@ -2536,8 +2518,8 @@ comp AS (
   FROM tau
 )
 SELECT period_d, n,
-       CAST(FLOOR(0.5 * (num_c * num_c / den_c + num_s * num_s / den_s)
-                  * 1000000.0 + 0.5) AS BIGINT) AS p_ls_micro
+       {grid_sql('0.5 * (num_c * num_c / den_c + num_s * num_s / den_s)', 6)}
+         AS p_ls_micro
 FROM comp
 ORDER BY period_d
 """,
@@ -2569,7 +2551,7 @@ def lightcurve_lomb_scargle(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = ev.select(
         (F.unix_micros("ts").cast("double") / F.lit(86400000000.0)).alias("t"),
         (
-            F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)).cast("double")
+            grid("value", 2).cast("double")
             / F.lit(100.0)
         ).alias("y"),
     )
@@ -2578,8 +2560,8 @@ def lightcurve_lomb_scargle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ph = F.lit(2.0) * F.lit(math.pi) * F.col("t") / F.col("period_d")
 
-    def g(expr):  # per-term micro-grid before any sum
-        return F.floor(expr * F.lit(_LS_GRID) + F.lit(0.5)).cast("long")
+    def g(expr):
+        return grid(expr, _LS_S)
 
     terms = pts.crossJoin(F.broadcast(spec)).select(
         "period_d",
@@ -2594,7 +2576,7 @@ def lightcurve_lomb_scargle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def d(c):
-        return F.sum(c).cast("double") / F.lit(_LS_GRID)
+        return F.sum(c).cast("double") / F.lit(float(10**_LS_S))
 
     agg = terms.groupBy("period_d").agg(
         F.count(F.lit(1)).alias("n"),
@@ -2643,23 +2625,21 @@ def lightcurve_lomb_scargle(spark: SparkSession, sf_dir: str) -> DataFrame:
     return comp.select(
         "period_d",
         "n",
-        F.floor(
+        grid(
             F.lit(0.5)
             * (
                 F.col("num_c") * F.col("num_c") / F.col("den_c")
                 + F.col("num_s") * F.col("num_s") / F.col("den_s")
-            )
-            * F.lit(_LS_GRID)
-            + F.lit(0.5)
+            ),
+            6,
         )
-        .cast("long")
         .alias("p_ls_micro"),
     ).orderBy("period_d")
 
 
 @register(
     "xmatch_offset_false_rate",
-    oracle="""
+    oracle=f"""
 WITH a AS (
   SELECT p_partkey,
          CAST(ROUND(p_retailprice * 100) AS BIGINT) AS cents,
@@ -2683,8 +2663,7 @@ off_m AS (
                 AND abs(a.size - b.size) <= 1
 )
 SELECT true_m.n AS n_true, off_m.n AS n_offset,
-       CAST(FLOOR(CAST(off_m.n AS DOUBLE) / true_m.n * 1000000.0 + 0.5)
-            AS BIGINT) AS false_rate_micro,
+       {grid_sql('CAST(off_m.n AS DOUBLE) / true_m.n', 6)} AS false_rate_micro,
        CAST(true_m.n - off_m.n AS BIGINT) AS n_real_excess
 FROM true_m CROSS JOIN off_m
 """,
@@ -2753,10 +2732,9 @@ def xmatch_offset_false_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = match_count(1000).select(F.col("n").alias("n_offset"))
     return t.crossJoin(F.broadcast(o)).select(
         "n_true", "n_offset",
-        F.floor(
-            F.col("n_offset").cast("double") / F.col("n_true") * F.lit(1e6)
-            + F.lit(0.5)
-        ).cast("long").alias("false_rate_micro"),
+        grid(
+            F.col("n_offset").cast("double") / F.col("n_true"), 6
+        ).alias("false_rate_micro"),
         (F.col("n_true") - F.col("n_offset")).cast("long")
         .alias("n_real_excess"),
     )
@@ -2768,7 +2746,7 @@ def xmatch_offset_false_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH daily AS (
   SELECT event_type,
          epoch_us(date_trunc('day', ts)) // 86400000000 AS day_idx,
-         SUM(CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT)) AS cv
+         SUM({grid_sql('value', 2)}) AS cv
   FROM events GROUP BY 1, 2
 ),
 base AS (
@@ -2778,10 +2756,8 @@ base AS (
 ),
 terms AS (
   SELECT event_type, p.period_d,
-         CAST(FLOOR(v * cos(2 * pi() * t / p.period_d) * 1000000.0 + 0.5)
-              AS BIGINT) AS c_term,
-         CAST(FLOOR(v * sin(2 * pi() * t / p.period_d) * 1000000.0 + 0.5)
-              AS BIGINT) AS s_term
+         {grid_sql('v * cos(2 * pi() * t / p.period_d)', 6)} AS c_term,
+         {grid_sql('v * sin(2 * pi() * t / p.period_d)', 6)} AS s_term
   FROM base,
        (SELECT UNNEST([{", ".join(str(p) for p in _DFT_PERIODS_D)}])
           AS period_d) p
@@ -2794,8 +2770,7 @@ coef AS (
 ),
 pw AS (
   SELECT event_type, period_d,
-         CAST(FLOOR((re_part * re_part + im_part * im_part) * 1000.0 + 0.5)
-              AS BIGINT) AS p_milli
+         {grid_sql('re_part * re_part + im_part * im_part', 3)} AS p_milli
   FROM coef
 ),
 tot AS (
@@ -2806,9 +2781,8 @@ tot AS (
 ent AS (
   SELECT pw.event_type,
          CAST(SUM(CASE WHEN pw.p_milli > 0 THEN
-           CAST(FLOOR(-(CAST(pw.p_milli AS DOUBLE) / tot.p_tot)
-                      * ln(CAST(pw.p_milli AS DOUBLE) / tot.p_tot)
-                      * 1000000000.0 + 0.5) AS BIGINT)
+           {grid_sql('''-(CAST(pw.p_milli AS DOUBLE) / tot.p_tot)
+                      * ln(CAST(pw.p_milli AS DOUBLE) / tot.p_tot)''', 9)}
            ELSE 0 END) AS BIGINT) AS h_nano
   FROM pw JOIN tot ON pw.event_type = tot.event_type
   GROUP BY pw.event_type
@@ -2819,12 +2793,11 @@ dom AS (
   WHERE p_milli = p_max GROUP BY event_type
 )
 SELECT ent.event_type,
-       CAST(FLOOR(CAST(ent.h_nano AS DOUBLE)
-                  / ln({len(_DFT_PERIODS_D)}.0) / 1000.0 + 0.5) AS BIGINT)
+       {grid_sql(f'''CAST(ent.h_nano AS DOUBLE)
+                  / ln({len(_DFT_PERIODS_D)}.0) / 1000.0''', 0)}
          AS spectral_entropy_norm_micro,
        CAST(dom.dominant_period AS BIGINT) AS dominant_period,
-       CAST(FLOOR(CAST(tot.p_max AS DOUBLE) / tot.p_tot
-                  * 1000000.0 + 0.5) AS BIGINT) AS concentration_micro
+       {grid_sql('CAST(tot.p_max AS DOUBLE) / tot.p_tot', 6)} AS concentration_micro
 FROM ent JOIN dom ON ent.event_type = dom.event_type
 JOIN tot ON ent.event_type = tot.event_type
 ORDER BY ent.event_type
@@ -2862,9 +2835,7 @@ def ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.lit(86_400_000_000)
         ).alias("day_idx"),
     ).agg(
-        F.sum(
-            F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
-        ).alias("cv")
+        F.sum(grid("value", 2)).alias("cv")
     )
     wmin = Window.partitionBy("event_type")
     base = daily.select(
@@ -2882,10 +2853,8 @@ def ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("period_d"),
     ).select(
         "event_type", "period_d",
-        F.floor(F.col("v") * F.cos(ang) * F.lit(1e6) + F.lit(0.5))
-        .cast("long").alias("c_term"),
-        F.floor(F.col("v") * F.sin(ang) * F.lit(1e6) + F.lit(0.5))
-        .cast("long").alias("s_term"),
+        grid(F.col("v") * F.cos(ang), 6).alias("c_term"),
+        grid(F.col("v") * F.sin(ang), 6).alias("s_term"),
     )
     coef = terms.groupBy("event_type", "period_d").agg(
         (F.sum("c_term").cast("double") / F.lit(1e6)).alias("re_part"),
@@ -2893,12 +2862,9 @@ def ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pw = coef.select(
         "event_type", "period_d",
-        F.floor(
-            (
-                F.col("re_part") * F.col("re_part")
-                + F.col("im_part") * F.col("im_part")
-            ) * F.lit(1e3) + F.lit(0.5)
-        ).cast("long").alias("p_milli"),
+        grid(
+            F.col("re_part") * F.col("re_part") + F.col("im_part") * F.col("im_part"), 3
+        ).alias("p_milli"),
     )
     # r12 (guide §2.4): the totals used to be a groupBy + broadcast
     # self-join, and the final select joined `tot` AGAIN — three copies
@@ -2917,7 +2883,7 @@ def ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = F.col("p_milli").cast("double") / F.col("p_tot")
     hterm = F.when(
         F.col("p_milli") > 0,
-        F.floor(-p * F.log(p) * F.lit(1e9) + F.lit(0.5)).cast("long"),
+        grid(-p * F.log(p), 9),
     ).otherwise(F.lit(0))
     return (
         joined.groupBy("event_type")
@@ -2931,16 +2897,16 @@ def ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "event_type",
-            F.floor(
+            grid(
                 F.col("h_nano").cast("double")
                 / F.lit(math.log(float(len(_DFT_PERIODS_D))))
-                / F.lit(1e3) + F.lit(0.5)
-            ).cast("long").alias("spectral_entropy_norm_micro"),
+                / F.lit(1e3),
+                0,
+            ).alias("spectral_entropy_norm_micro"),
             "dominant_period",
-            F.floor(
-                F.col("p_max").cast("double") / F.col("p_tot")
-                * F.lit(1e6) + F.lit(0.5)
-            ).cast("long").alias("concentration_micro"),
+            grid(
+                F.col("p_max").cast("double") / F.col("p_tot"), 6
+            ).alias("concentration_micro"),
         )
         .orderBy("event_type")
     )
@@ -2948,10 +2914,10 @@ def ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "lightcurve_stetson_jk",
-    oracle="""
+    oracle=f"""
 WITH m AS (
   SELECT user_id, ts, event_id,
-         CAST(FLOOR(value * 1000.0 + 0.5) AS BIGINT) AS v3
+         {grid_sql('value', 3)} AS v3
   FROM events
 ),
 s AS (
@@ -2965,11 +2931,10 @@ s AS (
 ),
 d AS (
   SELECT m.user_id, m.ts, m.event_id,
-         CAST(FLOOR((CAST(m.v3 AS DOUBLE) - CAST(s.sy AS DOUBLE) / s.n)
+         {grid_sql('''(CAST(m.v3 AS DOUBLE) - CAST(s.sy AS DOUBLE) / s.n)
                     / sqrt((CAST(s.syy AS DOUBLE)
                             - CAST(s.sy AS DOUBLE) * s.sy / s.n)
-                           / (CAST(s.n AS DOUBLE) - 1.0))
-                    * 1000000.0 + 0.5) AS BIGINT) AS d6
+                           / (CAST(s.n AS DOUBLE) - 1.0))''', 6)} AS d6
   FROM m JOIN s ON m.user_id = s.user_id
 ),
 p AS (
@@ -2981,11 +2946,9 @@ p AS (
 terms AS (
   SELECT user_id,
          CASE WHEN d6 * d6n > 0 THEN
-                CAST(FLOOR(sqrt(CAST(abs(d6 * d6n) AS DOUBLE)) + 0.5)
-                     AS BIGINT)
+                {grid_sql('sqrt(CAST(abs(d6 * d6n) AS DOUBLE))', 0)}
               WHEN d6 * d6n < 0 THEN
-                -CAST(FLOOR(sqrt(CAST(abs(d6 * d6n) AS DOUBLE)) + 0.5)
-                      AS BIGINT)
+                -{grid_sql('sqrt(CAST(abs(d6 * d6n) AS DOUBLE))', 0)}
               ELSE 0 END AS t6,
          abs(d6) AS a6
   FROM p WHERE d6n IS NOT NULL
@@ -2993,10 +2956,8 @@ terms AS (
 SELECT user_id,
        CAST(COUNT(*) AS BIGINT) AS n_pairs,
        CAST(SUM(t6) AS BIGINT) AS jsum_micro,
-       CAST(FLOOR(CAST(SUM(t6) AS DOUBLE) / COUNT(*) / 1000.0 + 0.5)
-            AS BIGINT) AS j_milli,
-       CAST(FLOOR(CAST(SUM(a6) AS DOUBLE) / (COUNT(*) + 1) / 1000.0 + 0.5)
-            AS BIGINT) AS k_milli
+       {grid_sql('CAST(SUM(t6) AS DOUBLE) / COUNT(*) / 1000.0', 0)} AS j_milli,
+       {grid_sql('CAST(SUM(a6) AS DOUBLE) / (COUNT(*) + 1) / 1000.0', 0)} AS k_milli
 FROM terms GROUP BY user_id ORDER BY user_id
 """,
 )
@@ -3026,8 +2987,7 @@ def lightcurve_stetson_jk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     m = ev.select(
         "user_id", "ts", "event_id",
-        F.floor(F.col("value") * F.lit(1000.0) + F.lit(0.5))
-        .cast("long").alias("v3"),
+        grid("value", 3).alias("v3"),
     )
     s = (
         m.groupBy("user_id")
@@ -3042,25 +3002,23 @@ def lightcurve_stetson_jk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     nd = F.col("n").cast("double")
-    d6 = F.floor(
+    d6 = grid(
         (F.col("v3").cast("double") - F.col("sy").cast("double") / F.col("n"))
         / F.sqrt(
             (
                 F.col("syy").cast("double")
                 - F.col("sy").cast("double") * F.col("sy") / F.col("n")
             ) / (nd - F.lit(1.0))
-        )
-        * F.lit(1e6) + F.lit(0.5)
-    ).cast("long")
+        ),
+        6,
+    )
     d = m.join(s, "user_id").select("user_id", "ts", "event_id", d6.alias("d6"))
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     p = d.select("user_id", "d6", F.lead("d6").over(w).alias("d6n")).filter(
         F.col("d6n").isNotNull()
     )
     prod = F.col("d6") * F.col("d6n")
-    root = F.floor(
-        F.sqrt(F.abs(prod).cast("double")) + F.lit(0.5)
-    ).cast("long")
+    root = grid(F.sqrt(F.abs(prod).cast("double")), 0)
     terms = p.select(
         "user_id",
         F.when(prod > 0, root).when(prod < 0, -root).otherwise(F.lit(0))
@@ -3073,14 +3031,10 @@ def lightcurve_stetson_jk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             cnt.cast("long").alias("n_pairs"),
             F.sum("t6").cast("long").alias("jsum_micro"),
-            F.floor(
-                F.sum("t6").cast("double") / cnt / F.lit(1000.0)
-                + F.lit(0.5)
-            ).cast("long").alias("j_milli"),
-            F.floor(
-                F.sum("a6").cast("double") / (cnt + F.lit(1))
-                / F.lit(1000.0) + F.lit(0.5)
-            ).cast("long").alias("k_milli"),
+            grid(F.sum("t6").cast("double") / cnt / F.lit(1000.0), 0).alias("j_milli"),
+            grid(
+                F.sum("a6").cast("double") / (cnt + F.lit(1)) / F.lit(1000.0), 0
+            ).alias("k_milli"),
         )
         .orderBy("user_id")
     )
@@ -3088,11 +3042,11 @@ def lightcurve_stetson_jk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "xmatch_proper_motion",
-    oracle="""
+    oracle=f"""
 WITH obs AS (
   SELECT user_id,
          epoch_us(ts) // 86400000000 AS day,
-         CAST(FLOOR(value * 1000.0 + 0.5) AS BIGINT) AS pos3
+         {grid_sql('value', 3)} AS pos3
   FROM events
 ),
 anch AS (
@@ -3118,8 +3072,8 @@ fit AS (
   WHERE CAST(n AS DOUBLE) * stt - CAST(st AS DOUBLE) * st > 0.0
 )
 SELECT user_id, n AS n_epochs, span_days,
-       CAST(FLOOR(mu * 1000.0 + 0.5) AS BIGINT) AS pm_micro_per_day,
-       CAST(FLOOR(mu * span_days + 0.5) AS BIGINT) AS drift_milli,
+       {grid_sql('mu', 3)} AS pm_micro_per_day,
+       {grid_sql('mu * span_days', 0)} AS drift_milli,
        abs(mu * span_days) > 50.0 AS high_pm
 FROM fit ORDER BY user_id
 """,
@@ -3149,8 +3103,7 @@ def xmatch_proper_motion(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = ev.select(
         "user_id",
         F.expr("unix_micros(ts) div 86400000000").alias("day"),
-        F.floor(F.col("value") * F.lit(1000.0) + F.lit(0.5))
-        .cast("long").alias("pos3"),
+        grid("value", 3).alias("pos3"),
     )
     anch = obs.select(
         "user_id",
@@ -3184,10 +3137,8 @@ def xmatch_proper_motion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.col("n").alias("n_epochs"),
         "span_days",
-        F.floor(F.col("mu") * F.lit(1000.0) + F.lit(0.5)).cast("long")
-        .alias("pm_micro_per_day"),
-        F.floor(F.col("mu") * F.col("span_days") + F.lit(0.5))
-        .cast("long").alias("drift_milli"),
+        grid("mu", 3).alias("pm_micro_per_day"),
+        grid(F.col("mu") * F.col("span_days"), 0).alias("drift_milli"),
         (F.abs(F.col("mu") * F.col("span_days")) > F.lit(50.0))
         .alias("high_pm"),
     ).orderBy("user_id")
@@ -3195,16 +3146,16 @@ def xmatch_proper_motion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sky_mag_cmd",
-    oracle="""
+    oracle=f"""
 WITH flux AS (
   SELECT user_id,
          CAST(SUM(CASE WHEN event_type = 'view' THEN
-                       CAST(FLOOR(value * 1000.0 + 0.5) AS BIGINT)
+                       {grid_sql('value', 3)}
                        ELSE 0 END) AS BIGINT) AS s1,
          CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
               AS BIGINT) AS c1,
          CAST(SUM(CASE WHEN event_type = 'click' THEN
-                       CAST(FLOOR(value * 1000.0 + 0.5) AS BIGINT)
+                       {grid_sql('value', 3)}
                        ELSE 0 END) AS BIGINT) AS s2,
          CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
               AS BIGINT) AS c2
@@ -3212,10 +3163,8 @@ WITH flux AS (
 ),
 mags AS (
   SELECT user_id,
-         CAST(FLOOR(-2500.0 * log10(CAST(s1 AS DOUBLE) / c1 / 1000.0)
-                    + 0.5) AS BIGINT) AS m1_milli,
-         CAST(FLOOR(-2500.0 * log10(CAST(s2 AS DOUBLE) / c2 / 1000.0)
-                    + 0.5) AS BIGINT) AS m2_milli
+         {grid_sql('-2500.0 * log10(CAST(s1 AS DOUBLE) / c1 / 1000.0)', 0)} AS m1_milli,
+         {grid_sql('-2500.0 * log10(CAST(s2 AS DOUBLE) / c2 / 1000.0)', 0)} AS m2_milli
   FROM flux WHERE c1 > 0 AND c2 > 0 AND s1 > 0 AND s2 > 0
 ),
 cmd AS (
@@ -3252,7 +3201,7 @@ def sky_mag_cmd(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is bounded by the bin grid.
     """
     ev = load_table(spark, sf_dir, "events")
-    v3 = F.floor(F.col("value") * F.lit(1000.0) + F.lit(0.5)).cast("long")
+    v3 = grid("value", 3)
     flux = ev.groupBy("user_id").agg(
         F.sum(F.when(F.col("event_type") == "view", v3).otherwise(0))
         .cast("long").alias("s1"),
@@ -3265,13 +3214,13 @@ def sky_mag_cmd(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def mag(s: str, c: str):
-        return F.floor(
+        return grid(
             F.lit(-2500.0)
             * F.log10(
                 F.col(s).cast("double") / F.col(c) / F.lit(1000.0)
-            )
-            + F.lit(0.5)
-        ).cast("long")
+            ),
+            0,
+        )
 
     mags = flux.filter(
         (F.col("c1") > 0) & (F.col("c2") > 0)
@@ -3603,10 +3552,7 @@ def _hpx_ring_expr(ra_col: str, z9_col: str, div: str) -> str:
 
 
 def _hpx_sql_oracle() -> str:
-    z9 = (
-        "CAST(FLOOR(SIN(RADIANS(CAST(dec_c AS DOUBLE) / 100.0))"
-        " * 1000000000.0 + 0.5) AS BIGINT)"
-    )
+    z9 = grid_sql("SIN(RADIANS(CAST(dec_c AS DOUBLE) / 100.0))", 9)
     pix = _hpx_ring_expr("ra_c", "z9", "//")
     return f"""
 WITH cat AS (
@@ -3659,10 +3605,9 @@ def sky_healpix_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     z = cat.select(
         "obj_id", "ra_c",
-        F.floor(
-            F.sin(F.radians(F.col("dec_c").cast("double") / F.lit(100.0)))
-            * F.lit(1e9) + F.lit(0.5)
-        ).cast("long").alias("z9"),
+        grid(
+            F.sin(F.radians(F.col("dec_c").cast("double") / F.lit(100.0))), 9
+        ).alias("z9"),
     )
     px = z.select("obj_id", F.expr(_hpx_ring_expr("ra_c", "z9", "div")).alias("pix"))
     return (
@@ -3755,14 +3700,14 @@ def sky_two_point_dd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "lightcurve_chi2_constant",
-    oracle="""
+    oracle=f"""
 WITH s AS (
   SELECT event_type,
          CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(CAST(FLOOR(value * 10.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('value', 1)})
               AS BIGINT) AS s1,
-         CAST(SUM(CAST(FLOOR(value * 10.0 + 0.5) AS BIGINT)
-                  * CAST(FLOOR(value * 10.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('value', 1)}
+                  * {grid_sql('value', 1)})
               AS BIGINT) AS s2
   FROM events GROUP BY 1)
 SELECT event_type, n AS n_obs,
@@ -3793,7 +3738,7 @@ def lightcurve_chi2_constant(spark: SparkSession, sf_dir: str) -> DataFrame:
     `lightcurve_pdm_theta` overflow ledger).
     """
     ev = load_table(spark, sf_dir, "events")
-    f = F.floor(F.col("value") * F.lit(10.0) + F.lit(0.5)).cast("long")
+    f = grid("value", 1)
     s = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(f).cast("long").alias("s1"),
@@ -4370,9 +4315,8 @@ alt AS (
 SELECT obj_id, dec_c, CAST(alt_max_c AS BIGINT) AS alt_max_c,
        alt_max_c >= {_OBS_MIN_ALT_C} AS observable,
        CASE WHEN alt_max_c >= {_OBS_MIN_ALT_C}
-            THEN CAST(FLOOR(1.0 / sin(radians(CAST(alt_max_c AS DOUBLE)
-                                              / 100.0))
-                            * 1000000.0 + 0.5) AS BIGINT)
+            THEN {grid_sql('''1.0 / sin(radians(CAST(alt_max_c AS DOUBLE)
+                                              / 100.0))''', 6)}
             ELSE NULL END AS airmass_micro
 FROM alt ORDER BY obj_id
 """,
@@ -4414,13 +4358,13 @@ def sky_observability(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("alt_max_c") >= _OBS_MIN_ALT_C).alias("observable"),
         F.when(
             F.col("alt_max_c") >= _OBS_MIN_ALT_C,
-            F.floor(
+            grid(
                 F.lit(1.0)
                 / F.sin(
                     F.radians(F.col("alt_max_c").cast("double") / F.lit(100.0))
-                )
-                * F.lit(1e6) + F.lit(0.5)
-            ).cast("long"),
+                ),
+                6,
+            ),
         ).alias("airmass_micro"),
     ).orderBy("obj_id")
 
@@ -4703,7 +4647,7 @@ SELECT b.sep_bin,
        COALESCE(dr.n_pairs, 0) AS dr_pairs,
        COALESCE(rr.n_pairs, 0) AS rr_pairs,
        CASE WHEN COALESCE(rr.n_pairs, 0) > 0 THEN
-         CAST(FLOOR((
+         {grid_sql('''(
            (CAST(COALESCE(dd.n_pairs, 0) AS DOUBLE)
               / (CAST(nd AS DOUBLE) * (nd - 1) / 2.0)
             - 2.0 * CAST(COALESCE(dr.n_pairs, 0) AS DOUBLE)
@@ -4712,7 +4656,7 @@ SELECT b.sep_bin,
               / (CAST(nd AS DOUBLE) * (nd - 1) / 2.0))
            / (CAST(COALESCE(rr.n_pairs, 0) AS DOUBLE)
               / (CAST(nd AS DOUBLE) * (nd - 1) / 2.0))
-         ) * 1000000.0 + 0.5) AS BIGINT)
+         )''', 6)}
        ELSE NULL END AS w_micro
 FROM (SELECT unnest(generate_series(0, 2)) AS sep_bin) b
 LEFT JOIN dd USING (sep_bin)
@@ -4838,6 +4782,6 @@ def sky_two_point_landy_szalay(spark: SparkSession, sf_dir: str) -> DataFrame:
         # an empty-RR bin has no estimate — NULL, never a division
         F.when(
             F.col("rr_pairs") > 0,
-            F.floor(w * F.lit(1e6) + F.lit(0.5)).cast("long"),
+            grid(w, 6),
         ).alias("w_micro"),
     ).orderBy("sep_bin")

@@ -25,7 +25,14 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.exact import md5_int, md5_int_sql, sky_radec, sky_radec_sql
+from ..functions.exact import (
+    grid,
+    grid_sql,
+    md5_int,
+    md5_int_sql,
+    sky_radec,
+    sky_radec_sql,
+)
 from ..registry import register
 
 _K = 10
@@ -124,7 +131,7 @@ def kmeans_lloyd(
 #: helper above keeps _K/_ITERS for the inertia tests).
 _KM_K = 4
 _KM_ITERS = 3
-_KM_GRID = 10_000
+_KM_S = 4  # embedding grid scale: components on the 1e-4 grid
 _KM_DIM = 64
 
 
@@ -135,10 +142,10 @@ def _km_tdiv_sql(x: str, d: str) -> str:
 
 
 def _km_oracle() -> str:
-    grid = f"CAST(FLOOR(CAST(x AS DOUBLE) * {_KM_GRID}.0 + 0.5) AS BIGINT)"
+    gx = grid_sql("CAST(x AS DOUBLE)", _KM_S)
     ctes = [
         f"""g AS MATERIALIZED (
-  SELECT vec_id, list_transform(embedding, x -> {grid}) AS e
+  SELECT vec_id, list_transform(embedding, x -> {gx}) AS e
   FROM embeddings)""",
         f"d1 AS MATERIALIZED (SELECT i FROM range(1, {_KM_DIM + 1}) t(i))",
         f"""seed AS MATERIALIZED (
@@ -233,8 +240,7 @@ def kmeans_lloyd_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.expr(
-            f"transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)"
-            f" * {_KM_GRID}.0 + 0.5) AS BIGINT))"
+            f"transform(embedding, x -> {grid_sql('CAST(x AS DOUBLE)', _KM_S)})"
         ).alias("e"),
     )
     seed = g.orderBy("vec_id").limit(_KM_K).collect()
@@ -369,7 +375,7 @@ def pca_top_component(
 
 #: Integer-grid PCA projection: embedding grid, power-iteration count,
 #: and the renormalization scale that keeps every matvec inside int64.
-_PCA_GRID = 10_000
+_PCA_S = 4
 _PCA_ITERS = 6
 _PCA_VSCALE = 1_000_000
 _PCA_DIM = 64
@@ -382,11 +388,11 @@ def _pca_tdiv(x: int, d: int) -> int:
 
 
 def _pca_int_oracle() -> str:
-    grid = f"CAST(FLOOR(CAST(x AS DOUBLE) * {_PCA_GRID}.0 + 0.5) AS BIGINT)"
+    gx = grid_sql("CAST(x AS DOUBLE)", _PCA_S)
     ctes = [
         f"""g AS MATERIALIZED (
   SELECT vec_id, label,
-         list_transform(embedding, x -> {grid}) AS e
+         list_transform(embedding, x -> {gx}) AS e
   FROM embeddings)""",
         "nn AS MATERIALIZED (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM g)",
         f"d1 AS MATERIALIZED (SELECT i FROM range(1, {_PCA_DIM + 1}) t(i))",
@@ -474,8 +480,7 @@ def emb_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         F.expr(
-            f"transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)"
-            f" * {_PCA_GRID}.0 + 0.5) AS BIGINT))"
+            f"transform(embedding, x -> {grid_sql('CAST(x AS DOUBLE)', _PCA_S)})"
         ).alias("e"),
     )
     ex = g.select(F.posexplode("e").alias("i", "v"))
@@ -539,12 +544,12 @@ _LR_FEATURES = ("l_quantity", "l_discount", "l_tax")
 #: Exact integer sufficient statistics for the 4×4 normal equations:
 #: quantity is integer-valued, discount/tax/price are 2-decimal money
 #: → ×100 grids are exact. Sum names double as SQL column names.
-_LR_GRID_SQL = """
+_LR_GRID_SQL = f"""
   SELECT CAST(l_quantity AS BIGINT) AS q,
-         CAST(FLOOR(l_discount * 100.0 + 0.5) AS BIGINT) AS dc,
-         CAST(FLOOR(l_tax * 100.0 + 0.5) AS BIGINT) AS tc,
-         CAST(FLOOR(l_extendedprice * 100.0 + 0.5) AS BIGINT) AS yc
-  FROM {tbl}"""
+         {grid_sql("l_discount", 2)} AS dc,
+         {grid_sql("l_tax", 2)} AS tc,
+         {grid_sql("l_extendedprice", 2)} AS yc
+  FROM {{tbl}}"""
 _LR_SUMS_SQL = """
   SELECT CAST(COUNT(*) AS BIGINT) AS sn,
          CAST(SUM(q) AS BIGINT) AS sq,
@@ -672,12 +677,9 @@ def ml_linreg_normal(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     g = li.select(
         F.col("l_quantity").cast("long").alias("q"),
-        F.floor(F.col("l_discount") * F.lit(100.0) + F.lit(0.5))
-        .cast("long").alias("dc"),
-        F.floor(F.col("l_tax") * F.lit(100.0) + F.lit(0.5))
-        .cast("long").alias("tc"),
-        F.floor(F.col("l_extendedprice") * F.lit(100.0) + F.lit(0.5))
-        .cast("long").alias("yc"),
+        grid("l_discount", 2).alias("dc"),
+        grid("l_tax", 2).alias("tc"),
+        grid("l_extendedprice", 2).alias("yc"),
     )
     sums = g.agg(
         F.count(F.lit(1)).cast("long").alias("sn"),
@@ -882,7 +884,7 @@ def _suff_terms():
     "ml_linreg_suffstats",
     oracle="SELECT "
     + ", ".join(
-        f"CAST(SUM(CAST(FLOOR(({expr}) * {s} + 0.5) AS BIGINT)) AS DOUBLE)"
+        f"CAST(SUM({grid_sql(f'({expr}) * {s}', 0)}) AS DOUBLE)"
         f" / {s} AS {name}"
         for name, expr, s in _suff_terms()
     )
@@ -903,9 +905,7 @@ def ml_linreg_suffstats(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     aggs = [
         (
-            F.sum(
-                F.floor(F.expr(expr) * F.lit(s) + F.lit(0.5))
-            ).cast("double")
+            F.sum(grid(F.expr(expr) * F.lit(s), 0)).cast("double")
             / F.lit(s)
         ).alias(name)
         for name, expr, s in _suff_terms()
@@ -916,11 +916,10 @@ def ml_linreg_suffstats(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: integer-gridded assignment: (a-b)^2 floor-gridded to nano-units per
 #: dimension, accumulated as exact longs inside the lambda — argmin by
 #: (d2n, cluster) via lexicographic struct min, engine-exact.
-_ASSIGN_EXACT_EXPR = """
+_ASSIGN_EXACT_EXPR = f"""
 array_min(transform(C, c -> struct(
   aggregate(zip_with(vec, c.cvec,
-                     (a, b) -> CAST(FLOOR((a - b) * (a - b) * 1000000000.0
-                                          + 0.5) AS BIGINT)),
+                     (a, b) -> {grid_sql('(a - b) * (a - b)', 9)}),
             CAST(0 AS BIGINT), (acc, x) -> acc + x) AS d2n,
   c.cluster AS cluster)))
 """
@@ -936,12 +935,11 @@ WITH seeds AS (
 ),
 dist AS (
   SELECT p.vec_id, s.cluster,
-         SUM(CAST(FLOOR(
+         SUM({grid_sql('''
            (CAST(p.embedding[i::INT] AS DOUBLE)
             - CAST(s.cvec[i::INT] AS DOUBLE))
            * (CAST(p.embedding[i::INT] AS DOUBLE)
-              - CAST(s.cvec[i::INT] AS DOUBLE))
-           * 1000000000.0 + 0.5) AS BIGINT)) AS d2n
+              - CAST(s.cvec[i::INT] AS DOUBLE))''', 9)}) AS d2n
   FROM embeddings p, seeds s, range(1, 65) t(i)
   GROUP BY p.vec_id, s.cluster
 ),
@@ -954,8 +952,7 @@ best AS (
   ) WHERE rn = 1
 )
 SELECT b.cluster, i - 1 AS dim, COUNT(*) AS n,
-       CAST(SUM(CAST(FLOOR(CAST(p.embedding[i::INT] AS DOUBLE) * 1000000.0
-                           + 0.5) AS BIGINT)) AS DOUBLE)
+       CAST(SUM({grid_sql('CAST(p.embedding[i::INT] AS DOUBLE)', 6)}) AS DOUBLE)
          / 1000000.0 / COUNT(*) AS centroid
 FROM best b JOIN embeddings p ON p.vec_id = b.vec_id, range(1, 65) t(i)
 GROUP BY b.cluster, i
@@ -995,7 +992,7 @@ def kmeans_one_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.count(F.lit(1)).alias("n"),
         (
-            F.sum(F.floor(F.col("v") * F.lit(1e6) + F.lit(0.5))).cast("double")
+            F.sum(grid("v", 6)).cast("double")
             / F.lit(1e6)
             / F.count(F.lit(1))
         ).alias("centroid"),
@@ -1011,9 +1008,9 @@ def _split_hist_sql(tbl: str) -> str:
     return f"""
 WITH g AS (
   SELECT CAST(l_quantity AS BIGINT) AS qb,
-         CAST(FLOOR(l_discount * 100.0 + 0.5) AS BIGINT) AS db,
-         CAST(FLOOR(l_tax * 100.0 + 0.5) AS BIGINT) AS tb,
-         CAST(FLOOR(l_extendedprice * 100.0 + 0.5) AS BIGINT) AS yc
+         {grid_sql('l_discount', 2)} AS db,
+         {grid_sql('l_tax', 2)} AS tb,
+         {grid_sql('l_extendedprice', 2)} AS yc
   FROM {tbl}),
 bins AS (
   SELECT feature, bin, CAST(COUNT(*) AS BIGINT) AS n,
@@ -1077,12 +1074,9 @@ def ml_split_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     g = li.select(
         F.col("l_quantity").cast("long").alias("qb"),
-        F.floor(F.col("l_discount") * F.lit(100.0) + F.lit(0.5))
-        .cast("long").alias("db"),
-        F.floor(F.col("l_tax") * F.lit(100.0) + F.lit(0.5))
-        .cast("long").alias("tb"),
-        F.floor(F.col("l_extendedprice") * F.lit(100.0) + F.lit(0.5))
-        .cast("long").alias("yc"),
+        grid("l_discount", 2).alias("db"),
+        grid("l_tax", 2).alias("tb"),
+        grid("l_extendedprice", 2).alias("yc"),
     )
     u = (
         g.select(F.lit("quantity").alias("feature"),
@@ -1191,8 +1185,8 @@ def _gbt_boost_sql(tbl: str, div: str, mat: str) -> str:
     return f"""
 WITH g AS {mat} (
   SELECT CAST(l_quantity AS BIGINT) AS qb,
-         CAST(FLOOR(l_discount * 100.0 + 0.5) AS BIGINT) AS db,
-         CAST(FLOOR(l_extendedprice * 100.0 + 0.5) AS BIGINT) AS y
+         {grid_sql('l_discount', 2)} AS db,
+         {grid_sql('l_extendedprice', 2)} AS y
   FROM {tbl}),
 {stump('g', 'b1', 't1', 'c1', 's1', 'w1')},
 r AS {mat} (
@@ -1250,10 +1244,8 @@ def ml_gbt_stump_boost(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     g = li.select(
         F.col("l_quantity").cast("long").alias("qb"),
-        F.floor(F.col("l_discount") * F.lit(100.0) + F.lit(0.5))
-        .cast("long").alias("db"),
-        F.floor(F.col("l_extendedprice") * F.lit(100.0) + F.lit(0.5))
-        .cast("long").alias("y"),
+        grid("l_discount", 2).alias("db"),
+        grid("l_extendedprice", 2).alias("y"),
     )
 
     def stump(src: DataFrame) -> DataFrame:
@@ -1354,7 +1346,7 @@ def _isotonic_sql(tbl: str, hex4: str, div: str) -> str:
     division."""
     binned = f"""
 WITH raw AS (
-  SELECT (CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) {div} 4000000)
+  SELECT ({grid_sql('o_totalprice', 2)} {div} 4000000)
            + ({hex4} % 7) AS bin,
          CASE WHEN o_totalprice > 200000.0 THEN 1 ELSE 0 END AS y
   FROM {tbl}),
@@ -1422,7 +1414,7 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = o.select(
         (
             F.expr(
-                "CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT)"
+                f"{grid_sql('o_totalprice', 2)}"
                 " div 4000000"
             )
             + md5_int(F.col("o_orderkey").cast("string"), 1, 4) % 7
@@ -1498,12 +1490,9 @@ coef AS MATERIALIZED (
   FROM d),
 g AS ({_LR_GRID_SQL.format(tbl="lineitem")}),
 phi AS (
-  SELECT CAST(FLOOR(abs(c.bq * (g.q - c.mq)) * 1000.0 + 0.5)
-              AS BIGINT) AS p1,
-         CAST(FLOOR(abs(c.bd * (g.dc - c.md)) * 1000.0 + 0.5)
-              AS BIGINT) AS p2,
-         CAST(FLOOR(abs(c.bt * (g.tc - c.mt)) * 1000.0 + 0.5)
-              AS BIGINT) AS p3
+  SELECT {grid_sql('abs(c.bq * (g.q - c.mq))', 3)} AS p1,
+         {grid_sql('abs(c.bd * (g.dc - c.md))', 3)} AS p2,
+         {grid_sql('abs(c.bt * (g.tc - c.mt))', 3)} AS p3
   FROM g, coef c),
 tot AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -1515,20 +1504,17 @@ SELECT * FROM (
   SELECT 'l_quantity' AS feature, n,
          s1 AS sum_absphi_milli,
          s1 // n AS mean_absphi_milli,
-         CAST(FLOOR(CAST(s1 AS DOUBLE)
-                    / CAST(s1 + s2 + s3 AS DOUBLE)
-                    * 1000000.0 + 0.5) AS BIGINT) AS share_micro
+         {grid_sql('''CAST(s1 AS DOUBLE)
+                    / CAST(s1 + s2 + s3 AS DOUBLE)''', 6)} AS share_micro
   FROM tot
   UNION ALL
   SELECT 'l_discount', n, s2, s2 // n,
-         CAST(FLOOR(CAST(s2 AS DOUBLE)
-                    / CAST(s1 + s2 + s3 AS DOUBLE)
-                    * 1000000.0 + 0.5) AS BIGINT) FROM tot
+         {grid_sql('''CAST(s2 AS DOUBLE)
+                    / CAST(s1 + s2 + s3 AS DOUBLE)''', 6)} FROM tot
   UNION ALL
   SELECT 'l_tax', n, s3, s3 // n,
-         CAST(FLOOR(CAST(s3 AS DOUBLE)
-                    / CAST(s1 + s2 + s3 AS DOUBLE)
-                    * 1000000.0 + 0.5) AS BIGINT) FROM tot
+         {grid_sql('''CAST(s3 AS DOUBLE)
+                    / CAST(s1 + s2 + s3 AS DOUBLE)''', 6)} FROM tot
 ) ORDER BY feature
 """
 
@@ -1564,12 +1550,9 @@ def ml_linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     g = li.select(
         F.col("l_quantity").cast("long").alias("q"),
-        F.floor(F.col("l_discount") * F.lit(100.0) + F.lit(0.5))
-        .cast("long").alias("dc"),
-        F.floor(F.col("l_tax") * F.lit(100.0) + F.lit(0.5))
-        .cast("long").alias("tc"),
-        F.floor(F.col("l_extendedprice") * F.lit(100.0) + F.lit(0.5))
-        .cast("long").alias("yc"),
+        grid("l_discount", 2).alias("dc"),
+        grid("l_tax", 2).alias("tc"),
+        grid("l_extendedprice", 2).alias("yc"),
     )
     sums = g.agg(
         F.count(F.lit(1)).cast("long").alias("sn"),
@@ -1600,12 +1583,9 @@ def ml_linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("dt / dn").alias("mt"),
     ).localCheckpoint(eager=True)
     phi = g.crossJoin(F.broadcast(coef)).select(
-        F.floor(F.abs(F.col("bq") * (F.col("q") - F.col("mq")))
-                * F.lit(1000.0) + F.lit(0.5)).cast("long").alias("p1"),
-        F.floor(F.abs(F.col("bd") * (F.col("dc") - F.col("md")))
-                * F.lit(1000.0) + F.lit(0.5)).cast("long").alias("p2"),
-        F.floor(F.abs(F.col("bt") * (F.col("tc") - F.col("mt")))
-                * F.lit(1000.0) + F.lit(0.5)).cast("long").alias("p3"),
+        grid(F.abs(F.col("bq") * (F.col("q") - F.col("mq"))), 3).alias("p1"),
+        grid(F.abs(F.col("bd") * (F.col("dc") - F.col("md"))), 3).alias("p2"),
+        grid(F.abs(F.col("bt") * (F.col("tc") - F.col("mt"))), 3).alias("p3"),
     )
     tot = phi.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -1623,9 +1603,7 @@ def ml_linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col(col).alias("sum_absphi_milli"),
             F.expr(f"{col} div n").alias("mean_absphi_milli"),
             F.expr(
-                f"CAST(FLOOR(CAST({col} AS DOUBLE)"
-                f" / CAST(s1 + s2 + s3 AS DOUBLE)"
-                f" * 1000000.0 + 0.5) AS BIGINT)"
+                grid_sql(f"CAST({col} AS DOUBLE) / CAST(s1 + s2 + s3 AS DOUBLE)", 6)
             ).alias("share_micro"),
         )
         out = row if out is None else out.unionAll(row)
@@ -1641,16 +1619,14 @@ _SKM_K = 10
     oracle=f"""
 WITH dims AS (
   SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-         CAST(FLOOR(CAST(unnest(embedding) AS DOUBLE) * 1000000.0 + 0.5)
-              AS BIGINT) AS g
+         {grid_sql('CAST(unnest(embedding) AS DOUBLE)', 6)} AS g
   FROM embeddings),
 ss AS (
   SELECT vec_id, CAST(SUM(g * g) AS BIGINT) AS ss
   FROM dims GROUP BY vec_id),
 nq AS (
   SELECT d.vec_id, d.i,
-         CAST(FLOOR(CAST(d.g AS DOUBLE) / SQRT(CAST(ss.ss AS DOUBLE))
-                    * 1000000.0 + 0.5) AS BIGINT) AS q
+         {grid_sql('CAST(d.g AS DOUBLE) / SQRT(CAST(ss.ss AS DOUBLE))', 6)} AS q
   FROM dims d JOIN ss USING (vec_id)),
 seeds AS (
   SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) AS INT) AS cluster,

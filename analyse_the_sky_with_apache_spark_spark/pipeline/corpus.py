@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import fan_out, load_table
-from ..functions.exact import md5_int, md5_int_sql
+from ..functions.exact import grid, grid_sql, md5_int, md5_int_sql
 from ..registry import register
 
 #: tokens per packed training sequence.
@@ -514,7 +514,7 @@ def corpus_quality_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "corpus_kl_divergence",
-    oracle="""
+    oracle=f"""
 WITH toks AS (
   SELECT source, unnest(string_split(text, ' ')) AS w FROM documents
 ),
@@ -524,11 +524,10 @@ cw AS (SELECT w, CAST(SUM(c) AS BIGINT) AS cc FROM sw GROUP BY w),
 ct AS (SELECT CAST(SUM(cc) AS BIGINT) AS ctot FROM cw),
 terms AS (
   SELECT sw.source,
-         CAST(FLOOR(
+         {grid_sql('''
            (CAST(sw.c AS DOUBLE) / st.tot)
            * ln((CAST(sw.c AS DOUBLE) / st.tot)
-                / (CAST(cw.cc AS DOUBLE) / ct.ctot))
-           * 1000000000000.0 + 0.5) AS BIGINT) AS term_g
+                / (CAST(cw.cc AS DOUBLE) / ct.ctot))''', 12)} AS term_g
   FROM sw JOIN st USING (source) JOIN cw USING (w) CROSS JOIN ct
 )
 SELECT source,
@@ -563,7 +562,7 @@ def corpus_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     ct = cw.agg(F.sum("cc").alias("ctot"))
     p = F.col("c").cast("double") / F.col("tot")
     q = F.col("cc").cast("double") / F.col("ctot")
-    term_g = F.floor(p * F.log(p / q) * F.lit(1e12) + F.lit(0.5)).cast("long")
+    term_g = grid(p * F.log(p / q), 12)
     return (
         sw.join(F.broadcast(st), "source")
         .join(cw, "w")
@@ -948,11 +947,11 @@ SELECT lang,
        CAST(COUNT(*) AS BIGINT) AS n_total,
        CAST(SUM(CASE WHEN u32 * {_IRS_CAP} < w * 4294967296
                      THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-       CAST(FLOOR(CAST(SUM(w) AS DOUBLE) / {_IRS_CAP} / COUNT(*)
-                  * 1000000.0 + 0.5) AS BIGINT) AS expected_micro,
-       CAST(FLOOR(CAST(SUM(CASE WHEN u32 * {_IRS_CAP} < w * 4294967296
-                               THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*)
-                  * 1000000.0 + 0.5) AS BIGINT) AS realized_micro
+       {grid_sql(f'CAST(SUM(w) AS DOUBLE) / {_IRS_CAP} / COUNT(*)', 6)}
+         AS expected_micro,
+       {grid_sql(f'''CAST(SUM(CASE WHEN u32 * {_IRS_CAP} < w * 4294967296
+                               THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*)''', 6)}
+                             AS realized_micro
 FROM weighted
 GROUP BY lang
 ORDER BY lang
@@ -986,22 +985,18 @@ def corpus_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_total"),
             F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("n_kept"),
-            F.floor(
+            grid(
                 F.sum("w").cast("double")
                 / F.lit(float(_IRS_CAP))
-                / F.count(F.lit(1))
-                * F.lit(1e6)
-                + F.lit(0.5)
+                / F.count(F.lit(1)),
+                6,
             )
-            .cast("long")
             .alias("expected_micro"),
-            F.floor(
+            grid(
                 F.sum(F.when(F.col("keep"), 1).otherwise(0)).cast("double")
-                / F.count(F.lit(1))
-                * F.lit(1e6)
-                + F.lit(0.5)
+                / F.count(F.lit(1)),
+                6,
             )
-            .cast("long")
             .alias("realized_micro"),
         )
         .orderBy("lang")
@@ -1276,7 +1271,7 @@ def text_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "corpus_filter_ablation",
-    oracle="""
+    oracle=f"""
 WITH flags AS (
   SELECT doc_id,
          (n_chars BETWEEN 150 AND 500) AS f_len,
@@ -1308,8 +1303,8 @@ SELECT filter_name,
        CAST(SUM(CASE WHEN NOT ok AND others_ok THEN 1 ELSE 0 END) AS BIGINT)
          AS n_unique_fail,
        CAST(SUM(CASE WHEN all_ok THEN 1 ELSE 0 END) AS BIGINT) AS n_pass_all,
-       CAST(FLOOR(CAST(SUM(CASE WHEN ok THEN 1 ELSE 0 END) AS DOUBLE)
-                  / COUNT(*) * 1000000.0 + 0.5) AS BIGINT) AS pass_rate_micro
+       {grid_sql('''CAST(SUM(CASE WHEN ok THEN 1 ELSE 0 END) AS DOUBLE)
+                  / COUNT(*)''', 6)} AS pass_rate_micro
 FROM u GROUP BY filter_name ORDER BY filter_name
 """,
 )
@@ -1363,13 +1358,11 @@ def corpus_filter_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(~F.col("ok") & F.col("others_ok"), 1).otherwise(0)
             ).alias("n_unique_fail"),
             F.sum(F.when(F.col("all_ok"), 1).otherwise(0)).alias("n_pass_all"),
-            F.floor(
+            grid(
                 F.sum(F.when(F.col("ok"), 1).otherwise(0)).cast("double")
-                / F.count(F.lit(1))
-                * F.lit(1e6)
-                + F.lit(0.5)
+                / F.count(F.lit(1)),
+                6,
             )
-            .cast("long")
             .alias("pass_rate_micro"),
         )
         .orderBy("filter_name")

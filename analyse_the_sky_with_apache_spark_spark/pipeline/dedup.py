@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import fan_out, load_table, session_checkpoint
-from ..functions.exact import md5_int_sql
+from ..functions.exact import grid_sql, md5_int_sql
 from ..registry import register
 
 
@@ -1726,8 +1726,7 @@ keep AS (
 k AS (SELECT k0.* FROM k0 JOIN keep USING (blk)),
 pairs AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         CAST(FLOOR(jaro_winkler_similarity(a.fkey, b.fkey)
-                    * 1000000.0 + 0.5) AS BIGINT) AS jw_micro
+         {grid_sql('jaro_winkler_similarity(a.fkey, b.fkey)', 6)} AS jw_micro
   FROM k a JOIN k b ON a.blk = b.blk AND a.doc_id < b.doc_id
 )
 SELECT doc_a, doc_b, jw_micro FROM pairs
@@ -1821,8 +1820,7 @@ reach AS (
 comp AS (SELECT id AS vec_id, MIN(r) AS component FROM reach GROUP BY id),
 dims AS (
   SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-         CAST(FLOOR(CAST(unnest(embedding) AS DOUBLE) * 1000000.0 + 0.5)
-              AS BIGINT) AS g
+         {grid_sql('CAST(unnest(embedding) AS DOUBLE)', 6)} AS g
   FROM embeddings),
 dl AS (
   SELECT d.vec_id, c.component, d.i, d.g
@@ -1881,7 +1879,7 @@ def dedup_semantic_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(
             F.expr(
                 "transform(embedding, x ->"
-                " CAST(FLOOR(CAST(x AS DOUBLE) * 1000000.0 + 0.5)"
+                f" CAST({grid_sql('CAST(x AS DOUBLE)', 6)}"
                 " AS BIGINT))"
             )
         ).alias("i", "g"),

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.exact import grid, grid_sql
 from ..registry import register
 
 
@@ -300,11 +301,11 @@ def emb_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "emb_dim_stats",
-    oracle="""
+    oracle=f"""
 SELECT i - 1 AS dim,
        COUNT(*) AS n,
-       CAST(SUM(CAST(FLOOR(CAST(embedding[i::INT] AS DOUBLE) * 1000000.0
-                           + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0
+       CAST(SUM({grid_sql('CAST(embedding[i::INT] AS DOUBLE)', 6)}) AS DOUBLE)
+         / 1000000.0
          AS dim_sum,
        MIN(embedding[i::INT]) AS dim_min,
        MAX(embedding[i::INT]) AS dim_max
@@ -330,9 +331,7 @@ def emb_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ex.groupBy(F.col("dim").cast("long").alias("dim")).agg(
         F.count(F.lit(1)).alias("n"),
         (
-            F.sum(
-                F.floor(F.col("v").cast("double") * 1000000.0 + F.lit(0.5))
-            ).cast("double")
+            F.sum(grid(F.col("v").cast("double"), 6)).cast("double")
             / 1000000.0
         ).alias("dim_sum"),
         F.min("v").alias("dim_min"),
@@ -342,19 +341,17 @@ def emb_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "emb_pca_covariance",
-    oracle="""
+    oracle=f"""
 WITH m1 AS (
   SELECT i - 1 AS d,
-         SUM(CAST(FLOOR(CAST(embedding[i::INT] AS DOUBLE) * 1000000.0 + 0.5)
-                  AS BIGINT)) AS s1,
+         SUM({grid_sql('CAST(embedding[i::INT] AS DOUBLE)', 6)}) AS s1,
          COUNT(*) AS n
   FROM embeddings, range(1, 65) t(i) GROUP BY i
 ),
 m2 AS (
   SELECT a.i - 1 AS di, b.i - 1 AS dj,
-         SUM(CAST(FLOOR(CAST(e.embedding[a.i::INT] AS DOUBLE)
-                        * CAST(e.embedding[b.i::INT] AS DOUBLE)
-                        * 100000000.0 + 0.5) AS BIGINT)) AS s2
+         SUM({grid_sql('''CAST(e.embedding[a.i::INT] AS DOUBLE)
+                        * CAST(e.embedding[b.i::INT] AS DOUBLE)''', 8)}) AS s2
   FROM embeddings e, range(1, 65) a(i), range(1, 65) b(i)
   WHERE a.i <= b.i
   GROUP BY 1, 2
@@ -395,12 +392,10 @@ def emb_pca_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("di").cast("long").alias("di"),
         F.col("dj").cast("long").alias("dj"),
     ).agg(
-        F.sum(
-            F.floor(F.col("va") * F.col("vb") * F.lit(1e8) + F.lit(0.5))
-        ).alias("s2")
+        F.sum(grid(F.col("va") * F.col("vb"), 8)).alias("s2")
     )
     m1 = ex.groupBy(F.col("d").cast("long").alias("d")).agg(
-        F.sum(F.floor(F.col("v") * F.lit(1e6) + F.lit(0.5))).alias("s1"),
+        F.sum(grid("v", 6)).alias("s1"),
         F.count(F.lit(1)).alias("n"),
     )
     ma = m1.select(
@@ -970,10 +965,9 @@ clip AS (
   FROM e JOIN s USING (doc_id) GROUP BY e.doc_id
 )
 SELECT s.doc_id, s.n_frames, s.ssq,
-       CAST(FLOOR({_GAIN_TARGET}.0
+       {grid_sql(f'''{_GAIN_TARGET}.0
                   * SQRT(CAST(s.n_frames AS DOUBLE)
-                         / CAST(s.ssq AS DOUBLE))
-                  * 1000000.0 + 0.5) AS BIGINT) AS gain_micro,
+                         / CAST(s.ssq AS DOUBLE))''', 6)} AS gain_micro,
        c.n_clipped,
        c.n_clipped * 100 <= s.n_frames AS gain_safe
 FROM s JOIN clip c USING (doc_id)
@@ -1046,14 +1040,14 @@ def mm_audio_gain_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.join(clip, "doc_id")
         .select(
             "doc_id", "n_frames", "ssq",
-            F.floor(
+            grid(
                 F.lit(float(_GAIN_TARGET))
                 * F.sqrt(
                     F.col("n_frames").cast("double")
                     / F.col("ssq").cast("double")
-                )
-                * F.lit(1e6) + F.lit(0.5)
-            ).cast("long").alias("gain_micro"),
+                ),
+                6,
+            ).alias("gain_micro"),
             "n_clipped",
             (F.col("n_clipped") * 100 <= F.col("n_frames"))
             .alias("gain_safe"),

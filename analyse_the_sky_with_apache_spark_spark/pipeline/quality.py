@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.exact import md5_int, md5_int_sql
+from ..functions.exact import grid, grid_sql, md5_int, md5_int_sql
 from ..registry import register
 
 #: profiled columns of ``orders`` and how min/max canonicalize to a
@@ -277,7 +277,7 @@ def dq_rules_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT COUNT(*) AS n_rows,
        CAST(SUM({md5_int_sql(
               "CAST(o_orderkey AS VARCHAR) || '|' || o_orderstatus || '|' || "
-              "CAST(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS VARCHAR)",
+              f"CAST({grid_sql('o_totalprice', 2)} AS VARCHAR)",
               1, 12)})
             % 4611686018427387904 AS BIGINT) AS content_checksum
 FROM orders
@@ -304,9 +304,7 @@ def table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "|",
         F.col("o_orderkey").cast("string"),
         F.col("o_orderstatus"),
-        F.floor(F.col("o_totalprice") * 100.0 + F.lit(0.5))
-        .cast("bigint")
-        .cast("string"),
+        grid("o_totalprice", 2).cast("string"),
     )
     h48 = md5_int(row_ser, 1, 12)
     return o.agg(
@@ -384,7 +382,7 @@ def dq_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "emb_drift_monitor",
-    oracle="""
+    oracle=f"""
 WITH ex AS (
   SELECT label, vec_id % 2 AS half, i - 1 AS dim,
          CAST(embedding[i::INT] AS DOUBLE) AS v
@@ -393,18 +391,18 @@ WITH ex AS (
 cent AS (
   SELECT label, dim,
          CAST(SUM(CASE WHEN half = 0 THEN
-                CAST(FLOOR(v * 1000000.0 + 0.5) AS BIGINT) ELSE 0 END)
+                {grid_sql('v', 6)} ELSE 0 END)
               AS DOUBLE) / 1000000.0
            / SUM(CASE WHEN half = 0 THEN 1 ELSE 0 END) AS ca,
          CAST(SUM(CASE WHEN half = 1 THEN
-                CAST(FLOOR(v * 1000000.0 + 0.5) AS BIGINT) ELSE 0 END)
+                {grid_sql('v', 6)} ELSE 0 END)
               AS DOUBLE) / 1000000.0
            / SUM(CASE WHEN half = 1 THEN 1 ELSE 0 END) AS cb
   FROM ex GROUP BY label, dim
 )
 SELECT label,
-       CAST(SUM(CAST(FLOOR((ca - cb) * (ca - cb) * 1000000000.0 + 0.5)
-                     AS BIGINT)) AS DOUBLE) / 1000000000.0 AS drift_sq
+       CAST(SUM({grid_sql('(ca - cb) * (ca - cb)', 9)}) AS DOUBLE) / 1000000000.0
+         AS drift_sq
 FROM cent GROUP BY label
 """,
 )
@@ -429,7 +427,7 @@ def emb_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") % 2).alias("half"),
         F.posexplode("embedding").alias("dim", "v"),
     )
-    micro = F.floor(F.col("v").cast("double") * F.lit(1e6) + F.lit(0.5))
+    micro = grid(F.col("v").cast("double"), 6)
     half0 = F.when(F.col("half") == 0, micro).otherwise(F.lit(0))
     half1 = F.when(F.col("half") == 1, micro).otherwise(F.lit(0))
     cnt0 = F.sum((F.col("half") == 0).cast("long"))
@@ -439,7 +437,7 @@ def emb_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum(half1).cast("double") / F.lit(1e6) / cnt1).alias("cb"),
     )
     diff_sq = (F.col("ca") - F.col("cb")) * (F.col("ca") - F.col("cb"))
-    nano = F.floor(diff_sq * F.lit(1e9) + F.lit(0.5))
+    nano = grid(diff_sq, 9)
     return cent.groupBy("label").agg(
         (F.sum(nano).cast("double") / F.lit(1e9)).alias("drift_sq")
     )
@@ -992,8 +990,8 @@ noise AS (
   FROM coin
 )
 SELECT event_type, n,
-       CAST(FLOOR(lap * 1000000.0 + 0.5) AS BIGINT) AS noise_micro,
-       CAST(n + FLOOR(lap * 1000000.0 + 0.5) / 1000000.0 AS DOUBLE)
+       {grid_sql('lap', 6)} AS noise_micro,
+       CAST(n + {grid_sql('lap', 6)} / 1000000.0 AS DOUBLE)
          AS n_noisy,
        CAST({_DP_EPSILON} AS DOUBLE) AS epsilon
 FROM noise
@@ -1029,7 +1027,7 @@ def privacy_dp_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         * F.when(u >= 0.5, F.lit(1.0)).otherwise(F.lit(-1.0))
         * F.log(F.lit(1.0) - F.lit(2.0) * F.abs(u - F.lit(0.5)))
     )
-    noise_micro = F.floor(lap * F.lit(1e6) + F.lit(0.5)).cast("long")
+    noise_micro = grid(lap, 6)
     return (
         cnt.select(
             "event_type",
@@ -1046,18 +1044,17 @@ def privacy_dp_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dq_reconciliation",
-    oracle="""
+    oracle=f"""
 WITH li AS (
   SELECT l_orderkey,
-         CAST(SUM(CAST(FLOOR(l_extendedprice * (1.0 - l_discount)
-                             * (1.0 + l_tax) * 100.0 + 0.5)
-                       AS BIGINT)) AS BIGINT) AS li_cents,
+         CAST(SUM({grid_sql('''l_extendedprice * (1.0 - l_discount)
+                             * (1.0 + l_tax)''', 2)}) AS BIGINT) AS li_cents,
          CAST(COUNT(*) AS BIGINT) AS n_lines
   FROM lineitem GROUP BY l_orderkey
 ),
 recon AS (
   SELECT o.o_orderkey,
-         CAST(FLOOR(o.o_totalprice * 100.0 + 0.5) AS BIGINT) AS o_cents,
+         {grid_sql('o.o_totalprice', 2)} AS o_cents,
          COALESCE(li.li_cents, 0) AS li_cents,
          COALESCE(li.n_lines, 0) AS n_lines
   FROM orders o LEFT JOIN li ON o.o_orderkey = li.l_orderkey
@@ -1101,22 +1098,19 @@ def dq_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_orderkey")
         .agg(
             F.sum(
-                F.floor(
+                grid(
                     F.col("l_extendedprice")
                     * (F.lit(1.0) - F.col("l_discount"))
-                    * (F.lit(1.0) + F.col("l_tax"))
-                    * F.lit(100.0)
-                    + F.lit(0.5)
-                ).cast("long")
+                    * (F.lit(1.0) + F.col("l_tax")),
+                    2,
+                )
             ).alias("li_cents"),
             F.count(F.lit(1)).alias("n_lines"),
         )
     )
     od = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
-        F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5))
-        .cast("long")
-        .alias("o_cents"),
+        grid("o_totalprice", 2).alias("o_cents"),
     )
     recon = od.join(
         li, od.o_orderkey == li.l_orderkey, "left"
@@ -1167,25 +1161,23 @@ def _dp_lap_duckdb(key_expr: str, tag: str, scale: float) -> str:
 WITH agg AS (
   SELECT event_type,
          CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(LEAST(CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT),
+         CAST(SUM(LEAST({grid_sql('value', 2)},
                         {_DPM_CAP_CENTS})) AS BIGINT) AS s
   FROM events GROUP BY event_type
 ),
 noised AS (
   SELECT event_type, n, s,
-         CAST(FLOOR({_dp_lap_duckdb("event_type", f":{_DPM_SEED}:s",
-                                    _DPM_CAP_CENTS / _DPM_EPS_SUM)}
-                    + 0.5) AS BIGINT) AS ns,
-         CAST(FLOOR({_dp_lap_duckdb("event_type", f":{_DPM_SEED}:c",
-                                    1.0 / _DPM_EPS_CNT)}
-                    + 0.5) AS BIGINT) AS nc
+         {grid_sql(f'''{_dp_lap_duckdb("event_type", f":{_DPM_SEED}:s",
+                                    _DPM_CAP_CENTS / _DPM_EPS_SUM)}''', 0)} AS ns,
+         {grid_sql(f'''{_dp_lap_duckdb("event_type", f":{_DPM_SEED}:c",
+                                    1.0 / _DPM_EPS_CNT)}''', 0)} AS nc
   FROM agg
 )
 SELECT event_type, n,
-       CAST(FLOOR(CAST(s AS DOUBLE) / n * 1000000.0 + 0.5) AS BIGINT)
+       {grid_sql('CAST(s AS DOUBLE) / n', 6)}
          AS true_mean_micro,
-       CAST(FLOOR(CAST(s + ns AS DOUBLE)
-                  / GREATEST(n + nc, 1) * 1000000.0 + 0.5) AS BIGINT)
+       {grid_sql('''CAST(s + ns AS DOUBLE)
+                  / GREATEST(n + nc, 1)''', 6)}
          AS dp_mean_micro,
        CAST({_DPM_EPS_SUM + _DPM_EPS_CNT} AS DOUBLE) AS epsilon
 FROM noised
@@ -1213,9 +1205,7 @@ def privacy_dp_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.sum(
             F.least(
-                F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)).cast(
-                    "long"
-                ),
+                grid("value", 2),
                 F.lit(_DPM_CAP_CENTS).cast("long"),
             )
         ).alias("s"),
@@ -1234,26 +1224,18 @@ def privacy_dp_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
             * F.log(F.lit(1.0) - F.lit(2.0) * F.abs(u - F.lit(0.5)))
         )
 
-    ns = F.floor(
-        _lap("s", _DPM_CAP_CENTS / _DPM_EPS_SUM) + F.lit(0.5)
-    ).cast("long")
-    nc = F.floor(_lap("c", 1.0 / _DPM_EPS_CNT) + F.lit(0.5)).cast("long")
+    ns = grid(_lap("s", _DPM_CAP_CENTS / _DPM_EPS_SUM), 0)
+    nc = grid(_lap("c", 1.0 / _DPM_EPS_CNT), 0)
     return (
         agg.select(
             "event_type",
             "n",
-            F.floor(
-                F.col("s").cast("double") / F.col("n") * F.lit(1e6) + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("true_mean_micro"),
-            F.floor(
+            grid(F.col("s").cast("double") / F.col("n"), 6).alias("true_mean_micro"),
+            grid(
                 (F.col("s") + ns).cast("double")
-                / F.greatest(F.col("n") + nc, F.lit(1).cast("long"))
-                * F.lit(1e6)
-                + F.lit(0.5)
+                / F.greatest(F.col("n") + nc, F.lit(1).cast("long")),
+                6,
             )
-            .cast("long")
             .alias("dp_mean_micro"),
             F.lit(float(_DPM_EPS_SUM + _DPM_EPS_CNT)).alias("epsilon"),
         )
@@ -1290,8 +1272,8 @@ noise AS (
   FROM coin
 )
 SELECT bucket, n,
-       CAST(FLOOR(lap * 1000000.0 + 0.5) AS BIGINT) AS noise_micro,
-       CAST(n + FLOOR(lap * 1000000.0 + 0.5) / 1000000.0 AS DOUBLE)
+       {grid_sql('lap', 6)} AS noise_micro,
+       CAST(n + {grid_sql('lap', 6)} / 1000000.0 AS DOUBLE)
          AS n_noisy,
        CAST({_DP_EPSILON} AS DOUBLE) AS epsilon
 FROM noise
@@ -1342,7 +1324,7 @@ def privacy_dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         * F.when(u >= 0.5, F.lit(1.0)).otherwise(F.lit(-1.0))
         * F.log(F.lit(1.0) - F.lit(2.0) * F.abs(u - F.lit(0.5)))
     )
-    noise_micro = F.floor(lap * F.lit(1e6) + F.lit(0.5)).cast("long")
+    noise_micro = grid(lap, 6)
     return (
         cnt.select(
             "bucket",
@@ -1385,8 +1367,7 @@ def _benford_sql(tbl: str, mat: str) -> str:
     vals = ", ".join(f"({d}, {p}e0)" for d, p in _BENFORD_P)
     return f"""
 WITH d AS (
-  SELECT CAST(substr(CAST(CAST(FLOOR(o_totalprice * 100.0 + 0.5)
-                               AS BIGINT) AS STRING), 1, 1)
+  SELECT CAST(substr(CAST({grid_sql('o_totalprice', 2)} AS STRING), 1, 1)
               AS BIGINT) AS digit
   FROM {tbl}
   WHERE o_totalprice > 0),
@@ -1433,7 +1414,7 @@ def dq_benford_firstdigit(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     d = o.filter(F.col("o_totalprice") > 0).select(
         F.expr(
-            "CAST(substr(CAST(CAST(FLOOR(o_totalprice * 100.0 + 0.5)"
+            f"CAST(substr(CAST(CAST({grid_sql('o_totalprice', 2)}"
             " AS BIGINT) AS STRING), 1, 1) AS BIGINT)"
         ).alias("digit")
     )
@@ -1629,12 +1610,10 @@ WITH resp AS (
 )
 SELECT event_type,
        CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(FLOOR(CAST(SUM(truth) AS DOUBLE) / COUNT(*) * 1000000.0 + 0.5)
-            AS BIGINT) AS true_frac_micro,
-       CAST(FLOOR(CAST(SUM(reported) AS DOUBLE) / COUNT(*) * 1000000.0 + 0.5)
-            AS BIGINT) AS reported_frac_micro,
-       CAST(FLOOR((CAST(SUM(reported) AS DOUBLE) / COUNT(*) - 0.25) / 0.5
-                  * 1000000.0 + 0.5) AS BIGINT) AS debiased_frac_micro
+       {grid_sql('CAST(SUM(truth) AS DOUBLE) / COUNT(*)', 6)} AS true_frac_micro,
+       {grid_sql('CAST(SUM(reported) AS DOUBLE) / COUNT(*)', 6)} AS reported_frac_micro,
+       {grid_sql('(CAST(SUM(reported) AS DOUBLE) / COUNT(*) - 0.25) / 0.5', 6)}
+         AS debiased_frac_micro
 FROM resp GROUP BY event_type ORDER BY event_type
 """,
 )
@@ -1669,21 +1648,9 @@ def privacy_rr_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
         resp.groupBy("event_type")
         .agg(
             n.alias("n"),
-            F.floor(F.sum("truth").cast("double") / n * F.lit(1e6) + F.lit(0.5))
-            .cast("long")
-            .alias("true_frac_micro"),
-            F.floor(
-                F.sum("reported").cast("double") / n * F.lit(1e6) + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("reported_frac_micro"),
-            F.floor(
-                (F.sum("reported").cast("double") / n - F.lit(0.25))
-                / F.lit(0.5)
-                * F.lit(1e6)
-                + F.lit(0.5)
-            )
-            .cast("long")
+            grid(F.sum("truth").cast("double") / n, 6).alias("true_frac_micro"),
+            grid(F.sum("reported").cast("double") / n, 6).alias("reported_frac_micro"),
+            grid((F.sum("reported").cast("double") / n - F.lit(0.25)) / F.lit(0.5), 6)
             .alias("debiased_frac_micro"),
         )
         .orderBy("event_type")
@@ -1700,7 +1667,7 @@ _AUDIT_CONFS = (7, 29)
     oracle=f"""
 WITH agg AS (
   SELECT l_returnflag || '|' || l_linestatus || '|'
-         || CAST(CAST(SUM(CAST(FLOOR(l_quantity * 100.0 + 0.5) AS BIGINT))
+         || CAST(CAST(SUM({grid_sql('l_quantity', 2)})
                  AS BIGINT) AS VARCHAR) AS rowstr
   FROM lineitem GROUP BY l_returnflag, l_linestatus
 ),
@@ -1741,10 +1708,7 @@ def audit_cross_run_determinism(spark: SparkSession, sf_dir: str) -> DataFrame:
         "|",
         F.col("l_returnflag"),
         F.col("l_linestatus"),
-        F.sum(
-            F.floor(F.col("l_quantity") * F.lit(100.0) + F.lit(0.5))
-            .cast("long")
-        ).cast("long").cast("string"),
+        F.sum(grid("l_quantity", 2)).cast("long").cast("string"),
     )
 
     def run_hash(n_parts: int) -> str:
@@ -1799,11 +1763,10 @@ coin AS (
 ),
 noise AS (
   SELECT user_id, n,
-         CAST(FLOOR(
+         {grid_sql(f'''
            -(2.0 * {_DPTK_K} / {_DPTK_EPSILON})
              * (CASE WHEN u >= 0.5 THEN 1.0 ELSE -1.0 END)
-             * ln(1.0 - 2.0 * abs(u - 0.5)) * 1000000.0 + 0.5
-         ) AS BIGINT) AS noise_micro
+             * ln(1.0 - 2.0 * abs(u - 0.5))''', 6)} AS noise_micro
   FROM coin
 ),
 ranked AS (
@@ -1855,8 +1818,7 @@ def privacy_dp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     noise = cnt.select(
         "user_id", "n",
-        F.floor(lap * F.lit(1e6) + F.lit(0.5)).cast("long")
-        .alias("noise_micro"),
+        grid(lap, 6).alias("noise_micro"),
     ).withColumn(
         "noisy_micro",
         F.col("n") * F.lit(1_000_000) + F.col("noise_micro"),

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.exact import grid, grid_sql
 from ..registry import register
 
 #: BM25 free parameters (the standard Robertson defaults).
@@ -51,11 +52,11 @@ df AS (
   WHERE word IN ('spark', 'scan', 'merge') GROUP BY word
 )
 SELECT doc_id,
-       CAST(SUM(CAST(FLOOR(
+       CAST(SUM({grid_sql(f'''
          ln(1.0 + (CAST(n_docs AS DOUBLE) - df + 0.5) / (df + 0.5))
          * (tf * ({_K1} + 1.0))
-         / (tf + {_K1} * (1.0 - {_B} + {_B} * dl / avgdl))
-         * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0 AS bm25
+         / (tf + {_K1} * (1.0 - {_B} + {_B} * dl / avgdl))''', 6)}) AS DOUBLE)
+       / 1000000.0 AS bm25
 FROM tf JOIN df USING (word) JOIN dl USING (doc_id) CROSS JOIN stats
 GROUP BY doc_id
 ORDER BY bm25 DESC, doc_id
@@ -105,7 +106,7 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
             * (F.lit(1.0 - _B) + F.lit(_B) * F.col("dl") / F.col("avgdl"))
         )
     )
-    micro = F.floor(term_score * F.lit(1e6) + F.lit(0.5))
+    micro = grid(term_score, 6)
     return (
         tf.join(F.broadcast(df), "word")
         .join(dl, "doc_id")
@@ -444,7 +445,7 @@ def join_set_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_perplexity",
-    oracle="""
+    oracle=f"""
 WITH toks AS (
   SELECT doc_id, string_split(text, ' ') AS t FROM documents
 ),
@@ -460,8 +461,7 @@ uni_c AS (SELECT w1, COUNT(*) AS c1 FROM big GROUP BY w1),
 vocab AS (SELECT COUNT(DISTINCT w) AS v FROM pos)
 SELECT d.doc_id,
        COUNT(*) AS n_bigrams,
-       CAST(SUM(CAST(FLOOR(
-         -ln((c12 + 1.0) / (c1 + v)) * 1000000.0 + 0.5) AS BIGINT))
+       CAST(SUM({grid_sql('-ln((c12 + 1.0) / (c1 + v))', 6)})
             AS DOUBLE) / 1000000.0 / COUNT(*) AS cross_entropy
 FROM big d
 JOIN bi_c  ON d.w1 = bi_c.w1 AND d.w2 = bi_c.w2
@@ -506,7 +506,7 @@ def text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     neg_ln_p = -F.log(
         (F.col("c12") + F.lit(1.0)) / (F.col("c1") + F.col("v"))
     )
-    micro = F.floor(neg_ln_p * F.lit(1e6) + F.lit(0.5))
+    micro = grid(neg_ln_p, 6)
     return (
         big.join(F.broadcast(bi_c), ["w1", "w2"])
         .join(F.broadcast(uni_c), "w1")
@@ -525,7 +525,7 @@ def text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_zipf_fit",
-    oracle="""
+    oracle=f"""
 WITH freq AS (
   SELECT w, COUNT(*) AS f FROM (
     SELECT unnest(string_split(text, ' ')) AS w FROM documents
@@ -535,8 +535,8 @@ ranked AS (
   SELECT ROW_NUMBER() OVER (ORDER BY f DESC, w) AS r, f FROM freq
 ),
 g AS (
-  SELECT CAST(FLOOR(ln(r) * 1000000.0 + 0.5) AS BIGINT) AS xm,
-         CAST(FLOOR(ln(f) * 1000000.0 + 0.5) AS BIGINT) AS ym
+  SELECT {grid_sql('ln(r)', 6)} AS xm,
+         {grid_sql('ln(f)', 6)} AS ym
   FROM ranked
 ),
 s AS (
@@ -582,8 +582,8 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "r", F.row_number().over(W.orderBy(F.col("f").desc(), "w"))
     )
     g = ranked.select(
-        F.floor(F.log("r") * F.lit(1e6) + F.lit(0.5)).alias("xm"),
-        F.floor(F.log("f") * F.lit(1e6) + F.lit(0.5)).alias("ym"),
+        grid(F.log("r"), 6).alias("xm"),
+        grid(F.log("f"), 6).alias("ym"),
     )
     s = g.agg(
         F.count(F.lit(1)).alias("n"),
@@ -633,19 +633,18 @@ df AS (
 ),
 bm25 AS (
   SELECT doc_id,
-         CAST(SUM(CAST(FLOOR(
+         CAST(SUM({grid_sql(f'''
            ln(1.0 + (CAST(n_docs AS DOUBLE) - df + 0.5) / (df + 0.5))
            * (tf * ({_K1} + 1.0))
-           / (tf + {_K1} * (1.0 - {_B} + {_B} * dl / avgdl))
-           * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS s_micro
+           / (tf + {_K1} * (1.0 - {_B} + {_B} * dl / avgdl))''', 6)}) AS BIGINT)
+         AS s_micro
   FROM tf JOIN df USING (word) JOIN dl USING (doc_id) CROSS JOIN stats
   GROUP BY doc_id
 ),
 tfidf AS (
   SELECT doc_id,
-         CAST(SUM(tf * CAST(FLOOR(
-           ln(CAST(n_docs AS DOUBLE) / df) * 1000000.0 + 0.5)
-           AS BIGINT)) AS BIGINT) AS s_micro
+         CAST(SUM(tf * {grid_sql('ln(CAST(n_docs AS DOUBLE) / df)', 6)}) AS BIGINT)
+           AS s_micro
   FROM tf JOIN df USING (word) CROSS JOIN stats
   GROUP BY doc_id
 ),
@@ -665,11 +664,10 @@ fused AS (
   SELECT COALESCE(ra.doc_id, rb.doc_id) AS doc_id,
          ra.rnk AS rank_bm25, rb.rnk AS rank_tfidf,
          CAST(COALESCE(
-                CAST(FLOOR(1000000000.0 / ({_RRF_K} + ra.rnk) + 0.5)
-                     AS BIGINT), 0)
+                {grid_sql(f'1000000000.0 / ({_RRF_K} + ra.rnk)', 0)}, 0)
               + COALESCE(
-                CAST(FLOOR(1000000000.0 / ({_RRF_K} + rb.rnk) + 0.5)
-                     AS BIGINT), 0) AS BIGINT) AS rrf_nano
+                {grid_sql(f'1000000000.0 / ({_RRF_K} + rb.rnk)', 0)}, 0) AS BIGINT)
+                  AS rrf_nano
   FROM ra FULL OUTER JOIN rb ON ra.doc_id = rb.doc_id
 )
 SELECT doc_id, rank_bm25, rank_tfidf, rrf_nano
@@ -720,7 +718,7 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bm25 = base.groupBy("doc_id").agg(
         F.sum(
-            F.floor(
+            grid(
                 idf_bm
                 * (F.col("tf") * F.lit(_K1 + 1.0))
                 / (
@@ -730,9 +728,9 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.lit(1.0 - _B)
                         + F.lit(_B) * F.col("dl") / F.col("avgdl")
                     )
-                )
-                * F.lit(1e6) + F.lit(0.5)
-            ).cast("long")
+                ),
+                6,
+            )
         ).cast("long").alias("s_micro")
     )
     tfidf = (
@@ -742,11 +740,7 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum(
                 F.col("tf")
-                * F.floor(
-                    F.log(
-                        F.col("n_docs").cast("double") / F.col("df")
-                    ) * F.lit(1e6) + F.lit(0.5)
-                ).cast("long")
+                * grid(F.log(F.col("n_docs").cast("double") / F.col("df")), 6)
             ).cast("long").alias("s_micro")
         )
     )
@@ -764,9 +758,7 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     rb = top_ranked(tfidf, "tfidf")
     term = (
         lambda c: F.coalesce(
-            F.floor(
-                F.lit(1e9) / (F.lit(_RRF_K) + F.col(c)) + F.lit(0.5)
-            ).cast("long"),
+            grid(F.lit(1e9) / (F.lit(_RRF_K) + F.col(c)), 0),
             F.lit(0).cast("long"),
         )
     )

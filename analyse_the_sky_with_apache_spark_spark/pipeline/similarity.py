@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.exact import grid, grid_sql
 from ..registry import register
 
 _TOP_K = 20
@@ -542,7 +543,7 @@ _EMB_OUTLIER_COS = 0.35
     oracle=f"""
 WITH q AS (
   SELECT vec_id, label, i,
-         CAST(FLOOR(embedding[i]::DOUBLE * 1000000.0 + 0.5) AS BIGINT) AS v
+         {grid_sql('embedding[i]::DOUBLE', 6)} AS v
   FROM embeddings, LATERAL unnest(generate_series(1, len(embedding))) t(i)
 ),
 cent AS (
@@ -593,10 +594,7 @@ def emb_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     to DECIMAL past that.
     """
     em = load_table(spark, sf_dir, "embeddings")
-    qv = F.expr(
-        "transform(embedding, v -> CAST(FLOOR(CAST(v AS DOUBLE)"
-        " * 1000000.0 + 0.5) AS BIGINT))"
-    )
+    qv = F.expr(f"transform(embedding, v -> {grid_sql('CAST(v AS DOUBLE)', 6)})")
     cent = (
         em.select("label", F.posexplode(qv).alias("i", "v"))
         .groupBy("label", "i")
@@ -719,7 +717,7 @@ def emb_bit_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: the greedy recurrence has no float in it at all.
 _MMR_POOL, _MMR_K = 50, 10
 _MMR_NUM, _MMR_DEN = 7, 3  # λ·s − (1−λ)·m  ≡  (7·s − 3·m) / 10
-_MMR_GRID = 10_000  # 1e4 keeps dot(item, Σ corpus) < 2^53 at every SF
+_MMR_S = 4  # the 1e-4 grid keeps dot(item, Σ corpus) < 2^53 at every SF
 _MMR_DIM = 64
 
 
@@ -728,14 +726,10 @@ def _mmr_oracle() -> str:
     integer grid, then one (selection, accumulated-set) CTE pair per
     rank — step k orders the remaining pool by 7·rel − 3·max-sim-to-
     selected with a vec_id tie-break and keeps exactly one row."""
-    grid = (
-        "CAST(FLOOR(CAST(x AS DOUBLE) * {g}.0 + 0.5) AS BIGINT)".format(
-            g=_MMR_GRID
-        )
-    )
+    gx = grid_sql("CAST(x AS DOUBLE)", _MMR_S)
     ctes = [
         f"""g AS MATERIALIZED (
-  SELECT vec_id, list_transform(embedding, x -> {grid}) AS e
+  SELECT vec_id, list_transform(embedding, x -> {gx}) AS e
   FROM embeddings)""",
         f"""q AS MATERIALIZED (
   SELECT i, SUM(e[i]) AS s FROM g, range(1, {_MMR_DIM + 1}) t(i)
@@ -815,8 +809,7 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.expr(
-            f"transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)"
-            f" * {_MMR_GRID}.0 + 0.5) AS BIGINT))"
+            f"transform(embedding, x -> {grid_sql('CAST(x AS DOUBLE)', _MMR_S)})"
         ).alias("e"),
     )
     q_rows = (
@@ -949,8 +942,7 @@ _MRL_K = 3
     oracle=f"""
 WITH dims AS (
   SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-         CAST(FLOOR(CAST(unnest(embedding) AS DOUBLE) * 1000000.0 + 0.5)
-              AS BIGINT) AS g
+         {grid_sql('CAST(unnest(embedding) AS DOUBLE)', 6)} AS g
   FROM embeddings
 ),
 pair AS (
@@ -1261,7 +1253,7 @@ _RR_MAX_ID = 5_000  # query batch cap: fixed size at every SF
 _RR_PREFIX = 16
 _RR_SHORTLIST = 10
 _RR_K = 3
-_RR_GRID = 1_000_000
+_RR_S = 6
 
 
 @register(
@@ -1269,8 +1261,7 @@ _RR_GRID = 1_000_000
     oracle=f"""
 WITH g AS (
   SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-         CAST(FLOOR(CAST(unnest(embedding) AS DOUBLE) * {_RR_GRID}.0 + 0.5)
-              AS BIGINT) AS c
+         {grid_sql('CAST(unnest(embedding) AS DOUBLE)', _RR_S)} AS c
   FROM embeddings
 ),
 s AS (
@@ -1320,19 +1311,19 @@ def sim_rerank_two_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical BIGINTs; ties break on cand_id.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    grid = emb.select(
+    gv = emb.select(
         "vec_id",
         F.transform(
             "embedding",
-            lambda x: F.floor(x.cast("double") * _RR_GRID + F.lit(0.5)).cast("long"),
+            lambda x: grid(x.cast("double"), _RR_S),
         ).alias("g"),
     )
-    q_pre = grid.filter(
+    q_pre = gv.filter(
         (F.col("vec_id") % _RR_STRIDE == 0) & (F.col("vec_id") < _RR_MAX_ID)
     ).select(
         F.col("vec_id").alias("q_id"), F.slice("g", 1, _RR_PREFIX).alias("q_pre")
     )
-    c_pre = grid.filter(F.col("vec_id") % _RR_STRIDE != 0).select(
+    c_pre = gv.filter(F.col("vec_id") % _RR_STRIDE != 0).select(
         F.col("vec_id").alias("cand_id"), F.slice("g", 1, _RR_PREFIX).alias("c_pre")
     )
     idot = lambda a, b: F.aggregate(  # noqa: E731
@@ -1346,13 +1337,13 @@ def sim_rerank_two_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("stage1_rnk") <= _RR_SHORTLIST)
         .select("q_id", "cand_id", "stage1_rnk")
     )
-    q_full = grid.filter(
+    q_full = gv.filter(
         (F.col("vec_id") % _RR_STRIDE == 0) & (F.col("vec_id") < _RR_MAX_ID)
     ).select(
         F.col("vec_id").alias("q_id"), F.col("g").alias("q_g")
     )
     rescored = (
-        shortlist.join(grid.withColumnRenamed("vec_id", "cand_id"), "cand_id")
+        shortlist.join(gv.withColumnRenamed("vec_id", "cand_id"), "cand_id")
         .join(F.broadcast(q_full), "q_id")
         .select(
             "q_id", "cand_id", idot("q_g", "g").alias("ce_score"), "stage1_rnk"
@@ -1377,8 +1368,7 @@ _HN_K = 5
     oracle=f"""
 WITH g AS (
   SELECT vec_id, label, generate_subscripts(embedding, 1) AS i,
-         CAST(FLOOR(CAST(unnest(embedding) AS DOUBLE) * {_RR_GRID}.0 + 0.5)
-              AS BIGINT) AS c
+         {grid_sql('CAST(unnest(embedding) AS DOUBLE)', _RR_S)} AS c
   FROM embeddings
 ),
 s AS (
@@ -1418,15 +1408,15 @@ def sim_hard_negative_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarse-quantizer neighborhood.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    grid = emb.select(
+    gv = emb.select(
         "vec_id",
         F.col("label").cast("int").alias("label"),
         F.transform(
             "embedding",
-            lambda x: F.floor(x.cast("double") * _RR_GRID + F.lit(0.5)).cast("long"),
+            lambda x: grid(x.cast("double"), _RR_S),
         ).alias("g"),
     )
-    q = grid.filter(
+    q = gv.filter(
         (F.col("vec_id") % _HN_STRIDE == 0) & (F.col("vec_id") < _HN_MAX_ID)
     ).select(
         F.col("vec_id").alias("q_id"),
@@ -1440,7 +1430,7 @@ def sim_hard_negative_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), "neg_id")
     return (
-        grid.crossJoin(F.broadcast(q))
+        gv.crossJoin(F.broadcast(q))
         .filter(F.col("label") != F.col("q_label"))
         .select(
             "q_id",
@@ -1480,7 +1470,7 @@ def _require_nonzero(ids: np.ndarray, n2: np.ndarray, side: str) -> None:
 WITH g AS (
   SELECT vec_id, label,
          list_transform(embedding,
-                        x -> FLOOR(CAST(x AS DOUBLE) * 1000000.0 + 0.5))
+                        x -> {grid_sql('CAST(x AS DOUBLE)', 6)})
            AS gvec
   FROM embeddings
 ),
@@ -1518,9 +1508,9 @@ pred AS (
 SELECT true_label, CAST(COUNT(*) AS BIGINT) AS n_queries,
        CAST(SUM(CASE WHEN pred_label = true_label THEN 1 ELSE 0 END)
             AS BIGINT) AS n_correct,
-       CAST(FLOOR(CAST(SUM(CASE WHEN pred_label = true_label
+       {grid_sql('''CAST(SUM(CASE WHEN pred_label = true_label
                                 THEN 1 ELSE 0 END) AS DOUBLE)
-                  / COUNT(*) * 1000000.0 + 0.5) AS BIGINT) AS acc_micro
+                  / COUNT(*)''', 6)} AS acc_micro
 FROM pred GROUP BY true_label
 ORDER BY true_label
 """,
@@ -1545,7 +1535,7 @@ def ml_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates on #queries-sized tables.
 
     Determinism (ADVICE r8): the cosine is built from MICRO-GRIDDED
-    integer components — g = floor(e*1e6+0.5) per dimension, dot and
+    integer components — g = grid(e, 6) per dimension, dot and
     squared norms exact integer sums (dim 64, |g| <= ~5.3e5, so every
     sum < 2^53 and is exact even in DuckDB's double-list arithmetic),
     then ONE division/sqrt over identical exact operands in both
@@ -1659,10 +1649,7 @@ def ml_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_queries"),
             correct.alias("n_correct"),
-            F.floor(
-                correct.cast("double") / F.count(F.lit(1)) * F.lit(1e6)
-                + F.lit(0.5)
-            ).cast("long").alias("acc_micro"),
+            grid(correct.cast("double") / F.count(F.lit(1)), 6).alias("acc_micro"),
         )
         .orderBy("true_label")
     )
@@ -1687,8 +1674,7 @@ fr AS (
 ),
 tr AS (
   SELECT vec_id, label, generate_subscripts(embedding, 1) AS i,
-         CAST(FLOOR(CAST(unnest(embedding) AS DOUBLE) * 1000000.0 + 0.5)
-              AS BIGINT) AS g
+         {grid_sql('CAST(unnest(embedding) AS DOUBLE)', 6)} AS g
   FROM embeddings WHERE vec_id % {_LC_STRIDE} <> 0
 ),
 cent AS (
@@ -1700,8 +1686,7 @@ cent AS (
 ),
 te AS (
   SELECT vec_id, label, generate_subscripts(embedding, 1) AS i,
-         CAST(FLOOR(CAST(unnest(embedding) AS DOUBLE) * 1000000.0 + 0.5)
-              AS BIGINT) AS g
+         {grid_sql('CAST(unnest(embedding) AS DOUBLE)', 6)} AS g
   FROM embeddings
   WHERE vec_id % {_LC_STRIDE} = 0 AND vec_id < {_LC_CAP}
 ),
@@ -1731,9 +1716,9 @@ SELECT p.f AS f_pct, tn.n_train,
        CAST(COUNT(*) AS BIGINT) AS n_test,
        CAST(SUM(CASE WHEN p.clabel = p.label THEN 1 ELSE 0 END)
             AS BIGINT) AS n_correct,
-       CAST(FLOOR(CAST(SUM(CASE WHEN p.clabel = p.label
+       {grid_sql('''CAST(SUM(CASE WHEN p.clabel = p.label
                                 THEN 1 ELSE 0 END) AS DOUBLE)
-                  / COUNT(*) * 1000000.0 + 0.5) AS BIGINT) AS acc_micro
+                  / COUNT(*)''', 6)} AS acc_micro
 FROM pred p JOIN tn ON p.f = tn.f
 GROUP BY p.f, tn.n_train
 ORDER BY p.f
@@ -1771,8 +1756,7 @@ def ml_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "vec_id", "label",
         (F.col("i0") + 1).alias("i"),
-        F.floor(F.col("v").cast("double") * F.lit(1e6) + F.lit(0.5))
-        .cast("long").alias("g"),
+        grid(F.col("v").cast("double"), 6).alias("g"),
     )
     tr = dims.where(F.col("vec_id") % _LC_STRIDE != 0)
     cent = (
@@ -1813,10 +1797,7 @@ def ml_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_test"),
             correct.alias("n_correct"),
-            F.floor(
-                correct.cast("double") / F.count(F.lit(1)) * F.lit(1e6)
-                + F.lit(0.5)
-            ).cast("long").alias("acc_micro"),
+            grid(correct.cast("double") / F.count(F.lit(1)), 6).alias("acc_micro"),
         )
         .orderBy("f_pct")
     )

@@ -22,13 +22,20 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import fan_out, load_table
-from ..functions.exact import md5_int, md5_int_sql, sky_radec, sky_radec_sql
+from ..functions.exact import (
+    grid,
+    grid_sql,
+    md5_int,
+    md5_int_sql,
+    sky_radec,
+    sky_radec_sql,
+)
 from ..registry import register
 
 
 @register(
     "ml_naive_bayes_train",
-    oracle="""
+    oracle=f"""
 WITH toks AS (
   SELECT lang, unnest(string_split(text, ' ')) AS w FROM documents
 ),
@@ -36,8 +43,8 @@ c AS (SELECT lang, w, COUNT(*) AS c FROM toks GROUP BY lang, w),
 t AS (SELECT lang, COUNT(*) AS tot FROM toks GROUP BY lang),
 v AS (SELECT COUNT(DISTINCT w) AS v FROM toks)
 SELECT c.lang, c.w AS token, c.c AS c,
-       CAST(CAST(FLOOR(ln((c.c + 1.0) / (t.tot + v.v)) * 1000000.0 + 0.5)
-                 AS BIGINT) AS DOUBLE) / 1000000.0 AS loglik
+       CAST({grid_sql('ln((c.c + 1.0) / (t.tot + v.v))', 6)} AS DOUBLE) / 1000000.0
+         AS loglik
 FROM c JOIN t USING (lang) CROSS JOIN v
 WHERE c.c >= 5
 """,
@@ -66,10 +73,8 @@ def ml_naive_bayes_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = toks.groupBy("lang").agg(F.count(F.lit(1)).alias("tot"))
     v = toks.agg(F.countDistinct("w").alias("v"))
     loglik = (
-        F.floor(
-            F.log((F.col("c") + F.lit(1.0)) / (F.col("tot") + F.col("v")))
-            * F.lit(1e6)
-            + F.lit(0.5)
+        grid(
+            F.log((F.col("c") + F.lit(1.0)) / (F.col("tot") + F.col("v"))), 6
         ).cast("double")
         / F.lit(1e6)
     )
@@ -88,19 +93,19 @@ _LR_B0, _LR_B1, _LR_B2 = -1.0, 0.02, 3.0
 
 @register(
     "ml_logreg_irls_stats",
-    oracle="""
+    oracle=f"""
 WITH r AS (
   SELECT CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y,
-         CAST(FLOOR(l_quantity * 100.0 + 0.5) AS BIGINT) AS x1g,
-         CAST(FLOOR(l_discount * 10000.0 + 0.5) AS BIGINT) AS x2g,
+         {grid_sql('l_quantity', 2)} AS x1g,
+         {grid_sql('l_discount', 4)} AS x2g,
          1.0 / (1.0 + exp(-(-1.0 + 0.02 * l_quantity + 3.0 * l_discount)))
            AS p
   FROM lineitem
 ),
 g AS (
   SELECT y, x1g, x2g,
-         CAST(FLOOR(p * (1.0 - p) * 10000.0 + 0.5) AS BIGINT) AS wg,
-         CAST(FLOOR((y - p) * 1000000.0 + 0.5) AS BIGINT) AS rg
+         {grid_sql('p * (1.0 - p)', 4)} AS wg,
+         {grid_sql('y - p', 6)} AS rg
   FROM r
 )
 SELECT COUNT(*) AS n,
@@ -145,16 +150,10 @@ def ml_logreg_irls_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
     g = li.select(
         y.alias("y"),
-        F.floor(F.col("l_quantity") * F.lit(100.0) + F.lit(0.5))
-        .cast("long")
-        .alias("x1g"),
-        F.floor(F.col("l_discount") * F.lit(1e4) + F.lit(0.5))
-        .cast("long")
-        .alias("x2g"),
-        F.floor(p * (F.lit(1.0) - p) * F.lit(1e4) + F.lit(0.5))
-        .cast("long")
-        .alias("wg"),
-        F.floor((y - p) * F.lit(1e6) + F.lit(0.5)).cast("long").alias("rg"),
+        grid("l_quantity", 2).alias("x1g"),
+        grid("l_discount", 4).alias("x2g"),
+        grid(p * (F.lit(1.0) - p), 4).alias("wg"),
+        grid(y - p, 6).alias("rg"),
     )
     return g.agg(
         F.count(F.lit(1)).alias("n"),
@@ -172,11 +171,11 @@ def ml_logreg_irls_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stat_corr_matrix",
-    oracle="""
+    oracle=f"""
 WITH g AS (
-  SELECT CAST(FLOOR(l_quantity * 100.0 + 0.5) AS BIGINT) AS q,
-         CAST(FLOOR(l_extendedprice + 0.5) AS BIGINT) AS p,
-         CAST(FLOOR(l_discount * 10000.0 + 0.5) AS BIGINT) AS d
+  SELECT {grid_sql('l_quantity', 2)} AS q,
+         {grid_sql('l_extendedprice', 0)} AS p,
+         {grid_sql('l_discount', 4)} AS d
   FROM lineitem
 ),
 s AS (
@@ -230,13 +229,9 @@ def stat_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load_table(spark, sf_dir, "lineitem")
     g = li.select(
-        F.floor(F.col("l_quantity") * F.lit(100.0) + F.lit(0.5))
-        .cast("long")
-        .alias("q"),
-        F.floor(F.col("l_extendedprice") + F.lit(0.5)).cast("long").alias("p"),
-        F.floor(F.col("l_discount") * F.lit(1e4) + F.lit(0.5))
-        .cast("long")
-        .alias("d"),
+        grid("l_quantity", 2).alias("q"),
+        grid("l_extendedprice", 0).alias("p"),
+        grid("l_discount", 4).alias("d"),
     )
     s = g.agg(
         F.count(F.lit(1)).alias("n"),
@@ -275,7 +270,7 @@ def stat_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stat_chi2_independence",
-    oracle="""
+    oracle=f"""
 WITH obs AS (
   SELECT l_returnflag AS rf, l_linestatus AS ls, COUNT(*) AS o
   FROM lineitem GROUP BY l_returnflag, l_linestatus
@@ -284,10 +279,10 @@ rt AS (SELECT rf, CAST(SUM(o) AS BIGINT) AS r FROM obs GROUP BY rf),
 ct AS (SELECT ls, CAST(SUM(o) AS BIGINT) AS c FROM obs GROUP BY ls),
 n AS (SELECT CAST(SUM(o) AS BIGINT) AS n FROM obs),
 cells AS (
-  SELECT CAST(FLOOR(
+  SELECT {grid_sql('''
            (o - CAST(r AS DOUBLE) * c / n)
            * (o - CAST(r AS DOUBLE) * c / n)
-           / (CAST(r AS DOUBLE) * c / n) * 1000000.0 + 0.5) AS BIGINT)
+           / (CAST(r AS DOUBLE) * c / n)''', 6)}
          AS chi_g
   FROM obs JOIN rt USING (rf) JOIN ct USING (ls) CROSS JOIN n
 ),
@@ -326,12 +321,7 @@ def stat_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(n))
         .select(
             "n",
-            F.floor(
-                (F.col("o") - e) * (F.col("o") - e) / e * F.lit(1e6)
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("chi_g"),
+            grid((F.col("o") - e) * (F.col("o") - e) / e, 6).alias("chi_g"),
         )
     )
     dims = obs.agg(
@@ -515,15 +505,15 @@ def stat_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stat_welch_ttest",
-    oracle="""
+    oracle=f"""
 WITH g AS (
   SELECT CASE WHEN o_orderpriority = '1-URGENT' THEN 'a' ELSE 'b' END
            AS grp,
          CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(CAST(FLOOR(o_totalprice + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('o_totalprice', 0)})
               AS BIGINT) AS s1,
-         CAST(SUM(CAST(FLOOR(o_totalprice + 0.5) AS BIGINT)
-                  * CAST(FLOOR(o_totalprice + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('o_totalprice', 0)}
+                  * {grid_sql('o_totalprice', 0)})
               AS BIGINT) AS s2
   FROM orders GROUP BY 1
 ),
@@ -561,7 +551,7 @@ def stat_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     sufficient stats per (experiment, arm) are a tiny keyed aggregate.
     """
     o = load_table(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") + F.lit(0.5)).cast("long")
+    cents = grid("o_totalprice", 0)
     g = o.groupBy(
         F.when(F.col("o_orderpriority") == "1-URGENT", "a")
         .otherwise("b")
@@ -681,9 +671,57 @@ def ml_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: decision-stump candidate thresholds are the feature's distinct
 #: values; the split test is `feature <= v`.
+def _gini_splits(cum: DataFrame, *keys: str) -> DataFrame:
+    """Every ``x <= threshold`` split of the cumulative class counts
+    ``(keys..., x, lp, lc, tp, tc)`` that leaves both children non-empty,
+    with its weighted Gini impurity on the 1e-12 grid:
+    ``(keys..., threshold, n_left, n_right, gini_g)``. Spark twin of
+    :func:`_gini_splits_sql`."""
+    lp, lc = F.col("lp").cast("double"), F.col("lc")
+    tp, tc = F.col("tp").cast("double"), F.col("tc")
+    rp = tp - lp
+    rc = (tc - lc).cast("double")
+    pl = lp / lc
+    pr = rp / rc
+    gini = (lc.cast("double") / tc) * (
+        F.lit(1.0) - pl * pl - (F.lit(1.0) - pl) * (F.lit(1.0) - pl)
+    ) + (rc / tc) * (
+        F.lit(1.0) - pr * pr - (F.lit(1.0) - pr) * (F.lit(1.0) - pr)
+    )
+    return cum.where(
+        (F.col("lc") > 0) & (F.col("tc") - F.col("lc") > 0)
+    ).select(
+        *keys,
+        F.col("x").alias("threshold"),
+        F.col("lc").alias("n_left"),
+        (F.col("tc") - F.col("lc")).alias("n_right"),
+        grid(gini, 12).alias("gini_g"),
+    )
+
+
+def _gini_splits_sql(keys: str) -> str:
+    """The ``splits`` CTE over ``cum``: the SQL twin of :func:`_gini_splits`;
+    ``keys`` is the select-list prefix of the key columns (``"b, "``)."""
+    return f"""splits AS (
+  SELECT {keys}x AS threshold, lc AS n_left, tc - lc AS n_right,
+         {grid_sql('''(
+           (CAST(lc AS DOUBLE) / tc)
+             * (1.0 - (CAST(lp AS DOUBLE) / lc) * (CAST(lp AS DOUBLE) / lc)
+                    - (1.0 - CAST(lp AS DOUBLE) / lc)
+                      * (1.0 - CAST(lp AS DOUBLE) / lc))
+           + (CAST(tc - lc AS DOUBLE) / tc)
+             * (1.0 - (CAST(tp - lp AS DOUBLE) / (tc - lc))
+                      * (CAST(tp - lp AS DOUBLE) / (tc - lc))
+                    - (1.0 - CAST(tp - lp AS DOUBLE) / (tc - lc))
+                      * (1.0 - CAST(tp - lp AS DOUBLE) / (tc - lc)))
+         )''', 12)} AS gini_g
+  FROM cum WHERE lc > 0 AND tc - lc > 0
+)"""
+
+
 @register(
     "ml_decision_stump",
-    oracle="""
+    oracle=f"""
 WITH s AS (
   SELECT l_quantity AS x,
          CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y
@@ -701,21 +739,7 @@ cum AS (
          CAST(SUM(c) OVER () AS BIGINT) AS tc
   FROM g
 ),
-splits AS (
-  SELECT x AS threshold, lc AS n_left, tc - lc AS n_right,
-         CAST(FLOOR((
-           (CAST(lc AS DOUBLE) / tc)
-             * (1.0 - (CAST(lp AS DOUBLE) / lc) * (CAST(lp AS DOUBLE) / lc)
-                    - (1.0 - CAST(lp AS DOUBLE) / lc)
-                      * (1.0 - CAST(lp AS DOUBLE) / lc))
-           + (CAST(tc - lc AS DOUBLE) / tc)
-             * (1.0 - (CAST(tp - lp AS DOUBLE) / (tc - lc))
-                      * (CAST(tp - lp AS DOUBLE) / (tc - lc))
-                    - (1.0 - CAST(tp - lp AS DOUBLE) / (tc - lc))
-                      * (1.0 - CAST(tp - lp AS DOUBLE) / (tc - lc)))
-         ) * 1000000000000.0 + 0.5) AS BIGINT) AS gini_g
-  FROM cum WHERE lc > 0 AND tc - lc > 0
-)
+{_gini_splits_sql("")}
 SELECT threshold, n_left, n_right,
        CAST(gini_g AS DOUBLE) / 1000000000000.0 AS gini
 FROM splits
@@ -757,26 +781,7 @@ def ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("p").over(wt).alias("tp"),
         F.sum("c").over(wt).alias("tc"),
     )
-    lp, lc = F.col("lp").cast("double"), F.col("lc")
-    tp, tc = F.col("tp").cast("double"), F.col("tc")
-    rp = tp - lp
-    rc = (tc - lc).cast("double")
-    pl = lp / lc
-    pr = rp / rc
-    gini = (lc.cast("double") / tc) * (
-        F.lit(1.0) - pl * pl - (F.lit(1.0) - pl) * (F.lit(1.0) - pl)
-    ) + (rc / tc) * (
-        F.lit(1.0) - pr * pr - (F.lit(1.0) - pr) * (F.lit(1.0) - pr)
-    )
-    gini_g = F.floor(gini * F.lit(1e12) + F.lit(0.5)).cast("long")
-    splits = cum.where(
-        (F.col("lc") > 0) & (F.col("tc") - F.col("lc") > 0)
-    ).select(
-        F.col("x").alias("threshold"),
-        F.col("lc").alias("n_left"),
-        (F.col("tc") - F.col("lc")).alias("n_right"),
-        gini_g.alias("gini_g"),
-    )
+    splits = _gini_splits(cum)
     return (
         splits.orderBy("gini_g", "threshold")
         .limit(1)
@@ -865,7 +870,7 @@ def ml_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ml_calibration_bins",
-    oracle="""
+    oracle=f"""
 WITH s AS (
   SELECT CAST(FLOOR(o_totalprice / 60000.0) AS BIGINT) AS bin,
          o_totalprice AS score,
@@ -873,7 +878,7 @@ WITH s AS (
   FROM orders
 )
 SELECT bin, CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(FLOOR(score + 0.5) AS BIGINT)) AS DOUBLE)
+       CAST(SUM({grid_sql('score', 0)}) AS DOUBLE)
          / COUNT(*) AS mean_score,
        CAST(SUM(y) AS DOUBLE) / COUNT(*) AS pos_rate
 FROM s GROUP BY bin
@@ -904,9 +909,7 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n"),
             (
-                F.sum(
-                    F.floor(F.col("score") + F.lit(0.5)).cast("long")
-                ).cast("double")
+                F.sum(grid("score", 0)).cast("double")
                 / F.count(F.lit(1))
             ).alias("mean_score"),
             (F.sum("y").cast("double") / F.count(F.lit(1))).alias(
@@ -917,6 +920,67 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ranked_neighbours(
+    spark: SparkSession, sf_dir: str, n_queries: int
+) -> DataFrame:
+    """Exact squared-Euclidean neighbour ranks of the embeddings with
+    ``vec_id < n_queries`` against every other embedding, on the 1e-6
+    component grid: ``(q, ql, m, ml, dist, rn)``, ``rn`` by ``(dist, m)``.
+    The queries are a bounded broadcast batch against the member scan.
+    Spark twin of :func:`_ranked_neighbours_sql`."""
+    e = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        "label",
+        F.transform(
+            "embedding",
+            lambda x: grid(x.cast("double"), 6),
+        ).alias("g"),
+    )
+    q = e.where(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("q"), F.col("label").alias("ql"),
+        F.col("g").alias("qg"),
+    )
+    m = e.select(
+        F.col("vec_id").alias("m"), F.col("label").alias("ml"),
+        F.col("g").alias("mg"),
+    )
+    dist = F.aggregate(
+        F.zip_with("qg", "mg", lambda a, b: (a - b) * (a - b)),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+    pair = (
+        F.broadcast(q)
+        .join(m, F.col("q") != F.col("m"))
+        .select("q", "ql", "m", "ml", dist.alias("dist"))
+    )
+    w = Window.partitionBy("q").orderBy("dist", "m")
+    return pair.withColumn("rn", F.row_number().over(w))
+
+
+def _ranked_neighbours_sql(n_queries: int) -> str:
+    """The ``dims``, ``pair`` and ``ranked`` CTEs: the SQL twin of
+    :func:`_ranked_neighbours`."""
+    return f"""dims AS (
+  SELECT vec_id, label, generate_subscripts(embedding, 1) AS i,
+         {grid_sql('CAST(unnest(embedding) AS DOUBLE)', 6)} AS g
+  FROM embeddings
+),
+pair AS (
+  SELECT a.vec_id AS q, MIN(a.label) AS ql, b.vec_id AS m,
+         MIN(b.label) AS ml,
+         CAST(SUM((a.g - b.g) * (a.g - b.g)) AS BIGINT) AS dist
+  FROM dims a JOIN dims b ON a.i = b.i AND a.vec_id != b.vec_id
+  WHERE a.vec_id < {n_queries}
+  GROUP BY a.vec_id, b.vec_id
+),
+ranked AS (
+  SELECT q, ql, ml,
+         ROW_NUMBER() OVER (PARTITION BY q ORDER BY dist, m) AS rn
+  FROM pair
+)"""
+
+
 #: NDCG evaluation: query batch size, cutoff, integer-grid components.
 _NDCG_QUERIES = 50
 _NDCG_K = 10
@@ -925,29 +989,11 @@ _NDCG_K = 10
 @register(
     "ml_ndcg_at_k",
     oracle=f"""
-WITH dims AS (
-  SELECT vec_id, label, generate_subscripts(embedding, 1) AS i,
-         CAST(FLOOR(CAST(unnest(embedding) AS DOUBLE) * 1000000.0 + 0.5)
-              AS BIGINT) AS g
-  FROM embeddings
-),
-pair AS (
-  SELECT a.vec_id AS q, MIN(a.label) AS ql, b.vec_id AS m,
-         MIN(b.label) AS ml,
-         CAST(SUM((a.g - b.g) * (a.g - b.g)) AS BIGINT) AS dist
-  FROM dims a JOIN dims b ON a.i = b.i AND a.vec_id != b.vec_id
-  WHERE a.vec_id < {_NDCG_QUERIES}
-  GROUP BY a.vec_id, b.vec_id
-),
-ranked AS (
-  SELECT q, ql, ml,
-         ROW_NUMBER() OVER (PARTITION BY q ORDER BY dist, m) AS rn
-  FROM pair
-),
+WITH {_ranked_neighbours_sql(_NDCG_QUERIES)},
 dcg AS (
   SELECT q,
          CAST(SUM(CASE WHEN ml = ql AND rn <= {_NDCG_K}
-           THEN CAST(FLOOR(1000000000.0 / ln(rn + 1.0) + 0.5) AS BIGINT)
+           THEN {grid_sql('1000000000.0 / ln(rn + 1.0)', 0)}
            ELSE 0 END) AS BIGINT) AS dcg_g,
          CAST(SUM(CASE WHEN ml = ql THEN 1 ELSE 0 END) AS BIGINT)
            AS n_rel,
@@ -957,7 +1003,7 @@ dcg AS (
 ),
 ideal AS (
   SELECT q, dcg_g, hits_at_k,
-         CAST(SUM(CAST(FLOOR(1000000000.0 / ln(r + 1.0) + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('1000000000.0 / ln(r + 1.0)', 0)})
               AS BIGINT) AS idcg_g
   FROM dcg
   JOIN (SELECT CAST(unnest(generate_series(1, {_NDCG_K})) AS BIGINT)
@@ -965,8 +1011,7 @@ ideal AS (
   GROUP BY q, dcg_g, hits_at_k
 )
 SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
-       CAST(SUM(CAST(FLOOR(CAST(dcg_g AS DOUBLE) / idcg_g * 1000000.0
-                           + 0.5) AS BIGINT)) AS DOUBLE)
+       CAST(SUM({grid_sql('CAST(dcg_g AS DOUBLE) / idcg_g', 6)}) AS DOUBLE)
          / 1000000.0 / COUNT(*) AS mean_ndcg,
        CAST(SUM(hits_at_k) AS DOUBLE) / ({_NDCG_K} * COUNT(*))
          AS precision_at_k
@@ -989,40 +1034,9 @@ def ml_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     a bounded broadcast batch against the member scan (serving shape);
     at 100 TB the member side is the index-pruned candidate list.
     """
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        F.transform(
-            "embedding",
-            lambda x: F.floor(
-                x.cast("double") * F.lit(1e6) + F.lit(0.5)
-            ).cast("long"),
-        ).alias("g"),
-    )
-    q = e.where(F.col("vec_id") < _NDCG_QUERIES).select(
-        F.col("vec_id").alias("q"), F.col("label").alias("ql"),
-        F.col("g").alias("qg"),
-    )
-    m = e.select(
-        F.col("vec_id").alias("m"), F.col("label").alias("ml"),
-        F.col("g").alias("mg"),
-    )
+    ranked = _ranked_neighbours(spark, sf_dir, _NDCG_QUERIES)
     zero = F.lit(0).cast("long")
-    dist = F.aggregate(
-        F.zip_with("qg", "mg", lambda a, b: (a - b) * (a - b)),
-        zero,
-        lambda acc, x: acc + x,
-    )
-    pair = (
-        F.broadcast(q)
-        .join(m, F.col("q") != F.col("m"))
-        .select("q", "ql", "m", "ml", dist.alias("dist"))
-    )
-    w = Window.partitionBy("q").orderBy("dist", "m")
-    ranked = pair.withColumn("rn", F.row_number().over(w))
-    disc = F.floor(
-        F.lit(1e9) / F.log(F.col("rn") + F.lit(1.0)) + F.lit(0.5)
-    ).cast("long")
+    disc = grid(F.lit(1e9) / F.log(F.col("rn") + F.lit(1.0)), 0)
     rel = F.col("ml") == F.col("ql")
     dcg = ranked.groupBy("q").agg(
         F.sum(
@@ -1039,17 +1053,10 @@ def ml_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("r") <= F.least(F.col("n_rel"), F.lit(_NDCG_K)))
         .groupBy("q", "dcg_g", "hits_at_k")
         .agg(
-            F.sum(
-                F.floor(
-                    F.lit(1e9) / F.log(F.col("r") + F.lit(1.0)) + F.lit(0.5)
-                ).cast("long")
-            ).alias("idcg_g")
+            F.sum(grid(F.lit(1e9) / F.log(F.col("r") + F.lit(1.0)), 0)).alias("idcg_g")
         )
     )
-    ndcg_g = F.floor(
-        F.col("dcg_g").cast("double") / F.col("idcg_g") * F.lit(1e6)
-        + F.lit(0.5)
-    ).cast("long")
+    ndcg_g = grid(F.col("dcg_g").cast("double") / F.col("idcg_g"), 6)
     return ideal.agg(
         F.count(F.lit(1)).alias("n_queries"),
         (
@@ -1064,9 +1071,9 @@ def ml_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "agg_gini_coefficient",
-    oracle="""
+    oracle=f"""
 WITH g AS (
-  SELECT CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents
+  SELECT {grid_sql('o_totalprice', 2)} AS cents
   FROM orders
 ),
 v AS (
@@ -1104,7 +1111,7 @@ def agg_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     The doubled weighted sum can exceed 2⁶³ on this column (cents ×
     count × rank), so BOTH engines accumulate it in wide exact
     integers — HUGEINT in the oracle, DECIMAL(38,0) in the engine
-    (the `dsum_wide` fallback of functions/exact.py) — and convert
+    (the decimal(38,s)-accumulator remedy of functions/exact.py) — and convert
     the identical exact integer to double once at the end (round-to-
     nearest of the same value in both engines). Each per-row product
     stays under 2⁶³, only the accumulator widens. One collapse + one
@@ -1112,9 +1119,7 @@ def agg_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load_table(spark, sf_dir, "orders")
     g = o.select(
-        F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5))
-        .cast("long")
-        .alias("cents")
+        grid("o_totalprice", 2).alias("cents")
     )
     v = g.groupBy("cents").agg(F.count(F.lit(1)).alias("c"))
     wb = Window.orderBy("cents").rowsBetween(
@@ -1145,14 +1150,14 @@ def agg_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stat_anova_oneway",
-    oracle="""
+    oracle=f"""
 WITH g AS (
   SELECT o_orderpriority AS grp,
          CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(CAST(FLOOR(o_totalprice + 0.5) AS BIGINT)) AS BIGINT)
+         CAST(SUM({grid_sql('o_totalprice', 0)}) AS BIGINT)
            AS s1,
-         CAST(SUM(CAST(FLOOR(o_totalprice + 0.5) AS BIGINT)
-                  * CAST(FLOOR(o_totalprice + 0.5) AS BIGINT)) AS BIGINT)
+         CAST(SUM({grid_sql('o_totalprice', 0)}
+                  * {grid_sql('o_totalprice', 0)}) AS BIGINT)
            AS s2
   FROM orders GROUP BY o_orderpriority
 ),
@@ -1161,8 +1166,7 @@ t AS (
          CAST(SUM(n) AS BIGINT) AS n_tot,
          CAST(SUM(s1) AS BIGINT) AS s1_tot,
          CAST(SUM(s2) AS BIGINT) AS s2_tot,
-         CAST(SUM(CAST(FLOOR(CAST(s1 AS DOUBLE) * s1 / n + 0.5)
-                       AS BIGINT)) AS BIGINT) AS group_sq_g
+         CAST(SUM({grid_sql('CAST(s1 AS DOUBLE) * s1 / n', 0)}) AS BIGINT) AS group_sq_g
   FROM g
 )
 SELECT k, n_tot,
@@ -1190,7 +1194,7 @@ def stat_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     one). The whole-unit truncation perturbs F by < 1e-13 relative.
     """
     o = load_table(spark, sf_dir, "orders")
-    units = F.floor(F.col("o_totalprice") + F.lit(0.5)).cast("long")
+    units = grid("o_totalprice", 0)
     g = o.groupBy(F.col("o_orderpriority").alias("grp")).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(units).alias("s1"),
@@ -1202,10 +1206,7 @@ def stat_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("s1").alias("s1_tot"),
         F.sum("s2").alias("s2_tot"),
         F.sum(
-            F.floor(
-                F.col("s1").cast("double") * F.col("s1") / F.col("n")
-                + F.lit(0.5)
-            ).cast("long")
+            grid(F.col("s1").cast("double") * F.col("s1") / F.col("n"), 0)
         ).alias("group_sq_g"),
     )
     group_sq = F.col("group_sq_g").cast("double")
@@ -1451,7 +1452,7 @@ def stat_ratio_delta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ml_psi_drift",
-    oracle="""
+    oracle=f"""
 WITH base AS (
   SELECT CAST(FLOOR(o_totalprice / 60000.0) AS BIGINT) AS bin,
          CASE WHEN CAST(o_orderdate AS DATE) < DATE '2022-01-01'
@@ -1472,12 +1473,11 @@ t AS (
   FROM c
 ),
 terms AS (
-  SELECT CAST(FLOOR(
+  SELECT {grid_sql('''
            ((CAST(n_cur AS DOUBLE) + 0.5) / (t_cur + 0.5)
             - (CAST(n_ref AS DOUBLE) + 0.5) / (t_ref + 0.5))
            * ln(((CAST(n_cur AS DOUBLE) + 0.5) / (t_cur + 0.5))
-                / ((CAST(n_ref AS DOUBLE) + 0.5) / (t_ref + 0.5)))
-           * 1000000000.0 + 0.5) AS BIGINT) AS term_g
+                / ((CAST(n_ref AS DOUBLE) + 0.5) / (t_ref + 0.5)))''', 9)} AS term_g
   FROM c CROSS JOIN t
 )
 SELECT CAST(COUNT(*) AS BIGINT) AS n_bins,
@@ -1531,9 +1531,7 @@ def ml_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     p_ref = (F.col("n_ref").cast("double") + F.lit(0.5)) / (
         F.col("t_ref") + F.lit(0.5)
     )
-    term_g = F.floor(
-        (p_cur - p_ref) * F.log(p_cur / p_ref) * F.lit(1e9) + F.lit(0.5)
-    ).cast("long")
+    term_g = grid((p_cur - p_ref) * F.log(p_cur / p_ref), 9)
     return (
         c.crossJoin(F.broadcast(t))
         .select(term_g.alias("term_g"))
@@ -1780,7 +1778,7 @@ _BOOT_KEY_DUCK = (
 
 _BOOT_ORACLE = f"""
 WITH u AS (
-  SELECT CAST(FLOOR(l_extendedprice * 100.0 + 0.5) AS BIGINT) AS cents,
+  SELECT {grid_sql('l_extendedprice', 2)} AS cents,
          s.s * 8 + i.i AS b,
          {md5_int_sql(f"{_BOOT_KEY_DUCK} || ':' || s.s::VARCHAR",
                       "4 * i.i::INT + 1", 4)} AS u16
@@ -1797,7 +1795,7 @@ means AS (
 ),
 tot AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(CAST(FLOOR(l_extendedprice * 100.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('l_extendedprice', 2)})
               AS BIGINT) AS sc
   FROM lineitem
 )
@@ -1853,7 +1851,7 @@ def stat_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_extendedprice",
     )
     cents = F.expr(
-        "CAST(FLOOR(l_extendedprice * 100.0 + 0.5) AS BIGINT)"
+        f"{grid_sql('l_extendedprice', 2)}"
     ).alias("cents")
     dgs = F.array(
         *[
@@ -2377,25 +2375,7 @@ _MRR_K = 10
 @register(
     "ml_mrr",
     oracle=f"""
-WITH dims AS (
-  SELECT vec_id, label, generate_subscripts(embedding, 1) AS i,
-         CAST(FLOOR(CAST(unnest(embedding) AS DOUBLE) * 1000000.0 + 0.5)
-              AS BIGINT) AS g
-  FROM embeddings
-),
-pair AS (
-  SELECT a.vec_id AS q, MIN(a.label) AS ql, b.vec_id AS m,
-         MIN(b.label) AS ml,
-         CAST(SUM((a.g - b.g) * (a.g - b.g)) AS BIGINT) AS dist
-  FROM dims a JOIN dims b ON a.i = b.i AND a.vec_id != b.vec_id
-  WHERE a.vec_id < {_MRR_QUERIES}
-  GROUP BY a.vec_id, b.vec_id
-),
-ranked AS (
-  SELECT q, ql, ml,
-         ROW_NUMBER() OVER (PARTITION BY q ORDER BY dist, m) AS rn
-  FROM pair
-),
+WITH {_ranked_neighbours_sql(_MRR_QUERIES)},
 firsts AS (
   SELECT q,
          MIN(CASE WHEN ml = ql AND rn <= {_MRR_K} THEN rn END) AS first_rel
@@ -2403,7 +2383,7 @@ firsts AS (
 )
 SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
        CAST(SUM(CASE WHEN first_rel IS NOT NULL
-             THEN CAST(FLOOR(1000000000.0 / first_rel + 0.5) AS BIGINT)
+             THEN {grid_sql('1000000000.0 / first_rel', 0)}
              ELSE 0 END) AS DOUBLE) / 1000000000.0 / COUNT(*) AS mrr,
        CAST(SUM(CASE WHEN first_rel IS NOT NULL THEN 1 ELSE 0 END)
             AS DOUBLE) / COUNT(*) AS hit_rate_at_k
@@ -2426,37 +2406,8 @@ def ml_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate list, and the groupBy(q) min() is a tiny hash aggregate
     over |queries|×|candidates| ranked rows.
     """
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        F.transform(
-            "embedding",
-            lambda x: F.floor(
-                x.cast("double") * F.lit(1e6) + F.lit(0.5)
-            ).cast("long"),
-        ).alias("g"),
-    )
-    q = e.where(F.col("vec_id") < _MRR_QUERIES).select(
-        F.col("vec_id").alias("q"), F.col("label").alias("ql"),
-        F.col("g").alias("qg"),
-    )
-    m = e.select(
-        F.col("vec_id").alias("m"), F.col("label").alias("ml"),
-        F.col("g").alias("mg"),
-    )
+    ranked = _ranked_neighbours(spark, sf_dir, _MRR_QUERIES)
     zero = F.lit(0).cast("long")
-    dist = F.aggregate(
-        F.zip_with("qg", "mg", lambda a, b: (a - b) * (a - b)),
-        zero,
-        lambda acc, x: acc + x,
-    )
-    pair = (
-        F.broadcast(q)
-        .join(m, F.col("q") != F.col("m"))
-        .select("q", "ql", "m", "ml", dist.alias("dist"))
-    )
-    w = Window.partitionBy("q").orderBy("dist", "m")
-    ranked = pair.withColumn("rn", F.row_number().over(w))
     rel_in_k = (F.col("ml") == F.col("ql")) & (F.col("rn") <= _MRR_K)
     firsts = ranked.groupBy("q").agg(
         F.min(F.when(rel_in_k, F.col("rn"))).alias("first_rel")
@@ -2464,9 +2415,7 @@ def ml_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     hit = F.col("first_rel").isNotNull()
     rr_g = F.when(
         hit,
-        F.floor(
-            F.lit(1e9) / F.col("first_rel") + F.lit(0.5)
-        ).cast("long"),
+        grid(F.lit(1e9) / F.col("first_rel"), 0),
     ).otherwise(zero)
     return firsts.agg(
         F.count(F.lit(1)).alias("n_queries"),
@@ -2573,7 +2522,7 @@ def stat_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stat_cramers_v",
-    oracle="""
+    oracle=f"""
 WITH obs AS (
   SELECT o_orderpriority AS sm, o_orderstatus AS rf,
          CAST(COUNT(*) AS BIGINT) AS o
@@ -2584,10 +2533,9 @@ ct AS (SELECT rf, CAST(SUM(o) AS BIGINT) AS c FROM obs GROUP BY rf),
 tot AS (SELECT CAST(SUM(o) AS BIGINT) AS n FROM obs),
 cells AS (
   SELECT n,
-         CAST(FLOOR((o - CAST(r AS DOUBLE) * c / n)
+         {grid_sql('''(o - CAST(r AS DOUBLE) * c / n)
                     * (o - CAST(r AS DOUBLE) * c / n)
-                    / (CAST(r AS DOUBLE) * c / n) * 1000000.0 + 0.5)
-              AS BIGINT) AS chi_g
+                    / (CAST(r AS DOUBLE) * c / n)''', 6)} AS chi_g
   FROM obs JOIN rt USING (sm) JOIN ct USING (rf) CROSS JOIN tot
 ),
 dims AS (
@@ -2630,12 +2578,7 @@ def stat_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(tot))
         .select(
             "n",
-            F.floor(
-                (F.col("o") - e) * (F.col("o") - e) / e * F.lit(1e6)
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("chi_g"),
+            grid((F.col("o") - e) * (F.col("o") - e) / e, 6).alias("chi_g"),
         )
     )
     dims = obs.agg(
@@ -2689,8 +2632,7 @@ WITH assigned AS (
 )
 SELECT CAST(fold AS INT) AS fold,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(FLOOR(CAST(SUM(n_chars) AS DOUBLE) / COUNT(*) * 1000000.0
-                  + 0.5) AS BIGINT) AS avg_chars_micro,
+       {grid_sql('CAST(SUM(n_chars) AS DOUBLE) / COUNT(*)', 6)} AS avg_chars_micro,
        CAST(MIN(doc_id) AS BIGINT) AS min_doc,
        CAST(MAX(doc_id) AS BIGINT) AS max_doc
 FROM assigned
@@ -2727,13 +2669,7 @@ def ml_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("fold")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.floor(
-                F.sum("n_chars").cast("double")
-                / F.count(F.lit(1))
-                * F.lit(1e6)
-                + F.lit(0.5)
-            )
-            .cast("long")
+            grid(F.sum("n_chars").cast("double") / F.count(F.lit(1)), 6)
             .alias("avg_chars_micro"),
             F.min("doc_id").alias("min_doc"),
             F.max("doc_id").alias("max_doc"),
@@ -2762,17 +2698,16 @@ def _perm_chunks_duckdb() -> str:
     oracle=f"""
 WITH base AS (
   SELECT o_orderkey,
-         CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents,
+         {grid_sql('o_totalprice', 2)} AS cents,
          o_orderpriority IN ('1-URGENT', '2-HIGH') AS grp_a
   FROM orders
 ),
 obs AS (
-  SELECT CAST(FLOOR((CAST(SUM(CASE WHEN grp_a THEN cents END) AS DOUBLE)
+  SELECT {grid_sql('''(CAST(SUM(CASE WHEN grp_a THEN cents END) AS DOUBLE)
                      / SUM(CASE WHEN grp_a THEN 1 ELSE 0 END)
                      - CAST(SUM(CASE WHEN NOT grp_a THEN cents END)
                             AS DOUBLE)
-                     / SUM(CASE WHEN NOT grp_a THEN 1 ELSE 0 END))
-                    * 10000.0 + 0.5) AS BIGINT) AS d0
+                     / SUM(CASE WHEN NOT grp_a THEN 1 ELSE 0 END))''', 4)} AS d0
   FROM base
 ),
 digs AS (
@@ -2789,12 +2724,11 @@ perms AS (
 ),
 perm_stats AS (
   SELECT p,
-         CAST(FLOOR((CAST(SUM(CASE WHEN coin THEN cents END) AS DOUBLE)
+         {grid_sql('''(CAST(SUM(CASE WHEN coin THEN cents END) AS DOUBLE)
                      / SUM(CASE WHEN coin THEN 1 ELSE 0 END)
                      - CAST(SUM(CASE WHEN NOT coin THEN cents END)
                             AS DOUBLE)
-                     / SUM(CASE WHEN NOT coin THEN 1 ELSE 0 END))
-                    * 10000.0 + 0.5) AS BIGINT) AS d
+                     / SUM(CASE WHEN NOT coin THEN 1 ELSE 0 END))''', 4)} AS d
   FROM perms GROUP BY p
 )
 SELECT CAST({_PERM_P} AS BIGINT) AS n_perms,
@@ -2830,23 +2764,18 @@ def stat_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     od = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
-        F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
+        grid("o_totalprice", 2).alias("cents"),
         F.col("o_orderpriority").isin("1-URGENT", "2-HIGH").alias("grp_a"),
     )
 
     def _mean_diff_grid(flag):
-        return F.floor(
-            (
-                F.sum(F.when(flag, F.col("cents"))).cast("double")
-                / F.sum(F.when(flag, 1).otherwise(0))
-                - F.sum(F.when(~flag, F.col("cents"))).cast("double")
-                / F.sum(F.when(~flag, 1).otherwise(0))
-            )
-            * F.lit(10000.0)
-            + F.lit(0.5)
-        ).cast("long")
+        return grid(
+            F.sum(F.when(flag, F.col("cents"))).cast("double")
+            / F.sum(F.when(flag, 1).otherwise(0))
+            - F.sum(F.when(~flag, F.col("cents"))).cast("double")
+            / F.sum(F.when(~flag, 1).otherwise(0)),
+            4,
+        )
 
     obs = od.agg(_mean_diff_grid(F.col("grp_a")).alias("d0"))
     chunk_cols = [
@@ -2912,10 +2841,10 @@ def stat_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stat_levene",
-    oracle="""
+    oracle=f"""
 WITH base AS (
   SELECT o_orderpriority AS grp,
-         CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents
+         {grid_sql('o_totalprice', 2)} AS cents
   FROM orders
 ),
 meds AS (
@@ -2941,11 +2870,11 @@ tot AS (
   FROM gs
 )
 SELECT k, n,
-       CAST(FLOOR((CAST(n AS DOUBLE) - k) / (k - 1)
+       CAST({grid_sql('''(CAST(n AS DOUBLE) - k) / (k - 1)
                   * (CAST(bsum AS DOUBLE)
                      - CAST(s AS DOUBLE) * s / n)
-                  / (CAST(q AS DOUBLE) - CAST(bsum AS DOUBLE))
-                  * 1000000.0 + 0.5) / 1000000.0 AS DOUBLE) AS f_stat,
+                  / (CAST(q AS DOUBLE) - CAST(bsum AS DOUBLE))''', 6)} / 1000000.0
+                AS DOUBLE) AS f_stat,
        (CAST(n AS DOUBLE) - k) / (k - 1)
          * (CAST(bsum AS DOUBLE) - CAST(s AS DOUBLE) * s / n)
          / (CAST(q AS DOUBLE) - CAST(bsum AS DOUBLE)) > 2.37 AS unequal_spread
@@ -2972,9 +2901,7 @@ def stat_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     base = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("grp"),
-        F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
+        grid("o_totalprice", 2).alias("cents"),
     )
     meds = base.groupBy("grp").agg(
         (F.expr("percentile(cents, 0.5D)") * 2.0).alias("m2")
@@ -3012,33 +2939,58 @@ def stat_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tot.select(
         "k",
         "n",
-        (F.floor(f_raw * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
+        (grid(f_raw, 6) / F.lit(1e6))
         .cast("double")
         .alias("f_stat"),
         (f_raw > F.lit(2.37)).alias("unequal_spread"),
     )
 
 
-#: ml_lift_curve: score bin width (cents) and decile count.
-_LIFT_BIN_CENTS = 1000
+#: Score bins shared by ml_lift_curve, ml_brier_decomposition,
+#: ml_threshold_sweep and ml_woe_iv: order price in bins of this many
+#: grid cents, the urgent/high-priority orders as the positives.
+_SCORE_BIN_CENTS = 1000
+
+
+def _score_bins(spark: SparkSession, sf_dir: str, pos: str) -> DataFrame:
+    """Per score bin, ``(bin, n, <pos>)``: the order count and the
+    positive count. Spark twin of :func:`_score_bins_sql`; ``floor`` of
+    the quotient mirrors DuckDB's ``//`` (the cents are positive here,
+    but floor keeps the two aligned if the measure ever goes signed)."""
+    scored = load_table(spark, sf_dir, "orders").select(
+        F.floor(grid("o_totalprice", 2) / F.lit(_SCORE_BIN_CENTS))
+        .cast("long").alias("bin"),
+        F.when(
+            F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1
+        ).otherwise(0).alias("pos"),
+    )
+    return scored.groupBy("bin").agg(
+        F.count(F.lit(1)).alias("n"), F.sum("pos").alias(pos)
+    )
+
+
+def _score_bins_sql(pos: str) -> str:
+    """The ``scored`` and ``bins`` CTEs: the SQL twin of :func:`_score_bins`."""
+    return f"""scored AS (
+  SELECT {grid_sql('o_totalprice', 2)} // {_SCORE_BIN_CENTS} AS bin,
+         CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+              THEN 1 ELSE 0 END AS pos
+  FROM orders
+),
+bins AS (
+  SELECT bin, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(pos) AS BIGINT) AS {pos}
+  FROM scored GROUP BY bin
+)"""
+
+
+#: ml_lift_curve: decile count.
 _LIFT_DECILES = 10
 
 
 @register(
     "ml_lift_curve",
     oracle=f"""
-WITH scored AS (
-  SELECT CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT)
-           // {_LIFT_BIN_CENTS} AS bin,
-         CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-              THEN 1 ELSE 0 END AS pos
-  FROM orders
-),
-bins AS (
-  SELECT bin, CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(pos) AS BIGINT) AS p
-  FROM scored GROUP BY bin
-),
+WITH {_score_bins_sql("p")},
 cum AS (
   SELECT bin, n, p,
          CAST(COALESCE(SUM(n) OVER (ORDER BY bin DESC
@@ -3068,10 +3020,9 @@ cum2 AS (
   FROM rolled
 )
 SELECT CAST(decile AS INT) AS decile, n, p, cn, cp,
-       CAST(FLOOR(CAST(cp AS DOUBLE) * tn
-                  / (CAST(cn AS DOUBLE) * tp) * 1000000.0 + 0.5)
-            AS BIGINT) AS lift_micro,
-       CAST(FLOOR(CAST(cp AS DOUBLE) / tp * 1000000.0 + 0.5) AS BIGINT)
+       {grid_sql('''CAST(cp AS DOUBLE) * tn
+                  / (CAST(cn AS DOUBLE) * tp)''', 6)} AS lift_micro,
+       {grid_sql('CAST(cp AS DOUBLE) / tp', 6)}
          AS gain_micro
 FROM cum2
 ORDER BY decile
@@ -3094,19 +3045,7 @@ def ml_lift_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries land between bins (quantization the curve inherits by
     design — at 50k bins the drift is <0.01 decile).
     """
-    od = load_table(spark, sf_dir, "orders")
-    scored = od.select(
-        F.expr(
-            f"cast(floor(o_totalprice * 100.0 + 0.5) as bigint)"
-            f" div {_LIFT_BIN_CENTS}"
-        ).alias("bin"),
-        F.when(
-            F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1
-        ).otherwise(0).alias("pos"),
-    )
-    bins = scored.groupBy("bin").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("pos").alias("p")
-    )
+    bins = _score_bins(spark, sf_dir, "p")
     wdesc = (
         Window.orderBy(F.col("bin").desc())
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -3157,21 +3096,41 @@ def ml_lift_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p",
         "cn",
         "cp",
-        F.floor(
+        grid(
             F.col("cp").cast("double")
             * F.col("tn")
-            / (F.col("cn").cast("double") * F.col("tp"))
-            * F.lit(1e6)
-            + F.lit(0.5)
+            / (F.col("cn").cast("double") * F.col("tp")),
+            6,
         )
-        .cast("long")
         .alias("lift_micro"),
-        F.floor(
-            F.col("cp").cast("double") / F.col("tp") * F.lit(1e6) + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("gain_micro"),
+        grid(F.col("cp").cast("double") / F.col("tp"), 6).alias("gain_micro"),
     ).orderBy("decile")
+
+
+def _user_times(ev: DataFrame) -> DataFrame:
+    """Per user, the first and last event and the first purchase, in
+    epoch micros: ``(user_id, first_us, last_us, conv_us)`` (``conv_us``
+    null for a user who never purchased). Spark twin of
+    :func:`_user_times_sql`."""
+    us = F.unix_micros(F.col("ts"))
+    return ev.groupBy("user_id").agg(
+        F.min(us).alias("first_us"),
+        F.max(us).alias("last_us"),
+        F.min(F.when(F.col("event_type") == "purchase", us))
+        .alias("conv_us"),
+    )
+
+
+def _user_times_sql(tbl: str, epoch_fn: str) -> str:
+    """Body of the ``u`` CTE: the SQL twin of :func:`_user_times`, with the
+    engine's epoch-micros function."""
+    return f"""
+  SELECT user_id,
+         MIN({epoch_fn}(ts)) AS first_us,
+         MAX({epoch_fn}(ts)) AS last_us,
+         MIN(CASE WHEN event_type = 'purchase' THEN {epoch_fn}(ts) END)
+           AS conv_us
+  FROM {tbl} GROUP BY user_id"""
 
 
 def _kaplan_meier_sql(
@@ -3189,13 +3148,7 @@ def _kaplan_meier_sql(
     ``unnest(generate_series(...))``)."""
     day_us = 86400 * 1_000_000
     return f"""
-WITH RECURSIVE u AS {mat} (
-  SELECT user_id,
-         MIN({epoch_fn}(ts)) AS first_us,
-         MAX({epoch_fn}(ts)) AS last_us,
-         MIN(CASE WHEN event_type = 'purchase' THEN {epoch_fn}(ts) END)
-           AS conv_us
-  FROM {tbl} GROUP BY user_id),
+WITH RECURSIVE u AS {mat} ({_user_times_sql(tbl, epoch_fn)}),
 cohort AS {mat} (
   SELECT user_id,
          (COALESCE(conv_us, last_us) - first_us) {div} {day_us} AS dur,
@@ -3272,13 +3225,7 @@ def ml_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     day_us = 86400 * 1_000_000
     ev = load_table(spark, sf_dir, "events")
-    us = F.unix_micros(F.col("ts"))
-    u = ev.groupBy("user_id").agg(
-        F.min(us).alias("first_us"),
-        F.max(us).alias("last_us"),
-        F.min(F.when(F.col("event_type") == "purchase", us))
-        .alias("conv_us"),
-    )
+    u = _user_times(ev)
     cohort = u.select(
         F.expr(
             f"(coalesce(conv_us, last_us) - first_us) div {day_us}"
@@ -3337,13 +3284,7 @@ def _logrank_sql(tbl: str, epoch_fn: str, div: str, mat: str) -> str:
     them."""
     day_us = 86400 * 1_000_000
     return f"""
-WITH u AS {mat} (
-  SELECT user_id,
-         MIN({epoch_fn}(ts)) AS first_us,
-         MAX({epoch_fn}(ts)) AS last_us,
-         MIN(CASE WHEN event_type = 'purchase' THEN {epoch_fn}(ts) END)
-           AS conv_us
-  FROM {tbl} GROUP BY user_id),
+WITH u AS {mat} ({_user_times_sql(tbl, epoch_fn)}),
 ft AS {mat} (
   SELECT user_id, event_type AS first_type FROM (
     SELECT user_id, event_type,
@@ -3410,13 +3351,7 @@ def _logrank_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     `stat_logrank_test` chained truncating-division grid ladder."""
     day_us = 86400 * 1_000_000
     ev = load_table(spark, sf_dir, "events")
-    us = F.unix_micros(F.col("ts"))
-    u = ev.groupBy("user_id").agg(
-        F.min(us).alias("first_us"),
-        F.max(us).alias("last_us"),
-        F.min(F.when(F.col("event_type") == "purchase", us))
-        .alias("conv_us"),
-    )
+    u = _user_times(ev)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ft = (
         ev.select(
@@ -3624,7 +3559,7 @@ def _esd_sql(tbl: str, epoch_fn: str, div: str, mat: str) -> str:
         f"""
 WITH d0 AS {mat} (
   SELECT user_id,
-         CAST(SUM(CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('value', 2)})
               AS BIGINT) AS x
   FROM {tbl} GROUP BY user_id)"""
     ]
@@ -3687,10 +3622,7 @@ def anomaly_esd_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     cur = ev.groupBy("user_id").agg(
-        F.sum(
-            F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
-            .cast("long")
-        ).cast("long").alias("x")
+        F.sum(grid("value", 2)).cast("long").alias("x")
     ).localCheckpoint(eager=True)
     rounds = []
     for r in range(1, _ESD_ROUNDS + 1):
@@ -3770,8 +3702,7 @@ SELECT a.split,
             AS BIGINT) AS n_leaked_customers,
        CAST(SUM(CASE WHEN a.o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END)
             AS BIGINT) AS n_urgent,
-       CAST(FLOOR(CAST(COUNT(*) AS DOUBLE) / MIN(tot.n_total) * 1000000.0
-                  + 0.5) AS BIGINT) AS frac_micro
+       {grid_sql('CAST(COUNT(*) AS DOUBLE) / MIN(tot.n_total)', 6)} AS frac_micro
 FROM a JOIN cust c ON c.o_custkey = a.o_custkey CROSS JOIN tot
 GROUP BY a.split
 ORDER BY a.split
@@ -3829,13 +3760,7 @@ def ml_train_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0)
             ).alias("n_urgent"),
-            F.floor(
-                F.count(F.lit(1)).cast("double")
-                / F.min("n_total")
-                * F.lit(1e6)
-                + F.lit(0.5)
-            )
-            .cast("long")
+            grid(F.count(F.lit(1)).cast("double") / F.min("n_total"), 6)
             .alias("frac_micro"),
         )
         .orderBy("split")
@@ -3844,7 +3769,7 @@ def ml_train_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stat_mutual_information",
-    oracle="""
+    oracle=f"""
 WITH cells AS (
   SELECT o_orderpriority AS prio, o_orderstatus AS status,
          CAST(COUNT(*) AS BIGINT) AS nxy
@@ -3858,14 +3783,14 @@ m AS (
   FROM cells
 )
 SELECT prio, status, nxy,
-       CAST(FLOOR(LN(CAST(nxy * n AS DOUBLE) / CAST(nx * ny AS DOUBLE))
-                  * 1000000.0 + 0.5) AS BIGINT) AS pmi_micro,
-       CAST(FLOOR(CAST(nxy AS DOUBLE) / n
-                  * LN(CAST(nxy * n AS DOUBLE) / CAST(nx * ny AS DOUBLE))
-                  * 1000000000.0 + 0.5) AS BIGINT) AS contrib_nano,
-       CAST(SUM(CAST(FLOOR(CAST(nxy AS DOUBLE) / n
-                  * LN(CAST(nxy * n AS DOUBLE) / CAST(nx * ny AS DOUBLE))
-                  * 1000000000.0 + 0.5) AS BIGINT)) OVER () AS BIGINT)
+       {grid_sql('LN(CAST(nxy * n AS DOUBLE) / CAST(nx * ny AS DOUBLE))', 6)}
+         AS pmi_micro,
+       {grid_sql('''CAST(nxy AS DOUBLE) / n
+                  * LN(CAST(nxy * n AS DOUBLE) / CAST(nx * ny AS DOUBLE))''', 9)}
+                AS contrib_nano,
+       CAST(SUM({grid_sql('''CAST(nxy AS DOUBLE) / n
+                  * LN(CAST(nxy * n AS DOUBLE) / CAST(nx * ny AS DOUBLE))''', 9)})
+                OVER () AS BIGINT)
          AS mi_nano
 FROM m
 ORDER BY prio, status
@@ -3905,18 +3830,13 @@ def stat_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("nxy") * F.col("n")).cast("double")
         / (F.col("nx") * F.col("ny")).cast("double")
     )
-    contrib = F.floor(
-        F.col("nxy").cast("double") / F.col("n") * ln_term * F.lit(1e9)
-        + F.lit(0.5)
-    ).cast("long")
+    contrib = grid(F.col("nxy").cast("double") / F.col("n") * ln_term, 9)
     return (
         m.select(
             "prio",
             "status",
             "nxy",
-            F.floor(ln_term * F.lit(1e6) + F.lit(0.5))
-            .cast("long")
-            .alias("pmi_micro"),
+            grid(ln_term, 6).alias("pmi_micro"),
             contrib.alias("contrib_nano"),
         )
         .withColumn(
@@ -3956,21 +3876,7 @@ cum AS (
          CAST(SUM(c) OVER (PARTITION BY b) AS BIGINT) AS tc
   FROM g
 ),
-splits AS (
-  SELECT b, x AS threshold, lc AS n_left, tc - lc AS n_right,
-         CAST(FLOOR((
-           (CAST(lc AS DOUBLE) / tc)
-             * (1.0 - (CAST(lp AS DOUBLE) / lc) * (CAST(lp AS DOUBLE) / lc)
-                    - (1.0 - CAST(lp AS DOUBLE) / lc)
-                      * (1.0 - CAST(lp AS DOUBLE) / lc))
-           + (CAST(tc - lc AS DOUBLE) / tc)
-             * (1.0 - (CAST(tp - lp AS DOUBLE) / (tc - lc))
-                      * (CAST(tp - lp AS DOUBLE) / (tc - lc))
-                    - (1.0 - CAST(tp - lp AS DOUBLE) / (tc - lc))
-                      * (1.0 - CAST(tp - lp AS DOUBLE) / (tc - lc)))
-         ) * 1000000000000.0 + 0.5) AS BIGINT) AS gini_g
-  FROM cum WHERE lc > 0 AND tc - lc > 0
-),
+{_gini_splits_sql("b, ")},
 best AS (
   SELECT b, threshold, n_left, n_right, gini_g,
          ROW_NUMBER() OVER (PARTITION BY b ORDER BY gini_g, threshold) AS rn
@@ -4052,27 +3958,7 @@ def ml_bagged_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("p").over(wt).alias("tp"),
         F.sum("c").over(wt).alias("tc"),
     )
-    lp, lc = F.col("lp").cast("double"), F.col("lc")
-    tp, tc = F.col("tp").cast("double"), F.col("tc")
-    rp = tp - lp
-    rc = (tc - lc).cast("double")
-    pl = lp / lc
-    pr = rp / rc
-    gini = (lc.cast("double") / tc) * (
-        F.lit(1.0) - pl * pl - (F.lit(1.0) - pl) * (F.lit(1.0) - pl)
-    ) + (rc / tc) * (
-        F.lit(1.0) - pr * pr - (F.lit(1.0) - pr) * (F.lit(1.0) - pr)
-    )
-    gini_g = F.floor(gini * F.lit(1e12) + F.lit(0.5)).cast("long")
-    splits = cum.where(
-        (F.col("lc") > 0) & (F.col("tc") - F.col("lc") > 0)
-    ).select(
-        "b",
-        F.col("x").alias("threshold"),
-        F.col("lc").alias("n_left"),
-        (F.col("tc") - F.col("lc")).alias("n_right"),
-        gini_g.alias("gini_g"),
-    )
+    splits = _gini_splits(cum, "b")
     wb = Window.partitionBy("b").orderBy("gini_g", "threshold")
     return (
         splits.withColumn("rn", F.row_number().over(wb))
@@ -4134,7 +4020,7 @@ def _segtrend_sql(table: str, epoch_fn: str, intdiv: str) -> str:
     return f"""
 WITH daily AS (
   SELECT {epoch_fn}(date_trunc('day', ts)) {intdiv} 86400000000 AS day,
-         {intdiv.join(["SUM(CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT))", "100"])}
+         {intdiv.join([f"SUM({grid_sql('value', 2)})", "100"])}
            AS y
   FROM {table} GROUP BY 1
 ),
@@ -4169,16 +4055,16 @@ cand AS (
 ),
 best AS (
   SELECT *, ROW_NUMBER() OVER (
-      ORDER BY CAST(FLOOR(sse_seg * 1000000.0 + 0.5) AS BIGINT), knot_day
+      ORDER BY {grid_sql('sse_seg', 6)}, knot_day
     ) AS pick
   FROM cand
 )
 SELECT CAST(knot_day AS BIGINT) AS knot_day,
        CAST(nn AS BIGINT) AS n_days,
-       CAST(FLOOR(slope_l * 1000000.0 + 0.5) AS BIGINT) AS slope_l_micro,
-       CAST(FLOOR(slope_r * 1000000.0 + 0.5) AS BIGINT) AS slope_r_micro,
-       CAST(FLOOR(sse_seg * 1000000.0 + 0.5) AS BIGINT) AS sse_seg_micro,
-       CAST(FLOOR(sse_line * 1000000.0 + 0.5) AS BIGINT) AS sse_line_micro
+       {grid_sql('slope_l', 6)} AS slope_l_micro,
+       {grid_sql('slope_r', 6)} AS slope_r_micro,
+       {grid_sql('sse_seg', 6)} AS sse_seg_micro,
+       {grid_sql('sse_line', 6)} AS sse_line_micro
 FROM best WHERE pick = 1
 """
 
@@ -4218,7 +4104,7 @@ def ts_segmented_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("day")
     ).agg(
         F.expr(
-            "SUM(CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT)) div 100"
+            f"SUM({grid_sql('value', 2)}) div 100"
         ).alias("y")
     )
     idx = daily.select(
@@ -4274,7 +4160,7 @@ def ts_segmented_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(
             Window.orderBy(
                 F.expr(
-                    "CAST(FLOOR(sse_seg * 1000000.0 + 0.5) AS BIGINT)"
+                    f"{grid_sql('sse_seg', 6)}"
                 ),
                 "knot_day",
             )
@@ -4283,13 +4169,13 @@ def ts_segmented_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return best.filter(F.col("pick") == 1).select(
         F.col("knot_day").cast("long").alias("knot_day"),
         F.col("nn").cast("long").alias("n_days"),
-        F.expr("CAST(FLOOR(slope_l * 1000000.0 + 0.5) AS BIGINT)")
+        F.expr(f"{grid_sql('slope_l', 6)}")
         .alias("slope_l_micro"),
-        F.expr("CAST(FLOOR(slope_r * 1000000.0 + 0.5) AS BIGINT)")
+        F.expr(f"{grid_sql('slope_r', 6)}")
         .alias("slope_r_micro"),
-        F.expr("CAST(FLOOR(sse_seg * 1000000.0 + 0.5) AS BIGINT)")
+        F.expr(f"{grid_sql('sse_seg', 6)}")
         .alias("sse_seg_micro"),
-        F.expr("CAST(FLOOR(sse_line * 1000000.0 + 0.5) AS BIGINT)")
+        F.expr(f"{grid_sql('sse_line', 6)}")
         .alias("sse_line_micro"),
     )
 
@@ -4410,7 +4296,7 @@ def _pacf_sql(table: str, epoch_fn: str, intdiv: str, mat: str) -> str:
     )
     num_terms = ",\n         ".join(
         f"CAST(SUM(CASE WHEN y{k} IS NOT NULL THEN "
-        f"CAST(FLOOR((y - ybar) * (y{k} - ybar) * 1e-3 + 0.5) AS BIGINT) "
+        f"{grid_sql(f'(y - ybar) * (y{k} - ybar) * 1e-3', 0)} "
         f"ELSE 0 END) AS DOUBLE) * 1e3 AS c{k}"
         for k in range(1, K + 1)
     )
@@ -4437,15 +4323,15 @@ def _pacf_sql(table: str, epoch_fn: str, intdiv: str, mat: str) -> str:
     r_cols = ", ".join(f"c{k} / c0 AS r{k}" for k in range(1, K + 1))
     unions = "\nUNION ALL\n".join(
         f"SELECT {k} AS lag,"
-        f" CAST(FLOOR(r{k} * 1000000.0 + 0.5) AS BIGINT) AS acf_micro,"
-        f" CAST(FLOOR(pacf{k} * 1000000.0 + 0.5) AS BIGINT) AS pacf_micro"
+        f" {grid_sql(f'r{k}', 6)} AS acf_micro,"
+        f" {grid_sql(f'pacf{k}', 6)} AS pacf_micro"
         f" FROM final"
         for k in range(1, K + 1)
     )
     return f"""
 WITH daily AS {mat}(
   SELECT {epoch_fn}(date_trunc('day', ts)) {intdiv} 86400000000 AS day,
-         SUM(CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT)) {intdiv} 100 AS y
+         SUM({grid_sql('value', 2)}) {intdiv} 100 AS y
   FROM {table} GROUP BY 1
 ),
 base AS {mat}(
@@ -4459,7 +4345,7 @@ led AS {mat}(
   FROM base
 ),
 sums AS {mat}(
-  SELECT CAST(SUM(CAST(FLOOR((y - ybar) * (y - ybar) * 1e-3 + 0.5) AS BIGINT))
+  SELECT CAST(SUM({grid_sql('(y - ybar) * (y - ybar) * 1e-3', 0)})
               AS DOUBLE) * 1e3 AS c0,
          {num_terms}
   FROM led
@@ -4507,7 +4393,7 @@ def ts_pacf_durbin(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("day")
     ).agg(
         F.expr(
-            "SUM(CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT)) div 100"
+            f"SUM({grid_sql('value', 2)}) div 100"
         ).alias("y")
     )
     wg = Window.partitionBy()
@@ -4526,13 +4412,13 @@ def ts_pacf_durbin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sums = led.agg(
         F.expr(
-            "CAST(SUM(CAST(FLOOR((y - ybar) * (y - ybar) * 1e-3 + 0.5)"
+            f"CAST(SUM(CAST({grid_sql('(y - ybar) * (y - ybar) * 1e-3', 0)}"
             " AS BIGINT)) AS DOUBLE) * 1e3"
         ).alias("c0"),
         *[
             F.expr(
                 f"CAST(SUM(CASE WHEN y{k} IS NOT NULL THEN "
-                f"CAST(FLOOR((y - ybar) * (y{k} - ybar) * 1e-3 + 0.5)"
+                f"CAST({grid_sql(f'(y - ybar) * (y{k} - ybar) * 1e-3', 0)}"
                 f" AS BIGINT) ELSE 0 END) AS DOUBLE) * 1e3"
             ).alias(f"c{k}")
             for k in range(1, K + 1)
@@ -4577,9 +4463,9 @@ def ts_pacf_durbin(spark: SparkSession, sf_dir: str) -> DataFrame:
     for k in range(1, K + 1):
         part = final.select(
             F.expr(str(k)).alias("lag"),
-            F.expr(f"CAST(FLOOR(r{k} * 1000000.0 + 0.5) AS BIGINT)")
+            F.expr(f"{grid_sql(f'r{k}', 6)}")
             .alias("acf_micro"),
-            F.expr(f"CAST(FLOOR(pacf{k} * 1000000.0 + 0.5) AS BIGINT)")
+            F.expr(f"{grid_sql(f'pacf{k}', 6)}")
             .alias("pacf_micro"),
         )
         out = part if out is None else out.unionAll(part)
@@ -4588,17 +4474,16 @@ def ts_pacf_durbin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stat_jarque_bera",
-    oracle="""
+    oracle=f"""
 WITH s AS (
   SELECT l_returnflag, COUNT(*) AS n,
-         CAST(SUM(CAST(FLOOR(l_quantity * 10000.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('l_quantity', 4)})
               AS BIGINT) AS s1,
-         CAST(SUM(CAST(FLOOR(l_quantity * l_quantity * 10000.0 + 0.5)
-                       AS BIGINT)) AS BIGINT) AS s2,
-         CAST(SUM(CAST(FLOOR(l_quantity * l_quantity * l_quantity
-                             * 10000.0 + 0.5) AS BIGINT)) AS BIGINT) AS s3,
-         CAST(SUM(CAST(FLOOR(l_quantity * l_quantity * l_quantity
-                             * l_quantity * 10000.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('l_quantity * l_quantity', 4)}) AS BIGINT) AS s2,
+         CAST(SUM({grid_sql('l_quantity * l_quantity * l_quantity', 4)}) AS BIGINT)
+           AS s3,
+         CAST(SUM({grid_sql('''l_quantity * l_quantity * l_quantity
+                             * l_quantity''', 4)})
               AS BIGINT) AS s4
   FROM lineitem GROUP BY l_returnflag
 ),
@@ -4625,10 +4510,9 @@ j AS (
   FROM c
 )
 SELECT l_returnflag, n,
-       CAST(FLOOR(skew * 1000000.0 + 0.5) AS BIGINT) AS skew_micro,
-       CAST(FLOOR(exkurt * 1000000.0 + 0.5) AS BIGINT) AS exkurt_micro,
-       CAST(FLOOR(n / 6.0 * (skew * skew + exkurt * exkurt / 4.0)
-                  * 1000.0 + 0.5) AS BIGINT) AS jb_milli,
+       {grid_sql('skew', 6)} AS skew_micro,
+       {grid_sql('exkurt', 6)} AS exkurt_micro,
+       {grid_sql('n / 6.0 * (skew * skew + exkurt * exkurt / 4.0)', 3)} AS jb_milli,
        n / 6.0 * (skew * skew + exkurt * exkurt / 4.0) > 5.991
          AS non_normal
 FROM j
@@ -4658,7 +4542,7 @@ def stat_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
         expr = q
         for _ in range(p - 1):
             expr = expr * q
-        return F.sum(F.floor(expr * F.lit(1e4) + F.lit(0.5))).alias(name)
+        return F.sum(grid(expr, 4)).alias(name)
 
     s = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
@@ -4688,21 +4572,47 @@ def stat_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return j.select(
         "l_returnflag", "n",
-        F.floor(F.col("skew") * F.lit(1e6) + F.lit(0.5))
-        .cast("long").alias("skew_micro"),
-        F.floor(F.col("exkurt") * F.lit(1e6) + F.lit(0.5))
-        .cast("long").alias("exkurt_micro"),
-        F.floor(jb * F.lit(1000.0) + F.lit(0.5)).cast("long").alias("jb_milli"),
+        grid("skew", 6).alias("skew_micro"),
+        grid("exkurt", 6).alias("exkurt_micro"),
+        grid(jb, 3).alias("jb_milli"),
         (jb > F.lit(5.991)).alias("non_normal"),
     ).orderBy("l_returnflag")
 
 
-@register(
-    "stat_kruskal_wallis",
-    oracle="""
-WITH v AS (
+def _rank_sums(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """Tied midranks of ``l_quantity`` (on the cent grid) by
+    ``l_returnflag``: the tie table ``t (q, t)`` and the per-group sums
+    ``g (grp, nj, rj2)``, ``rj2`` the rank sum doubled so midranks stay
+    integers. Spark twin of :data:`_RANK_SUMS_SQL`."""
+    li = load_table(spark, sf_dir, "lineitem")
+    v = li.groupBy(
+        F.col("l_returnflag").alias("grp"),
+        grid("l_quantity", 2).alias("q"),
+    ).agg(F.count(F.lit(1)).alias("c"))
+    t = v.groupBy("q").agg(F.sum("c").alias("t"))
+    w = Window.orderBy("q").rowsBetween(Window.unboundedPreceding, -1)
+    r = t.select(
+        "q", "t",
+        (
+            F.lit(2) * F.coalesce(F.sum("t").over(w), F.lit(0))
+            + F.col("t") + F.lit(1)
+        ).cast("long").alias("r2"),
+    )
+    g = (
+        v.join(r.select("q", "r2"), "q")
+        .groupBy("grp")
+        .agg(
+            F.sum("c").alias("nj"),
+            F.sum(F.col("c") * F.col("r2")).alias("rj2"),
+        )
+    )
+    return t, g
+
+
+#: The ``v``, ``t``, ``r`` and ``g`` CTEs: the SQL twin of :func:`_rank_sums`.
+_RANK_SUMS_SQL = f"""v AS (
   SELECT l_returnflag AS grp,
-         CAST(FLOOR(l_quantity * 100.0 + 0.5) AS BIGINT) AS q,
+         {grid_sql('l_quantity', 2)} AS q,
          CAST(COUNT(*) AS BIGINT) AS c
   FROM lineitem GROUP BY 1, 2
 ),
@@ -4719,17 +4629,23 @@ g AS (
   SELECT grp, CAST(SUM(v.c) AS BIGINT) AS nj,
          CAST(SUM(v.c * r.r2) AS BIGINT) AS rj2
   FROM v JOIN r USING (q) GROUP BY grp
-),
+)"""
+
+
+@register(
+    "stat_kruskal_wallis",
+    oracle=f"""
+WITH {_RANK_SUMS_SQL},
 gtot AS (
   SELECT CAST(SUM(nj) AS BIGINT) AS n, CAST(COUNT(*) AS BIGINT) AS k
   FROM g
 ),
 terms AS (
   SELECT grp, nj, rj2, n, k,
-         CAST(FLOOR(CAST(rj2 AS DOUBLE) * CAST(rj2 AS DOUBLE)
+         {grid_sql('''CAST(rj2 AS DOUBLE) * CAST(rj2 AS DOUBLE)
                     / nj / 4.0
-                    / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 1.0))
-                    * 1000000000.0 + 0.5) AS BIGINT) AS term_nano
+                    / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 1.0))''', 9)}
+                  AS term_nano
   FROM g CROSS JOIN gtot
 ),
 ties AS (
@@ -4750,8 +4666,8 @@ h AS (
   FROM tot CROSS JOIN ties
 )
 SELECT grp, nj, rj2, term_nano, h.n AS n, h.k AS k,
-       CAST(FLOOR(h_raw * 1000000.0 + 0.5) AS BIGINT) AS h_micro,
-       CAST(FLOOR(h_raw / cfac * 1000000.0 + 0.5) AS BIGINT) AS h_adj_micro,
+       {grid_sql('h_raw', 6)} AS h_micro,
+       {grid_sql('h_raw / cfac', 6)} AS h_adj_micro,
        h_raw / cfac > 5.991 AS reject
 FROM terms CROSS JOIN h
 ORDER BY grp
@@ -4775,39 +4691,17 @@ def stat_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuous measures pre-bin onto a fixed grid exactly like KS).
     5.991 = chi-squared(k-1=2) at alpha=0.05.
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    v = li.groupBy(
-        F.col("l_returnflag").alias("grp"),
-        F.floor(F.col("l_quantity") * F.lit(100.0) + F.lit(0.5))
-        .cast("long").alias("q"),
-    ).agg(F.count(F.lit(1)).alias("c"))
-    t = v.groupBy("q").agg(F.sum("c").alias("t"))
-    w = Window.orderBy("q").rowsBetween(Window.unboundedPreceding, -1)
-    r = t.select(
-        "q", "t",
-        (
-            F.lit(2) * F.coalesce(F.sum("t").over(w), F.lit(0))
-            + F.col("t") + F.lit(1)
-        ).cast("long").alias("r2"),
-    )
-    g = (
-        v.join(r.select("q", "r2"), "q")
-        .groupBy("grp")
-        .agg(
-            F.sum("c").alias("nj"),
-            F.sum(F.col("c") * F.col("r2")).alias("rj2"),
-        )
-    )
+    t, g = _rank_sums(spark, sf_dir)
     gtot = g.agg(F.sum("nj").alias("n"), F.count(F.lit(1)).alias("k"))
     nd = F.col("n").cast("double")
     terms = g.crossJoin(F.broadcast(gtot)).select(
         "grp", "nj", "rj2", "n", "k",
-        F.floor(
+        grid(
             F.col("rj2").cast("double") * F.col("rj2").cast("double")
             / F.col("nj") / F.lit(4.0)
-            / (nd * (nd + F.lit(1.0)))
-            * F.lit(1e9) + F.lit(0.5)
-        ).cast("long").alias("term_nano"),
+            / (nd * (nd + F.lit(1.0))),
+            9,
+        ).alias("term_nano"),
     )
     ties = t.agg(
         F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t")).alias("ttsum")
@@ -4832,10 +4726,8 @@ def stat_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         terms.drop("n", "k").crossJoin(F.broadcast(h))
         .select(
             "grp", "nj", "rj2", "term_nano", "n", "k",
-            F.floor(F.col("h_raw") * F.lit(1e6) + F.lit(0.5))
-            .cast("long").alias("h_micro"),
-            F.floor(F.col("h_raw") / F.col("cfac") * F.lit(1e6) + F.lit(0.5))
-            .cast("long").alias("h_adj_micro"),
+            grid("h_raw", 6).alias("h_micro"),
+            grid(F.col("h_raw") / F.col("cfac"), 6).alias("h_adj_micro"),
             (F.col("h_raw") / F.col("cfac") > F.lit(5.991)).alias("reject"),
         )
         .orderBy("grp")
@@ -4844,10 +4736,10 @@ def stat_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stat_friedman_test",
-    oracle="""
+    oracle=f"""
 WITH cell AS (
   SELECT CAST(ts AS DATE) AS day, event_type,
-         CAST(SUM(CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('value', 6)})
               AS BIGINT) // CAST(COUNT(*) AS BIGINT) AS y
   FROM events GROUP BY 1, 2
 ),
@@ -4882,7 +4774,7 @@ chi AS (
   FROM tot
 )
 SELECT event_type, nblocks, rj2, n, k,
-       CAST(FLOOR(chi2 * 1000000.0 + 0.5) AS BIGINT) AS chi2_micro,
+       {grid_sql('chi2', 6)} AS chi2_micro,
        chi2 > 9.488 AS reject
 FROM g CROSS JOIN chi
 ORDER BY event_type
@@ -4911,7 +4803,7 @@ def stat_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").cast("date").alias("day"), "event_type"
     ).agg(
         F.expr(
-            "CAST(sum(CAST(floor(value * 1000000.0 + 0.5) AS BIGINT)) "
+            f"CAST(sum({grid_sql('value', 6)}) "
             "AS BIGINT) div CAST(count(1) AS BIGINT)"
         ).alias("y")
     )
@@ -4955,8 +4847,7 @@ def stat_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         g.crossJoin(F.broadcast(chi))
         .select(
             "event_type", "nblocks", "rj2", "n", "k",
-            F.floor(F.col("chi2") * F.lit(1e6) + F.lit(0.5))
-            .cast("long").alias("chi2_micro"),
+            grid("chi2", 6).alias("chi2_micro"),
             (F.col("chi2") > F.lit(9.488)).alias("reject"),
         )
         .orderBy("event_type")
@@ -4965,11 +4856,11 @@ def stat_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts_permutation_entropy",
-    oracle="""
+    oracle=f"""
 WITH h AS (
   SELECT event_type,
          CAST(epoch_us(ts) // 3600000000 AS BIGINT) AS t,
-         CAST(SUM(CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('value', 6)})
               AS BIGINT) // CAST(COUNT(*) AS BIGINT) AS y
   FROM events GROUP BY 1, 2
 ),
@@ -4993,16 +4884,15 @@ c AS (
 tot AS (SELECT event_type, CAST(SUM(c) AS BIGINT) AS n FROM c GROUP BY 1),
 terms AS (
   SELECT c.event_type, c.pattern, c.c, t.n,
-         CAST(FLOOR(-(CAST(c.c AS DOUBLE) / t.n)
-                    * ln(CAST(c.c AS DOUBLE) / t.n)
-                    * 1000000000.0 + 0.5) AS BIGINT) AS term_nano
+         {grid_sql('''-(CAST(c.c AS DOUBLE) / t.n)
+                    * ln(CAST(c.c AS DOUBLE) / t.n)''', 9)} AS term_nano
   FROM c JOIN tot t USING (event_type)
 )
 SELECT event_type, MAX(n) AS n,
        CAST(COUNT(*) AS BIGINT) AS patterns_seen,
        CAST(SUM(term_nano) AS BIGINT) AS h_nano,
-       CAST(FLOOR(CAST(SUM(term_nano) AS DOUBLE) / 1000000000.0
-                  / ln(6.0) * 1000000.0 + 0.5) AS BIGINT) AS h_norm_micro
+       {grid_sql('''CAST(SUM(term_nano) AS DOUBLE) / 1000000000.0
+                  / ln(6.0)''', 6)} AS h_norm_micro
 FROM terms GROUP BY event_type
 ORDER BY event_type
 """,
@@ -5029,7 +4919,7 @@ def ts_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(unix_micros(ts) div 3600000000 AS BIGINT)").alias("t"),
     ).agg(
         F.expr(
-            "CAST(sum(CAST(floor(value * 1000000.0 + 0.5) AS BIGINT)) "
+            f"CAST(sum({grid_sql('value', 6)}) "
             "AS BIGINT) div CAST(count(1) AS BIGINT)"
         ).alias("y")
     )
@@ -5056,8 +4946,7 @@ def ts_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = F.col("c").cast("double") / F.col("n")
     terms = c.join(tot, "event_type").select(
         "event_type", "pattern", "c", "n",
-        F.floor(-p * F.log(p) * F.lit(1e9) + F.lit(0.5))
-        .cast("long").alias("term_nano"),
+        grid(-p * F.log(p), 9).alias("term_nano"),
     )
     return (
         terms.groupBy("event_type")
@@ -5065,13 +4954,36 @@ def ts_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("n").alias("n"),
             F.count(F.lit(1)).cast("long").alias("patterns_seen"),
             F.sum("term_nano").alias("h_nano"),
-            F.floor(
-                F.sum("term_nano").cast("double") / F.lit(1e9)
-                / F.log(F.lit(6.0)) * F.lit(1e6) + F.lit(0.5)
-            ).cast("long").alias("h_norm_micro"),
+            grid(
+                F.sum("term_nano").cast("double") / F.lit(1e9) / F.log(F.lit(6.0)), 6
+            ).alias("h_norm_micro"),
         )
         .orderBy("event_type")
     )
+
+
+def _hourly_mean(ev: DataFrame, s: int) -> DataFrame:
+    """The hourly event-mean series ``(t, y)``: ``t`` the epoch hour, ``y``
+    the hour's sum of ``value`` on the ``10^-s`` grid integer-divided by
+    its count. Spark twin of :func:`_hourly_mean_sql`."""
+    return ev.groupBy(
+        F.floor(F.unix_micros("ts") / F.lit(3_600_000_000)).cast("long").alias("t")
+    ).agg(
+        F.expr(
+            f"CAST(sum({grid_sql('value', s)}) "
+            "AS BIGINT) div CAST(count(1) AS BIGINT)"
+        ).alias("y")
+    )
+
+
+def _hourly_mean_sql(table: str, epoch_us: str, idiv: str, s: int) -> str:
+    """Body of the ``h`` CTE: the SQL twin of :func:`_hourly_mean`, with the
+    engine's epoch-micros function and integer-division operator."""
+    return f"""
+  SELECT CAST({epoch_us}(ts) {idiv} 3600000000 AS BIGINT) AS t,
+         CAST(SUM({grid_sql('value', s)})
+              AS BIGINT) {idiv} CAST(COUNT(*) AS BIGINT) AS y
+  FROM {table} GROUP BY 1"""
 
 
 def _dw_sql(table: str, epoch_us: str, idiv: str) -> str:
@@ -5080,11 +4992,7 @@ def _dw_sql(table: str, epoch_us: str, idiv: str) -> str:
     every IEEE double is produced by the same expression tree in both
     engines (the ts_pacf_durbin / ts_segmented_trend pattern)."""
     return f"""
-WITH h AS (
-  SELECT CAST({epoch_us}(ts) {idiv} 3600000000 AS BIGINT) AS t,
-         CAST(SUM(CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT))
-              AS BIGINT) {idiv} CAST(COUNT(*) AS BIGINT) AS y
-  FROM {table} GROUP BY 1
+WITH h AS ({_hourly_mean_sql(table, epoch_us, idiv, 6)}
 ),
 rel AS (
   SELECT CAST(t - MIN(t) OVER () AS BIGINT) AS t, y FROM h
@@ -5114,8 +5022,8 @@ fit AS (
 ),
 e AS (
   SELECT t,
-         CAST(FLOOR((CAST(y AS DOUBLE) - (a + b * CAST(t AS DOUBLE)))
-                    / 1000.0 + 0.5) AS BIGINT) AS e3
+         {grid_sql('''(CAST(y AS DOUBLE) - (a + b * CAST(t AS DOUBLE)))
+                    / 1000.0''', 0)} AS e3
   FROM rel CROSS JOIN fit
 ),
 d AS (
@@ -5130,11 +5038,10 @@ s AS (
   FROM d
 )
 SELECT fit.n AS n,
-       CAST(FLOOR(b * 1000.0 + 0.5) AS BIGINT) AS slope_milli_micro,
-       CAST(FLOOR(CAST(sdd AS DOUBLE) / CAST(see AS DOUBLE)
-                  * 1000000.0 + 0.5) AS BIGINT) AS dw_micro,
-       CAST(FLOOR((1.0 - CAST(sdd AS DOUBLE) / CAST(see AS DOUBLE) / 2.0)
-                  * 1000000.0 + 0.5) AS BIGINT) AS rho_micro,
+       {grid_sql('b', 3)} AS slope_milli_micro,
+       {grid_sql('CAST(sdd AS DOUBLE) / CAST(see AS DOUBLE)', 6)} AS dw_micro,
+       {grid_sql('1.0 - CAST(sdd AS DOUBLE) / CAST(see AS DOUBLE) / 2.0', 6)}
+         AS rho_micro,
        CAST(sdd AS DOUBLE) / CAST(see AS DOUBLE) < 1.5 AS positive_autocorr
 FROM s CROSS JOIN fit
 """
@@ -5167,15 +5074,7 @@ def stat_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a coarser bucket exactly like ts_pacf_durbin).
     """
     ev = load_table(spark, sf_dir, "events")
-    h = ev.groupBy(
-        F.floor(F.unix_micros("ts") / F.lit(3_600_000_000))
-        .cast("long").alias("t0")
-    ).agg(
-        F.expr(
-            "CAST(sum(CAST(floor(value * 1000000.0 + 0.5) AS BIGINT)) "
-            "AS BIGINT) div CAST(count(1) AS BIGINT)"
-        ).alias("y")
-    )
+    h = _hourly_mean(ev, 6).withColumnRenamed("t", "t0")
     rel = h.select(
         (F.col("t0") - F.min("t0").over(Window.partitionBy()))
         .cast("long").alias("t"),
@@ -5207,12 +5106,13 @@ def stat_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     e = rel.crossJoin(F.broadcast(fit)).select(
         "t",
-        F.floor(
+        grid(
             (
                 F.col("y").cast("double")
                 - (F.col("a") + F.col("b") * F.col("t").cast("double"))
-            ) / F.lit(1000.0) + F.lit(0.5)
-        ).cast("long").alias("e3"),
+            ) / F.lit(1000.0),
+            0,
+        ).alias("e3"),
     )
     d = e.select("e3", F.lag("e3").over(Window.orderBy("t")).alias("ep"))
     s = d.agg(
@@ -5226,30 +5126,17 @@ def stat_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     dw = F.col("sdd").cast("double") / F.col("see").cast("double")
     return s.crossJoin(F.broadcast(fit)).select(
         "n",
-        F.floor(F.col("b") * F.lit(1000.0) + F.lit(0.5)).cast("long")
-        .alias("slope_milli_micro"),
-        F.floor(dw * F.lit(1e6) + F.lit(0.5)).cast("long")
-        .alias("dw_micro"),
-        F.floor(
-            (F.lit(1.0) - dw / F.lit(2.0)) * F.lit(1e6) + F.lit(0.5)
-        ).cast("long").alias("rho_micro"),
+        grid("b", 3).alias("slope_milli_micro"),
+        grid(dw, 6).alias("dw_micro"),
+        grid(F.lit(1.0) - dw / F.lit(2.0), 6).alias("rho_micro"),
         (dw < F.lit(1.5)).alias("positive_autocorr"),
     )
 
 
 @register(
     "ml_brier_decomposition",
-    oracle="""
-WITH scored AS (
-  SELECT CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) // 1000 AS bin,
-         CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-              THEN 1 ELSE 0 END AS pos
-  FROM orders
-),
-bins AS (
-  SELECT bin, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(pos) AS BIGINT) AS p
-  FROM scored GROUP BY bin
-),
+    oracle=f"""
+WITH {_score_bins_sql("p")},
 cum AS (
   SELECT bin, n, p,
          CAST(COALESCE(SUM(n) OVER (ORDER BY bin
@@ -5277,12 +5164,12 @@ terms AS (
 ),
 g AS (
   SELECT decile, n, p,
-         CAST(FLOOR((fprob * fprob * n - 2.0 * fprob * p + p)
-                    / tn * 1000000000.0 + 0.5) AS BIGINT) AS brier_nano,
-         CAST(FLOOR(n * (fprob - obar_b) * (fprob - obar_b)
-                    / tn * 1000000000.0 + 0.5) AS BIGINT) AS rel_nano,
-         CAST(FLOOR(n * (obar_b - obar) * (obar_b - obar)
-                    / tn * 1000000000.0 + 0.5) AS BIGINT) AS res_nano,
+         {grid_sql('''(fprob * fprob * n - 2.0 * fprob * p + p)
+                    / tn''', 9)} AS brier_nano,
+         {grid_sql('''n * (fprob - obar_b) * (fprob - obar_b)
+                    / tn''', 9)} AS rel_nano,
+         {grid_sql('''n * (obar_b - obar) * (obar_b - obar)
+                    / tn''', 9)} AS res_nano,
          obar
   FROM terms
 )
@@ -5290,7 +5177,7 @@ SELECT decile, n, p,
        CAST(SUM(brier_nano) OVER () AS BIGINT) AS brier_nano,
        CAST(SUM(rel_nano) OVER () AS BIGINT) AS rel_nano,
        CAST(SUM(res_nano) OVER () AS BIGINT) AS res_nano,
-       CAST(FLOOR(obar * (1.0 - obar) * 1000000000.0 + 0.5) AS BIGINT)
+       {grid_sql('obar * (1.0 - obar)', 9)}
          AS unc_nano
 FROM g
 ORDER BY decile
@@ -5313,21 +5200,7 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     100-TB posture: the only data-sized pass is the first hash
     aggregate; everything downstream is bin-cardinality-bounded.
     """
-    o = load_table(spark, sf_dir, "orders")
-    # mirror DuckDB's // with floor(): bin cents are positive here, but
-    # floor keeps the semantics aligned if the measure ever goes signed.
-    scored = o.select(
-        F.floor(
-            F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5))
-            / F.lit(1000)
-        ).cast("long").alias("bin"),
-        F.when(
-            F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1
-        ).otherwise(0).alias("pos"),
-    )
-    bins = scored.groupBy("bin").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("pos").alias("p")
-    )
+    bins = _score_bins(spark, sf_dir, "p")
     wb = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, -1)
     wall = Window.orderBy(F.lit(1)).rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
@@ -5350,33 +5223,33 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     g = terms.select(
         "decile", "n", "p", "obar",
-        F.floor(
+        grid(
             (
                 F.col("fprob") * F.col("fprob") * F.col("n")
                 - F.lit(2.0) * F.col("fprob") * F.col("p")
                 + F.col("p")
-            ) / F.col("tn") * F.lit(1e9) + F.lit(0.5)
-        ).cast("long").alias("brier_t"),
-        F.floor(
+            ) / F.col("tn"),
+            9,
+        ).alias("brier_t"),
+        grid(
             F.col("n") * (F.col("fprob") - F.col("obar_b"))
             * (F.col("fprob") - F.col("obar_b"))
-            / F.col("tn") * F.lit(1e9) + F.lit(0.5)
-        ).cast("long").alias("rel_t"),
-        F.floor(
+            / F.col("tn"),
+            9,
+        ).alias("rel_t"),
+        grid(
             F.col("n") * (F.col("obar_b") - F.col("obar"))
             * (F.col("obar_b") - F.col("obar"))
-            / F.col("tn") * F.lit(1e9) + F.lit(0.5)
-        ).cast("long").alias("res_t"),
+            / F.col("tn"),
+            9,
+        ).alias("res_t"),
     )
     return g.select(
         "decile", "n", "p",
         F.sum("brier_t").over(wall).alias("brier_nano"),
         F.sum("rel_t").over(wall).alias("rel_nano"),
         F.sum("res_t").over(wall).alias("res_nano"),
-        F.floor(
-            F.col("obar") * (F.lit(1.0) - F.col("obar")) * F.lit(1e9)
-            + F.lit(0.5)
-        ).cast("long").alias("unc_nano"),
+        grid(F.col("obar") * (F.lit(1.0) - F.col("obar")), 9).alias("unc_nano"),
     ).orderBy("decile")
 
 
@@ -5384,11 +5257,7 @@ def _hurst_sql(table: str, epoch_us: str, idiv: str, unnest8: str) -> str:
     """Shared Spark/DuckDB SQL for `ts_hurst_rs` (identical text modulo
     the epoch function, integer-div operator and array-explode idiom)."""
     return f"""
-WITH h AS (
-  SELECT CAST({epoch_us}(ts) {idiv} 3600000000 AS BIGINT) AS t,
-         CAST(SUM(CAST(FLOOR(value * 1000.0 + 0.5) AS BIGINT))
-              AS BIGINT) {idiv} CAST(COUNT(*) AS BIGINT) AS y
-  FROM {table} GROUP BY 1
+WITH h AS ({_hourly_mean_sql(table, epoch_us, idiv, 3)}
 ),
 rel AS (
   SELECT CAST(t - MIN(t) OVER () AS BIGINT) AS t, y FROM h
@@ -5412,10 +5281,9 @@ w AS (
 ),
 rs AS (
   SELECT s, chunk,
-         CAST(FLOOR(CAST(MAX(wp) - MIN(wp) AS DOUBLE)
+         {grid_sql('''CAST(MAX(wp) - MIN(wp) AS DOUBLE)
                     / sqrt(CAST(MAX(s) * MAX(tot2)
-                                - MAX(tot) * MAX(tot) AS DOUBLE))
-                    * 1000000.0 + 0.5) AS BIGINT) AS rs_micro
+                                - MAX(tot) * MAX(tot) AS DOUBLE))''', 6)} AS rs_micro
   FROM w
   WHERE cnt = s AND s * tot2 - tot * tot > 0
   GROUP BY s, chunk
@@ -5427,7 +5295,7 @@ m AS (
 ),
 z AS (
   SELECT s, n_chunks,
-         CAST(FLOOR(CAST(srs AS DOUBLE) / n_chunks + 0.5) AS BIGINT)
+         {grid_sql('CAST(srs AS DOUBLE) / n_chunks', 0)}
            AS mean_rs_micro,
          ln(CAST(s AS DOUBLE)) / ln(2.0) AS x,
          ln(CAST(srs AS DOUBLE) / n_chunks / 1000000.0) / ln(2.0) AS zz
@@ -5435,10 +5303,10 @@ z AS (
 ),
 g9 AS (
   SELECT s, n_chunks, mean_rs_micro,
-         CAST(FLOOR(x * 1000000000.0 + 0.5) AS BIGINT) AS x9,
-         CAST(FLOOR(zz * 1000000000.0 + 0.5) AS BIGINT) AS z9,
-         CAST(FLOOR(x * zz * 1000000000.0 + 0.5) AS BIGINT) AS xz9,
-         CAST(FLOOR(x * x * 1000000000.0 + 0.5) AS BIGINT) AS xx9
+         {grid_sql('x', 9)} AS x9,
+         {grid_sql('zz', 9)} AS z9,
+         {grid_sql('x * zz', 9)} AS xz9,
+         {grid_sql('x * x', 9)} AS xx9
   FROM z
 ),
 f0 AS (
@@ -5454,7 +5322,7 @@ fit AS (
   FROM f0 WHERE np >= 2.0
 )
 SELECT s, n_chunks, mean_rs_micro,
-       CAST(FLOOR(hurst * 1000000.0 + 0.5) AS BIGINT) AS hurst_micro,
+       {grid_sql('hurst', 6)} AS hurst_micro,
        hurst > 0.65 AS persistent
 FROM g9 LEFT JOIN fit ON TRUE
 ORDER BY s
@@ -5496,7 +5364,7 @@ def ts_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("t")
     ).agg(
         F.expr(
-            "CAST(SUM(CAST(FLOOR(value * 1000.0 + 0.5) AS BIGINT))"
+            f"CAST(SUM({grid_sql('value', 3)})"
             " AS BIGINT) div CAST(COUNT(*) AS BIGINT)"
         ).alias("y")
     )
@@ -5547,16 +5415,16 @@ def ts_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("s", "chunk")
         .agg(
-            F.floor(
+            grid(
                 (F.max("wp") - F.min("wp")).cast("double")
                 / F.sqrt(
                     (
                         F.max("s") * F.max("tot2")
                         - F.max("tot") * F.max("tot")
                     ).cast("double")
-                )
-                * F.lit(1e6) + F.lit(0.5)
-            ).cast("long").alias("rs_micro")
+                ),
+                6,
+            ).alias("rs_micro")
         )
     )
     m = rs.groupBy("s").agg(
@@ -5566,9 +5434,7 @@ def ts_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ln2 = F.log(F.lit(2.0))
     z = m.select(
         "s", "n_chunks",
-        F.floor(
-            F.col("srs").cast("double") / F.col("n_chunks") + F.lit(0.5)
-        ).cast("long").alias("mean_rs_micro"),
+        grid(F.col("srs").cast("double") / F.col("n_chunks"), 0).alias("mean_rs_micro"),
         (F.log(F.col("s").cast("double")) / ln2).alias("x"),
         (
             F.log(
@@ -5579,14 +5445,10 @@ def ts_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     g9 = z.select(
         "s", "n_chunks", "mean_rs_micro",
-        F.floor(F.col("x") * F.lit(1e9) + F.lit(0.5)).cast("long")
-        .alias("x9"),
-        F.floor(F.col("zz") * F.lit(1e9) + F.lit(0.5)).cast("long")
-        .alias("z9"),
-        F.floor(F.col("x") * F.col("zz") * F.lit(1e9) + F.lit(0.5))
-        .cast("long").alias("xz9"),
-        F.floor(F.col("x") * F.col("x") * F.lit(1e9) + F.lit(0.5))
-        .cast("long").alias("xx9"),
+        grid("x", 9).alias("x9"),
+        grid("zz", 9).alias("z9"),
+        grid(F.col("x") * F.col("zz"), 9).alias("xz9"),
+        grid(F.col("x") * F.col("x"), 9).alias("xx9"),
     )
     f0 = g9.agg(
         F.count(F.lit(1)).cast("double").alias("np"),
@@ -5605,8 +5467,7 @@ def ts_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
         g9.join(F.broadcast(fit), F.lit(True), "left")
         .select(
             "s", "n_chunks", "mean_rs_micro",
-            F.floor(F.col("hurst") * F.lit(1e6) + F.lit(0.5))
-            .cast("long").alias("hurst_micro"),
+            grid("hurst", 6).alias("hurst_micro"),
             (F.col("hurst") > F.lit(0.65)).alias("persistent"),
         )
         .orderBy("s")
@@ -5636,8 +5497,7 @@ WITH ints AS (
 )
 SELECT i,
        CAST(SUM(CASE WHEN i = 0 THEN 0
-                     ELSE CAST(FLOOR(ln(CAST(i AS DOUBLE))
-                                     * 1000000000.0 + 0.5) AS BIGINT)
+                     ELSE {grid_sql('ln(CAST(i AS DOUBLE))', 9)}
                 END) OVER (ORDER BY i ROWS UNBOUNDED PRECEDING)
             AS BIGINT) AS lf9
 FROM ints
@@ -5674,9 +5534,8 @@ obs AS (SELECT lp9 AS lp9_obs FROM ks WHERE k = a),
 summed AS (
   SELECT MAX(a) AS a, MAX(r1) AS r1, MAX(c1) AS c1, MAX(n) AS n,
          CAST(SUM(CASE WHEN lp9 <= (SELECT lp9_obs FROM obs)
-                       THEN CAST(FLOOR(exp(CAST(lp9 AS DOUBLE)
-                                           / 1000000000.0)
-                                       * 1000000000000.0 + 0.5) AS BIGINT)
+                       THEN {grid_sql('''exp(CAST(lp9 AS DOUBLE)
+                                           / 1000000000.0)''', 12)}
                        ELSE 0 END) AS BIGINT) AS p_two_pico,
          CAST(COUNT(*) AS BIGINT) AS k_terms
   FROM ks
@@ -5745,8 +5604,7 @@ def stat_fisher_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         "i",
         F.expr(
             "CAST(SUM(CASE WHEN i = 0 THEN 0"
-            " ELSE CAST(FLOOR(ln(CAST(i AS DOUBLE))"
-            " * 1000000000.0 + 0.5) AS BIGINT)"
+            f" ELSE {grid_sql('ln(CAST(i AS DOUBLE))', 9)}"
             " END) OVER (ORDER BY i ROWS UNBOUNDED PRECEDING)"
             " AS BIGINT)"
         ).alias("lf9"),
@@ -5805,10 +5663,7 @@ def stat_fisher_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(
             F.when(
                 F.col("lp9") <= F.col("lp9_obs"),
-                F.floor(
-                    F.exp(F.col("lp9").cast("double") / F.lit(1e9))
-                    * F.lit(1e12) + F.lit(0.5)
-                ).cast("long"),
+                grid(F.exp(F.col("lp9").cast("double") / F.lit(1e9)), 12),
             ).otherwise(F.lit(0))
         ).cast("long").alias("p_two_pico"),
         F.count(F.lit(1)).cast("long").alias("k_terms"),
@@ -5823,11 +5678,7 @@ def _runs_sql(table: str, epoch_us: str, idiv: str, median2: str) -> str:
     """Shared Spark/DuckDB SQL for `stat_runs_test` (identical text
     modulo epoch fn, integer-div operator and the exact-median idiom)."""
     return f"""
-WITH h AS (
-  SELECT CAST({epoch_us}(ts) {idiv} 3600000000 AS BIGINT) AS t,
-         CAST(SUM(CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT))
-              AS BIGINT) {idiv} CAST(COUNT(*) AS BIGINT) AS y
-  FROM {table} GROUP BY 1
+WITH h AS ({_hourly_mean_sql(table, epoch_us, idiv, 6)}
 ),
 med AS (SELECT CAST({median2} AS BIGINT) AS m2 FROM h),
 signed AS (
@@ -5856,10 +5707,9 @@ z AS (
   FROM agg
 )
 SELECT n1, n2, r,
-       CAST(FLOOR(mu * 1000000.0 + 0.5) AS BIGINT) AS mu_micro,
-       CAST(FLOOR((CAST(r AS DOUBLE) - mu)
-                  / sqrt((mu - 1.0) * (mu - 2.0) / (n - 1.0))
-                  * 1000000.0 + 0.5) AS BIGINT) AS z_micro,
+       {grid_sql('mu', 6)} AS mu_micro,
+       {grid_sql('''(CAST(r AS DOUBLE) - mu)
+                  / sqrt((mu - 1.0) * (mu - 2.0) / (n - 1.0))''', 6)} AS z_micro,
        abs((CAST(r AS DOUBLE) - mu)
            / sqrt((mu - 1.0) * (mu - 2.0) / (n - 1.0))) > 1.96
          AS non_random
@@ -5894,15 +5744,7 @@ def stat_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts_pacf_durbin); everything else is one aggregate row.
     """
     ev = load_table(spark, sf_dir, "events")
-    h = ev.groupBy(
-        F.floor(F.unix_micros("ts") / F.lit(3_600_000_000))
-        .cast("long").alias("t")
-    ).agg(
-        F.expr(
-            "CAST(sum(CAST(floor(value * 1000000.0 + 0.5) AS BIGINT)) "
-            "AS BIGINT) div CAST(count(1) AS BIGINT)"
-        ).alias("y")
-    )
+    h = _hourly_mean(ev, 6)
     med = h.agg(
         (F.lit(2) * F.percentile("y", F.lit(0.5))).cast("long").alias("m2")
     )
@@ -5936,9 +5778,8 @@ def stat_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return agg.select("n1", "n2", "r", mu.alias("mu"), n.alias("nn")).select(
         "n1", "n2", "r",
-        F.floor(F.col("mu") * F.lit(1e6) + F.lit(0.5)).cast("long")
-        .alias("mu_micro"),
-        F.floor(z * F.lit(1e6) + F.lit(0.5)).cast("long").alias("z_micro"),
+        grid("mu", 6).alias("mu_micro"),
+        grid(z, 6).alias("z_micro"),
         (F.abs(z) > F.lit(1.96)).alias("non_random"),
     )
 
@@ -5953,7 +5794,7 @@ _QQ_POINTS = "5,10,15,20,25,30,35,40,45,50,55,60,65,70,75,80,85,90,95"
     oracle=f"""
 WITH v AS (
   SELECT l_returnflag AS grp,
-         CAST(FLOOR(l_extendedprice * 100.0 + 0.5) AS BIGINT) AS cents,
+         {grid_sql('l_extendedprice', 2)} AS cents,
          CAST(COUNT(*) AS BIGINT) AS c
   FROM lineitem WHERE l_returnflag IN ('A', 'R')
   GROUP BY 1, 2
@@ -6001,8 +5842,7 @@ def stat_qq_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     v = li.groupBy(
         F.col("l_returnflag").alias("grp"),
-        F.floor(F.col("l_extendedprice") * F.lit(100.0) + F.lit(0.5))
-        .cast("long").alias("cents"),
+        grid("l_extendedprice", 2).alias("cents"),
     ).agg(F.count(F.lit(1)).alias("c"))
     wcum = (
         Window.partitionBy("grp")
@@ -6047,12 +5887,12 @@ def _coint_sql(table: str, epoch_us: str, idiv: str) -> str:
 WITH h AS (
   SELECT CAST({epoch_us}(ts) {idiv} 3600000000 AS BIGINT) AS t,
          CAST(SUM(CASE WHEN event_type = 'view' THEN
-                       CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT)
+                       {grid_sql('value', 6)}
                        ELSE 0 END) AS BIGINT) AS s1,
          CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
               AS BIGINT) AS c1,
          CAST(SUM(CASE WHEN event_type = 'click' THEN
-                       CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT)
+                       {grid_sql('value', 6)}
                        ELSE 0 END) AS BIGINT) AS s2,
          CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
               AS BIGINT) AS c2
@@ -6087,9 +5927,9 @@ fit AS (
 ),
 resid AS (
   SELECT t,
-         CAST(FLOOR((CAST(y1 AS DOUBLE)
+         {grid_sql('''(CAST(y1 AS DOUBLE)
                      - (alpha + beta * CAST(y2 AS DOUBLE)))
-                    / 1000.0 + 0.5) AS BIGINT) AS e3
+                    / 1000.0''', 0)} AS e3
   FROM pair CROSS JOIN fit
 ),
 lagged AS (
@@ -6115,11 +5955,11 @@ sig AS (
   GROUP BY g.m, g.gamma, g.see
 )
 SELECT m AS n_obs,
-       CAST(FLOOR((SELECT beta FROM fit) * 1000000.0 + 0.5) AS BIGINT)
+       {grid_sql('SELECT beta FROM fit', 6)}
          AS beta_micro,
-       CAST(FLOOR(gamma * 1000000.0 + 0.5) AS BIGINT) AS gamma_micro,
-       CAST(FLOOR(gamma / sqrt(ssu / (m - 2.0) / CAST(see AS DOUBLE))
-                  * 1000000.0 + 0.5) AS BIGINT) AS adf_t_micro,
+       {grid_sql('gamma', 6)} AS gamma_micro,
+       {grid_sql('gamma / sqrt(ssu / (m - 2.0) / CAST(see AS DOUBLE))', 6)}
+         AS adf_t_micro,
        gamma / sqrt(ssu / (m - 2.0) / CAST(see AS DOUBLE)) < -3.34
          AS cointegrated
 FROM sig
@@ -6150,16 +5990,16 @@ def ts_cointegration_egr(spark: SparkSession, sf_dir: str) -> DataFrame:
     the collapsed hourly table.
     """
     ev = load_table(spark, sf_dir, "events")
-    grid = F.floor(F.col("value") * F.lit(1e6) + F.lit(0.5)).cast("long")
+    micro = grid("value", 6)
     h = ev.groupBy(
         F.expr("CAST(unix_micros(ts) div 3600000000 AS BIGINT)")
         .alias("t")
     ).agg(
-        F.sum(F.when(F.col("event_type") == "view", grid).otherwise(0))
+        F.sum(F.when(F.col("event_type") == "view", micro).otherwise(0))
         .cast("long").alias("s1"),
         F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
         .cast("long").alias("c1"),
-        F.sum(F.when(F.col("event_type") == "click", grid).otherwise(0))
+        F.sum(F.when(F.col("event_type") == "click", micro).otherwise(0))
         .cast("long").alias("s2"),
         F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
         .cast("long").alias("c2"),
@@ -6194,13 +6034,14 @@ def ts_cointegration_egr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     resid = pair.crossJoin(F.broadcast(fit)).select(
         "t",
-        F.floor(
+        grid(
             (
                 F.col("y1").cast("double")
                 - (F.col("alpha") + F.col("beta")
                    * F.col("y2").cast("double"))
-            ) / F.lit(1000.0) + F.lit(0.5)
-        ).cast("long").alias("e3"),
+            ) / F.lit(1000.0),
+            0,
+        ).alias("e3"),
     )
     lagged = resid.select(
         "e3", F.lag("e3").over(Window.orderBy("t")).alias("ep")
@@ -6233,12 +6074,9 @@ def ts_cointegration_egr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return sig.crossJoin(F.broadcast(fit.select("beta"))).select(
         F.col("m").alias("n_obs"),
-        F.floor(F.col("beta") * F.lit(1e6) + F.lit(0.5)).cast("long")
-        .alias("beta_micro"),
-        F.floor(F.col("gamma") * F.lit(1e6) + F.lit(0.5)).cast("long")
-        .alias("gamma_micro"),
-        F.floor(adf_t * F.lit(1e6) + F.lit(0.5)).cast("long")
-        .alias("adf_t_micro"),
+        grid("beta", 6).alias("beta_micro"),
+        grid("gamma", 6).alias("gamma_micro"),
+        grid(adf_t, 6).alias("adf_t_micro"),
         (adf_t < F.lit(-3.34)).alias("cointegrated"),
     )
 
@@ -6252,7 +6090,7 @@ _MICROAGG_K = 100
     "privacy_microaggregation",
     oracle=f"""
 WITH v AS (
-  SELECT CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents,
+  SELECT {grid_sql('o_totalprice', 2)} AS cents,
          CAST(COUNT(*) AS BIGINT) AS c
   FROM orders GROUP BY 1
 ),
@@ -6287,9 +6125,9 @@ grp AS (
 ),
 terms AS (
   SELECT g, n, gn, gs, gq,
-         CAST(FLOOR((CAST(gq AS DOUBLE)
+         {grid_sql('''(CAST(gq AS DOUBLE)
                      - CAST(gs AS DOUBLE) * CAST(gs AS DOUBLE) / gn)
-                    / 1000000.0 + 0.5) AS BIGINT) AS sse_w_m
+                    / 1000000.0''', 0)} AS sse_w_m
   FROM grp
 ),
 tot AS (
@@ -6304,11 +6142,10 @@ tot AS (
 )
 SELECT CAST({_MICROAGG_K} AS BIGINT) AS k, n, n_groups, min_gn, max_gn,
        sse_within_m,
-       CAST(FLOOR(CAST(sse_within_m AS DOUBLE)
+       {grid_sql('''CAST(sse_within_m AS DOUBLE)
                   / ((CAST(q_all AS DOUBLE)
                       - CAST(s_all AS DOUBLE) * CAST(s_all AS DOUBLE) / n)
-                     / 1000000.0)
-                  * 1000000.0 + 0.5) AS BIGINT) AS info_loss_micro
+                     / 1000000.0)''', 6)} AS info_loss_micro
 FROM tot
 """,
 )
@@ -6333,8 +6170,7 @@ def privacy_microaggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load_table(spark, sf_dir, "orders")
     v = o.groupBy(
-        F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5))
-        .cast("long").alias("cents")
+        grid("o_totalprice", 2).alias("cents")
     ).agg(F.count(F.lit(1)).alias("c"))
     wcum = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, 0)
     wall = Window.orderBy(F.lit(1)).rowsBetween(
@@ -6377,13 +6213,14 @@ def privacy_microaggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     terms = grp.select(
         "g", "n", "gn", "gs", "gq",
-        F.floor(
+        grid(
             (
                 F.col("gq").cast("double")
                 - F.col("gs").cast("double") * F.col("gs").cast("double")
                 / F.col("gn")
-            ) / F.lit(1e6) + F.lit(0.5)
-        ).cast("long").alias("sse_w_m"),
+            ) / F.lit(1e6),
+            0,
+        ).alias("sse_w_m"),
     )
     tot = terms.agg(
         F.max("n").alias("n"),
@@ -6398,7 +6235,7 @@ def privacy_microaggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tot.select(
         F.lit(k).cast("long").alias("k"),
         "n", "n_groups", "min_gn", "max_gn", "sse_within_m",
-        F.floor(
+        grid(
             F.col("sse_within_m").cast("double")
             / (
                 (
@@ -6406,8 +6243,9 @@ def privacy_microaggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
                     - F.col("s_all").cast("double")
                     * F.col("s_all").cast("double") / F.col("n")
                 ) / F.lit(1e6)
-            ) * F.lit(1e6) + F.lit(0.5)
-        ).cast("long").alias("info_loss_micro"),
+            ),
+            6,
+        ).alias("info_loss_micro"),
     )
 
 
@@ -6419,16 +6257,7 @@ _THR_FP_COST, _THR_FN_COST = 1, 5
 @register(
     "ml_threshold_sweep",
     oracle=f"""
-WITH scored AS (
-  SELECT CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) // 1000 AS bin,
-         CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-              THEN 1 ELSE 0 END AS pos
-  FROM orders
-),
-bins AS (
-  SELECT bin, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(pos) AS BIGINT) AS p
-  FROM scored GROUP BY bin
-),
+WITH {_score_bins_sql("p")},
 cum AS (
   SELECT bin, n, p,
          CAST(SUM(n) OVER (ORDER BY bin DESC
@@ -6467,19 +6296,7 @@ def ml_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     descending cumulative window runs over the collapsed (bounded)
     bin domain — the ml_lift_curve / ml_brier_decomposition shape.
     """
-    o = load_table(spark, sf_dir, "orders")
-    scored = o.select(
-        F.floor(
-            F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5))
-            / F.lit(1000)
-        ).cast("long").alias("bin"),
-        F.when(
-            F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1
-        ).otherwise(0).alias("pos"),
-    )
-    bins = scored.groupBy("bin").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("pos").alias("p")
-    )
+    bins = _score_bins(spark, sf_dir, "p")
     wdesc = (
         Window.orderBy(F.col("bin").desc())
         .rowsBetween(Window.unboundedPreceding, 0)
@@ -6516,7 +6333,7 @@ def ml_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stat_power_analysis",
-    oracle="""
+    oracle=f"""
 WITH halves AS (
   SELECT CASE WHEN CAST(ts AS DATE) < DATE '2024-01-16'
               THEN 1 ELSE 2 END AS h,
@@ -6549,9 +6366,9 @@ calc AS (
   FROM rates
 )
 SELECT n1, x1, n2, x2,
-       CAST(FLOOR(p1 * 1000000.0 + 0.5) AS BIGINT) AS p1_micro,
-       CAST(FLOOR(p2 * 1000000.0 + 0.5) AS BIGINT) AS p2_micro,
-       CAST(FLOOR(z * 1000000.0 + 0.5) AS BIGINT) AS z_micro,
+       {grid_sql('p1', 6)} AS p1_micro,
+       {grid_sql('p2', 6)} AS p2_micro,
+       {grid_sql('z', 6)} AS z_micro,
        CAST(CEIL(n_req) AS BIGINT) AS n_per_arm_80pct,
        abs(z) > 1.959964 AS significant_now
 FROM calc
@@ -6616,12 +6433,9 @@ def stat_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return calc.select(
         "n1", "x1", "n2", "x2",
-        F.floor(F.col("p1") * F.lit(1e6) + F.lit(0.5))
-        .cast("long").alias("p1_micro"),
-        F.floor(F.col("p2") * F.lit(1e6) + F.lit(0.5))
-        .cast("long").alias("p2_micro"),
-        F.floor(F.col("z") * F.lit(1e6) + F.lit(0.5))
-        .cast("long").alias("z_micro"),
+        grid("p1", 6).alias("p1_micro"),
+        grid("p2", 6).alias("p2_micro"),
+        grid("z", 6).alias("z_micro"),
         F.ceil(F.col("n_req")).cast("long").alias("n_per_arm_80pct"),
         (F.abs(F.col("z")) > F.lit(1.959964)).alias("significant_now"),
     )
@@ -6634,7 +6448,7 @@ def _addfit_sql(table: str, epoch_us: str, idiv: str) -> str:
     return f"""
 WITH d AS (
   SELECT CAST({epoch_us}(ts) {idiv} 86400000000 AS BIGINT) AS day,
-         CAST(SUM(CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('value', 6)})
               AS BIGINT) {idiv} CAST(COUNT(*) AS BIGINT) AS y
   FROM {table} GROUP BY 1
 ),
@@ -6669,8 +6483,8 @@ fit AS (
 ),
 resid AS (
   SELECT t, dow, y,
-         CAST(FLOOR((CAST(y AS DOUBLE) - (a + b * CAST(t AS DOUBLE)))
-                    / 1000.0 + 0.5) AS BIGINT) AS r3
+         {grid_sql('''(CAST(y AS DOUBLE) - (a + b * CAST(t AS DOUBLE)))
+                    / 1000.0''', 0)} AS r3
   FROM rel CROSS JOIN fit
 ),
 dow_eff AS (
@@ -6689,20 +6503,18 @@ sse AS (
   FROM finals
 ),
 tot AS (
-  SELECT CAST(SUM(CAST(FLOOR((CAST(y AS DOUBLE) - ybar) / 1000.0 + 0.5)
-                       AS BIGINT)
-                  * CAST(FLOOR((CAST(y AS DOUBLE) - ybar) / 1000.0 + 0.5)
-                         AS BIGINT)) AS BIGINT) AS sse_mean
+  SELECT CAST(SUM({grid_sql('(CAST(y AS DOUBLE) - ybar) / 1000.0', 0)}
+                  * {grid_sql('(CAST(y AS DOUBLE) - ybar) / 1000.0', 0)}) AS BIGINT)
+                    AS sse_mean
   FROM rel CROSS JOIN fit
 )
 SELECT e.dow, e.nd,
        CAST(e.eff3 AS BIGINT) AS dow_effect_milli,
-       CAST(FLOOR((SELECT b FROM fit) * 1000.0 + 0.5) AS BIGINT)
+       {grid_sql('SELECT b FROM fit', 3)}
          AS slope_milli,
-       CAST(FLOOR((1.0 - CAST(s.sse_full AS DOUBLE) / t.sse_mean)
-                  * 1000000.0 + 0.5) AS BIGINT) AS r2_full_micro,
-       CAST(FLOOR((1.0 - CAST(s.sse_trend AS DOUBLE) / t.sse_mean)
-                  * 1000000.0 + 0.5) AS BIGINT) AS r2_trend_micro
+       {grid_sql('1.0 - CAST(s.sse_full AS DOUBLE) / t.sse_mean', 6)} AS r2_full_micro,
+       {grid_sql('1.0 - CAST(s.sse_trend AS DOUBLE) / t.sse_mean', 6)}
+         AS r2_trend_micro
 FROM dow_eff e CROSS JOIN sse s CROSS JOIN tot t
 ORDER BY e.dow
 """
@@ -6735,7 +6547,7 @@ def ts_additive_model_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("day")
     ).agg(
         F.expr(
-            "CAST(SUM(CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT))"
+            f"CAST(SUM({grid_sql('value', 6)})"
             " AS BIGINT) div CAST(COUNT(*) AS BIGINT)"
         ).alias("y")
     )
@@ -6771,12 +6583,13 @@ def ts_additive_model_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     resid = rel.crossJoin(F.broadcast(fit)).select(
         "t", "dow", "y",
-        F.floor(
+        grid(
             (
                 F.col("y").cast("double")
                 - (F.col("a") + F.col("b") * F.col("t").cast("double"))
-            ) / F.lit(1000.0) + F.lit(0.5)
-        ).cast("long").alias("r3"),
+            ) / F.lit(1000.0),
+            0,
+        ).alias("r3"),
     )
     dow_eff = resid.groupBy("dow").agg(
         F.count(F.lit(1)).cast("long").alias("nd"),
@@ -6791,10 +6604,7 @@ def ts_additive_model_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("r3") * F.col("r3")).cast("long").alias("sse_trend"),
         F.sum(F.col("f3") * F.col("f3")).cast("long").alias("sse_full"),
     )
-    dm = F.floor(
-        (F.col("y").cast("double") - F.col("ybar")) / F.lit(1000.0)
-        + F.lit(0.5)
-    ).cast("long")
+    dm = grid((F.col("y").cast("double") - F.col("ybar")) / F.lit(1000.0), 0)
     tot = rel.crossJoin(F.broadcast(fit)).agg(
         F.sum(dm * dm).cast("long").alias("sse_mean")
     )
@@ -6806,32 +6616,29 @@ def ts_additive_model_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "dow", "nd",
             F.col("eff3").cast("long").alias("dow_effect_milli"),
-            F.floor(F.col("b") * F.lit(1000.0) + F.lit(0.5))
-            .cast("long").alias("slope_milli"),
-            F.floor(
-                (
-                    F.lit(1.0)
-                    - F.col("sse_full").cast("double")
-                    / F.col("sse_mean")
-                ) * F.lit(1e6) + F.lit(0.5)
-            ).cast("long").alias("r2_full_micro"),
-            F.floor(
-                (
-                    F.lit(1.0)
-                    - F.col("sse_trend").cast("double")
-                    / F.col("sse_mean")
-                ) * F.lit(1e6) + F.lit(0.5)
-            ).cast("long").alias("r2_trend_micro"),
+            grid("b", 3).alias("slope_milli"),
+            grid(
+                F.lit(1.0) - F.col("sse_full").cast("double") / F.col("sse_mean"), 6
+            ).alias("r2_full_micro"),
+            grid(
+                F.lit(1.0) - F.col("sse_trend").cast("double") / F.col("sse_mean"), 6
+            ).alias("r2_trend_micro"),
         )
         .orderBy("dow")
     )
 
 
+#: stat_anderson_darling: ln F and ln(1 - F) on the 1e-9 grid before
+#: they meet the rank weights (the lf9/ln discipline).
+_AD_LN_FX = grid_sql("ln(fx)", 9)
+_AD_LN_1MFX = grid_sql("ln(1.0 - fx)", 9)
+
+
 @register(
     "stat_anderson_darling",
-    oracle="""
+    oracle=f"""
 WITH v AS (
-  SELECT CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) % 100 AS x,
+  SELECT {grid_sql('o_totalprice', 2)} % 100 AS x,
          CAST(COUNT(*) AS BIGINT) AS c
   FROM orders GROUP BY 1
 ),
@@ -6849,17 +6656,12 @@ spans AS (
 ),
 terms AS (
   SELECT n,
-         CAST(FLOOR((CAST(b * b - (a - 1) * (a - 1) AS DOUBLE) / n)
-                    * (CAST(CAST(FLOOR(ln(fx) * 1000000000.0 + 0.5)
-                                 AS BIGINT) AS DOUBLE) / 1000000000.0)
-                    * 1000000000.0 + 0.5) AS BIGINT) AS t1,
+         {grid_sql(f'''(CAST(b * b - (a - 1) * (a - 1) AS DOUBLE) / n)
+                    * (CAST({_AD_LN_FX} AS DOUBLE) / 1000000000.0)''', 9)} AS t1,
          CASE WHEN fx < 1.0 THEN
-           CAST(FLOOR((CAST(2 * n * c - (b * b - (a - 1) * (a - 1))
+           {grid_sql(f'''(CAST(2 * n * c - (b * b - (a - 1) * (a - 1))
                             AS DOUBLE) / n)
-                      * (CAST(CAST(FLOOR(ln(1.0 - fx) * 1000000000.0
-                                         + 0.5) AS BIGINT) AS DOUBLE)
-                         / 1000000000.0)
-                      * 1000000000.0 + 0.5) AS BIGINT)
+                      * (CAST({_AD_LN_1MFX} AS DOUBLE) / 1000000000.0)''', 9)}
            ELSE 0 END AS t2
   FROM spans
 ),
@@ -6870,10 +6672,9 @@ s AS (
   FROM terms
 )
 SELECT n,
-       CAST(FLOOR((-CAST(n AS DOUBLE)
+       {grid_sql('''(-CAST(n AS DOUBLE)
                    - (CAST(s1 AS DOUBLE) / 1000000000.0
-                      + CAST(s2 AS DOUBLE) / 1000000000.0))
-                  * 1000000.0 + 0.5) AS BIGINT) AS a2_micro,
+                      + CAST(s2 AS DOUBLE) / 1000000000.0))''', 6)} AS a2_micro,
        (-CAST(n AS DOUBLE)
         - (CAST(s1 AS DOUBLE) / 1000000000.0
            + CAST(s2 AS DOUBLE) / 1000000000.0)) > 2.492 AS non_uniform
@@ -6901,8 +6702,7 @@ def stat_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     v = o.groupBy(
         (
-            F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5))
-            .cast("long") % 100
+            grid("o_totalprice", 2) % 100
         ).alias("x")
     ).agg(F.count(F.lit(1)).alias("c"))
     wcum = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, 0)
@@ -6924,26 +6724,20 @@ def stat_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w1 = F.col("b") * F.col("b") - (F.col("a") - 1) * (F.col("a") - 1)
     w2 = F.lit(2) * F.col("n") * F.col("c") - w1
-    lf9 = F.floor(F.log("fx") * F.lit(1e9) + F.lit(0.5)).cast("long")
-    lg9 = F.floor(
-        F.log(F.lit(1.0) - F.col("fx")) * F.lit(1e9) + F.lit(0.5)
-    ).cast("long")
+    lf9 = grid(F.log("fx"), 9)
+    lg9 = grid(F.log(F.lit(1.0) - F.col("fx")), 9)
     # per-span terms normalize by n in DOUBLE before the 1e-9 grid —
     # the raw rank-weight x log product overflows int64 past ~1e5 rows
     terms = spans.select(
         "n",
-        F.floor(
-            (w1.cast("double") / F.col("n"))
-            * (lf9.cast("double") / F.lit(1e9))
-            * F.lit(1e9) + F.lit(0.5)
-        ).cast("long").alias("t1"),
+        grid(
+            (w1.cast("double") / F.col("n")) * (lf9.cast("double") / F.lit(1e9)), 9
+        ).alias("t1"),
         F.when(
             F.col("fx") < F.lit(1.0),
-            F.floor(
-                (w2.cast("double") / F.col("n"))
-                * (lg9.cast("double") / F.lit(1e9))
-                * F.lit(1e9) + F.lit(0.5)
-            ).cast("long"),
+            grid(
+                (w2.cast("double") / F.col("n")) * (lg9.cast("double") / F.lit(1e9)), 9
+            ),
         ).otherwise(0).alias("t2"),
     )
     s = terms.agg(
@@ -6960,7 +6754,7 @@ def stat_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return s.select(
         "n",
-        F.floor(a2 * F.lit(1e6) + F.lit(0.5)).cast("long").alias("a2_micro"),
+        grid(a2, 6).alias("a2_micro"),
         (a2 > F.lit(2.492)).alias("non_uniform"),
     )
 
@@ -6977,7 +6771,7 @@ def _ljung_sql(table: str, epoch_us: str, idiv: str) -> str:
         f"AS BIGINT) AS n{k}" for k in range(1, 6)
     )
     rhos = ",\n       ".join(
-        f"CAST(FLOOR(CAST(n{k} AS DOUBLE) / den * 1000000.0 + 0.5) "
+        f"CAST({grid_sql(f'CAST(n{k} AS DOUBLE) / den', 6)} "
         f"AS BIGINT) AS rho{k}_micro" for k in range(1, 6)
     )
     qterms = " + ".join(
@@ -6985,18 +6779,14 @@ def _ljung_sql(table: str, epoch_us: str, idiv: str) -> str:
         f"/ (nn - {k})" for k in range(1, 6)
     )
     return f"""
-WITH h AS (
-  SELECT CAST({epoch_us}(ts) {idiv} 3600000000 AS BIGINT) AS t,
-         CAST(SUM(CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT))
-              AS BIGINT) {idiv} CAST(COUNT(*) AS BIGINT) AS y
-  FROM {table} GROUP BY 1
+WITH h AS ({_hourly_mean_sql(table, epoch_us, idiv, 6)}
 ),
 m AS (
   SELECT CAST(SUM(y) AS BIGINT) {idiv} CAST(COUNT(*) AS BIGINT) AS mu
   FROM h
 ),
 c AS (
-  SELECT t, CAST(FLOOR((CAST(y AS DOUBLE) - mu) / 1000.0 + 0.5) AS BIGINT)
+  SELECT t, {grid_sql('(CAST(y AS DOUBLE) - mu) / 1000.0', 0)}
             AS yc
   FROM h CROSS JOIN m
 ),
@@ -7019,8 +6809,7 @@ q AS (
 )
 SELECT nn AS n,
        {rhos},
-       CAST(FLOOR(nd * (nd + 2.0) * ({qterms}) * 1000000.0 + 0.5)
-            AS BIGINT) AS q_micro,
+       {grid_sql(f'nd * (nd + 2.0) * ({qterms})', 6)} AS q_micro,
        nd * (nd + 2.0) * ({qterms}) > 11.07 AS autocorrelated
 FROM q
 """
@@ -7049,15 +6838,7 @@ def stat_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapsed hourly table.
     """
     ev = load_table(spark, sf_dir, "events")
-    h = ev.groupBy(
-        F.floor(F.unix_micros("ts") / F.lit(3_600_000_000))
-        .cast("long").alias("t")
-    ).agg(
-        F.expr(
-            "CAST(sum(CAST(floor(value * 1000000.0 + 0.5) AS BIGINT)) "
-            "AS BIGINT) div CAST(count(1) AS BIGINT)"
-        ).alias("y")
-    )
+    h = _hourly_mean(ev, 6)
     m = h.agg(
         F.expr(
             "CAST(sum(y) AS BIGINT) div CAST(count(1) AS BIGINT)"
@@ -7065,10 +6846,7 @@ def stat_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = h.crossJoin(F.broadcast(m)).select(
         "t",
-        F.floor(
-            (F.col("y").cast("double") - F.col("mu")) / F.lit(1000.0)
-            + F.lit(0.5)
-        ).cast("long").alias("yc"),
+        grid((F.col("y").cast("double") - F.col("mu")) / F.lit(1000.0), 0).alias("yc"),
     )
     w = Window.orderBy("t")
     lagged = c.select(
@@ -7101,14 +6879,10 @@ def stat_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sums.select(
         F.col("nn0").alias("n"),
         *[
-            F.floor(
-                F.col(f"n{k}").cast("double") / den * F.lit(1e6)
-                + F.lit(0.5)
-            ).cast("long").alias(f"rho{k}_micro")
+            grid(F.col(f"n{k}").cast("double") / den, 6).alias(f"rho{k}_micro")
             for k in range(1, 6)
         ],
-        F.floor(qstat * F.lit(1e6) + F.lit(0.5)).cast("long")
-        .alias("q_micro"),
+        grid(qstat, 6).alias("q_micro"),
         (qstat > F.lit(11.07)).alias("autocorrelated"),
     )
 
@@ -7119,11 +6893,7 @@ def _sampen_tpl_sql(table: str, epoch_us: str, idiv: str) -> str:
     via localCheckpoint; inlined as a CTE it would replay the rollup
     and window once per self-join side, the fisher lesson)."""
     return f"""
-WITH h AS (
-  SELECT CAST({epoch_us}(ts) {idiv} 3600000000 AS BIGINT) AS t,
-         CAST(SUM(CAST(FLOOR(value * 1000.0 + 0.5) AS BIGINT))
-              AS BIGINT) {idiv} CAST(COUNT(*) AS BIGINT) AS y
-  FROM {table} GROUP BY 1
+WITH h AS ({_hourly_mean_sql(table, epoch_us, idiv, 3)}
 ),
 stats AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -7133,10 +6903,9 @@ stats AS (
 ),
 tol AS (
   SELECT n,
-         CAST(FLOOR(0.2 * sqrt(CAST(q AS DOUBLE) / n
+         {grid_sql('''0.2 * sqrt(CAST(q AS DOUBLE) / n
                                - (CAST(s AS DOUBLE) / n)
-                                 * (CAST(s AS DOUBLE) / n)) + 0.5)
-              AS BIGINT) AS r
+                                 * (CAST(s AS DOUBLE) / n))''', 0)} AS r
   FROM stats
 )
 SELECT h.t, h.y,
@@ -7166,8 +6935,7 @@ a3 AS (
 meta AS (SELECT MAX(n) AS n, MAX(r) AS r FROM {tpl})
 SELECT meta.n, meta.r, b2.b, a3.a,
        CASE WHEN a3.a > 0 AND b2.b > 0
-            THEN CAST(FLOOR(-ln(CAST(a3.a AS DOUBLE) / b2.b)
-                            * 1000000.0 + 0.5) AS BIGINT)
+            THEN {grid_sql('-ln(CAST(a3.a AS DOUBLE) / b2.b)', 6)}
        END AS sampen_micro
 FROM meta CROSS JOIN b2 CROSS JOIN a3
 """
@@ -7204,15 +6972,7 @@ def ts_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     side replays the rollup (the fisher lesson).
     """
     ev = load_table(spark, sf_dir, "events")
-    h = ev.groupBy(
-        F.floor(F.unix_micros("ts") / F.lit(3_600_000_000))
-        .cast("long").alias("t")
-    ).agg(
-        F.expr(
-            "CAST(sum(CAST(floor(value * 1000.0 + 0.5) AS BIGINT)) "
-            "AS BIGINT) div CAST(count(1) AS BIGINT)"
-        ).alias("y")
-    )
+    h = _hourly_mean(ev, 3)
     sd = F.col("s").cast("double")
     tol = h.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -7220,14 +6980,14 @@ def ts_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("y") * F.col("y")).cast("long").alias("q"),
     ).select(
         "n",
-        F.floor(
+        grid(
             F.lit(0.2)
             * F.sqrt(
                 F.col("q").cast("double") / F.col("n")
                 - (sd / F.col("n")) * (sd / F.col("n"))
-            )
-            + F.lit(0.5)
-        ).cast("long").alias("r"),
+            ),
+            0,
+        ).alias("r"),
     )
     w = Window.orderBy("t")
     tpl = (
@@ -7270,10 +7030,7 @@ def ts_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n", "r", "b", "a",
             F.when(
                 (F.col("a") > 0) & (F.col("b") > 0),
-                F.floor(
-                    -F.log(F.col("a").cast("double") / F.col("b"))
-                    * F.lit(1e6) + F.lit(0.5)
-                ).cast("long"),
+                grid(-F.log(F.col("a").cast("double") / F.col("b")), 6),
             ).alias("sampen_micro"),
         )
     )
@@ -7306,8 +7063,7 @@ WITH ints AS (
 )
 SELECT i,
        CAST(SUM(CASE WHEN i = 0 THEN 0
-                     ELSE CAST(FLOOR(ln(CAST(i AS DOUBLE))
-                                     * 1000000000.0 + 0.5) AS BIGINT)
+                     ELSE {grid_sql('ln(CAST(i AS DOUBLE))', 9)}
                 END) OVER (ORDER BY i ROWS UNBOUNDED PRECEDING)
             AS BIGINT) AS lf9
 FROM ints
@@ -7332,16 +7088,14 @@ WITH norm AS (
 ),
 pdf AS (
   SELECT g.g, n.n1, n.x1, n.n2, n.x2,
-         CAST(FLOOR(exp((CAST(n.lb1 AS DOUBLE)
+         {grid_sql('''exp((CAST(n.lb1 AS DOUBLE)
                          + n.x1 * CAST(g.lnp9 AS BIGINT)
                          + (n.n1 - n.x1) * CAST(g.lnq9 AS BIGINT))
-                        / 1000000000.0)
-                    * 1000000000000.0 + 0.5) AS BIGINT) AS f1_pico,
-         CAST(FLOOR(exp((CAST(n.lb2 AS DOUBLE)
+                        / 1000000000.0)''', 12)} AS f1_pico,
+         {grid_sql('''exp((CAST(n.lb2 AS DOUBLE)
                          + n.x2 * CAST(g.lnp9 AS BIGINT)
                          + (n.n2 - n.x2) * CAST(g.lnq9 AS BIGINT))
-                        / 1000000000.0)
-                    * 1000000000000.0 + 0.5) AS BIGINT) AS f2_pico
+                        / 1000000000.0)''', 12)} AS f2_pico
   FROM {grid} g CROSS JOIN norm n
 ),
 cdf AS (
@@ -7355,22 +7109,21 @@ cdf AS (
 ),
 terms AS (
   SELECT g, n1, x1, n2, x2,
-         CAST(FLOOR((CAST(f1_pico AS DOUBLE) / 1000000000000.0)
+         {grid_sql('''(CAST(f1_pico AS DOUBLE) / 1000000000000.0)
                     * ((CAST(cdf2_hi AS DOUBLE)
                         - 0.5 * CAST(f2_pico AS DOUBLE))
                        / 1000000000000.0 / 10000.0)
-                    / 10000.0 * 1000000000000.0 + 0.5) AS BIGINT) AS t_pico
+                    / 10000.0''', 12)} AS t_pico
   FROM cdf
 )
 SELECT MAX(n1) AS n1, MAX(x1) AS x1, MAX(n2) AS n2, MAX(x2) AS x2,
-       CAST(FLOOR((CAST(MAX(x1) AS DOUBLE) + 1.0)
-                  / (MAX(n1) + 2.0) * 1000000.0 + 0.5) AS BIGINT)
+       {grid_sql('''(CAST(MAX(x1) AS DOUBLE) + 1.0)
+                  / (MAX(n1) + 2.0)''', 6)}
          AS p1_mean_micro,
-       CAST(FLOOR((CAST(MAX(x2) AS DOUBLE) + 1.0)
-                  / (MAX(n2) + 2.0) * 1000000.0 + 0.5) AS BIGINT)
+       {grid_sql('''(CAST(MAX(x2) AS DOUBLE) + 1.0)
+                  / (MAX(n2) + 2.0)''', 6)}
          AS p2_mean_micro,
-       CAST(FLOOR(CAST(SUM(t_pico) AS DOUBLE) / 1000000.0 + 0.5)
-            AS BIGINT) AS prob_p1_gt_p2_micro,
+       {grid_sql('CAST(SUM(t_pico) AS DOUBLE) / 1000000.0', 0)} AS prob_p1_gt_p2_micro,
        CAST(SUM(t_pico) AS DOUBLE) / 1000000000000.0 > 0.95
          AS decisive
 FROM terms
@@ -7390,10 +7143,8 @@ FROM terms
         )
         + "), grid AS MATERIALIZED ("
         "SELECT CAST(g AS BIGINT) AS g,"
-        " CAST(FLOOR(ln(CAST(g AS DOUBLE) / 10000.0)"
-        "            * 1000000000.0 + 0.5) AS BIGINT) AS lnp9,"
-        " CAST(FLOOR(ln(1.0 - CAST(g AS DOUBLE) / 10000.0)"
-        "            * 1000000000.0 + 0.5) AS BIGINT) AS lnq9"
+        f" {grid_sql('ln(CAST(g AS DOUBLE) / 10000.0)', 9)} AS lnp9,"
+        f" {grid_sql('ln(1.0 - CAST(g AS DOUBLE) / 10000.0)', 9)} AS lnq9"
         " FROM (SELECT unnest(generate_series(1, 9999)) AS g)"
         "), "
         + _bayes_main_sql("counts", "lf", "grid").lstrip()[len("WITH ") :]
@@ -7449,11 +7200,7 @@ def stat_bayes_ab_posterior(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     term = F.when(
         F.col("i") == 0, F.lit(0).cast("long")
-    ).otherwise(
-        F.floor(
-            F.log(F.col("i").cast("double")) * F.lit(1e9) + F.lit(0.5)
-        ).cast("long")
-    )
+    ).otherwise(grid(F.log(F.col("i").cast("double")), 9))
 
     def _lf_at(bound, alias):
         return F.sum(
@@ -7468,23 +7215,18 @@ def stat_bayes_ab_posterior(spark: SparkSession, sf_dir: str) -> DataFrame:
         _lf_at(F.col("x2"), "m2_lf9"),
         _lf_at(F.col("n2") - F.col("x2"), "m3_lf9"),
     )
-    # grid is referenced exactly once (the pdf projection), so unlike
+    # lgrid is referenced exactly once (the pdf projection), so unlike
     # counts it needs no localCheckpoint — no plan subtree is replayed
     # by fan-out.
-    grid = (
+    lgrid = (
         counts.sparkSession.range(1, 10000)
         .select(F.col("id").cast("long").alias("g"))
         .select(
             "g",
-            F.floor(
-                F.log(F.col("g").cast("double") / F.lit(10000.0))
-                * F.lit(1e9) + F.lit(0.5)
-            ).cast("long").alias("lnp9"),
-            F.floor(
-                F.log(
-                    F.lit(1.0) - F.col("g").cast("double") / F.lit(10000.0)
-                ) * F.lit(1e9) + F.lit(0.5)
-            ).cast("long").alias("lnq9"),
+            grid(F.log(F.col("g").cast("double") / F.lit(10000.0)), 9).alias("lnp9"),
+            grid(
+                F.log(F.lit(1.0) - F.col("g").cast("double") / F.lit(10000.0)), 9
+            ).alias("lnq9"),
         )
     )
 
@@ -7495,9 +7237,9 @@ def stat_bayes_ab_posterior(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("m1_lf9") - F.col("m2_lf9") - F.col("m3_lf9"))
         .alias("lb2"),
     )
-    pdf = grid.crossJoin(F.broadcast(norm)).select(
+    pdf = lgrid.crossJoin(F.broadcast(norm)).select(
         "g", "n1", "x1", "n2", "x2",
-        F.floor(
+        grid(
             F.exp(
                 (
                     F.col("lb1").cast("double")
@@ -7505,9 +7247,10 @@ def stat_bayes_ab_posterior(spark: SparkSession, sf_dir: str) -> DataFrame:
                     + (F.col("n1") - F.col("x1"))
                     * F.col("lnq9").cast("long")
                 ) / F.lit(1e9)
-            ) * F.lit(1e12) + F.lit(0.5)
-        ).cast("long").alias("f1_pico"),
-        F.floor(
+            ),
+            12,
+        ).alias("f1_pico"),
+        grid(
             F.exp(
                 (
                     F.col("lb2").cast("double")
@@ -7515,8 +7258,9 @@ def stat_bayes_ab_posterior(spark: SparkSession, sf_dir: str) -> DataFrame:
                     + (F.col("n2") - F.col("x2"))
                     * F.col("lnq9").cast("long")
                 ) / F.lit(1e9)
-            ) * F.lit(1e12) + F.lit(0.5)
-        ).cast("long").alias("f2_pico"),
+            ),
+            12,
+        ).alias("f2_pico"),
     )
     cdf = pdf.select(
         "g", "n1", "x1", "n2", "x2", "f1_pico",
@@ -7534,7 +7278,7 @@ def stat_bayes_ab_posterior(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     terms = cdf.select(
         "g", "n1", "x1", "n2", "x2",
-        F.floor(
+        grid(
             (F.col("f1_pico").cast("double") / F.lit(1e12))
             * (
                 (
@@ -7542,23 +7286,22 @@ def stat_bayes_ab_posterior(spark: SparkSession, sf_dir: str) -> DataFrame:
                     - F.lit(0.5) * F.col("f2_pico").cast("double")
                 ) / F.lit(1e12) / F.lit(10000.0)
             )
-            / F.lit(10000.0) * F.lit(1e12) + F.lit(0.5)
-        ).cast("long").alias("t_pico"),
+            / F.lit(10000.0),
+            12,
+        ).alias("t_pico"),
     )
     return terms.agg(
         F.max("n1").alias("n1"), F.max("x1").alias("x1"),
         F.max("n2").alias("n2"), F.max("x2").alias("x2"),
-        F.floor(
-            (F.max("x1").cast("double") + F.lit(1.0))
-            / (F.max("n1") + F.lit(2.0)) * F.lit(1e6) + F.lit(0.5)
-        ).cast("long").alias("p1_mean_micro"),
-        F.floor(
-            (F.max("x2").cast("double") + F.lit(1.0))
-            / (F.max("n2") + F.lit(2.0)) * F.lit(1e6) + F.lit(0.5)
-        ).cast("long").alias("p2_mean_micro"),
-        F.floor(
-            F.sum("t_pico").cast("double") / F.lit(1e6) + F.lit(0.5)
-        ).cast("long").alias("prob_p1_gt_p2_micro"),
+        grid(
+            (F.max("x1").cast("double") + F.lit(1.0)) / (F.max("n1") + F.lit(2.0)), 6
+        ).alias("p1_mean_micro"),
+        grid(
+            (F.max("x2").cast("double") + F.lit(1.0)) / (F.max("n2") + F.lit(2.0)), 6
+        ).alias("p2_mean_micro"),
+        grid(
+            F.sum("t_pico").cast("double") / F.lit(1e6), 0
+        ).alias("prob_p1_gt_p2_micro"),
         (F.sum("t_pico").cast("double") / F.lit(1e12) > F.lit(0.95))
         .alias("decisive"),
     )
@@ -7566,7 +7309,7 @@ def stat_bayes_ab_posterior(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stat_tost_equivalence",
-    oracle="""
+    oracle=f"""
 WITH agg AS (
   SELECT CAST(SUM(CASE WHEN CAST(ts AS DATE) < DATE '2024-01-16'
                        THEN 1 ELSE 0 END) AS BIGINT) AS n1,
@@ -7598,9 +7341,9 @@ z AS (
   FROM se
 )
 SELECT n1, x1, n2, x2,
-       CAST(FLOOR((p1 - p2) * 1000000.0 + 0.5) AS BIGINT) AS diff_micro,
-       CAST(FLOOR(z_lower * 1000000.0 + 0.5) AS BIGINT) AS z_lower_micro,
-       CAST(FLOOR(z_upper * 1000000.0 + 0.5) AS BIGINT) AS z_upper_micro,
+       {grid_sql('p1 - p2', 6)} AS diff_micro,
+       {grid_sql('z_lower', 6)} AS z_lower_micro,
+       {grid_sql('z_upper', 6)} AS z_upper_micro,
        z_lower > 1.644854 AND z_upper > 1.644854 AS equivalent
 FROM z
 """,
@@ -7659,12 +7402,9 @@ def stat_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return z.select(
         "n1", "x1", "n2", "x2",
-        F.floor((F.col("p1") - F.col("p2")) * F.lit(1e6) + F.lit(0.5))
-        .cast("long").alias("diff_micro"),
-        F.floor(F.col("z_lower") * F.lit(1e6) + F.lit(0.5))
-        .cast("long").alias("z_lower_micro"),
-        F.floor(F.col("z_upper") * F.lit(1e6) + F.lit(0.5))
-        .cast("long").alias("z_upper_micro"),
+        grid(F.col("p1") - F.col("p2"), 6).alias("diff_micro"),
+        grid("z_lower", 6).alias("z_lower_micro"),
+        grid("z_upper", 6).alias("z_upper_micro"),
         (
             (F.col("z_lower") > F.lit(1.644854))
             & (F.col("z_upper") > F.lit(1.644854))
@@ -7674,14 +7414,14 @@ def stat_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_cuped_variance_reduction",
-    oracle="""
+    oracle=f"""
 WITH per_user AS (
   SELECT user_id,
          CAST(SUM(CASE WHEN CAST(ts AS DATE) < DATE '2024-01-16'
-                       THEN CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT)
+                       THEN {grid_sql('value', 6)}
                        ELSE 0 END) AS BIGINT) AS x,
          CAST(SUM(CASE WHEN CAST(ts AS DATE) >= DATE '2024-01-16'
-                       THEN CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT)
+                       THEN {grid_sql('value', 6)}
                        ELSE 0 END) AS BIGINT) AS y
   FROM events GROUP BY user_id
 ),
@@ -7708,13 +7448,12 @@ moments AS (
   FROM sums
 )
 SELECT n,
-       CAST(FLOOR(cov_xy / var_x * 1000000.0 + 0.5) AS BIGINT)
+       {grid_sql('cov_xy / var_x', 6)}
          AS theta_micro,
-       CAST(FLOOR(cov_xy / sqrt(var_x) / sqrt(var_y) * 1000000.0 + 0.5)
-            AS BIGINT) AS corr_micro,
-       CAST(FLOOR((1.0 - (cov_xy / sqrt(var_x) / sqrt(var_y))
-                         * (cov_xy / sqrt(var_x) / sqrt(var_y)))
-                  * 1000000.0 + 0.5) AS BIGINT) AS var_ratio_micro
+       {grid_sql('cov_xy / sqrt(var_x) / sqrt(var_y)', 6)} AS corr_micro,
+       {grid_sql('''(1.0 - (cov_xy / sqrt(var_x) / sqrt(var_y))
+                         * (cov_xy / sqrt(var_x) / sqrt(var_y)))''', 6)}
+                       AS var_ratio_micro
 FROM moments
 """,
 )
@@ -7736,7 +7475,7 @@ def events_cuped_variance_reduction(
     reduction — the mergeable-moments shape (agg_higher_moments).
     """
     ev = load_table(spark, sf_dir, "events")
-    vmic = F.floor(F.col("value") * F.lit(1e6) + F.lit(0.5)).cast("long")
+    vmic = grid("value", 6)
     cut = F.col("ts").cast("date") < F.lit("2024-01-16").cast("date")
     per_user = ev.groupBy("user_id").agg(
         F.sum(F.when(cut, vmic).otherwise(0)).alias("x"),
@@ -7765,27 +7504,16 @@ def events_cuped_variance_reduction(
     )
     return moments.select(
         "n",
-        F.floor(F.col("cov_xy") / F.col("var_x") * F.lit(1e6) + F.lit(0.5))
-        .cast("long").alias("theta_micro"),
-        F.floor(rho * F.lit(1e6) + F.lit(0.5)).cast("long").alias("corr_micro"),
-        F.floor((F.lit(1.0) - rho * rho) * F.lit(1e6) + F.lit(0.5))
-        .cast("long").alias("var_ratio_micro"),
+        grid(F.col("cov_xy") / F.col("var_x"), 6).alias("theta_micro"),
+        grid(rho, 6).alias("corr_micro"),
+        grid(F.lit(1.0) - rho * rho, 6).alias("var_ratio_micro"),
     )
 
 
 @register(
     "ml_woe_iv",
-    oracle="""
-WITH scored AS (
-  SELECT CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) // 1000 AS bin,
-         CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-              THEN 1 ELSE 0 END AS pos
-  FROM orders
-),
-bins AS (
-  SELECT bin, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(pos) AS BIGINT) AS g
-  FROM scored GROUP BY bin
-),
+    oracle=f"""
+WITH {_score_bins_sql("g")},
 cum AS (
   SELECT bin, n, g,
          CAST(COALESCE(SUM(n) OVER (ORDER BY bin
@@ -7814,9 +7542,9 @@ woe AS (
 ),
 terms AS (
   SELECT decile, g, b,
-         CAST(FLOOR(w * 1000000.0 + 0.5) AS BIGINT) AS woe_micro,
-         CAST(FLOOR((CAST(g AS DOUBLE) / tg - CAST(b AS DOUBLE) / tb) * w
-                    * 1000000000.0 + 0.5) AS BIGINT) AS iv_nano
+         {grid_sql('w', 6)} AS woe_micro,
+         {grid_sql('(CAST(g AS DOUBLE) / tg - CAST(b AS DOUBLE) / tb) * w', 9)}
+           AS iv_nano
   FROM woe
 )
 SELECT decile, g, b, woe_micro,
@@ -7838,19 +7566,7 @@ def ml_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     100-TB posture: one data-sized hash aggregate; all downstream on
     the bounded bin/decile tables.
     """
-    o = load_table(spark, sf_dir, "orders")
-    scored = o.select(
-        F.floor(
-            F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5))
-            / F.lit(1000)
-        ).cast("long").alias("bin"),
-        F.when(
-            F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1
-        ).otherwise(0).alias("pos"),
-    )
-    bins = scored.groupBy("bin").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("pos").alias("g")
-    )
+    bins = _score_bins(spark, sf_dir, "g")
     wb = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, -1)
     wall = Window.orderBy(F.lit(1)).rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
@@ -7880,11 +7596,8 @@ def ml_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     terms = woe.select(
         "decile", "g", "b",
-        F.floor(F.col("w") * F.lit(1e6) + F.lit(0.5))
-        .cast("long").alias("woe_micro"),
-        F.floor(
-            (gshare - bshare) * F.col("w") * F.lit(1e9) + F.lit(0.5)
-        ).cast("long").alias("iv_nano"),
+        grid("w", 6).alias("woe_micro"),
+        grid((gshare - bshare) * F.col("w"), 9).alias("iv_nano"),
     )
     return terms.select(
         "decile", "g", "b", "woe_micro",
@@ -7904,13 +7617,13 @@ est AS (
   FROM lr
 )
 SELECT o1_sum, n_event_days,
-       CAST(FLOOR(beta * 1000000.0 + 0.5) AS BIGINT) AS beta_micro,
-       CAST(FLOOR(se * 1000000.0 + 0.5) AS BIGINT) AS se_micro,
-       CAST(FLOOR(exp(beta) * 1000000.0 + 0.5) AS BIGINT)
+       {grid_sql('beta', 6)} AS beta_micro,
+       {grid_sql('se', 6)} AS se_micro,
+       {grid_sql('exp(beta)', 6)}
          AS hazard_ratio_micro,
-       CAST(FLOOR(exp(beta - 1.959964 * se) * 1000000.0 + 0.5) AS BIGINT)
+       {grid_sql('exp(beta - 1.959964 * se)', 6)}
          AS hr_ci_lo_micro,
-       CAST(FLOOR(exp(beta + 1.959964 * se) * 1000000.0 + 0.5) AS BIGINT)
+       {grid_sql('exp(beta + 1.959964 * se)', 6)}
          AS hr_ci_hi_micro,
        abs(beta / se) > 1.959964 AS significant
 FROM est
@@ -7944,20 +7657,15 @@ def ml_cox_one_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return est.select(
         "o1_sum", "n_event_days",
-        F.floor(F.col("beta") * F.lit(1e6) + F.lit(0.5))
-        .cast("long").alias("beta_micro"),
-        F.floor(F.col("se") * F.lit(1e6) + F.lit(0.5))
-        .cast("long").alias("se_micro"),
-        F.floor(F.exp(F.col("beta")) * F.lit(1e6) + F.lit(0.5))
-        .cast("long").alias("hazard_ratio_micro"),
-        F.floor(
-            F.exp(F.col("beta") - F.lit(1.959964) * F.col("se"))
-            * F.lit(1e6) + F.lit(0.5)
-        ).cast("long").alias("hr_ci_lo_micro"),
-        F.floor(
-            F.exp(F.col("beta") + F.lit(1.959964) * F.col("se"))
-            * F.lit(1e6) + F.lit(0.5)
-        ).cast("long").alias("hr_ci_hi_micro"),
+        grid("beta", 6).alias("beta_micro"),
+        grid("se", 6).alias("se_micro"),
+        grid(F.exp(F.col("beta")), 6).alias("hazard_ratio_micro"),
+        grid(
+            F.exp(F.col("beta") - F.lit(1.959964) * F.col("se")), 6
+        ).alias("hr_ci_lo_micro"),
+        grid(
+            F.exp(F.col("beta") + F.lit(1.959964) * F.col("se")), 6
+        ).alias("hr_ci_hi_micro"),
         (F.abs(F.col("beta") / F.col("se")) > F.lit(1.959964))
         .alias("significant"),
     )
@@ -7972,7 +7680,7 @@ def _backtest_sql(table: str, epoch_us: str, idiv: str) -> str:
     return f"""
 WITH d AS (
   SELECT CAST({epoch_us}(ts) {idiv} 86400000000 AS BIGINT) AS t,
-         CAST(SUM(CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('value', 6)})
               AS BIGINT) {idiv} CAST(COUNT(*) AS BIGINT) AS y
   FROM {table} GROUP BY 1
 ),
@@ -7984,9 +7692,9 @@ feats AS (
          LAG(y, 1) OVER (ORDER BY t) AS y_1,
          LAG(y, 2) OVER (ORDER BY t) AS y_2,
          LAG(y, 7) OVER (ORDER BY t) AS y_7,
-         CAST(FLOOR((CAST(LAG(y, 1) OVER (ORDER BY t) AS DOUBLE)
+         {grid_sql('''(CAST(LAG(y, 1) OVER (ORDER BY t) AS DOUBLE)
                      - FIRST_VALUE(y) OVER (ORDER BY t))
-                    / (t - 1) + 0.5) AS BIGINT) AS step
+                    / (t - 1)''', 0)} AS step
   FROM rel
 ),
 fc AS (
@@ -8008,10 +7716,8 @@ err AS (
 )
 SELECT method,
        CAST(COUNT(*) AS BIGINT) AS n_origins,
-       CAST(FLOOR(CAST(SUM(ae) AS DOUBLE) / COUNT(*) / 1000.0 + 0.5)
-            AS BIGINT) AS mae_milli,
-       CAST(FLOOR(sqrt(CAST(SUM(se) AS DOUBLE) / COUNT(*)) / 1000.0
-                  + 0.5) AS BIGINT) AS rmse_milli
+       {grid_sql('CAST(SUM(ae) AS DOUBLE) / COUNT(*) / 1000.0', 0)} AS mae_milli,
+       {grid_sql('sqrt(CAST(SUM(se) AS DOUBLE) / COUNT(*)) / 1000.0', 0)} AS rmse_milli
 FROM err GROUP BY method
 ORDER BY method
 """
@@ -8044,7 +7750,7 @@ def ts_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("t")
     ).agg(
         F.expr(
-            "CAST(SUM(CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT))"
+            f"CAST(SUM({grid_sql('value', 6)})"
             " AS BIGINT) div CAST(COUNT(*) AS BIGINT)"
         ).alias("y")
     )
@@ -8060,10 +7766,9 @@ def ts_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         lag1.alias("y_1"),
         F.lag("y", 2).over(wt).alias("y_2"),
         F.lag("y", 7).over(wt).alias("y_7"),
-        F.floor(
-            (lag1.cast("double") - F.first("y").over(wt))
-            / (F.col("t") - F.lit(1)) + F.lit(0.5)
-        ).cast("long").alias("step"),
+        grid(
+            (lag1.cast("double") - F.first("y").over(wt)) / (F.col("t") - F.lit(1)), 0
+        ).alias("step"),
     )
     fc = feats.filter(
         F.col("y_7").isNotNull() & (F.col("t") >= 8)
@@ -8092,14 +7797,12 @@ def ts_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         err.groupBy("method")
         .agg(
             cnt.cast("long").alias("n_origins"),
-            F.floor(
-                F.sum("ae").cast("double") / cnt / F.lit(1000.0)
-                + F.lit(0.5)
-            ).cast("long").alias("mae_milli"),
-            F.floor(
-                F.sqrt(F.sum("se").cast("double") / cnt) / F.lit(1000.0)
-                + F.lit(0.5)
-            ).cast("long").alias("rmse_milli"),
+            grid(
+                F.sum("ae").cast("double") / cnt / F.lit(1000.0), 0
+            ).alias("mae_milli"),
+            grid(
+                F.sqrt(F.sum("se").cast("double") / cnt) / F.lit(1000.0), 0
+            ).alias("rmse_milli"),
         )
         .orderBy("method")
     )
@@ -8107,7 +7810,7 @@ def ts_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stat_mcnemar",
-    oracle="""
+    oracle=f"""
 WITH per_user AS (
   SELECT user_id,
          MAX(CASE WHEN CAST(ts AS DATE) < DATE '2024-01-08'
@@ -8130,8 +7833,8 @@ cells AS (
 )
 SELECT a, b, c, d,
        CASE WHEN b + c > 0 THEN
-         CAST(FLOOR((CAST(b AS DOUBLE) - c) * (CAST(b AS DOUBLE) - c)
-                    / (CAST(b AS DOUBLE) + c) * 1000000.0 + 0.5) AS BIGINT)
+         {grid_sql('''(CAST(b AS DOUBLE) - c) * (CAST(b AS DOUBLE) - c)
+                    / (CAST(b AS DOUBLE) + c)''', 6)}
        ELSE NULL END AS chi2_micro,
        CASE WHEN b + c > 0 THEN
          (CAST(b AS DOUBLE) - c) * (CAST(b AS DOUBLE) - c)
@@ -8183,7 +7886,7 @@ def stat_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
         "a", "b", "c", "d",
         F.when(
             nonzero,
-            F.floor(chi2 * F.lit(1e6) + F.lit(0.5)).cast("long"),
+            grid(chi2, 6),
         ).alias("chi2_micro"),
         F.when(nonzero, chi2 > F.lit(3.841)).alias("reject"),
     )
@@ -8191,7 +7894,7 @@ def stat_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_poisson_rate_test",
-    oracle="""
+    oracle=f"""
 WITH agg AS (
   SELECT CAST(SUM(CASE WHEN event_type = 'error'
                         AND CAST(ts AS DATE) < DATE '2024-01-16'
@@ -8217,9 +7920,9 @@ z AS (
   FROM agg
 )
 SELECT x1, x2, t1, t2,
-       CAST(FLOOR(rate_ratio * 1000000.0 + 0.5) AS BIGINT)
+       {grid_sql('rate_ratio', 6)}
          AS rate_ratio_micro,
-       CAST(FLOOR(zstat * 1000000.0 + 0.5) AS BIGINT) AS z_micro,
+       {grid_sql('zstat', 6)} AS z_micro,
        abs(zstat) > 1.959964 AS rates_differ
 FROM z
 """,
@@ -8266,18 +7969,15 @@ def events_poisson_rate_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return agg.select(
         "x1", "x2", "t1", "t2",
-        F.floor(
-            F.when(nonzero, r1 / r2) * F.lit(1e6) + F.lit(0.5)
-        ).cast("long").alias("rate_ratio_micro"),
-        F.floor(zstat * F.lit(1e6) + F.lit(0.5)).cast("long")
-        .alias("z_micro"),
+        grid(F.when(nonzero, r1 / r2), 6).alias("rate_ratio_micro"),
+        grid(zstat, 6).alias("z_micro"),
         (F.abs(zstat) > F.lit(1.959964)).alias("rates_differ"),
     )
 
 
 @register(
     "stat_cochran_q",
-    oracle="""
+    oracle=f"""
 WITH per_user AS (
   SELECT user_id,
          MAX(CASE WHEN CAST(ts AS DATE) BETWEEN DATE '2024-01-01'
@@ -8316,7 +8016,7 @@ q AS (
   FROM sums
 )
 SELECT n, g1, g2, g3, g4,
-       CAST(FLOOR(qstat * 1000000.0 + 0.5) AS BIGINT) AS q_micro,
+       {grid_sql('qstat', 6)} AS q_micro,
        qstat > 7.815 AS reject
 FROM q
 """,
@@ -8381,35 +8081,15 @@ def stat_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return sums.select(
         "n", "g1", "g2", "g3", "g4",
-        F.floor(qstat * F.lit(1e6) + F.lit(0.5)).cast("long")
-        .alias("q_micro"),
+        grid(qstat, 6).alias("q_micro"),
         (qstat > F.lit(7.815)).alias("reject"),
     )
 
 
 @register(
     "stat_dunn_posthoc",
-    oracle="""
-WITH v AS (
-  SELECT l_returnflag AS grp,
-         CAST(FLOOR(l_quantity * 100.0 + 0.5) AS BIGINT) AS q,
-         CAST(COUNT(*) AS BIGINT) AS c
-  FROM lineitem GROUP BY 1, 2
-),
-t AS (SELECT q, CAST(SUM(c) AS BIGINT) AS t FROM v GROUP BY q),
-r AS (
-  SELECT q, t,
-         CAST(2 * COALESCE(SUM(t) OVER (ORDER BY q
-                                        ROWS BETWEEN UNBOUNDED PRECEDING
-                                        AND 1 PRECEDING), 0)
-              + t + 1 AS BIGINT) AS r2
-  FROM t
-),
-g AS (
-  SELECT grp, CAST(SUM(v.c) AS BIGINT) AS nj,
-         CAST(SUM(v.c * r.r2) AS BIGINT) AS rj2
-  FROM v JOIN r USING (q) GROUP BY grp
-),
+    oracle=f"""
+WITH {_RANK_SUMS_SQL},
 tot AS (
   SELECT CAST(SUM(nj) AS BIGINT) AS n,
          (SELECT CAST(SUM(t * t * t - t) AS BIGINT) FROM t) AS ttsum
@@ -8434,8 +8114,8 @@ z AS (
   FROM pairs
 )
 SELECT grp_a, grp_b, na, nb,
-       CAST(FLOOR(rdiff * 1000.0 + 0.5) AS BIGINT) AS rank_diff_milli,
-       CAST(FLOOR(zval * 1000000.0 + 0.5) AS BIGINT) AS z_micro,
+       {grid_sql('rdiff', 3)} AS rank_diff_milli,
+       {grid_sql('zval', 6)} AS z_micro,
        abs(zval) > 2.394 AS reject_bonferroni
 FROM z
 ORDER BY grp_a, grp_b
@@ -8455,29 +8135,7 @@ def stat_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates, collapsed-domain rank window); the pair table is
     k(k-1)/2 rows.
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    v = li.groupBy(
-        F.col("l_returnflag").alias("grp"),
-        F.floor(F.col("l_quantity") * F.lit(100.0) + F.lit(0.5))
-        .cast("long").alias("q"),
-    ).agg(F.count(F.lit(1)).alias("c"))
-    t = v.groupBy("q").agg(F.sum("c").alias("t"))
-    w = Window.orderBy("q").rowsBetween(Window.unboundedPreceding, -1)
-    r = t.select(
-        "q", "t",
-        (
-            F.lit(2) * F.coalesce(F.sum("t").over(w), F.lit(0))
-            + F.col("t") + F.lit(1)
-        ).cast("long").alias("r2"),
-    )
-    g = (
-        v.join(r.select("q", "r2"), "q")
-        .groupBy("grp")
-        .agg(
-            F.sum("c").alias("nj"),
-            F.sum(F.col("c") * F.col("r2")).alias("rj2"),
-        )
-    )
+    t, g = _rank_sums(spark, sf_dir)
     ties = t.agg(
         F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t"))
         .alias("ttsum")
@@ -8515,20 +8173,18 @@ def stat_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return pairs.select(
         "grp_a", "grp_b", "na", "nb",
-        F.floor(F.col("rdiff") * F.lit(1000.0) + F.lit(0.5))
-        .cast("long").alias("rank_diff_milli"),
-        F.floor(F.col("zval") * F.lit(1e6) + F.lit(0.5))
-        .cast("long").alias("z_micro"),
+        grid("rdiff", 3).alias("rank_diff_milli"),
+        grid("zval", 6).alias("z_micro"),
         (F.abs(F.col("zval")) > F.lit(2.394)).alias("reject_bonferroni"),
     ).orderBy("grp_a", "grp_b")
 
 
 @register(
     "stat_page_trend",
-    oracle="""
+    oracle=f"""
 WITH cell AS (
   SELECT CAST(ts AS DATE) AS day, event_type,
-         CAST(SUM(CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('value', 6)})
               AS BIGINT) // CAST(COUNT(*) AS BIGINT) AS y
   FROM events GROUP BY 1, 2
 ),
@@ -8564,7 +8220,7 @@ z AS (
   FROM l
 )
 SELECT n, k, CAST(l2 // 2 AS BIGINT) AS page_l_x2_halved,
-       CAST(FLOOR(zval * 1000000.0 + 0.5) AS BIGINT) AS z_micro,
+       {grid_sql('zval', 6)} AS z_micro,
        abs(zval) > 1.959964 AS monotone_trend
 FROM z
 """,
@@ -8592,7 +8248,7 @@ def stat_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").cast("date").alias("day"), "event_type"
     ).agg(
         F.expr(
-            "CAST(sum(CAST(floor(value * 1000000.0 + 0.5) AS BIGINT)) "
+            f"CAST(sum({grid_sql('value', 6)}) "
             "AS BIGINT) div CAST(count(1) AS BIGINT)"
         ).alias("y")
     )
@@ -8641,18 +8297,17 @@ def stat_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return l.select(
         "n", "k",
         F.expr("CAST(l2 div 2 AS BIGINT)").alias("page_l_x2_halved"),
-        F.floor(zval * F.lit(1e6) + F.lit(0.5)).cast("long")
-        .alias("z_micro"),
+        grid(zval, 6).alias("z_micro"),
         (F.abs(zval) > F.lit(1.959964)).alias("monotone_trend"),
     )
 
 
 @register(
     "ts_mann_kendall",
-    oracle="""
+    oracle=f"""
 WITH d AS (
   SELECT CAST(ts AS DATE) AS day,
-         CAST(SUM(CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('value', 6)})
               AS BIGINT) AS y
   FROM events GROUP BY 1
 ),
@@ -8689,7 +8344,7 @@ z AS (
   FROM v
 )
 SELECT n, s_stat, var18,
-       CAST(FLOOR(zval * 1000000.0 + 0.5) AS BIGINT) AS z_micro,
+       {grid_sql('zval', 6)} AS z_micro,
        abs(zval) > 1.959964 AS monotonic_trend
 FROM z
 """,
@@ -8714,9 +8369,7 @@ def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     d = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.sum(
-            F.floor(F.col("value") * F.lit(1e6) + F.lit(0.5)).cast("long")
-        ).cast("long").alias("y")
+        F.sum(grid("value", 6)).cast("long").alias("y")
     )
     a = d.select(F.col("day").alias("da"), F.col("y").alias("ya"))
     b = d.select(F.col("day").alias("db"), F.col("y").alias("yb"))
@@ -8759,18 +8412,17 @@ def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
             * (F.lit(2) * F.col("n") + F.lit(5))
             - F.col("tie_term")
         ).alias("var18"),
-        F.floor(zval * F.lit(1e6) + F.lit(0.5)).cast("long")
-        .alias("z_micro"),
+        grid(zval, 6).alias("z_micro"),
         (F.abs(zval) > F.lit(1.959964)).alias("monotonic_trend"),
     )
 
 
 @register(
     "stat_bartlett",
-    oracle="""
+    oracle=f"""
 WITH base AS (
   SELECT o_orderpriority AS grp,
-         CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents
+         {grid_sql('o_totalprice', 2)} AS cents
   FROM orders
 ),
 gs AS (
@@ -8794,13 +8446,11 @@ pg AS (
 ),
 terms AS (
   SELECT nj, dj, rq_nano,
-         CAST(FLOOR((CAST(nj AS DOUBLE) - 1.0)
+         {grid_sql('''(CAST(nj AS DOUBLE) - 1.0)
               * ln((CAST(dj AS DOUBLE)
                     - CAST(rq_nano AS DOUBLE) / 1000000000.0)
-                   / (CAST(nj AS DOUBLE) - 1.0)) * 1000000.0 + 0.5)
-              AS BIGINT) AS lnterm_micro,
-         CAST(FLOOR(1000000000.0 / (CAST(nj AS DOUBLE) - 1.0) + 0.5)
-              AS BIGINT) AS inv_nano
+                   / (CAST(nj AS DOUBLE) - 1.0))''', 6)} AS lnterm_micro,
+         {grid_sql('1000000000.0 / (CAST(nj AS DOUBLE) - 1.0)', 0)} AS inv_nano
   FROM pg
 ),
 tot AS (
@@ -8824,7 +8474,7 @@ tt AS (
                   / (3.0 * (CAST(k AS DOUBLE) - 1.0))) AS t_stat
   FROM tot
 )
-SELECT k, n, CAST(FLOOR(t_stat * 1000000.0 + 0.5) AS BIGINT) AS t_micro,
+SELECT k, n, {grid_sql('t_stat', 6)} AS t_micro,
        t_stat > 9.488 AS unequal_variance
 FROM tt
 """,
@@ -8859,8 +8509,7 @@ def stat_bartlett(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     base = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("grp"),
-        F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5))
-        .cast("long").alias("cents"),
+        grid("o_totalprice", 2).alias("cents"),
     )
     cdec = F.col("cents").cast("decimal(18,0)")
     gs = base.groupBy("grp").agg(
@@ -8893,11 +8542,8 @@ def stat_bartlett(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) / (njd - F.lit(1.0))
     terms = pg.select(
         "nj", "dj", "rq_nano",
-        F.floor(
-            (njd - F.lit(1.0)) * F.log(s2) * F.lit(1e6) + F.lit(0.5)
-        ).cast("long").alias("lnterm_micro"),
-        F.floor(F.lit(1e9) / (njd - F.lit(1.0)) + F.lit(0.5))
-        .cast("long").alias("inv_nano"),
+        grid((njd - F.lit(1.0)) * F.log(s2), 6).alias("lnterm_micro"),
+        grid(F.lit(1e9) / (njd - F.lit(1.0)), 0).alias("inv_nano"),
     )
     tot = terms.agg(
         F.count(F.lit(1)).cast("long").alias("k"),
@@ -8928,19 +8574,18 @@ def stat_bartlett(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return tot.select(
         "k", "n",
-        F.floor(t_stat * F.lit(1e6) + F.lit(0.5)).cast("long")
-        .alias("t_micro"),
+        grid(t_stat, 6).alias("t_micro"),
         (t_stat > F.lit(9.488)).alias("unequal_variance"),
     )
 
 
 @register(
     "stat_breusch_pagan",
-    oracle="""
+    oracle=f"""
 WITH d AS MATERIALIZED (
   SELECT date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))
            AS x,
-         CAST(SUM(CAST(FLOOR(o_totalprice + 0.5) AS BIGINT)) AS BIGINT)
+         CAST(SUM({grid_sql('o_totalprice', 0)}) AS BIGINT)
            AS y
   FROM orders GROUP BY 1
 ),
@@ -8967,9 +8612,9 @@ bx AS MATERIALIZED (
 ),
 g AS MATERIALIZED (
   SELECT x,
-         CAST(FLOOR((CAST(y AS DOUBLE) - alpha - bxv)
+         {grid_sql('''(CAST(y AS DOUBLE) - alpha - bxv)
                     * (CAST(y AS DOUBLE) - alpha - bxv)
-                    / 1000000.0 + 0.5) AS BIGINT) AS gg
+                    / 1000000.0''', 0)} AS gg
   FROM bx
 ),
 aux AS (
@@ -8992,8 +8637,8 @@ lm AS (
   FROM s CROSS JOIN coef CROSS JOIN aux
 )
 SELECT n AS n_days,
-       CAST(FLOOR(beta * 1000000.0 + 0.5) AS BIGINT) AS beta_micro,
-       CAST(FLOOR(lm_stat * 1000000.0 + 0.5) AS BIGINT) AS lm_micro,
+       {grid_sql('beta', 6)} AS beta_micro,
+       {grid_sql('lm_stat', 6)} AS lm_micro,
        lm_stat > 3.841 AS heteroscedastic
 FROM lm
 """,
@@ -9026,9 +8671,7 @@ def stat_breusch_pagan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("1995-01-01").cast("date"),
         ).alias("x")
     ).agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") + F.lit(0.5)).cast("long")
-        ).cast("long").alias("y")
+        F.sum(grid("o_totalprice", 0)).cast("long").alias("y")
     ).localCheckpoint(eager=True)
     s = d.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -9055,8 +8698,7 @@ def stat_breusch_pagan(spark: SparkSession, sf_dir: str) -> DataFrame:
     resid = F.col("y").cast("double") - F.col("alpha") - F.col("bxv")
     g = bx.select(
         "x",
-        F.floor(resid * resid / F.lit(1e6) + F.lit(0.5))
-        .cast("long").alias("gg"),
+        grid(resid * resid / F.lit(1e6), 0).alias("gg"),
     )
     gdec = F.col("gg").cast("decimal(18,0)")
     aux = g.agg(
@@ -9080,22 +8722,16 @@ def stat_breusch_pagan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return both.select(
         F.col("n").alias("n_days"),
-        F.floor(F.col("beta") * F.lit(1e6) + F.lit(0.5)).cast("long")
-        .alias("beta_micro"),
-        F.floor(lm_stat * F.lit(1e6) + F.lit(0.5)).cast("long")
-        .alias("lm_micro"),
+        grid("beta", 6).alias("beta_micro"),
+        grid(lm_stat, 6).alias("lm_micro"),
         (lm_stat > F.lit(3.841)).alias("heteroscedastic"),
     )
 
 
 @register(
     "ts_adf_unitroot",
-    oracle="""
-WITH h AS MATERIALIZED (
-  SELECT CAST(epoch_us(ts) // 3600000000 AS BIGINT) AS t,
-         CAST(SUM(CAST(FLOOR(value * 1000.0 + 0.5) AS BIGINT))
-              AS BIGINT) // CAST(COUNT(*) AS BIGINT) AS y
-  FROM events GROUP BY 1
+    oracle=f"""
+WITH h AS MATERIALIZED ({_hourly_mean_sql("events", "epoch_us", "//", 3)}
 ),
 pairs AS MATERIALIZED (
   SELECT t, y, LAG(y) OVER (ORDER BY t) AS yl FROM h
@@ -9125,9 +8761,8 @@ rx AS MATERIALIZED (
   FROM p CROSS JOIN coef
 ),
 e AS MATERIALIZED (
-  SELECT CAST(FLOOR((CAST(dy AS DOUBLE) - alpha - rxv)
-                    * (CAST(dy AS DOUBLE) - alpha - rxv) + 0.5)
-              AS BIGINT) AS e2
+  SELECT {grid_sql('''(CAST(dy AS DOUBLE) - alpha - rxv)
+                    * (CAST(dy AS DOUBLE) - alpha - rxv)''', 0)} AS e2
   FROM rx
 ),
 tstat AS (
@@ -9140,8 +8775,8 @@ tstat AS (
   GROUP BY s.n, coef.rho, s.sxx, s.sx
 )
 SELECT n,
-       CAST(FLOOR(rho * 1000000.0 + 0.5) AS BIGINT) AS rho_micro,
-       CAST(FLOOR(t_stat * 1000000.0 + 0.5) AS BIGINT) AS t_micro,
+       {grid_sql('rho', 6)} AS rho_micro,
+       {grid_sql('t_stat', 6)} AS t_micro,
        t_stat < -2.86 AS stationary
 FROM tstat
 """,
@@ -9167,15 +8802,7 @@ def ts_adf_unitroot(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual pass run on the collapsed hourly table.
     """
     ev = load_table(spark, sf_dir, "events")
-    h = ev.groupBy(
-        F.floor(F.unix_micros("ts") / F.lit(3_600_000_000))
-        .cast("long").alias("t")
-    ).agg(
-        F.expr(
-            "CAST(sum(CAST(floor(value * 1000.0 + 0.5) AS BIGINT)) "
-            "AS BIGINT) div CAST(count(1) AS BIGINT)"
-        ).alias("y")
-    )
+    h = _hourly_mean(ev, 3)
     w = Window.orderBy("t")
     p = (
         h.select("t", "y", F.lag("y").over(w).alias("yl"))
@@ -9207,9 +8834,7 @@ def ts_adf_unitroot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     resid = F.col("dy").cast("double") - F.col("alpha") - F.col("rxv")
     e2sum = rx.agg(
-        F.sum(
-            F.floor(resid * resid + F.lit(0.5)).cast("long")
-        ).cast("long").alias("se2")
+        F.sum(grid(resid * resid, 0)).cast("long").alias("se2")
     )
     both = e2sum.crossJoin(F.broadcast(coef))
     ndd = F.col("n").cast("double")
@@ -9222,10 +8847,8 @@ def ts_adf_unitroot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return both.select(
         "n",
-        F.floor(F.col("rho") * F.lit(1e6) + F.lit(0.5)).cast("long")
-        .alias("rho_micro"),
-        F.floor(t_stat * F.lit(1e6) + F.lit(0.5)).cast("long")
-        .alias("t_micro"),
+        grid("rho", 6).alias("rho_micro"),
+        grid(t_stat, 6).alias("t_micro"),
         (t_stat < F.lit(-2.86)).alias("stationary"),
     )
 
@@ -9241,7 +8864,7 @@ _PINBALL_CUT = "2024-01-16"
     oracle=f"""
 WITH d AS (
   SELECT CAST(ts AS DATE) AS day,
-         CAST(SUM(CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('value', 6)})
               AS BIGINT) AS y
   FROM events GROUP BY 1
 ),
@@ -9285,9 +8908,7 @@ def ml_pinball_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     d = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.sum(
-            F.floor(F.col("value") * F.lit(1e6) + F.lit(0.5)).cast("long")
-        ).cast("long").alias("y")
+        F.sum(grid("value", 6)).cast("long").alias("y")
     )
     cut = F.lit(_PINBALL_CUT).cast("date")
     train = d.where(F.col("day") < cut).agg(
@@ -9367,11 +8988,9 @@ lam AS MATERIALIZED (
 ),
 e AS MATERIALIZED (
   SELECT t, hr, n,
-         CAST(FLOOR((l0 - n * ln(l0)) * 1000000.0 + 0.5)
-              AS BIGINT) AS e0,
-         CAST(FLOOR(({_VIT_BURST_MULT} * l0
-                     - n * ln({_VIT_BURST_MULT} * l0)) * 1000000.0 + 0.5)
-              AS BIGINT) AS e1
+         {grid_sql('l0 - n * ln(l0)', 6)} AS e0,
+         {grid_sql(f'''({_VIT_BURST_MULT} * l0
+                     - n * ln({_VIT_BURST_MULT} * l0))''', 6)} AS e1
   FROM idx, lam
 ),
 rec(t, c0, c1) AS (
@@ -9426,17 +9045,13 @@ def ts_burst_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     e = idx.crossJoin(F.broadcast(lam)).select(
         "t", "hr", "n",
-        F.floor(
-            (F.col("l0") - F.col("n") * F.log(F.col("l0")))
-            * F.lit(1e6) + F.lit(0.5)
-        ).cast("long").alias("e0"),
-        F.floor(
-            (
-                F.lit(float(_VIT_BURST_MULT)) * F.col("l0")
-                - F.col("n")
-                * F.log(F.lit(float(_VIT_BURST_MULT)) * F.col("l0"))
-            ) * F.lit(1e6) + F.lit(0.5)
-        ).cast("long").alias("e1"),
+        grid(F.col("l0") - F.col("n") * F.log(F.col("l0")), 6).alias("e0"),
+        grid(
+            F.lit(float(_VIT_BURST_MULT)) * F.col("l0")
+            - F.col("n")
+            * F.log(F.lit(float(_VIT_BURST_MULT)) * F.col("l0")),
+            6,
+        ).alias("e1"),
     )
     return e.groupBy(F.lit(1).alias("_g")).applyInPandas(
         _viterbi_kernel,
@@ -9493,7 +9108,7 @@ def _ewma_kernel(key, pdf):
     oracle=f"""
 WITH RECURSIVE d AS MATERIALIZED (
   SELECT epoch_us(ts) // 86400000000 AS day_id,
-         CAST(SUM(CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('value', 2)})
               AS BIGINT) AS v
   FROM events GROUP BY 1
 ),
@@ -9543,10 +9158,7 @@ def ts_ewma_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ev.groupBy(
         F.expr("unix_micros(ts) div 86400000000").alias("day_id")
     ).agg(
-        F.sum(
-            F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
-            .cast("long")
-        ).cast("long").alias("v")
+        F.sum(grid("value", 2)).cast("long").alias("v")
     )
     idx = d.select(
         (F.row_number().over(Window.orderBy("day_id")) - 1).alias("t"),
@@ -9561,10 +9173,10 @@ def ts_ewma_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts_pettitt_test",
-    oracle="""
+    oracle=f"""
 WITH obs AS (
   SELECT event_type,
-         CAST(FLOOR(value * 10.0 + 0.5) AS BIGINT) AS v,
+         {grid_sql('value', 1)} AS v,
          ts, event_id
   FROM events),
 vals AS (
@@ -9595,11 +9207,10 @@ best AS (
          MAX(abs(uk)) AS k_stat
   FROM u GROUP BY event_type)
 SELECT event_type, n AS n_obs, k_star, k_stat,
-       CAST(CAST(FLOOR(2.0 * exp(-6.0 * CAST(k_stat AS DOUBLE)
+       CAST({grid_sql('''2.0 * exp(-6.0 * CAST(k_stat AS DOUBLE)
                                  * CAST(k_stat AS DOUBLE)
                  / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-                    + CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))
-                       * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE)
+                    + CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))''', 6)} AS DOUBLE)
          / 1000000.0 AS p_approx
 FROM best ORDER BY event_type
 """,
@@ -9630,8 +9241,7 @@ def ts_pettitt_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     obs = ev.select(
         "event_type",
-        F.floor(F.col("value") * F.lit(10.0) + F.lit(0.5)).cast("long")
-        .alias("v"),
+        grid("value", 1).alias("v"),
         "ts", "event_id",
     )
     vals = obs.groupBy("event_type", "v").agg(
@@ -9671,16 +9281,16 @@ def ts_pettitt_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     return best.select(
         "event_type", F.col("n").alias("n_obs"), "k_star", "k_stat",
         (
-            F.floor(
+            grid(
                 F.lit(2.0)
                 * F.exp(
                     F.lit(-6.0)
                     * F.col("k_stat").cast("double")
                     * F.col("k_stat").cast("double")
                     / (nd * nd * nd + nd * nd)
-                )
-                * F.lit(1e6) + F.lit(0.5)
-            ).cast("long").cast("double") / F.lit(1e6)
+                ),
+                6,
+            ).cast("double") / F.lit(1e6)
         ).alias("p_approx"),
     ).orderBy("event_type")
 
@@ -9695,7 +9305,7 @@ _MOOD_CRIT_MICRO = 9487729
     oracle=f"""
 WITH obs AS (
   SELECT event_type,
-         CAST(FLOOR(value * 10.0 + 0.5) AS BIGINT) AS v
+         {grid_sql('value', 1)} AS v
   FROM events),
 tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM obs),
 vals AS (
@@ -9715,14 +9325,14 @@ marg AS (
   SELECT CAST(SUM(a) AS BIGINT) AS ta, CAST(SUM(ng) AS BIGINT) AS n
   FROM grp),
 terms AS (
-  SELECT CAST(FLOOR((
+  SELECT {grid_sql('''(
            POW(CAST(a AS DOUBLE)
                - CAST(ng AS DOUBLE) * ta / n, 2)
              / (CAST(ng AS DOUBLE) * ta / n)
            + POW(CAST(ng - a AS DOUBLE)
                  - CAST(ng AS DOUBLE) * (n - ta) / n, 2)
              / (CAST(ng AS DOUBLE) * (n - ta) / n)
-         ) * 1000000.0 + 0.5) AS BIGINT) AS t_micro,
+         )''', 6)} AS t_micro,
          ng
   FROM grp, marg)
 SELECT CAST(SUM(ng) AS BIGINT) AS n_total,
@@ -9758,8 +9368,7 @@ def stat_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     obs = ev.select(
         "event_type",
-        F.floor(F.col("value") * F.lit(10.0) + F.lit(0.5)).cast("long")
-        .alias("v"),
+        grid("value", 1).alias("v"),
     )
     vals = obs.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     tot = obs.agg(F.count(F.lit(1)).cast("long").alias("n"))
@@ -9791,15 +9400,14 @@ def stat_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     eb = ngd * (F.col("n") - F.col("ta")) / F.col("n")
     terms = grp.crossJoin(F.broadcast(marg)).select(
         "ng", "m",
-        F.floor(
-            (
-                F.pow(F.col("a").cast("double") - ea, F.lit(2.0)) / ea
-                + F.pow(
-                    (F.col("ng") - F.col("a")).cast("double") - eb,
-                    F.lit(2.0),
-                ) / eb
-            ) * F.lit(1e6) + F.lit(0.5)
-        ).cast("long").alias("t_micro"),
+        grid(
+            F.pow(F.col("a").cast("double") - ea, F.lit(2.0)) / ea
+            + F.pow(
+                (F.col("ng") - F.col("a")).cast("double") - eb,
+                F.lit(2.0),
+            ) / eb,
+            6,
+        ).alias("t_micro"),
     )
     return terms.agg(
         F.sum("ng").cast("long").alias("n_total"),
@@ -9813,11 +9421,11 @@ def stat_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts_seasonal_mann_kendall",
-    oracle="""
+    oracle=f"""
 WITH d AS (
   SELECT epoch_us(ts) // 86400000000 AS day,
          CAST((epoch_us(ts) // 86400000000) % 7 AS BIGINT) AS season,
-         CAST(SUM(CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT))
+         CAST(SUM({grid_sql('value', 6)})
               AS BIGINT) AS y
   FROM events GROUP BY 1, 2
 ),
@@ -9850,13 +9458,13 @@ tot AS (
   JOIN ties t USING (season)
 )
 SELECT n_days, s_total, var18,
-       CAST(FLOOR((CASE WHEN s_total > 0 THEN
+       {grid_sql('''(CASE WHEN s_total > 0 THEN
                      (CAST(s_total AS DOUBLE) - 1.0)
                      / sqrt(CAST(var18 AS DOUBLE) / 18.0)
                    WHEN s_total < 0 THEN
                      (CAST(s_total AS DOUBLE) + 1.0)
                      / sqrt(CAST(var18 AS DOUBLE) / 18.0)
-                   ELSE 0.0 END) * 1000000.0 + 0.5) AS BIGINT) AS z_micro,
+                   ELSE 0.0 END)''', 6)} AS z_micro,
        abs(CASE WHEN s_total > 0 THEN
              (CAST(s_total AS DOUBLE) - 1.0)
              / sqrt(CAST(var18 AS DOUBLE) / 18.0)
@@ -9893,9 +9501,7 @@ def ts_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ev.groupBy(
         F.expr("unix_micros(ts) div 86400000000").alias("day")
     ).agg(
-        F.sum(
-            F.floor(F.col("value") * F.lit(1e6) + F.lit(0.5)).cast("long")
-        ).cast("long").alias("y")
+        F.sum(grid("value", 6)).cast("long").alias("y")
     ).select("day", (F.col("day") % 7).cast("long").alias("season"), "y")
     a, b = d.alias("a"), d.alias("b")
     per_season = (
@@ -9961,8 +9567,7 @@ def ts_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return tot.select(
         "n_days", "s_total", "var18",
-        F.floor(zval * F.lit(1e6) + F.lit(0.5)).cast("long")
-        .alias("z_micro"),
+        grid(zval, 6).alias("z_micro"),
         (F.abs(zval) > F.lit(1.959964)).alias("monotonic_trend"),
     )
 
@@ -9975,7 +9580,7 @@ _SPRT_P0, _SPRT_P1 = 0.20, 0.25
 
 
 def _sprt_c_sql(expr: str) -> str:
-    return f"CAST(FLOOR(({expr}) * 1000000000.0 + 0.5) AS BIGINT)"
+    return f"{grid_sql(f'{expr}', 9)}"
 
 
 @register(
@@ -10284,10 +9889,8 @@ WITH cat AS (
 ),
 g AS (
   SELECT seg,
-         CAST(FLOOR(cos(radians(CAST(ra_c AS DOUBLE) / 100.0))
-                    * 1000000000.0 + 0.5) AS BIGINT) AS c9,
-         CAST(FLOOR(sin(radians(CAST(ra_c AS DOUBLE) / 100.0))
-                    * 1000000000.0 + 0.5) AS BIGINT) AS s9
+         {grid_sql('cos(radians(CAST(ra_c AS DOUBLE) / 100.0))', 9)} AS c9,
+         {grid_sql('sin(radians(CAST(ra_c AS DOUBLE) / 100.0))', 9)} AS s9
   FROM cat
 ),
 s AS (
@@ -10296,16 +9899,14 @@ s AS (
   FROM g GROUP BY seg
 )
 SELECT seg, n,
-       CAST(FLOOR(sqrt(CAST(sc AS DOUBLE) * CAST(sc AS DOUBLE)
+       {grid_sql('''sqrt(CAST(sc AS DOUBLE) * CAST(sc AS DOUBLE)
                        + CAST(ss AS DOUBLE) * CAST(ss AS DOUBLE))
-                  / (CAST(n AS DOUBLE) * 1000000000.0)
-                  * 1000000.0 + 0.5) AS BIGINT) AS rbar_micro,
+                  / (CAST(n AS DOUBLE) * 1000000000.0)''', 6)} AS rbar_micro,
        ROUND(degrees(atan2(CAST(ss AS DOUBLE), CAST(sc AS DOUBLE))), 6)
          AS mean_dir_deg,
-       CAST(FLOOR((CAST(sc AS DOUBLE) * CAST(sc AS DOUBLE)
+       {grid_sql('''(CAST(sc AS DOUBLE) * CAST(sc AS DOUBLE)
                    + CAST(ss AS DOUBLE) * CAST(ss AS DOUBLE))
-                  / (CAST(n AS DOUBLE) * 1e18) * 1000000.0 + 0.5)
-            AS BIGINT) AS z_micro,
+                  / (CAST(n AS DOUBLE) * 1e18)''', 6)} AS z_micro,
        (CAST(sc AS DOUBLE) * CAST(sc AS DOUBLE)
         + CAST(ss AS DOUBLE) * CAST(ss AS DOUBLE))
          / (CAST(n AS DOUBLE) * 1e18) > 2.995732 AS nonuniform_5pct
@@ -10344,10 +9945,8 @@ def stat_circular_rayleigh(spark: SparkSession, sf_dir: str) -> DataFrame:
     rad = F.radians(F.col("ra_c").cast("double") / F.lit(100.0))
     g = cat.select(
         "seg",
-        F.floor(F.cos(rad) * F.lit(1e9) + F.lit(0.5)).cast("long")
-        .alias("c9"),
-        F.floor(F.sin(rad) * F.lit(1e9) + F.lit(0.5)).cast("long")
-        .alias("s9"),
+        grid(F.cos(rad), 9).alias("c9"),
+        grid(F.sin(rad), 9).alias("s9"),
     )
     s = g.groupBy("seg").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -10361,17 +9960,16 @@ def stat_circular_rayleigh(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = r2 / (F.col("n").cast("double") * F.lit(1e18))
     return s.select(
         "seg", "n",
-        F.floor(
-            F.sqrt(r2) / (F.col("n").cast("double") * F.lit(1e9))
-            * F.lit(1e6) + F.lit(0.5)
-        ).cast("long").alias("rbar_micro"),
+        grid(
+            F.sqrt(r2) / (F.col("n").cast("double") * F.lit(1e9)), 6
+        ).alias("rbar_micro"),
         F.round(
             F.degrees(
                 F.atan2(F.col("ss").cast("double"), F.col("sc").cast("double"))
             ),
             6,
         ).alias("mean_dir_deg"),
-        F.floor(z * F.lit(1e6) + F.lit(0.5)).cast("long").alias("z_micro"),
+        grid(z, 6).alias("z_micro"),
         (z > F.lit(2.995732)).alias("nonuniform_5pct"),
     ).orderBy("seg")
 
@@ -10380,10 +9978,10 @@ def stat_circular_rayleigh(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stat_deming_regression",
     oracle=f"""
 WITH g AS (
-  SELECT CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT)
+  SELECT {grid_sql('o_totalprice', 2)}
            + {md5_int_sql("'a' || CAST(o_orderkey AS VARCHAR)", 1, 6)} % 2001
            - 1000 AS x,
-         CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT)
+         {grid_sql('o_totalprice', 2)}
            + {md5_int_sql("'b' || CAST(o_orderkey AS VARCHAR)", 1, 6)} % 2001
            - 1000 AS y
   FROM orders
@@ -10404,15 +10002,15 @@ c AS (
   FROM m
 )
 SELECT n,
-       CAST(FLOOR((cyy - cxx + sqrt((cyy - cxx) * (cyy - cxx)
+       {grid_sql('''(cyy - cxx + sqrt((cyy - cxx) * (cyy - cxx)
                                     + 4.0 * cxy * cxy))
-                  / (2.0 * cxy) * 1000000.0 + 0.5) AS BIGINT)
+                  / (2.0 * cxy)''', 6)}
          AS slope_micro,
-       CAST(FLOOR((CAST(sy AS DOUBLE)
+       {grid_sql('''(CAST(sy AS DOUBLE)
                    - (cyy - cxx + sqrt((cyy - cxx) * (cyy - cxx)
                                        + 4.0 * cxy * cxy))
                      / (2.0 * cxy) * CAST(sx AS DOUBLE))
-                  / CAST(n AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)
+                  / CAST(n AS DOUBLE)''', 6)}
          AS intercept_micro
 FROM c
 """,
@@ -10445,9 +10043,7 @@ def stat_deming_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     with one correctly-rounded cast.
     """
     o = load_table(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)).cast(
-        "long"
-    )
+    cents = grid("o_totalprice", 2)
 
     def noisy(tag: str):
         key = F.concat(F.lit(tag), F.col("o_orderkey").cast("string"))
@@ -10478,10 +10074,8 @@ def stat_deming_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) / (F.lit(2.0) * cxy)
     return m.select(
         "n",
-        F.floor(slope * F.lit(1e6) + F.lit(0.5)).cast("long")
-        .alias("slope_micro"),
-        F.floor(
-            (F.col("sy").cast("double") - slope * F.col("sx").cast("double"))
-            / nd * F.lit(1e6) + F.lit(0.5)
-        ).cast("long").alias("intercept_micro"),
+        grid(slope, 6).alias("slope_micro"),
+        grid(
+            (F.col("sy").cast("double") - slope * F.col("sx").cast("double")) / nd, 6
+        ).alias("intercept_micro"),
     )

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import fan_out, load_table
-from ..functions.exact import dsum, dsum_sql
+from ..functions.exact import dsum, dsum_sql, grid, grid_sql
 from ..registry import register
 
 
@@ -953,7 +953,7 @@ def text_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_readability",
-    oracle="""
+    oracle=f"""
 WITH per_doc AS (
   SELECT lang,
          CAST(len(string_split(text, ' ')) AS BIGINT) AS w,
@@ -965,13 +965,12 @@ WITH per_doc AS (
 ),
 grids AS (
   SELECT lang,
-         CAST(FLOOR(CAST(w AS DOUBLE) / s * 1000000.0 + 0.5) AS BIGINT)
+         {grid_sql('CAST(w AS DOUBLE) / s', 6)}
            AS wps_g,
-         CAST(FLOOR(CAST(y AS DOUBLE) / w * 1000000.0 + 0.5) AS BIGINT)
+         {grid_sql('CAST(y AS DOUBLE) / w', 6)}
            AS spw_g,
-         CAST(FLOOR((206.835 - 1.015 * (CAST(w AS DOUBLE) / s)
-                     - 84.6 * (CAST(y AS DOUBLE) / w)) * 1000000.0
-                    + 0.5) AS BIGINT) AS fl_g
+         {grid_sql('''(206.835 - 1.015 * (CAST(w AS DOUBLE) / s)
+                     - 84.6 * (CAST(y AS DOUBLE) / w))''', 6)} AS fl_g
   FROM per_doc
 )
 SELECT lang,
@@ -1021,7 +1020,7 @@ def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     fl = (
         F.lit(206.835) - F.lit(1.015) * wps - F.lit(84.6) * spw
     )
-    g = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)).cast("long")  # noqa: E731
+    g = lambda c: grid(c, 6)  # noqa: E731
     grids = per_doc.select(
         "lang",
         g(wps).alias("wps_g"),
@@ -1201,7 +1200,7 @@ def text_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_cdc_chunking",
-    oracle="""
+    oracle=f"""
 WITH toks AS (
   SELECT doc_id,
          CAST(generate_subscripts(string_split(text, ' '), 1) AS BIGINT)
@@ -1229,10 +1228,9 @@ chunks AS (
 )
 SELECT CAST(COUNT(*) AS BIGINT) AS n_chunks,
        CAST(COUNT(DISTINCT h) AS BIGINT) AS n_distinct,
-       CAST(FLOOR((1.0 - CAST(COUNT(DISTINCT h) AS DOUBLE) / COUNT(*))
-                  * 1000000.0 + 0.5) AS BIGINT) AS dup_micro,
-       CAST(FLOOR(CAST(SUM(n_words) AS DOUBLE) / COUNT(*) * 1000000.0
-                  + 0.5) AS BIGINT) AS avg_words_micro
+       {grid_sql('1.0 - CAST(COUNT(DISTINCT h) AS DOUBLE) / COUNT(*)', 6)}
+         AS dup_micro,
+       {grid_sql('CAST(SUM(n_words) AS DOUBLE) / COUNT(*)', 6)} AS avg_words_micro
 FROM chunks
 """,
 )
@@ -1294,16 +1292,8 @@ def text_cdc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chunks.agg(
         n.alias("n_chunks"),
         nd.alias("n_distinct"),
-        F.floor(
-            (F.lit(1.0) - nd.cast("double") / n) * F.lit(1e6) + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("dup_micro"),
-        F.floor(
-            F.sum("n_words").cast("double") / n * F.lit(1e6) + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("avg_words_micro"),
+        grid(F.lit(1.0) - nd.cast("double") / n, 6).alias("dup_micro"),
+        grid(F.sum("n_words").cast("double") / n, 6).alias("avg_words_micro"),
     )
 
 
@@ -1495,7 +1485,7 @@ def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_heaps_law",
-    oracle="""
+    oracle=f"""
 WITH tok AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
 ),
@@ -1528,10 +1518,10 @@ pts AS (
 ),
 g AS (
   SELECT c, thr, n_tokens, vocab,
-         CAST(FLOOR(x * 1000000000.0 + 0.5) AS BIGINT) AS x9,
-         CAST(FLOOR(z * 1000000000.0 + 0.5) AS BIGINT) AS z9,
-         CAST(FLOOR(x * z * 1000000000.0 + 0.5) AS BIGINT) AS xz9,
-         CAST(FLOOR(x * x * 1000000000.0 + 0.5) AS BIGINT) AS xx9
+         {grid_sql('x', 9)} AS x9,
+         {grid_sql('z', 9)} AS z9,
+         {grid_sql('x * z', 9)} AS xz9,
+         {grid_sql('x * x', 9)} AS xx9
   FROM pts
 ),
 fit AS (
@@ -1546,8 +1536,8 @@ fit AS (
   FROM g
 )
 SELECT c, thr, n_tokens, vocab,
-       CAST(FLOOR(beta * 1000000.0 + 0.5) AS BIGINT) AS beta_micro,
-       CAST(FLOOR(exp(zbar - beta * xbar) * 1000.0 + 0.5) AS BIGINT)
+       {grid_sql('beta', 6)} AS beta_micro,
+       {grid_sql('exp(zbar - beta * xbar)', 3)}
          AS k_milli
 FROM g CROSS JOIN fit
 ORDER BY c
@@ -1609,12 +1599,10 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     g = pts.select(
         "c", "thr", "n_tokens", "vocab",
-        F.floor(F.col("x") * F.lit(1e9) + F.lit(0.5)).cast("long").alias("x9"),
-        F.floor(F.col("z") * F.lit(1e9) + F.lit(0.5)).cast("long").alias("z9"),
-        F.floor(F.col("x") * F.col("z") * F.lit(1e9) + F.lit(0.5))
-        .cast("long").alias("xz9"),
-        F.floor(F.col("x") * F.col("x") * F.lit(1e9) + F.lit(0.5))
-        .cast("long").alias("xx9"),
+        grid("x", 9).alias("x9"),
+        grid("z", 9).alias("z9"),
+        grid(F.col("x") * F.col("z"), 9).alias("xz9"),
+        grid(F.col("x") * F.col("x"), 9).alias("xx9"),
     )
     sx = F.sum("x9").cast("double") / F.lit(1e9)
     sz = F.sum("z9").cast("double") / F.lit(1e9)
@@ -1632,12 +1620,10 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         g.crossJoin(F.broadcast(fit))
         .select(
             "c", "thr", "n_tokens", "vocab",
-            F.floor(F.col("beta") * F.lit(1e6) + F.lit(0.5))
-            .cast("long").alias("beta_micro"),
-            F.floor(
-                F.exp(F.col("zbar") - F.col("beta") * F.col("xbar"))
-                * F.lit(1000.0) + F.lit(0.5)
-            ).cast("long").alias("k_milli"),
+            grid("beta", 6).alias("beta_micro"),
+            grid(
+                F.exp(F.col("zbar") - F.col("beta") * F.col("xbar")), 3
+            ).alias("k_milli"),
         )
         .orderBy("c")
     )
@@ -1645,7 +1631,7 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_rouge_overlap",
-    oracle="""
+    oracle=f"""
 WITH tk AS (
   SELECT doc_id, string_split(text, ' ') AS t FROM documents
   WHERE len(string_split(text, ' ')) >= 2
@@ -1669,12 +1655,9 @@ ov AS (
 ),
 scored AS (
   SELECT ov.d1, ov.d2, ov.ov, ta.tot AS tot1, tb.tot AS tot2,
-         CAST(FLOOR(CAST(ov.ov AS DOUBLE) / ta.tot * 1000000.0 + 0.5)
-              AS BIGINT) AS recall_micro,
-         CAST(FLOOR(CAST(ov.ov AS DOUBLE) / tb.tot * 1000000.0 + 0.5)
-              AS BIGINT) AS precision_micro,
-         CAST(FLOOR(2.0 * ov.ov / (ta.tot + tb.tot) * 1000000.0 + 0.5)
-              AS BIGINT) AS f1_micro
+         {grid_sql('CAST(ov.ov AS DOUBLE) / ta.tot', 6)} AS recall_micro,
+         {grid_sql('CAST(ov.ov AS DOUBLE) / tb.tot', 6)} AS precision_micro,
+         {grid_sql('2.0 * ov.ov / (ta.tot + tb.tot)', 6)} AS f1_micro
   FROM ov JOIN tot ta ON ov.d1 = ta.doc_id
           JOIN tot tb ON ov.d2 = tb.doc_id
 )
@@ -1735,18 +1718,13 @@ def text_rouge_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(tb, "d2")
         .select(
             "d1", "d2", "ov", "tot1", "tot2",
-            F.floor(
-                F.col("ov").cast("double") / F.col("tot1") * F.lit(1e6)
-                + F.lit(0.5)
-            ).cast("long").alias("recall_micro"),
-            F.floor(
-                F.col("ov").cast("double") / F.col("tot2") * F.lit(1e6)
-                + F.lit(0.5)
-            ).cast("long").alias("precision_micro"),
-            F.floor(
-                F.lit(2.0) * F.col("ov") / (F.col("tot1") + F.col("tot2"))
-                * F.lit(1e6) + F.lit(0.5)
-            ).cast("long").alias("f1_micro"),
+            grid(F.col("ov").cast("double") / F.col("tot1"), 6).alias("recall_micro"),
+            grid(
+                F.col("ov").cast("double") / F.col("tot2"), 6
+            ).alias("precision_micro"),
+            grid(
+                F.lit(2.0) * F.col("ov") / (F.col("tot1") + F.col("tot2")), 6
+            ).alias("f1_micro"),
         )
         .orderBy(F.col("f1_micro").desc(), "d1")
         .limit(20)
@@ -1803,7 +1781,7 @@ stat AS (
   FROM chi
 )
 SELECT word, n1 AS n_docs, a AS n_docs_en,
-       CAST(FLOOR(chi2 * 1000000.0 + 0.5) AS BIGINT) AS chi2_micro,
+       {grid_sql('chi2', 6)} AS chi2_micro,
        chi2 > {_CHI2_CRIT} AS selected
 FROM stat ORDER BY word
 """,
@@ -1877,7 +1855,6 @@ def ml_chi2_feature_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         "word",
         F.col("n1").alias("n_docs"),
         F.col("a").alias("n_docs_en"),
-        F.floor(chi2 * F.lit(1e6) + F.lit(0.5)).cast("long")
-        .alias("chi2_micro"),
+        grid(chi2, 6).alias("chi2_micro"),
         (chi2 > F.lit(_CHI2_CRIT)).alias("selected"),
     ).orderBy("word")

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..catalog import load_table
+from ..functions.exact import grid_sql
 from ..registry import register
 
 
@@ -388,10 +389,10 @@ def udf_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "api_pandas_on_spark",
-    oracle="""
+    oracle=f"""
 SELECT o_orderpriority,
        COUNT(*) AS n,
-       CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT))
+       CAST(SUM({grid_sql('o_totalprice', 2)})
             AS DOUBLE) / 100.0 AS total
 FROM orders
 GROUP BY o_orderpriority
@@ -470,10 +471,10 @@ def udf_arrow_optimized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "udtf_table_partition_by",
-    oracle="""
+    oracle=f"""
 SELECT event_type,
        CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT)) AS BIGINT)
+       CAST(SUM({grid_sql('value', 2)}) AS BIGINT)
          AS sum_value_cents,
        CAST(MIN(event_id) AS BIGINT) AS first_event_id
 FROM events
@@ -583,16 +584,15 @@ def _reconcile_bucket(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFr
 
 @register(
     "udtf_cogrouped_map",
-    oracle="""
+    oracle=f"""
 WITH li AS (
   SELECT l_orderkey,
-         CAST(SUM(CAST(FLOOR(l_extendedprice * (1.0 - l_discount)
-                             * (1.0 + l_tax) * 100.0 + 0.5)
-                       AS BIGINT)) AS BIGINT) AS li_cents,
+         CAST(SUM({grid_sql('''l_extendedprice * (1.0 - l_discount)
+                             * (1.0 + l_tax)''', 2)}) AS BIGINT) AS li_cents,
          CAST(COUNT(*) AS BIGINT) AS n_lines
   FROM lineitem GROUP BY l_orderkey)
 SELECT o.o_orderkey,
-       CAST(FLOOR(o.o_totalprice * 100.0 + 0.5) AS BIGINT) AS o_cents,
+       {grid_sql('o.o_totalprice', 2)} AS o_cents,
        COALESCE(li.li_cents, 0) AS li_cents,
        COALESCE(li.n_lines, 0) AS n_lines
 FROM orders o LEFT JOIN li ON li.l_orderkey = o.o_orderkey

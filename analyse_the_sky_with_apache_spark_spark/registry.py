@@ -14,7 +14,8 @@ Discipline enforced by convention (SURVEY.md §5.3):
 - fully tie-break every ordered/LIMIT query;
 - cast date-like timestamps to date;
 - derive integers from md5 only through the ``functions.exact`` twins
-  (``md5_int``/``md5_int_sql``, ``sky_radec``/``sky_radec_sql``).
+  (``md5_int``/``md5_int_sql``, ``sky_radec``/``sky_radec_sql``);
+- round to the fixed-point grid only through ``grid``/``grid_sql``.
 """
 
 from __future__ import annotations

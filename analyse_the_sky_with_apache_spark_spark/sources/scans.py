@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.exact import dsum, dsum_sql
+from ..functions.exact import dsum, dsum_sql, grid, grid_sql
 from ..registry import register
 
 #: per-PROCESS scratch root for sink round-trips; files are tiny (region /
@@ -378,9 +378,9 @@ def scan_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "scan_partition_pruned",
-    oracle="""
+    oracle=f"""
 SELECT event_type, COUNT(*) AS n,
-       CAST(SUM(CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
+       CAST(SUM({grid_sql('value', 6)}) AS DOUBLE)
          / 1000000.0 AS sum_value
 FROM events
 WHERE event_type IN ('click', 'purchase')
@@ -413,7 +413,7 @@ def scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n"),
             (
-                F.sum(F.floor(F.col("value") * 1000000.0 + F.lit(0.5)))
+                F.sum(grid("value", 6))
                 .cast("double")
                 / 1000000.0
             ).alias("sum_value"),
@@ -423,7 +423,7 @@ def scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "join_dpp",
-    oracle="""
+    oracle=f"""
 WITH dim AS (
   SELECT 'click' AS event_type, 'engagement' AS category
   UNION ALL SELECT 'purchase', 'revenue'
@@ -431,7 +431,7 @@ WITH dim AS (
   UNION ALL SELECT 'signup', 'acquisition'
 )
 SELECT d.category, COUNT(*) AS n,
-       CAST(SUM(CAST(FLOOR(e.value * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
+       CAST(SUM({grid_sql('e.value', 6)}) AS DOUBLE)
          / 1000000.0 AS sum_value
 FROM events e JOIN dim d ON e.event_type = d.event_type
 WHERE d.category = 'revenue'
@@ -474,7 +474,7 @@ def join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n"),
             (
-                F.sum(F.floor(F.col("value") * 1000000.0 + F.lit(0.5)))
+                F.sum(grid("value", 6))
                 .cast("double")
                 / 1000000.0
             ).alias("sum_value"),
@@ -603,7 +603,7 @@ def scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "scan_log_regexp",
-    oracle="""
+    oracle=f"""
 SELECT event_id, user_id, event_type,
        CAST(value_str AS DOUBLE) AS value
 FROM (
@@ -614,7 +614,7 @@ FROM (
   FROM (
     SELECT 'ev=' || CAST(event_id AS VARCHAR) || ' user='
            || CAST(user_id AS VARCHAR) || ' type=' || event_type
-           || ' value=' || CAST(CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT)
+           || ' value=' || CAST({grid_sql('value', 2)}
                                 AS VARCHAR)
            AS line
     FROM events
@@ -642,8 +642,7 @@ def scan_log_regexp(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(" user="), F.col("user_id").cast("string"),
         F.lit(" type="), F.col("event_type"),
         F.lit(" value="),
-        F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
-        .cast("long").cast("string"),
+        grid("value", 2).cast("string"),
     )
     ev.select(line.alias("value")).coalesce(1).write.mode("overwrite").text(
         path
@@ -1601,9 +1600,9 @@ def sink_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sink_parquet_bloom",
-    oracle="""
+    oracle=f"""
 SELECT CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT))
+       CAST(SUM({grid_sql('o_totalprice', 2)})
             AS BIGINT) AS cents
 FROM orders
 WHERE o_custkey % 1000 = 7
@@ -1648,9 +1647,7 @@ def sink_parquet_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return back.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100.0 + F.lit(0.5)).cast("long")
-        )
+        F.sum(grid("o_totalprice", 2))
         .cast("long")
         .alias("cents"),
     )
@@ -1777,11 +1774,11 @@ def scan_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "txn_log_partition_evolution",
-    oracle="""
+    oracle=f"""
 SELECT CASE WHEN o_orderkey % 10 < 7 THEN 1 ELSE 2 END AS gen,
        o_orderkey % 4 AS bucket,
        CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT))
+       CAST(SUM({grid_sql('o_totalprice', 2)})
             AS BIGINT) AS cents
 FROM orders
 WHERE o_orderkey % 4 = 1
@@ -1833,9 +1830,7 @@ def txn_log_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(os.path.join(root, "gen2"))
     )
     cents = (
-        F.floor(F.col("o_totalprice") * 100.0 + F.lit(0.5))
-        .cast("long")
-        .alias("cents")
+        grid("o_totalprice", 2).alias("cents")
     )
     # normalized logical read under the NEW spec
     r1 = (
@@ -1920,7 +1915,7 @@ def _txn_wap_build(spark: SparkSession, sf_dir: str) -> str:
         "o_orderstatus",
         (
             F.expr(
-                "CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)"
+                f"{grid_sql('o_totalprice', 2)}"
                 " * 105 div 100"
             ).cast("double")
             / F.lit(100.0)
@@ -1962,7 +1957,7 @@ def _txn_staged_snapshot(
 
 @register(
     "txn_log_wap_publish",
-    oracle="""
+    oracle=f"""
 WITH base AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n FROM orders
 ),
@@ -1978,8 +1973,7 @@ cand AS (
 ),
 audit AS (
   SELECT branch, n_staged, base.n AS n_base,
-         CAST(FLOOR(abs(CAST(n_staged AS DOUBLE) / base.n - 1.0)
-                    * 1000000.0 + 0.5) AS BIGINT) AS delta_micro
+         {grid_sql('abs(CAST(n_staged AS DOUBLE) / base.n - 1.0)', 6)} AS delta_micro
   FROM cand CROSS JOIN base
 ),
 verdicts AS (
@@ -1990,9 +1984,9 @@ verdicts AS (
 final AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS final_rows,
          CAST(SUM(CASE WHEN o_orderkey % 2 = 0
-                  THEN CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT)
+                  THEN {grid_sql('o_totalprice', 2)}
                        * 105 // 100
-                  ELSE CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT)
+                  ELSE {grid_sql('o_totalprice', 2)}
                   END) AS BIGINT) AS final_cents
   FROM orders
 )
@@ -2062,7 +2056,7 @@ def txn_log_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     fin = _txn_snapshot(spark, root, 10**9).agg(
         F.count(F.lit(1)).alias("final_rows"),
         F.sum(
-            F.expr("CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)")
+            F.expr(f"{grid_sql('o_totalprice', 2)}")
         ).alias("final_cents"),
     )
     report = spark.createDataFrame(

@@ -24,7 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.exact import dsum, dsum_sql, md5_int, md5_int_sql
+from ..functions.exact import dsum, dsum_sql, grid, grid_sql, md5_int, md5_int_sql
+from ..operators.windows import session_starts_sql
 from ..registry import register
 from .replay import checkpoint_dir, run_stream, stage_events
 
@@ -90,14 +91,7 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stream_session",
     oracle=f"""
-WITH x AS (
-  SELECT user_id, ts, value, event_id,
-         CASE WHEN LAG(ts) OVER w IS NULL
-                OR epoch_us(ts) - epoch_us(LAG(ts) OVER w) >= 1800000000
-              THEN 1 ELSE 0 END AS new_s
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
+WITH {session_starts_sql("value, event_id")},
 y AS (
   SELECT user_id, ts, value,
          SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -1190,7 +1184,7 @@ _UPD_FILES = 4
     oracle=f"""
 WITH t AS (
   SELECT CAST(date_trunc('day', ts) AS DATE) AS day, event_type,
-         CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT) AS v_micro,
+         {grid_sql('value', 6)} AS v_micro,
          NTILE({_UPD_FILES}) OVER (ORDER BY ts, event_id) AS f
   FROM events
 ),
@@ -1567,7 +1561,7 @@ def stream_window_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_cdc_apply",
-    oracle="""
+    oracle=f"""
 WITH ranked AS (
   SELECT user_id, event_type, value, ts, event_id,
          NTILE(4) OVER (ORDER BY ts, event_id) AS b
@@ -1576,7 +1570,7 @@ WITH ranked AS (
 ops AS (
   SELECT user_id AS k, b, ts, event_id,
          CASE WHEN event_type = 'purchase' THEN 'U' ELSE 'D' END AS op,
-         CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS cents
+         {grid_sql('value', 2)} AS cents
   FROM ranked WHERE event_type IN ('purchase', 'error')
 ),
 comp AS (
@@ -1663,8 +1657,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("user_id").alias("k"),
             F.when(F.col("event_type") == "purchase", "U")
             .otherwise("D").alias("op"),
-            F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
-            .cast("long").alias("cents"),
+            grid("value", 2).alias("cents"),
             "ts", "event_id",
         )
         n_ops = ops.count()

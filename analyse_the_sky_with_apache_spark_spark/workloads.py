@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import load_table
-from .functions.exact import davg, davg_sql, dsum, dsum_sql
+from .functions.exact import davg, davg_sql, dsum, dsum_sql, grid, grid_sql
 from .registry import register
 
 _Q3_CUTOFF = "1998-06-01"
@@ -125,7 +125,7 @@ FROM customer JOIN orders ON c_custkey = o_custkey
 JOIN lineitem ON o_orderkey = l_orderkey
 WHERE o_orderkey IN (
   SELECT l_orderkey FROM lineitem GROUP BY l_orderkey
-  HAVING SUM(CAST(FLOOR(l_quantity * 100.0 + 0.5) AS BIGINT)) > {_Q18_MIN_QTY * 100}
+  HAVING SUM({grid_sql('l_quantity', 2)}) > {_Q18_MIN_QTY * 100}
 )
 GROUP BY c_name, o_orderkey, CAST(o_orderdate AS DATE), o_totalprice
 ORDER BY o_totalprice DESC, o_orderkey
@@ -147,9 +147,7 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     big = (
         li.groupBy("l_orderkey")
         .agg(
-            F.sum(
-                F.floor(F.col("l_quantity") * 100.0 + F.lit(0.5))
-            ).alias("sq")
+            F.sum(grid("l_quantity", 2)).alias("sq")
         )
         .filter(F.col("sq") > _Q18_MIN_QTY * 100)
         .select("l_orderkey")
@@ -311,16 +309,16 @@ def q12_late_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q14_promo_revenue",
-    oracle="""
+    oracle=f"""
 SELECT CAST(SUM(CASE WHEN p_type = 'PROMO'
-                     THEN CAST(FLOOR(l_extendedprice * (1 - l_discount) * 10000.0 + 0.5) AS BIGINT)
+                     THEN {grid_sql('l_extendedprice * (1 - l_discount)', 4)}
                      ELSE 0 END) AS DOUBLE) / 10000.0 AS promo_revenue,
-       CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 10000.0 + 0.5) AS BIGINT)) AS DOUBLE)
+       CAST(SUM({grid_sql('l_extendedprice * (1 - l_discount)', 4)}) AS DOUBLE)
        / 10000.0 AS total_revenue,
        100.0 * (CAST(SUM(CASE WHEN p_type = 'PROMO'
-                              THEN CAST(FLOOR(l_extendedprice * (1 - l_discount) * 10000.0 + 0.5) AS BIGINT)
+                              THEN {grid_sql('l_extendedprice * (1 - l_discount)', 4)}
                               ELSE 0 END) AS DOUBLE) / 10000.0)
-             / (CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 10000.0 + 0.5) AS BIGINT)) AS DOUBLE)
+             / (CAST(SUM({grid_sql('l_extendedprice * (1 - l_discount)', 4)}) AS DOUBLE)
                 / 10000.0) AS promo_pct
 FROM lineitem JOIN part ON l_partkey = p_partkey
 WHERE l_shipdate >= TIMESTAMP '1997-09-01'
@@ -340,10 +338,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < "1997-10-01")
     )
     p = load_table(spark, sf_dir, "part")
-    scaled = F.floor(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * F.lit(10000.0)
-        + F.lit(0.5)
-    )
+    scaled = grid(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4)
     promo = (
         F.sum(F.when(F.col("p_type") == "PROMO", scaled).otherwise(F.lit(0)))
         .cast("double")
@@ -362,8 +357,8 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q19_disjunctive",
-    oracle="""
-SELECT CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 10000.0 + 0.5) AS BIGINT)) AS DOUBLE)
+    oracle=f"""
+SELECT CAST(SUM({grid_sql('l_extendedprice * (1 - l_discount)', 4)}) AS DOUBLE)
        / 10000.0 AS revenue,
        COUNT(*) AS n_lines
 FROM lineitem JOIN part ON p_partkey = l_partkey

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import load_table
-from .functions.exact import davg_sql, dsum, dsum_sql
+from .functions.exact import davg_sql, dsum, dsum_sql, grid, grid_sql
 from .registry import register
 
 _Q7_NATION_A, _Q7_NATION_B = "NATION_3", "NATION_7"
@@ -152,11 +152,10 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS o_year,
        CAST(SUM(CASE WHEN n2.n_name = '{_Q8_NATION}'
-                     THEN CAST(FLOOR(l_extendedprice * (1 - l_discount) * 10000.0
-                                     + 0.5) AS BIGINT)
+                     THEN {grid_sql('l_extendedprice * (1 - l_discount)', 4)}
                      ELSE 0 END) AS DOUBLE)
-       / CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 10000.0
-                             + 0.5) AS BIGINT)) AS DOUBLE) AS mkt_share
+       / CAST(SUM({grid_sql('l_extendedprice * (1 - l_discount)', 4)}) AS DOUBLE)
+         AS mkt_share
 FROM lineitem
 JOIN orders   ON o_orderkey = l_orderkey
 JOIN customer ON c_custkey = o_custkey
@@ -194,10 +193,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     n2 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("supp_nation")
     )
-    cents = F.floor(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * F.lit(10000.0)
-        + F.lit(0.5)
-    )
+    cents = grid(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4)
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -271,10 +267,10 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q11_important_parts",
-    oracle="""
+    oracle=f"""
 WITH pv AS (
   SELECT l_partkey,
-         SUM(CAST(FLOOR(l_extendedprice * 100.0 + 0.5) AS BIGINT)) AS val_c
+         SUM({grid_sql('l_extendedprice', 2)}) AS val_c
   FROM lineitem GROUP BY l_partkey
 ),
 tot AS (SELECT SUM(val_c) AS tot_c, COUNT(*) AS n_parts FROM pv)
@@ -303,9 +299,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     pv = (
         li.groupBy("l_partkey")
         .agg(
-            F.sum(
-                F.floor(F.col("l_extendedprice") * F.lit(100.0) + F.lit(0.5))
-            ).alias("val_c")
+            F.sum(grid("l_extendedprice", 2)).alias("val_c")
         )
     )
     tot = pv.agg(
@@ -477,7 +471,7 @@ def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.groupBy(F.col("l_partkey").alias("t_partkey"))
         .agg(
             (
-                F.sum(F.floor(F.col("l_quantity") * F.lit(1e6) + F.lit(0.5))).cast(
+                F.sum(grid("l_quantity", 6)).cast(
                     "double"
                 )
                 / F.lit(1e6)
@@ -499,7 +493,7 @@ def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q20_promo_suppliers",
-    oracle="""
+    oracle=f"""
 SELECT s_suppkey, s_name, CAST(s_nationkey AS BIGINT) AS nationkey
 FROM supplier
 WHERE s_suppkey IN (
@@ -509,7 +503,7 @@ WHERE s_suppkey IN (
     AND l_shipdate >= TIMESTAMP '1997-01-01'
     AND l_shipdate <  TIMESTAMP '1998-01-01'
   GROUP BY l_suppkey, l_partkey
-  HAVING SUM(CAST(FLOOR(l_quantity + 0.5) AS BIGINT)) > 40
+  HAVING SUM({grid_sql('l_quantity', 0)}) > 40
 )
 """,
 )
@@ -533,7 +527,7 @@ def q20_promo_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     qualifying = (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .groupBy("l_suppkey", "l_partkey")
-        .agg(F.sum(F.floor(F.col("l_quantity") + F.lit(0.5))).alias("vol"))
+        .agg(F.sum(grid("l_quantity", 0)).alias("vol"))
         .filter(F.col("vol") > 40)
         .select("l_suppkey")
     )

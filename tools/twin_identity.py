@@ -1,0 +1,145 @@
+"""Parent-vs-change identity check for refactors that must not change a
+plan or an oracle result (the engine-twin PRs).
+
+Each dump runs in its own process against one source tree, so the two
+trees never share an import:
+
+    python tools/twin_identity.py plans TREE SF_DIR OUT.json [KEY ...]
+    python tools/twin_identity.py rows  TREE SF_DIR OUT.json [KEY ...]
+    python tools/twin_identity.py diff  PARENT.json CHANGE.json
+
+``plans`` builds every registry key (without running it) and records
+``queryExecution().optimizedPlan()`` with expression ids, temp paths,
+uuids and the per-process bucket-table suffix stripped, plus the oracle
+SQL with whitespace collapsed. ``rows`` runs every oracle in DuckDB and
+records the sha256 of its column names and sorted rows. ``diff`` lists
+the keys whose plan, oracle text or row hash differs. Both dumps resume
+from an existing OUT.json, so an interrupted run continues.
+
+Typical use: ``git clone`` the parent commit into a scratch directory,
+dump both trees at sf0.001, then run ``rows`` at every scale factor for
+the keys whose oracle text changed.
+"""
+
+from __future__ import annotations
+
+import difflib
+import hashlib
+import json
+import math
+import os
+import re
+import sys
+import threading
+
+#: per-oracle DuckDB budget; a run past it is recorded as an error
+_ROW_TIMEOUT_S = 240
+
+
+def _norm_plan(text: str) -> str:
+    text = re.sub(r"#\d+L?", "", text)
+    text = re.sub(r"(file:)?/tmp/[^\s,\]\)]*", "<tmp>", text)
+    text = re.sub(r"\b[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}\b", "<uuid>", text)
+    return re.sub(r"\b(bkt_\w+?_[0-9a-f]{8})_\d+\b", r"\1", text)
+
+
+def _load(tree: str, out: str):
+    sys.path.insert(0, tree)
+    os.chdir(tree)
+    from analyse_the_sky_with_apache_spark_spark import registry
+
+    registry.load_all_modules()
+    done = json.load(open(out)) if os.path.exists(out) else {}
+    return registry, done
+
+
+def dump_plans(tree: str, sf_dir: str, out: str, keys: list[str]) -> None:
+    registry, done = _load(tree, out)
+    from analyse_the_sky_with_apache_spark_spark.session import get_spark
+
+    qs, oracles = registry.queries(), registry.oracle_sql()
+    spark = get_spark("twin-identity")
+    for k in keys or sorted(qs):
+        if k in done:
+            continue
+        try:
+            df = qs[k](spark, sf_dir)
+            plan = _norm_plan(df._jdf.queryExecution().optimizedPlan().toString())
+        except Exception as e:  # noqa: BLE001
+            plan = f"ERROR {type(e).__name__}: {str(e)[:200]}"
+        sql = " ".join(oracles[k].split()) if k in oracles else None
+        done[k] = {"plan": plan, "oracle": sql}
+        json.dump(done, open(out, "w"))
+    spark.stop()
+
+
+def _cell(v) -> str:
+    return "NaN" if isinstance(v, float) and math.isnan(v) else repr(v)
+
+
+def dump_rows(tree: str, sf_dir: str, out: str, keys: list[str]) -> None:
+    registry, done = _load(tree, out)
+    import duckdb
+
+    from tools.canon import duck_views
+
+    oracles = registry.oracle_sql()
+    con = duckdb.connect()
+    duck_views(con, sf_dir)
+    for k in keys or sorted(oracles):
+        if k in done or k not in oracles:
+            continue
+        timer = threading.Timer(_ROW_TIMEOUT_S, con.interrupt)
+        timer.start()
+        try:
+            rel = con.execute(oracles[k])
+            cols = [d[0] for d in rel.description]
+            rows = sorted(tuple(_cell(v) for v in r) for r in rel.fetchall())
+            sha = hashlib.sha256(repr((cols, rows)).encode()).hexdigest()
+            done[k] = {"rows": sha, "n": len(rows)}
+        except Exception as e:  # noqa: BLE001
+            done[k] = {"rows": f"ERROR {type(e).__name__}: {str(e)[:200]}", "n": -1}
+        finally:
+            timer.cancel()
+        json.dump(done, open(out, "w"))
+
+
+def diff(parent: str, change: str) -> int:
+    a, b = json.load(open(parent)), json.load(open(change))
+    bad = 0
+    for field in ("plan", "oracle", "rows"):
+        keys = sorted(k for k in set(a) & set(b) if field in a[k] or field in b[k])
+        if not keys:
+            continue
+        changed = [k for k in keys if a[k].get(field) != b[k].get(field)]
+        errors = [k for k in keys if str(b[k].get(field, "")).startswith("ERROR")]
+        print(f"{field}: {len(changed)} of {len(keys)} keys differ; errors {errors}")
+        for k in changed:
+            print(f"  {k}")
+            if field == "plan":
+                for line in difflib.unified_diff(
+                    a[k]["plan"].splitlines(), b[k]["plan"].splitlines(),
+                    lineterm="", n=0,
+                ):
+                    print(f"    {line[:200]}")
+        bad += len(errors) + (len(changed) if field == "rows" else 0)
+    missing = sorted(set(a) ^ set(b))
+    if missing:
+        print(f"keys in only one dump: {missing}")
+    return 1 if bad or missing else 0
+
+
+def main() -> int:
+    cmd, *args = sys.argv[1:]
+    if cmd == "diff":
+        return diff(*args)
+    tree, sf_dir, out, *keys = args
+    out = os.path.abspath(out)
+    {"plans": dump_plans, "rows": dump_rows}[cmd](
+        os.path.abspath(tree), sf_dir, out, keys
+    )
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())
