@@ -10,13 +10,22 @@ dimension table, coordinate ↔ numeric column).
 Cross-match at scale: the naive formulation is a non-equi (band) join —
 ``|a.x - b.x| <= eps`` — which Spark can only execute as a broadcast
 nested loop (O(n·m) comparisons). The production pattern is
-**bin-then-equi-join**: quantize each coordinate to an integer cell of
-width eps, replicate one side into its 3 neighboring cells, equi-join on
-the cell id, then apply the exact band predicate. The join becomes a plain
-shuffle/broadcast hash join on an integer key — O(n+m) shuffle, ~3×
-replication of the smaller side only, no quadratic stage. At 100 TB both
-catalogs shuffle-partition by cell id and every executor matches only its
-own cells; hot cells (dense sky regions) are AQE-skew-split.
+**bin-then-equi-join**, and :func:`cell_join` is its one bin/replicate
+decision: each home row takes one integer cell per axis (``x div w``),
+each replicated row explodes into its 3×3 neighbor cells (RA as a
+mod-``n`` ring when the axis wraps at 0°/360°), the two meet in a plain
+equi-join on ``(cx, cy)``, and each caller then applies its own exact
+predicate. The join becomes a shuffle/broadcast hash join on integer
+keys — O(n+m) shuffle, 9× replication of one side only, no quadratic
+stage. At 100 TB both catalogs shuffle-partition by cell id and every
+executor matches only its own cells; hot cells (dense sky regions) are
+AQE-skew-split. The 1-D balance band (:func:`_balance_candidates`) is
+the same plan on one axis.
+
+The synthetic sky catalog ``(obj_id, ra_c, dec_c)``, the circular RA
+distance and the haversine each have one Spark/SQL twin here
+(:func:`sky_catalog` / :func:`sky_catalog_sql`, :func:`ra_dist` /
+:func:`ra_dist_sql`, :func:`haversine_sql`).
 
 Quantization is exact integer arithmetic: the fixture doubles carry two
 decimals, so ``CAST(ROUND(x*100) AS BIGINT)`` is an identical integer in
@@ -27,8 +36,9 @@ hazard at the eps cutoff (SURVEY.md §5.3 hazard 2).
 from __future__ import annotations
 
 import math
+from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
@@ -42,27 +52,129 @@ from ..functions.exact import (
 )
 from ..registry import register
 
-#: The synthetic sky catalogs of the oracle SQL (centi-degrees): the
-#: customer sky, the supplier sky, and the salted 's'/'r' draws.
-_RA_SQL, _DEC_SQL = sky_radec_sql("c_custkey")
-_S_RA_SQL, _S_DEC_SQL = sky_radec_sql("s_suppkey")
-_SS_RA_SQL, _SS_DEC_SQL = sky_radec_sql("s_suppkey", salt="s")
-_R_RA_SQL, _R_DEC_SQL = sky_radec_sql("c_custkey", salt="r")
+#: full RA circle in centi-degrees.
+_SPH_CIRCLE = 36000
+
+#: catalog key → the fixture table that holds it.
+_SKY_TABLE = {"c_custkey": "customer", "s_suppkey": "supplier"}
+
+
+def sky_catalog(
+    spark: SparkSession, sf_dir: str, key: str = "c_custkey", salt: str = ""
+) -> DataFrame:
+    """The synthetic sky catalog ``(obj_id, ra_c, dec_c)`` of a fixture
+    key, in centi-degrees (:func:`sky_radec`; a salt draws an independent
+    catalog). Keys that carry more columns select them from this output."""
+    ra, dec = sky_radec(key, salt=salt)
+    return load_table(spark, sf_dir, _SKY_TABLE[key]).select(
+        F.col(key).alias("obj_id"), ra.alias("ra_c"), dec.alias("dec_c")
+    )
+
+
+def sky_catalog_sql(key: str = "c_custkey", salt: str = "") -> str:
+    """DuckDB-side twin of :func:`sky_catalog`: one ``SELECT`` to wrap in
+    a CTE or a ``FROM (…)``."""
+    ra, dec = sky_radec_sql(key, salt=salt)
+    return f"""
+  SELECT {key} AS obj_id,
+         {ra} AS ra_c,
+         {dec} AS dec_c
+  FROM {_SKY_TABLE[key]}
+"""
+
+
+def ra_dist(a: Column | str, b: Column | str) -> Column:
+    """Circular RA distance ``least(|Δra|, 36000 − |Δra|)`` in
+    centi-degrees: the short way around the 0°/360° seam."""
+    d = F.abs(
+        (F.col(a) if isinstance(a, str) else a)
+        - (F.col(b) if isinstance(b, str) else b)
+    )
+    return F.least(d, F.lit(_SPH_CIRCLE) - d)
+
+
+def ra_dist_sql(a: str, b: str) -> str:
+    """DuckDB-side twin of :func:`ra_dist`."""
+    return f"LEAST(abs({a} - {b}), {_SPH_CIRCLE} - abs({a} - {b}))"
+
+
+def haversine_sql(a_ra: str, a_dec: str, b_ra: str, b_dec: str) -> str:
+    """Great-circle distance in radians, rounded to 6 dp, between two
+    centi-degree positions — one SQL text both engines run (libm and JVM
+    trig agree far below 1e-6). Period-safe: ``sin²(Δ/2)`` is invariant
+    under Δra ± 360°."""
+    return f"""
+ROUND(2*ASIN(SQRT(
+  POW(SIN(RADIANS(({b_dec} - {a_dec})/100.0)/2), 2)
+  + COS(RADIANS({a_dec}/100.0))*COS(RADIANS({b_dec}/100.0))
+    *POW(SIN(RADIANS(({b_ra} - {a_ra})/100.0)/2), 2))), 6)
+"""
+
+
+def cell_join(
+    home: DataFrame,
+    away: DataFrame,
+    home_xy: tuple[str, str] | None,
+    away_xy: tuple[str, str],
+    width: tuple[int, int],
+    ring: int | None = None,
+    home_cols: Sequence[Column | str] = ("*",),
+    away_cols: Sequence[Column | str] = ("*",),
+) -> DataFrame:
+    """The binned pair search every 2-D cross-match shares: the
+    ``(cx, cy)`` equi-join of home rows against away rows replicated
+    into their 3×3 neighbor cells. Callers apply their own exact
+    predicate to the result.
+
+    ``*_xy`` are SQL expressions over each input's own columns; a row's
+    cell on an axis is ``expr div width``. With ``ring`` the x axis is a
+    ring of that many cells (the RA circle; the width must divide it) and
+    neighbors wrap with ``pmod``. ``*_cols`` are each side's output
+    columns, projected in the same step as the cells. ``home_xy=None``
+    takes ``home`` as already binned — a chained stage matching a third
+    catalog against an earlier join's home cells.
+    """
+    wx, wy = width
+    if home_xy is not None:
+        hx, hy = home_xy
+        home = home.select(
+            *home_cols,
+            F.expr(f"{hx} div {wx}").alias("cx"),
+            F.expr(f"{hy} div {wy}").alias("cy"),
+        )
+    ax, ay = away_xy
+    cx = f"{ax} div {wx} + dx"
+    if ring is not None:
+        cx = f"pmod({cx}, {ring})"
+    near = away.select(
+        *away_cols,
+        F.explode(
+            F.expr(
+                f"flatten(transform(sequence(-1, 1), dx -> "
+                f"transform(sequence(-1, 1), dy -> "
+                f"struct({cx} AS cx, {ay} div {wy} + dy AS cy))))"
+            )
+        ).alias("cell"),
+    )
+    near = near.select(*near.columns[:-1], "cell.cx", "cell.cy")
+    return home.join(near, ["cx", "cy"])
+
 
 #: band half-width in cents: match |c_acctbal - s_acctbal| <= 1.00.
 _EPS_CENTS = 100
 
 
-def _balance_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Candidate (customer, supplier) pairs within ``_EPS_CENTS`` on balance.
+def _balance_candidates(
+    spark: SparkSession, sf_dir: str, eps: int = _EPS_CENTS
+) -> DataFrame:
+    """Candidate (customer, supplier) pairs within ``eps`` cents on balance.
 
-    The shared bin-then-equi-join stage: quantize balances to integer
+    The shared 1-D bin-then-equi-join stage: quantize balances to integer
     cents, cell width = eps, replicate the smaller catalog (supplier)
     into its 3 neighboring cells, hash-join on the cell id, then apply
     the exact band predicate. Output columns: c_custkey, s_suppkey,
-    c_cents, s_cents.
+    c_cents, s_cents, and the customer's cell.
     """
-    eps = _EPS_CENTS
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
         F.round(F.col("c_acctbal") * 100).cast("long").alias("c_cents"),
@@ -83,7 +195,7 @@ def _balance_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         c.join(s, "cell")
         .filter(F.abs(F.col("c_cents") - F.col("s_cents")) <= eps)
-        .select("c_custkey", "s_suppkey", "c_cents", "s_cents")
+        .select("c_custkey", "s_suppkey", "c_cents", "s_cents", "cell")
     )
 
 
@@ -273,28 +385,21 @@ def xmatch_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("p_retailprice") * 100).cast("long").alias("cents"),
         F.col("p_size").cast("long").alias("size"),
     )
-    a = base.select(
-        F.col("p_partkey").alias("ia"),
-        F.col("cents").alias("a_cents"),
-        F.col("size").alias("a_size"),
-        F.expr(f"cents div {eps_p}").alias("cx"),
-        F.expr(f"size div {eps_s}").alias("cy"),
-    )
-    b = base.select(
-        F.col("p_partkey").alias("ib"),
-        F.col("cents").alias("b_cents"),
-        F.col("size").alias("b_size"),
-        F.explode(
-            F.expr(
-                f"flatten(transform(sequence(-1, 1), dx -> "
-                f"transform(sequence(-1, 1), dy -> "
-                f"struct(cents div {eps_p} + dx AS cx, "
-                f"size div {eps_s} + dy AS cy))))"
-            )
-        ).alias("cell"),
-    ).select("ib", "b_cents", "b_size", "cell.cx", "cell.cy")
+    xy = ("cents", "size")
     return (
-        a.join(b, ["cx", "cy"])
+        cell_join(
+            base, base, xy, xy, (eps_p, eps_s),
+            home_cols=[
+                F.col("p_partkey").alias("ia"),
+                F.col("cents").alias("a_cents"),
+                F.col("size").alias("a_size"),
+            ],
+            away_cols=[
+                F.col("p_partkey").alias("ib"),
+                F.col("cents").alias("b_cents"),
+                F.col("size").alias("b_size"),
+            ],
+        )
         .filter(
             (F.col("ia") < F.col("ib"))
             & (F.abs(F.col("a_cents") - F.col("b_cents")) <= eps_p)
@@ -309,38 +414,23 @@ def xmatch_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: spherical match box half-width in centi-degrees (2.00 deg).
+#: spherical match box half-width in centi-degrees (2.00 deg). It
+#: divides _SPH_CIRCLE exactly, so the RA cell ring has
+#: _SPH_CIRCLE // _SPH_EPS uniform cells and modular neighbor
+#: replication is exact.
 _SPH_EPS = 200
-#: full RA circle in centi-degrees; _SPH_EPS divides it exactly, so the
-#: RA cell ring has _SPH_CIRCLE // _SPH_EPS uniform cells and modular
-#: neighbor replication is exact.
-_SPH_CIRCLE = 36000
 _SPH_RA_CELLS = _SPH_CIRCLE // _SPH_EPS
-
-_SPH_HAVERSINE = """
-ROUND(2*ASIN(SQRT(
-  POW(SIN(RADIANS((b_dec_c - a_dec_c)/100.0)/2), 2)
-  + COS(RADIANS(a_dec_c/100.0))*COS(RADIANS(b_dec_c/100.0))
-    *POW(SIN(RADIANS((b_ra_c - a_ra_c)/100.0)/2), 2))), 6)
-"""
 
 
 @register(
     "xmatch_sphere",
     oracle=f"""
-WITH cat AS (
-  SELECT c_custkey AS obj_id,
-         {_RA_SQL} AS ra_c,
-         {_DEC_SQL} AS dec_c
-  FROM customer
-)
+WITH cat AS ({sky_catalog_sql()})
 SELECT a.obj_id AS ia, b.obj_id AS ib,
-       {_SPH_HAVERSINE.replace("a_dec_c", "a.dec_c").replace("b_dec_c", "b.dec_c")
-                      .replace("a_ra_c", "a.ra_c").replace("b_ra_c", "b.ra_c")}
+       {haversine_sql("a.ra_c", "a.dec_c", "b.ra_c", "b.dec_c")}
          AS dist_rad
 FROM cat a JOIN cat b ON a.obj_id < b.obj_id
-WHERE LEAST(abs(a.ra_c - b.ra_c),
-            {_SPH_CIRCLE} - abs(a.ra_c - b.ra_c)) <= {_SPH_EPS}
+WHERE {ra_dist_sql("a.ra_c", "b.ra_c")} <= {_SPH_EPS}
   AND abs(a.dec_c - b.dec_c) <= {_SPH_EPS}
 """,
 )
@@ -366,14 +456,7 @@ def xmatch_sphere(spark: SparkSession, sf_dir: str) -> DataFrame:
     style ring indexing restricted to one axis; same join shape. At
     100 TB: shuffle on cell id, AQE splits dense sky cells.
     """
-    c = load_table(spark, sf_dir, "customer")
-    ra, dec = sky_radec("c_custkey")
-    base = c.select(
-        F.col("c_custkey").alias("obj_id"),
-        ra.alias("ra_c"),
-        dec.alias("dec_c"),
-    )
-    return sphere_match(base)
+    return sphere_match(sky_catalog(spark, sf_dir))
 
 
 def sphere_match(base: DataFrame) -> DataFrame:
@@ -384,37 +467,33 @@ def sphere_match(base: DataFrame) -> DataFrame:
     genuinely straddles RA 0°/360°, so wraparound correctness is pinned
     by a planted-pair test instead).
     """
-    eps, ncell = _SPH_EPS, _SPH_RA_CELLS
-    a = base.select(
-        F.col("obj_id").alias("ia"),
-        F.col("ra_c").alias("a_ra_c"),
-        F.col("dec_c").alias("a_dec_c"),
-        F.expr(f"ra_c div {eps}").alias("cx"),
-        F.expr(f"dec_c div {eps}").alias("cy"),
-    )
-    b = base.select(
-        F.col("obj_id").alias("ib"),
-        F.col("ra_c").alias("b_ra_c"),
-        F.col("dec_c").alias("b_dec_c"),
-        F.explode(
-            F.expr(
-                f"flatten(transform(sequence(-1, 1), dx -> "
-                f"transform(sequence(-1, 1), dy -> "
-                f"struct(pmod(ra_c div {eps} + dx, {ncell}) AS cx, "
-                f"dec_c div {eps} + dy AS cy))))"
-            )
-        ).alias("cell"),
-    ).select("ib", "b_ra_c", "b_dec_c", "cell.cx", "cell.cy")
-    dra = F.abs(F.col("a_ra_c") - F.col("b_ra_c"))
-    circ_dra = F.least(dra, F.lit(_SPH_CIRCLE) - dra)
+    eps = _SPH_EPS
+    xy = ("ra_c", "dec_c")
     return (
-        a.join(b, ["cx", "cy"])
+        cell_join(
+            base, base, xy, xy, (eps, eps), _SPH_RA_CELLS,
+            home_cols=[
+                F.col("obj_id").alias("ia"),
+                F.col("ra_c").alias("a_ra_c"),
+                F.col("dec_c").alias("a_dec_c"),
+            ],
+            away_cols=[
+                F.col("obj_id").alias("ib"),
+                F.col("ra_c").alias("b_ra_c"),
+                F.col("dec_c").alias("b_dec_c"),
+            ],
+        )
         .filter(
             (F.col("ia") < F.col("ib"))
-            & (circ_dra <= eps)
+            & (ra_dist("a_ra_c", "b_ra_c") <= eps)
             & (F.abs(F.col("a_dec_c") - F.col("b_dec_c")) <= eps)
         )
-        .select("ia", "ib", F.expr(_SPH_HAVERSINE).alias("dist_rad"))
+        .select(
+            "ia", "ib",
+            F.expr(
+                haversine_sql("a_ra_c", "a_dec_c", "b_ra_c", "b_dec_c")
+            ).alias("dist_rad"),
+        )
     )
 
 
@@ -430,6 +509,9 @@ _CONE_RA_BOX = 2130
 #: radius in radians, rounded to the same 6 dp as the distance column.
 _CONE_R_RAD = 0.349066
 
+#: haversine to the cone center. Not ``haversine_sql``: with the center
+#: as the first point the cosine product flips its operand order, which
+#: changes the printed plan for no gain.
 _CONE_DIST = f"""
 ROUND(2*ASIN(SQRT(
   POW(SIN(RADIANS((dec_c - {_CONE_DEC0})/100.0)/2), 2)
@@ -441,16 +523,10 @@ ROUND(2*ASIN(SQRT(
 @register(
     "cone_search",
     oracle=f"""
-WITH cat AS (
-  SELECT c_custkey AS obj_id,
-         {_RA_SQL} AS ra_c,
-         {_DEC_SQL} AS dec_c
-  FROM customer
-)
+WITH cat AS ({sky_catalog_sql()})
 SELECT obj_id, ra_c, dec_c, {_CONE_DIST} AS dist_rad
 FROM cat
-WHERE LEAST(abs(ra_c - {_CONE_RA0}), {_SPH_CIRCLE} - abs(ra_c - {_CONE_RA0}))
-        <= {_CONE_RA_BOX}
+WHERE {ra_dist_sql("ra_c", str(_CONE_RA0))} <= {_CONE_RA_BOX}
   AND abs(dec_c - {_CONE_DEC0}) <= {_CONE_R_CDEG}
   AND {_CONE_DIST} <= {_CONE_R_RAD}
 """,
@@ -473,22 +549,14 @@ def cone_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition pruning and the query reads only the handful of cells
     under the cone — the relational form of a HEALPix index lookup.
     """
-    c = load_table(spark, sf_dir, "customer")
-    ra, dec = sky_radec("c_custkey")
-    cat = c.select(
-        F.col("c_custkey").alias("obj_id"),
-        ra.alias("ra_c"),
-        dec.alias("dec_c"),
-    )
-    return cone_filter(cat)
+    return cone_filter(sky_catalog(spark, sf_dir))
 
 
 def cone_filter(cat: DataFrame) -> DataFrame:
     """The reusable cone predicate over (obj_id, ra_c, dec_c) rows —
     exposed so tests can plant an object across the RA 0/360 seam."""
-    dra = F.abs(F.col("ra_c") - _CONE_RA0)
     return cat.filter(
-        (F.least(dra, F.lit(_SPH_CIRCLE) - dra) <= _CONE_RA_BOX)
+        (ra_dist("ra_c", F.lit(_CONE_RA0)) <= _CONE_RA_BOX)
         & (F.abs(F.col("dec_c") - _CONE_DEC0) <= _CONE_R_CDEG)
         & (F.expr(_CONE_DIST) <= _CONE_R_RAD)
     ).select("obj_id", "ra_c", "dec_c", F.expr(_CONE_DIST).alias("dist_rad"))
@@ -650,11 +718,7 @@ _PIX_LEVELS = 3
 @register(
     "sky_pixel_rollup",
     oracle=f"""
-WITH cat AS (
-  SELECT {_RA_SQL} AS ra_c,
-         {_DEC_SQL} AS dec_c
-  FROM customer
-), fine AS (
+WITH cat AS ({sky_catalog_sql()}), fine AS (
   SELECT (ra_c * 8) // 36000 AS x, ((dec_c + 9000) * 8) // 18000 AS y,
          COUNT(*) AS n
   FROM cat GROUP BY 1, 2
@@ -683,14 +747,8 @@ def sky_pixel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate-once-re-roll-many contract as `agg_hll_sketch`, with
     COUNT's trivial merge in place of sketch union.
     """
-    c = load_table(spark, sf_dir, "customer")
-    ra, dec = sky_radec("c_custkey")
-    cat = c.select(
-        ra.alias("ra_c"),
-        dec.alias("dec_c"),
-    )
     fine = (
-        cat.select(
+        sky_catalog(spark, sf_dir).select(
             (F.col("ra_c") * 8 / 36000).cast("long").alias("x"),
             ((F.col("dec_c") + 9000) * 8 / 18000).cast("long").alias("y"),
         )
@@ -828,25 +886,21 @@ _EPOCH_OFF = 10_000_000
     "xmatch_epoch",
     oracle=f"""
 WITH cat AS (
-  SELECT c_custkey AS obj_id,
-         {_RA_SQL} AS ra_c,
-         {_DEC_SQL} AS dec_c,
-         {md5_int_sql("CAST(c_custkey AS VARCHAR)", 13, 4)} % 81 - 40 AS pm_ra,
-         {md5_int_sql("CAST(c_custkey AS VARCHAR)", 17, 4)} % 81 - 40 AS pm_dec
-  FROM customer
+  SELECT *,
+         {md5_int_sql("CAST(obj_id AS VARCHAR)", 13, 4)} % 81 - 40 AS pm_ra,
+         {md5_int_sql("CAST(obj_id AS VARCHAR)", 17, 4)} % 81 - 40 AS pm_dec
+  FROM ({sky_catalog_sql()})
 ), e1 AS (
   SELECT obj_id, ((ra_c + pm_ra) % 36000 + 36000) % 36000 AS ra_c,
          dec_c + pm_dec AS dec_c
   FROM cat
 )
 SELECT a.obj_id AS ia, b.obj_id AS ib_src,
-       {_SPH_HAVERSINE.replace("a_dec_c", "a.dec_c").replace("b_dec_c", "b.dec_c")
-                      .replace("a_ra_c", "a.ra_c").replace("b_ra_c", "b.ra_c")}
+       {haversine_sql("a.ra_c", "a.dec_c", "b.ra_c", "b.dec_c")}
          AS dist_rad,
        a.obj_id = b.obj_id AS is_self
 FROM cat a JOIN e1 b
-  ON LEAST(abs(a.ra_c - b.ra_c), {_SPH_CIRCLE} - abs(a.ra_c - b.ra_c))
-       <= {_SPH_EPS}
+  ON {ra_dist_sql("a.ra_c", "b.ra_c")} <= {_SPH_EPS}
  AND abs(a.dec_c - b.dec_c) <= {_SPH_EPS}
 """,
 )
@@ -870,13 +924,9 @@ def xmatch_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the poles where RA cells degenerate anyway — see the kernel's
     HEALPix note).
     """
-    c = load_table(spark, sf_dir, "customer")
-    ra, dec = sky_radec("c_custkey")
-    key = F.col("c_custkey").cast("string")
-    cat = c.select(
-        F.col("c_custkey").alias("obj_id"),
-        ra.alias("ra_c"),
-        dec.alias("dec_c"),
+    key = F.col("obj_id").cast("string")
+    cat = sky_catalog(spark, sf_dir).select(
+        "*",
         (md5_int(key, 13, 4) % 81 - 40).alias("pm_ra"),
         (md5_int(key, 17, 4) % 81 - 40).alias("pm_dec"),
     )
@@ -976,17 +1026,11 @@ def lightcurve_sigma_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "xmatch_neighbor_density",
     oracle=f"""
-WITH cat AS (
-  SELECT c_custkey AS obj_id,
-         {_RA_SQL} AS ra_c,
-         {_DEC_SQL} AS dec_c
-  FROM customer
-)
+WITH cat AS ({sky_catalog_sql()})
 SELECT a.obj_id, CAST(COUNT(b.obj_id) AS BIGINT) AS n_neighbors
 FROM cat a LEFT JOIN cat b
   ON a.obj_id <> b.obj_id
- AND LEAST(abs(a.ra_c - b.ra_c), {_SPH_CIRCLE} - abs(a.ra_c - b.ra_c))
-       <= {_SPH_EPS}
+ AND {ra_dist_sql("a.ra_c", "b.ra_c")} <= {_SPH_EPS}
  AND abs(a.dec_c - b.dec_c) <= {_SPH_EPS}
 GROUP BY a.obj_id
 """,
@@ -1002,13 +1046,7 @@ def xmatch_neighbor_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cell-bucketed pair space, never n²) plus one count aggregation on
     the object id.
     """
-    c = load_table(spark, sf_dir, "customer")
-    ra, dec = sky_radec("c_custkey")
-    base = c.select(
-        F.col("c_custkey").alias("obj_id"),
-        ra.alias("ra_c"),
-        dec.alias("dec_c"),
-    )
+    base = sky_catalog(spark, sf_dir)
     pairs = sphere_match(base)
     ends = pairs.select(F.col("ia").alias("obj_id")).unionAll(
         pairs.select(F.col("ib").alias("obj_id"))
@@ -1091,17 +1129,14 @@ def lightcurve_structure_function(spark: SparkSession, sf_dir: str) -> DataFrame
     "xmatch_completeness",
     oracle=f"""
 WITH cat AS (
-  SELECT c_custkey AS obj_id,
-         {_RA_SQL} AS ra_c,
-         {_DEC_SQL} AS dec_c,
-         {md5_int_sql("CAST(c_custkey AS VARCHAR)", 21, 3)} % 10 + 12 AS mag_bin
-  FROM customer
+  SELECT *,
+         {md5_int_sql("CAST(obj_id AS VARCHAR)", 21, 3)} % 10 + 12 AS mag_bin
+  FROM ({sky_catalog_sql()})
 ), matched AS (
   SELECT DISTINCT a.obj_id
   FROM cat a JOIN cat b
     ON a.obj_id <> b.obj_id
-   AND LEAST(abs(a.ra_c - b.ra_c), {_SPH_CIRCLE} - abs(a.ra_c - b.ra_c))
-         <= {_SPH_EPS}
+   AND {ra_dist_sql("a.ra_c", "b.ra_c")} <= {_SPH_EPS}
    AND abs(a.dec_c - b.dec_c) <= {_SPH_EPS}
 )
 SELECT c.mag_bin, COUNT(*) AS n_objects,
@@ -1123,14 +1158,9 @@ def xmatch_completeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     The synthetic magnitude rides the same md5 derivation as the
     coordinates, so both engines bin identically.
     """
-    c = load_table(spark, sf_dir, "customer")
-    ra, dec = sky_radec("c_custkey")
-    key = F.col("c_custkey").cast("string")
-    cat = c.select(
-        F.col("c_custkey").alias("obj_id"),
-        ra.alias("ra_c"),
-        dec.alias("dec_c"),
-        (md5_int(key, 21, 3) % 10 + 12).alias("mag_bin"),
+    key = F.col("obj_id").cast("string")
+    cat = sky_catalog(spark, sf_dir).select(
+        "*", (md5_int(key, 21, 3) % 10 + 12).alias("mag_bin")
     )
     pairs = sphere_match(cat.select("obj_id", "ra_c", "dec_c"))
     matched = (
@@ -1642,26 +1672,8 @@ def xmatch_photometric_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolation. One shuffle to the (cell, diff) aggregate; the
     median window runs per cell over collapsed counts.
     """
-    eps = _PHOT_EPS
-    c = load_table(spark, sf_dir, "customer").select(
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("c_cents")
-    ).withColumn("cell", F.expr(f"c_cents div {eps}"))
-    s = load_table(spark, sf_dir, "supplier").select(
-        F.round(F.col("s_acctbal") * 100).cast("long").alias("s_cents")
-    ).withColumn(
-        "s_cell",
-        F.explode(
-            F.array(
-                F.expr(f"s_cents div {eps} - 1"),
-                F.expr(f"s_cents div {eps}"),
-                F.expr(f"s_cents div {eps} + 1"),
-            )
-        ),
-    )
-    pairs = (
-        c.join(s, c.cell == s.s_cell)
-        .where(F.abs(F.col("c_cents") - F.col("s_cents")) <= eps)
-        .select("cell", (F.col("c_cents") - F.col("s_cents")).alias("d"))
+    pairs = _balance_candidates(spark, sf_dir, _PHOT_EPS).select(
+        "cell", (F.col("c_cents") - F.col("s_cents")).alias("d")
     )
     g = pairs.groupBy("cell", "d").agg(F.count(F.lit(1)).alias("n"))
     wc = Window.partitionBy("cell").orderBy("d").rowsBetween(
@@ -1785,39 +1797,29 @@ def xmatch_three_way(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("p_partkey") % 3).alias("cat_id"),
     )
 
-    def _anchor(df, key_out):
-        return df.select(
+    xy = ("cents", "size")
+
+    def cols(key_out):
+        return [
             F.col("p_partkey").alias(key_out),
             F.col("cents").alias(f"{key_out}_cents"),
             F.col("size").alias(f"{key_out}_size"),
-            F.expr(f"cents div {eps_p}").alias("cx"),
-            F.expr(f"size div {eps_s}").alias("cy"),
-        )
+        ]
 
-    def _neighbors(df, key_out):
-        return df.select(
-            F.col("p_partkey").alias(key_out),
-            F.col("cents").alias(f"{key_out}_cents"),
-            F.col("size").alias(f"{key_out}_size"),
-            F.explode(
-                F.expr(
-                    f"flatten(transform(sequence(-1, 1), dx -> "
-                    f"transform(sequence(-1, 1), dy -> "
-                    f"struct(cents div {eps_p} + dx AS cx, "
-                    f"size div {eps_s} + dy AS cy))))"
-                )
-            ).alias("cell"),
-        ).select(key_out, f"{key_out}_cents", f"{key_out}_size", "cell.cx", "cell.cy")
+    def catalog(cat_id):
+        return cat.where(F.col("cat_id") == cat_id)
 
-    a = _anchor(cat.where(F.col("cat_id") == 0), "ia")
-    b = _neighbors(cat.where(F.col("cat_id") == 1), "ib")
-    c = _neighbors(cat.where(F.col("cat_id") == 2), "ic")
-
-    ab = a.join(b, ["cx", "cy"]).filter(
+    ab = cell_join(
+        catalog(0), catalog(1), xy, xy, (eps_p, eps_s),
+        home_cols=cols("ia"), away_cols=cols("ib"),
+    ).filter(
         (F.abs(F.col("ia_cents") - F.col("ib_cents")) <= eps_p)
         & (F.abs(F.col("ia_size") - F.col("ib_size")) <= eps_s)
     )
-    abc = ab.join(c, ["cx", "cy"]).filter(
+    # stage 2 matches the third catalog against the anchor's cells
+    abc = cell_join(
+        ab, catalog(2), None, xy, (eps_p, eps_s), away_cols=cols("ic")
+    ).filter(
         (F.abs(F.col("ia_cents") - F.col("ic_cents")) <= eps_p)
         & (F.abs(F.col("ia_size") - F.col("ic_size")) <= eps_s)
     )
@@ -1844,15 +1846,10 @@ _MASK_BAND = 3000
     "xmatch_mask_exclusion",
     oracle=f"""
 WITH c AS MATERIALIZED (
-  SELECT c_custkey AS k,
-         {_RA_SQL} AS ra,
-         {_DEC_SQL} AS dec
-  FROM customer
+  SELECT obj_id AS k, ra_c AS ra, dec_c AS dec FROM ({sky_catalog_sql()})
 ),
 m AS MATERIALIZED (
-  SELECT {_S_RA_SQL} AS ra,
-         {_S_DEC_SQL} AS dec
-  FROM supplier
+  SELECT ra_c AS ra, dec_c AS dec FROM ({sky_catalog_sql("s_suppkey")})
 ),
 flag AS MATERIALIZED (
   SELECT k, dec,
@@ -1895,31 +1892,18 @@ def xmatch_mask_exclusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     one band aggregate. The oracle brute-forces the same circle
     predicate with EXISTS — banding must change nothing but cost.
     """
-    c = load_table(spark, sf_dir, "customer")
-    ra, dec = sky_radec("c_custkey")
-    obj = c.select(F.col("c_custkey").alias("k"), ra.alias("ra"), dec.alias("dec"))
-    s = load_table(spark, sf_dir, "supplier")
-    m_ra, m_dec = sky_radec("s_suppkey")
-    mask = s.select(m_ra.alias("m_ra"), m_dec.alias("m_dec"))
-    mask9 = mask.select(
-        "m_ra",
-        "m_dec",
-        F.explode(
-            F.expr(
-                f"flatten(transform(sequence(-1, 1), dx -> "
-                f"transform(sequence(-1, 1), dy -> "
-                f"struct(m_ra div {_MASK_R} + dx AS cx, "
-                f"(m_dec + 9000) div {_MASK_R} + dy AS cy))))"
-            )
-        ).alias("cell"),
-    ).select("m_ra", "m_dec", "cell.cx", "cell.cy")
-    obj_c = obj.select(
-        "k", "ra", "dec",
-        F.expr(f"ra div {_MASK_R}").alias("cx"),
-        F.expr(f"(dec + 9000) div {_MASK_R}").alias("cy"),
+    obj = sky_catalog(spark, sf_dir).select(
+        F.col("obj_id").alias("k"), F.col("ra_c").alias("ra"),
+        F.col("dec_c").alias("dec"),
+    )
+    mask = sky_catalog(spark, sf_dir, "s_suppkey").select(
+        F.col("ra_c").alias("m_ra"), F.col("dec_c").alias("m_dec")
     )
     masked = (
-        obj_c.join(F.broadcast(mask9), ["cx", "cy"])
+        cell_join(
+            obj, F.broadcast(mask), ("ra", "(dec + 9000)"),
+            ("m_ra", "(m_dec + 9000)"), (_MASK_R, _MASK_R),
+        )
         .filter(
             (F.col("ra") - F.col("m_ra")) * (F.col("ra") - F.col("m_ra"))
             + (F.col("dec") - F.col("m_dec"))
@@ -3279,12 +3263,7 @@ ROUND((CAST({_GAL_L_NCP} AS DOUBLE) - DEGREES(ATAN2(
 @register(
     "sky_galactic_transform",
     oracle=f"""
-WITH cat AS (
-  SELECT c_custkey AS obj_id,
-         {_RA_SQL} AS ra_c,
-         {_DEC_SQL} AS dec_c
-  FROM customer
-),
+WITH cat AS ({sky_catalog_sql()}),
 gal AS (
   SELECT obj_id, ra_c, dec_c,
          {_GAL_L_EXPR} AS l_deg,
@@ -3320,14 +3299,7 @@ def sky_galactic_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage (`sphere_match` on l/b cells) reuses the binned-join kernel
     unchanged.
     """
-    c = load_table(spark, sf_dir, "customer")
-    ra, dec = sky_radec("c_custkey")
-    cat = c.select(
-        F.col("c_custkey").alias("obj_id"),
-        ra.alias("ra_c"),
-        dec.alias("dec_c"),
-    )
-    gal = cat.select(
+    gal = sky_catalog(spark, sf_dir).select(
         "obj_id", "ra_c", "dec_c",
         F.expr(_GAL_L_EXPR).alias("l_deg"),
         F.expr(_GAL_EXPR).alias("b_deg"),
@@ -3344,19 +3316,38 @@ _TRK_GATE = 5
 _TRK_CELL = 8
 
 
+def _mover_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The sky catalog at epoch 0, ``(obj_id, ra0, dec0)``, with the
+    planted proper motion ``(vra, vdec)``: every 20th object drifts at an
+    id-derived integer velocity in centi-degrees per epoch."""
+    mover = F.col("obj_id") % 20 == 0
+    return sky_catalog(spark, sf_dir).select(
+        "obj_id",
+        F.col("ra_c").alias("ra0"),
+        F.col("dec_c").alias("dec0"),
+        F.when(mover, F.col("obj_id") % 7 - 3)
+        .otherwise(0).cast("long").alias("vra"),
+        F.when(mover, F.col("obj_id") % 5 - 2)
+        .otherwise(0).cast("long").alias("vdec"),
+    )
+
+
+def _mover_catalog_sql() -> str:
+    """DuckDB-side twin of :func:`_mover_catalog`."""
+    return f"""
+  SELECT obj_id, ra_c AS ra0, dec_c AS dec0,
+         CASE WHEN obj_id % 20 = 0
+              THEN (obj_id % 7) - 3 ELSE 0 END AS vra,
+         CASE WHEN obj_id % 20 = 0
+              THEN (obj_id % 5) - 2 ELSE 0 END AS vdec
+  FROM ({sky_catalog_sql()})
+"""
+
+
 @register(
     "sky_tracklet_link",
     oracle=f"""
-WITH cat AS (
-  SELECT c_custkey AS obj_id,
-         {_RA_SQL} AS ra0,
-         {_DEC_SQL} AS dec0,
-         CASE WHEN c_custkey % 20 = 0
-              THEN (c_custkey % 7) - 3 ELSE 0 END AS vra,
-         CASE WHEN c_custkey % 20 = 0
-              THEN (c_custkey % 5) - 2 ELSE 0 END AS vdec
-  FROM customer
-),
+WITH cat AS ({_mover_catalog_sql()}),
 det AS (
   SELECT e.e, ra0 + vra * e.e AS ra, dec0 + vdec * e.e AS dec
   FROM cat CROSS JOIN (VALUES (0), (1), (2)) e(e)
@@ -3422,17 +3413,7 @@ def sky_tracklet_link(spark: SparkSession, sf_dir: str) -> DataFrame:
     wraparound (synthetic field; production wraps mod 360 deg like
     `sphere_match`'s ring cells).
     """
-    c = load_table(spark, sf_dir, "customer")
-    ra, dec = sky_radec("c_custkey")
-    cat = c.select(
-        ra.alias("ra0"),
-        dec.alias("dec0"),
-        F.when(F.col("c_custkey") % 20 == 0, F.col("c_custkey") % 7 - 3)
-        .otherwise(0).alias("vra"),
-        F.when(F.col("c_custkey") % 20 == 0, F.col("c_custkey") % 5 - 2)
-        .otherwise(0).alias("vdec"),
-    )
-    det = cat.select(
+    det = _mover_catalog(spark, sf_dir).select(
         F.explode(F.array(F.lit(0), F.lit(1), F.lit(2))).alias("e"),
         "ra0", "vra", "dec0", "vdec",
     ).select(
@@ -3449,24 +3430,14 @@ def sky_tracklet_link(spark: SparkSession, sf_dir: str) -> DataFrame:
     mv = det.join(stationary, ["ra", "dec"], "left_anti")
 
     def link(e_from: int, e_to: int) -> DataFrame:
-        a = mv.filter(F.col("e") == e_from).select(
-            F.col("ra").alias("ra_a"), F.col("dec").alias("dec_a"),
-            F.expr(f"ra div {_TRK_CELL}").alias("cx"),
-            F.expr(f"dec div {_TRK_CELL}").alias("cy"),
-        )
-        b = mv.filter(F.col("e") == e_to).select(
-            F.col("ra").alias("ra_b"), F.col("dec").alias("dec_b"),
-            F.explode(
-                F.expr(
-                    f"flatten(transform(sequence(-1, 1), dx -> "
-                    f"transform(sequence(-1, 1), dy -> "
-                    f"struct(ra div {_TRK_CELL} + dx AS cx, "
-                    f"dec div {_TRK_CELL} + dy AS cy))))"
-                )
-            ).alias("cell"),
-        ).select("ra_b", "dec_b", "cell.cx", "cell.cy")
+        xy = ("ra", "dec")
         return (
-            a.join(b, ["cx", "cy"])
+            cell_join(
+                mv.filter(F.col("e") == e_from), mv.filter(F.col("e") == e_to),
+                xy, xy, (_TRK_CELL, _TRK_CELL),
+                home_cols=[F.col("ra").alias("ra_a"), F.col("dec").alias("dec_a")],
+                away_cols=[F.col("ra").alias("ra_b"), F.col("dec").alias("dec_b")],
+            )
             .filter(
                 (F.abs(F.col("ra_b") - F.col("ra_a")) <= _TRK_GATE)
                 & (F.abs(F.col("dec_b") - F.col("dec_a")) <= _TRK_GATE)
@@ -3555,11 +3526,7 @@ def _hpx_sql_oracle() -> str:
     z9 = grid_sql("SIN(RADIANS(CAST(dec_c AS DOUBLE) / 100.0))", 9)
     pix = _hpx_ring_expr("ra_c", "z9", "//")
     return f"""
-WITH cat AS (
-  SELECT c_custkey AS obj_id,
-         {_RA_SQL} AS ra_c,
-         {_DEC_SQL} AS dec_c
-  FROM customer),
+WITH cat AS ({sky_catalog_sql()}),
 z AS (
   SELECT obj_id, ra_c, dec_c, {z9} AS z9 FROM cat),
 px AS (
@@ -3596,14 +3563,7 @@ def sky_healpix_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaces its ad-hoc cells with this id unchanged); neighbor
     replication stays 3×3 in (ring, intra-ring) space.
     """
-    c = load_table(spark, sf_dir, "customer")
-    ra, dec = sky_radec("c_custkey")
-    cat = c.select(
-        F.col("c_custkey").alias("obj_id"),
-        ra.alias("ra_c"),
-        dec.alias("dec_c"),
-    )
-    z = cat.select(
+    z = sky_catalog(spark, sf_dir).select(
         "obj_id", "ra_c",
         grid(
             F.sin(F.radians(F.col("dec_c").cast("double") / F.lit(100.0))), 9
@@ -3637,18 +3597,12 @@ def _tpt_bin_expr(dist_col: str) -> str:
 @register(
     "sky_two_point_dd",
     oracle=f"""
-WITH cat AS (
-  SELECT c_custkey AS obj_id,
-         {_RA_SQL} AS ra_c,
-         {_DEC_SQL} AS dec_c
-  FROM customer),
+WITH cat AS ({sky_catalog_sql()}),
 pairs AS (
-  SELECT {_SPH_HAVERSINE.replace("a_dec_c", "a.dec_c").replace("b_dec_c", "b.dec_c")
-                        .replace("a_ra_c", "a.ra_c").replace("b_ra_c", "b.ra_c")}
+  SELECT {haversine_sql("a.ra_c", "a.dec_c", "b.ra_c", "b.dec_c")}
            AS dist_rad
   FROM cat a JOIN cat b ON a.obj_id < b.obj_id
-  WHERE LEAST(abs(a.ra_c - b.ra_c),
-              {_SPH_CIRCLE} - abs(a.ra_c - b.ra_c)) <= {_SPH_EPS}
+  WHERE {ra_dist_sql("a.ra_c", "b.ra_c")} <= {_SPH_EPS}
     AND abs(a.dec_c - b.dec_c) <= {_SPH_EPS})
 SELECT CAST(sep_bin AS BIGINT) AS sep_bin,
        CAST(COUNT(*) AS BIGINT) AS dd_pairs
@@ -3679,14 +3633,7 @@ def sky_two_point_dd(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-cell partial histograms merge associatively, which is why
     two-point codes distribute this exact shape.
     """
-    c = load_table(spark, sf_dir, "customer")
-    ra, dec = sky_radec("c_custkey")
-    base = c.select(
-        F.col("c_custkey").alias("obj_id"),
-        ra.alias("ra_c"),
-        dec.alias("dec_c"),
-    )
-    pairs = sphere_match(base)
+    pairs = sphere_match(sky_catalog(spark, sf_dir))
     return (
         pairs.select(
             F.expr(_tpt_bin_expr("dist_rad")).cast("long").alias("sep_bin")
@@ -3892,30 +3839,24 @@ _CATM_ECHO_OFF = 50_000_000
 
 def _catm_detections_sql() -> str:
     return f"""
-  SELECT c_custkey AS det_id,
-         {_RA_SQL} AS ra_c,
-         {_DEC_SQL} AS dec_c
-  FROM customer
+  SELECT obj_id AS det_id, ra_c, dec_c FROM ({sky_catalog_sql()})
   UNION ALL
-  SELECT c_custkey + {_CATM_ECHO_OFF},
-         ({_RA_SQL} + 1) % 36000,
-         {_DEC_SQL} - 1
-  FROM customer WHERE c_custkey % 3 = 0
+  SELECT obj_id + {_CATM_ECHO_OFF}, (ra_c + 1) % 36000, dec_c - 1
+  FROM ({sky_catalog_sql()}) WHERE obj_id % 3 = 0
 """
 
 
 @register(
     "sky_catalog_merge",
     oracle=f"""
-WITH RECURSIVE det AS ({_catm_detections_sql()}),
-pairs AS (
+WITH RECURSIVE det AS MATERIALIZED ({_catm_detections_sql()}),
+pairs AS MATERIALIZED (
   SELECT a.det_id AS ia, b.det_id AS ib
   FROM det a JOIN det b ON a.det_id < b.det_id
-  WHERE LEAST(abs(a.ra_c - b.ra_c),
-              {_SPH_CIRCLE} - abs(a.ra_c - b.ra_c)) <= {_CATM_EPS}
+  WHERE {ra_dist_sql("a.ra_c", "b.ra_c")} <= {_CATM_EPS}
     AND abs(a.dec_c - b.dec_c) <= {_CATM_EPS}
 ),
-edges AS (SELECT ia AS a, ib AS b FROM pairs
+edges AS MATERIALIZED (SELECT ia AS a, ib AS b FROM pairs
           UNION SELECT ib AS a, ia AS b FROM pairs),
 reach AS (
   SELECT det_id AS id, det_id AS r FROM det
@@ -3959,43 +3900,34 @@ def sky_catalog_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact shape LSST's internal match distributes. Overflow:
     coordinate sums <= n_det·36000 — trivial.
     """
-    c = load_table(spark, sf_dir, "customer")
-    ra, dec = sky_radec("c_custkey")
-    base = c.select(
-        F.col("c_custkey").alias("det_id"),
-        ra.alias("ra_c"), dec.alias("dec_c"),
+    cat = sky_catalog(spark, sf_dir)
+    echo = cat.filter(F.col("obj_id") % 3 == 0).select(
+        (F.col("obj_id") + _CATM_ECHO_OFF).alias("obj_id"),
+        ((F.col("ra_c") + 1) % 36000).alias("ra_c"),
+        (F.col("dec_c") - 1).alias("dec_c"),
     )
-    echo = c.filter(F.col("c_custkey") % 3 == 0).select(
-        (F.col("c_custkey") + _CATM_ECHO_OFF).alias("det_id"),
-        ((ra + 1) % 36000).alias("ra_c"),
-        (dec - 1).alias("dec_c"),
+    det = (
+        cat.unionAll(echo)
+        .withColumnRenamed("obj_id", "det_id")
+        .localCheckpoint(eager=True)
     )
-    det = base.unionAll(echo).localCheckpoint(eager=True)
-    eps, ncell = _CATM_EPS, _CATM_CELLS
-    a = det.select(
-        F.col("det_id").alias("ia"),
-        F.col("ra_c").alias("a_ra"), F.col("dec_c").alias("a_dec"),
-        F.expr(f"ra_c div {eps}").alias("cx"),
-        F.expr(f"dec_c div {eps}").alias("cy"),
-    )
-    b = det.select(
-        F.col("det_id").alias("ib"),
-        F.col("ra_c").alias("b_ra"), F.col("dec_c").alias("b_dec"),
-        F.explode(
-            F.expr(
-                f"flatten(transform(sequence(-1, 1), dx -> "
-                f"transform(sequence(-1, 1), dy -> "
-                f"struct(pmod(ra_c div {eps} + dx, {ncell}) AS cx, "
-                f"dec_c div {eps} + dy AS cy))))"
-            )
-        ).alias("cell"),
-    ).select("ib", "b_ra", "b_dec", "cell.cx", "cell.cy")
-    dra = F.abs(F.col("a_ra") - F.col("b_ra"))
+    eps = _CATM_EPS
+    xy = ("ra_c", "dec_c")
     pairs = (
-        a.join(b, ["cx", "cy"])
+        cell_join(
+            det, det, xy, xy, (eps, eps), _CATM_CELLS,
+            home_cols=[
+                F.col("det_id").alias("ia"),
+                F.col("ra_c").alias("a_ra"), F.col("dec_c").alias("a_dec"),
+            ],
+            away_cols=[
+                F.col("det_id").alias("ib"),
+                F.col("ra_c").alias("b_ra"), F.col("dec_c").alias("b_dec"),
+            ],
+        )
         .filter(
             (F.col("ia") < F.col("ib"))
-            & (F.least(dra, F.lit(_SPH_CIRCLE) - dra) <= eps)
+            & (ra_dist("a_ra", "b_ra") <= eps)
             & (F.abs(F.col("a_dec") - F.col("b_dec")) <= eps)
         )
         .select("ia", "ib")
@@ -4029,23 +3961,10 @@ _EPR_EPS = 4
 _EPR_CELLS = _SPH_CIRCLE // _EPR_EPS
 
 
-def _epr_cat_sql() -> str:
-    return f"""
-  SELECT c_custkey AS obj_id,
-         {_RA_SQL} AS ra0,
-         {_DEC_SQL} AS dec0,
-         CASE WHEN c_custkey % 20 = 0
-              THEN (c_custkey % 7) - 3 ELSE 0 END AS vra,
-         CASE WHEN c_custkey % 20 = 0
-              THEN (c_custkey % 5) - 2 ELSE 0 END AS vdec
-  FROM customer
-"""
-
-
 @register(
     "xmatch_epoch_propagate",
     oracle=f"""
-WITH cat AS ({_epr_cat_sql()}),
+WITH cat AS ({_mover_catalog_sql()}),
 b AS (
   SELECT obj_id AS b_id,
          (ra0 + {_EPR_DT} * vra + ((obj_id * 13) % 3 - 1) + 36000) % 36000
@@ -4062,12 +3981,10 @@ a AS (
 ),
 cand AS (
   SELECT a.a_id, a.is_mover, b.b_id,
-         LEAST(abs(a.p_ra - b.b_ra), {_SPH_CIRCLE} - abs(a.p_ra - b.b_ra))
-           AS dra,
+         {ra_dist_sql("a.p_ra", "b.b_ra")} AS dra,
          abs(a.p_dec - b.b_dec) AS ddec
   FROM a JOIN b
-    ON LEAST(abs(a.p_ra - b.b_ra),
-             {_SPH_CIRCLE} - abs(a.p_ra - b.b_ra)) <= {_EPR_EPS}
+    ON {ra_dist_sql("a.p_ra", "b.b_ra")} <= {_EPR_EPS}
    AND abs(a.p_dec - b.b_dec) <= {_EPR_EPS}
 ),
 best AS (
@@ -4113,17 +4030,7 @@ def xmatch_epoch_propagate(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is a 2-row audit. Propagation itself is a stateless narrow
     projection — at survey scale it fuses into the scan.
     """
-    c = load_table(spark, sf_dir, "customer")
-    ra, dec = sky_radec("c_custkey")
-    cat = c.select(
-        F.col("c_custkey").alias("obj_id"),
-        ra.alias("ra0"),
-        dec.alias("dec0"),
-        F.when(F.col("c_custkey") % 20 == 0, F.col("c_custkey") % 7 - 3)
-        .otherwise(0).cast("long").alias("vra"),
-        F.when(F.col("c_custkey") % 20 == 0, F.col("c_custkey") % 5 - 2)
-        .otherwise(0).cast("long").alias("vdec"),
-    )
+    cat = _mover_catalog(spark, sf_dir)
     bcat = cat.select(
         F.col("obj_id").alias("b_id"),
         (
@@ -4144,28 +4051,14 @@ def xmatch_epoch_propagate(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("dec0") + _EPR_DT * F.col("vdec")).alias("p_dec"),
         (F.col("obj_id") % 20 == 0).alias("is_mover"),
     )
-    eps, ncell = _EPR_EPS, _EPR_CELLS
-    a = acat.select(
-        "a_id", "p_ra", "p_dec", "is_mover",
-        F.expr(f"p_ra div {eps}").alias("cx"),
-        F.expr(f"p_dec div {eps}").alias("cy"),
-    )
-    b = bcat.select(
-        "b_id", "b_ra", "b_dec",
-        F.explode(
-            F.expr(
-                f"flatten(transform(sequence(-1, 1), dx -> "
-                f"transform(sequence(-1, 1), dy -> "
-                f"struct(pmod(b_ra div {eps} + dx, {ncell}) AS cx, "
-                f"b_dec div {eps} + dy AS cy))))"
-            )
-        ).alias("cell"),
-    ).select("b_id", "b_ra", "b_dec", "cell.cx", "cell.cy")
-    dra_raw = F.abs(F.col("p_ra") - F.col("b_ra"))
-    dra = F.least(dra_raw, F.lit(_SPH_CIRCLE) - dra_raw)
+    eps = _EPR_EPS
+    dra = ra_dist("p_ra", "b_ra")
     ddec = F.abs(F.col("p_dec") - F.col("b_dec"))
     cand = (
-        a.join(b, ["cx", "cy"])
+        cell_join(
+            acat, bcat, ("p_ra", "p_dec"), ("b_ra", "b_dec"), (eps, eps),
+            _EPR_CELLS,
+        )
         .filter((dra <= eps) & (ddec <= eps))
         .select(
             "a_id", "is_mover", "b_id",
@@ -4302,11 +4195,7 @@ _OBS_MIN_ALT_C = 3000
 @register(
     "sky_observability",
     oracle=f"""
-WITH cat AS (
-  SELECT c_custkey AS obj_id,
-         {_DEC_SQL} AS dec_c
-  FROM customer
-),
+WITH cat AS ({sky_catalog_sql()}),
 alt AS (
   SELECT obj_id, dec_c,
          9000 - abs({_OBS_LAT_C} - dec_c) AS alt_max_c
@@ -4342,13 +4231,7 @@ def sky_observability(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen — no shuffle; the natural downstream (per-night scheduling
     with real hour angles) adds trig columns to the same scan.
     """
-    c = load_table(spark, sf_dir, "customer")
-    _, dec = sky_radec("c_custkey")
-    cat = c.select(
-        F.col("c_custkey").alias("obj_id"),
-        dec.alias("dec_c"),
-    )
-    alt = cat.select(
+    alt = sky_catalog(spark, sf_dir).select(
         "obj_id", "dec_c",
         (F.lit(9000) - F.abs(F.lit(_OBS_LAT_C) - F.col("dec_c")))
         .cast("long").alias("alt_max_c"),
@@ -4372,27 +4255,14 @@ def sky_observability(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "xmatch_mutual_nearest",
     oracle=f"""
-WITH cat AS (
-  SELECT c_custkey AS obj_id,
-         {_RA_SQL} AS ra_c,
-         {_DEC_SQL} AS dec_c
-  FROM customer
-),
-b AS (
-  SELECT s_suppkey AS b_id,
-         {_SS_RA_SQL} AS ra_c,
-         {_SS_DEC_SQL} AS dec_c
-  FROM supplier
-),
+WITH cat AS ({sky_catalog_sql()}),
+b AS ({sky_catalog_sql("s_suppkey", salt="s")}),
 cand AS (
-  SELECT a.obj_id AS a_id, b.b_id,
-         LEAST(abs(a.ra_c - b.ra_c), {_SPH_CIRCLE} - abs(a.ra_c - b.ra_c))
-           * LEAST(abs(a.ra_c - b.ra_c),
-                   {_SPH_CIRCLE} - abs(a.ra_c - b.ra_c))
+  SELECT a.obj_id AS a_id, b.obj_id AS b_id,
+         {ra_dist_sql("a.ra_c", "b.ra_c")} * {ra_dist_sql("a.ra_c", "b.ra_c")}
          + (a.dec_c - b.dec_c) * (a.dec_c - b.dec_c) AS d2
   FROM cat a JOIN b
-    ON LEAST(abs(a.ra_c - b.ra_c),
-             {_SPH_CIRCLE} - abs(a.ra_c - b.ra_c)) <= {_SPH_EPS}
+    ON {ra_dist_sql("a.ra_c", "b.ra_c")} <= {_SPH_EPS}
    AND abs(a.dec_c - b.dec_c) <= {_SPH_EPS}
 ),
 best_a AS (
@@ -4434,44 +4304,24 @@ def xmatch_mutual_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     one exchange each, keyed on an object id — candidate-sized, never
     all-pairs. d² <= 2·200² — trivial ints.
     """
-    c = load_table(spark, sf_dir, "customer")
-    c_ra, c_dec = sky_radec("c_custkey")
-    cat = c.select(
-        F.col("c_custkey").alias("a_id"),
-        c_ra.alias("ra_c"),
-        c_dec.alias("dec_c"),
+    cat = sky_catalog(spark, sf_dir).withColumnRenamed("obj_id", "a_id")
+    bcat = sky_catalog(spark, sf_dir, "s_suppkey", salt="s").withColumnRenamed(
+        "obj_id", "b_id"
     )
-    s = load_table(spark, sf_dir, "supplier")
-    s_ra, s_dec = sky_radec("s_suppkey", salt="s")
-    bcat = s.select(
-        F.col("s_suppkey").alias("b_id"),
-        s_ra.alias("ra_c"),
-        s_dec.alias("dec_c"),
-    )
-    eps, ncell = _SPH_EPS, _SPH_RA_CELLS
-    a = cat.select(
-        "a_id",
-        F.col("ra_c").alias("a_ra"), F.col("dec_c").alias("a_dec"),
-        F.expr(f"ra_c div {eps}").alias("cx"),
-        F.expr(f"dec_c div {eps}").alias("cy"),
-    )
-    b = bcat.select(
-        "b_id",
-        F.col("ra_c").alias("b_ra"), F.col("dec_c").alias("b_dec"),
-        F.explode(
-            F.expr(
-                f"flatten(transform(sequence(-1, 1), dx -> "
-                f"transform(sequence(-1, 1), dy -> "
-                f"struct(pmod(ra_c div {eps} + dx, {ncell}) AS cx, "
-                f"dec_c div {eps} + dy AS cy))))"
-            )
-        ).alias("cell"),
-    ).select("b_id", "b_ra", "b_dec", "cell.cx", "cell.cy")
-    dra_raw = F.abs(F.col("a_ra") - F.col("b_ra"))
-    dra = F.least(dra_raw, F.lit(_SPH_CIRCLE) - dra_raw)
+    eps = _SPH_EPS
+    xy = ("ra_c", "dec_c")
+    dra = ra_dist("a_ra", "b_ra")
     ddec = F.abs(F.col("a_dec") - F.col("b_dec"))
     cand = (
-        a.join(b, ["cx", "cy"])
+        cell_join(
+            cat, bcat, xy, xy, (eps, eps), _SPH_RA_CELLS,
+            home_cols=[
+                "a_id", F.col("ra_c").alias("a_ra"), F.col("dec_c").alias("a_dec")
+            ],
+            away_cols=[
+                "b_id", F.col("ra_c").alias("b_ra"), F.col("dec_c").alias("b_dec")
+            ],
+        )
         .filter((dra <= eps) & (ddec <= eps))
         .select("a_id", "b_id", (dra * dra + ddec * ddec).alias("d2"))
     )
@@ -4610,14 +4460,10 @@ def _tpt_pairs_sql(a_src: str, b_src: str, self_pair: bool) -> str:
   SELECT {_tpt_bin_expr("d.dist_rad")} AS sep_bin,
          CAST(COUNT(*) AS BIGINT) AS n_pairs
   FROM (
-    SELECT {_SPH_HAVERSINE.replace("a_dec_c", "a.dec_c")
-                          .replace("b_dec_c", "b.dec_c")
-                          .replace("a_ra_c", "a.ra_c")
-                          .replace("b_ra_c", "b.ra_c")} AS dist_rad
+    SELECT {haversine_sql("a.ra_c", "a.dec_c", "b.ra_c", "b.dec_c")} AS dist_rad
     FROM {a_src} a JOIN {b_src} b
       ON {cond}
-     AND LEAST(abs(a.ra_c - b.ra_c),
-               {_SPH_CIRCLE} - abs(a.ra_c - b.ra_c)) <= {_SPH_EPS}
+     AND {ra_dist_sql("a.ra_c", "b.ra_c")} <= {_SPH_EPS}
      AND abs(a.dec_c - b.dec_c) <= {_SPH_EPS}) d
   WHERE {_tpt_bin_expr("d.dist_rad")} < 3
   GROUP BY 1
@@ -4627,16 +4473,8 @@ def _tpt_pairs_sql(a_src: str, b_src: str, self_pair: bool) -> str:
 @register(
     "sky_two_point_landy_szalay",
     oracle=f"""
-WITH dcat AS (
-  SELECT c_custkey AS obj_id,
-         {_RA_SQL} AS ra_c,
-         {_DEC_SQL} AS dec_c
-  FROM customer),
-rcat AS (
-  SELECT c_custkey AS obj_id,
-         {_R_RA_SQL} AS ra_c,
-         {_R_DEC_SQL} AS dec_c
-  FROM customer),
+WITH dcat AS ({sky_catalog_sql()}),
+rcat AS ({sky_catalog_sql(salt="r")}),
 dd AS ({_tpt_pairs_sql("dcat", "dcat", True)}),
 dr AS ({_tpt_pairs_sql("dcat", "rcat", False)}),
 rr AS ({_tpt_pairs_sql("rcat", "rcat", True)}),
@@ -4690,50 +4528,32 @@ def sky_two_point_landy_szalay(spark: SparkSession, sf_dir: str) -> DataFrame:
     (surveys run exactly this, with RR cached across data releases
     since randoms don't change; the staged `rcat` plays that role).
     """
-    c = load_table(spark, sf_dir, "customer")
-
-    def cat(salt: str) -> DataFrame:
-        ra, dec = sky_radec("c_custkey", salt=salt)
-        return c.select(
-            F.col("c_custkey").alias("obj_id"), ra.alias("ra_c"), dec.alias("dec_c")
-        )
-
-    dcat = cat("").localCheckpoint(eager=True)
-    rcat = cat("r").localCheckpoint(eager=True)
-    eps, ncell = _SPH_EPS, _SPH_RA_CELLS
+    dcat = sky_catalog(spark, sf_dir).localCheckpoint(eager=True)
+    rcat = sky_catalog(spark, sf_dir, salt="r").localCheckpoint(eager=True)
+    eps = _SPH_EPS
+    xy = ("ra_c", "dec_c")
 
     def pair_bins(left: DataFrame, right: DataFrame,
                   self_pair: bool) -> DataFrame:
-        a = left.select(
-            F.col("obj_id").alias("ia"),
-            F.col("ra_c").alias("a_ra"), F.col("dec_c").alias("a_dec"),
-            F.expr(f"ra_c div {eps}").alias("cx"),
-            F.expr(f"dec_c div {eps}").alias("cy"),
-        )
-        b = right.select(
-            F.col("obj_id").alias("ib"),
-            F.col("ra_c").alias("b_ra"), F.col("dec_c").alias("b_dec"),
-            F.explode(
-                F.expr(
-                    f"flatten(transform(sequence(-1, 1), dx -> "
-                    f"transform(sequence(-1, 1), dy -> "
-                    f"struct(pmod(ra_c div {eps} + dx, {ncell}) AS cx, "
-                    f"dec_c div {eps} + dy AS cy))))"
-                )
-            ).alias("cell"),
-        ).select("ib", "b_ra", "b_dec", "cell.cx", "cell.cy")
-        dra = F.abs(F.col("a_ra") - F.col("b_ra"))
         flt = (
-            (F.least(dra, F.lit(_SPH_CIRCLE) - dra) <= eps)
+            (ra_dist("a_ra", "b_ra") <= eps)
             & (F.abs(F.col("a_dec") - F.col("b_dec")) <= eps)
         )
         if self_pair:
             flt = flt & (F.col("ia") < F.col("ib"))
-        hav = _SPH_HAVERSINE.replace("a_dec_c", "a_dec").replace(
-            "b_dec_c", "b_dec"
-        ).replace("a_ra_c", "a_ra").replace("b_ra_c", "b_ra")
+        hav = haversine_sql("a_ra", "a_dec", "b_ra", "b_dec")
         return (
-            a.join(b, ["cx", "cy"])
+            cell_join(
+                left, right, xy, xy, (eps, eps), _SPH_RA_CELLS,
+                home_cols=[
+                    F.col("obj_id").alias("ia"),
+                    F.col("ra_c").alias("a_ra"), F.col("dec_c").alias("a_dec"),
+                ],
+                away_cols=[
+                    F.col("obj_id").alias("ib"),
+                    F.col("ra_c").alias("b_ra"), F.col("dec_c").alias("b_dec"),
+                ],
+            )
             .filter(flt)
             .select(
                 F.expr(_tpt_bin_expr(f"({hav})")).cast("long")
@@ -4748,7 +4568,7 @@ def sky_two_point_landy_szalay(spark: SparkSession, sf_dir: str) -> DataFrame:
     dr = pair_bins(dcat, rcat, False)
     rr = pair_bins(rcat, rcat, True)
     nn = dcat.agg(F.count(F.lit(1)).cast("long").alias("nd"))
-    bins = c.sparkSession.range(0, 3).select(
+    bins = spark.range(0, 3).select(
         F.col("id").cast("long").alias("sep_bin")
     )
     j = (

@@ -458,23 +458,23 @@ _CC_MAX_ITERS = 20
 #: pipeline oracle build on it.
 _CC_ORACLE_CTES = f"""
 WITH RECURSIVE
-sh AS (
+sh AS MATERIALIZED (
   SELECT DISTINCT doc_id, substr(text, i::INT, {_SHINGLE}) AS s
   FROM documents, range(1, 1000) t(i)
   WHERE i <= n_chars - {_SHINGLE - 1}
 ),
-sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
+sz AS MATERIALIZED (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
+inter AS MATERIALIZED (
   SELECT a.doc_id AS ia, b.doc_id AS ib, COUNT(*) AS i
   FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
   GROUP BY 1, 2
 ),
-pairs AS (
+pairs AS MATERIALIZED (
   SELECT ia, ib FROM inter
   JOIN sz x ON x.doc_id = ia JOIN sz y ON y.doc_id = ib
   WHERE i * 1.0 / (x.n + y.n - i) >= {_CC_JACCARD}
 ),
-edges AS (SELECT ia AS a, ib AS b FROM pairs
+edges AS MATERIALIZED (SELECT ia AS a, ib AS b FROM pairs
           UNION SELECT ib AS a, ia AS b FROM pairs),
 reach AS (
   SELECT doc_id AS id, doc_id AS r FROM documents
@@ -875,13 +875,13 @@ def corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     "semantic_dedup_pipeline",
     oracle=f"""
 WITH RECURSIVE
-pairs AS (
+pairs AS MATERIALIZED (
   SELECT a.vec_id AS ia, b.vec_id AS ib
   FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
   WHERE list_cosine_similarity(a.embedding::DOUBLE[],
                                b.embedding::DOUBLE[]) >= {_COS_DUP_MIN}
 ),
-edges AS (SELECT ia AS a, ib AS b FROM pairs
+edges AS MATERIALIZED (SELECT ia AS a, ib AS b FROM pairs
           UNION SELECT ib AS a, ia AS b FROM pairs),
 reach AS (
   SELECT vec_id AS id, vec_id AS r FROM embeddings
@@ -1804,13 +1804,13 @@ def dedup_jaro_winkler(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_semantic_rep",
     oracle=f"""
 WITH RECURSIVE
-pairs AS (
+pairs AS MATERIALIZED (
   SELECT a.vec_id AS ia, b.vec_id AS ib
   FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
   WHERE list_cosine_similarity(a.embedding::DOUBLE[],
                                b.embedding::DOUBLE[]) >= {_COS_DUP_MIN}
 ),
-edges AS (SELECT ia AS a, ib AS b FROM pairs
+edges AS MATERIALIZED (SELECT ia AS a, ib AS b FROM pairs
           UNION SELECT ib AS a, ia AS b FROM pairs),
 reach AS (
   SELECT vec_id AS id, vec_id AS r FROM embeddings

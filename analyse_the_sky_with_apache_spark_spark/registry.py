@@ -15,7 +15,12 @@ Discipline enforced by convention (SURVEY.md §5.3):
 - cast date-like timestamps to date;
 - derive integers from md5 only through the ``functions.exact`` twins
   (``md5_int``/``md5_int_sql``, ``sky_radec``/``sky_radec_sql``);
-- round to the fixed-point grid only through ``grid``/``grid_sql``.
+- round to the fixed-point grid only through ``grid``/``grid_sql``;
+- run a 2-D pair search through ``operators.xmatch.cell_join`` (the one
+  bin / 3×3-replicate / cell equi-join decision), and spell the sky
+  catalog, circular RA distance and haversine through its twins
+  (``sky_catalog``/``sky_catalog_sql``, ``ra_dist``/``ra_dist_sql``,
+  ``haversine_sql``).
 """
 
 from __future__ import annotations

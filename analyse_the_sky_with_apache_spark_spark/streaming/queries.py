@@ -289,28 +289,28 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream(spark, joined, mode="append", name="static_join")
 
 
-@register(
-    "stream_stream_join",
-    oracle="""
-SELECT a.event_id AS view_id, b.event_id AS purchase_id, a.user_id,
-       epoch_us(b.ts) - epoch_us(a.ts) AS lag_us
-FROM events a JOIN events b
-  ON a.user_id = b.user_id
- AND a.event_type = 'view' AND b.event_type = 'purchase'
- AND b.ts > a.ts AND b.ts <= a.ts + INTERVAL 30 MINUTE
-""",
-)
-def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream interval join: view → purchase within 30 min per
-    user (the funnel/attribution shape).
+#: The view and purchase sides of the 30-minute interval join (DuckDB),
+#: and its join condition.
+_VIEW_BUY_SQL = """v AS MATERIALIZED (
+  SELECT event_id AS view_id, user_id, ts AS v_ts
+  FROM events WHERE event_type = 'view'),
+b AS MATERIALIZED (
+  SELECT event_id AS purchase_id, user_id AS b_user, ts AS b_ts
+  FROM events WHERE event_type = 'purchase')"""
+_VIEW_BUY_ON = """v.user_id = b.b_user
+              AND b.b_ts > v.v_ts
+              AND b.b_ts <= v.v_ts + INTERVAL 30 MINUTE"""
 
-    Both sides carry watermarks and the join condition bounds event-time
-    distance, so Spark can size the join state: each side buffers only
-    rows within watermark + interval — state is bounded by arrival rate ×
-    horizon, not stream length. Single-batch replay makes the full result
-    available, and the batch self-join is the oracle.
+
+def _view_purchase_join(src: DataFrame, how: str) -> DataFrame:
+    """Each view joined to its user's purchases within the next 30
+    minutes: the funnel/attribution interval join.
+
+    Both sides carry a 1-hour watermark and the condition bounds the
+    event-time distance, so Spark sizes the join state: each side
+    buffers only rows within watermark + interval. Columns: view_id,
+    v_user, v_ts, purchase_id, b_user, b_ts.
     """
-    src = stage_events(spark, sf_dir)
     views = (
         src.filter(F.col("event_type") == "view")
         .withWatermark("ts", "1 hour")
@@ -329,12 +329,34 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ts").alias("b_ts"),
         )
     )
-    joined = views.join(
+    return views.join(
         buys,
         (F.col("v_user") == F.col("b_user"))
         & (F.col("b_ts") > F.col("v_ts"))
         & (F.col("b_ts") <= F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
-    ).select(
+        how,
+    )
+
+
+@register(
+    "stream_stream_join",
+    oracle=f"""
+WITH {_VIEW_BUY_SQL}
+SELECT v.view_id, b.purchase_id, v.user_id,
+       epoch_us(b.b_ts) - epoch_us(v.v_ts) AS lag_us
+FROM v JOIN b ON {_VIEW_BUY_ON}
+""",
+)
+def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream interval join: view → purchase within 30 min per
+    user (the funnel/attribution shape, :func:`_view_purchase_join`).
+
+    Join state is bounded by arrival rate × horizon, not stream length.
+    Single-batch replay makes the full result available, and the batch
+    self-join is the oracle.
+    """
+    src = stage_events(spark, sf_dir)
+    joined = _view_purchase_join(src, "inner").select(
         "view_id",
         "purchase_id",
         F.col("v_user").alias("user_id"),
@@ -458,20 +480,13 @@ def stream_topk_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_stream_left_join",
-    oracle="""
-WITH v AS MATERIALIZED (
-  SELECT event_id AS view_id, user_id, ts AS v_ts
-  FROM events WHERE event_type = 'view'),
-b AS MATERIALIZED (
-  SELECT event_id AS purchase_id, user_id AS b_user, ts AS b_ts
-  FROM events WHERE event_type = 'purchase'),
+    oracle=f"""
+WITH {_VIEW_BUY_SQL},
 cut AS MATERIALIZED (
   SELECT MAX(ts) - INTERVAL 1 HOUR AS wm FROM events),
 matched AS MATERIALIZED (
   SELECT v.view_id, b.purchase_id, v.user_id, v.v_ts
-  FROM v JOIN b ON v.user_id = b.b_user
-              AND b.b_ts > v.v_ts
-              AND b.b_ts <= v.v_ts + INTERVAL 30 MINUTE),
+  FROM v JOIN b ON {_VIEW_BUY_ON}),
 nulls AS MATERIALIZED (
   SELECT v.view_id, CAST(NULL AS BIGINT) AS purchase_id,
          v.user_id, v.v_ts
@@ -504,31 +519,7 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``stream_stream_join``: each side buffers watermark + interval.
     """
     src = stage_events(spark, sf_dir, n_files=3)
-    views = (
-        src.filter(F.col("event_type") == "view")
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("v_ts"),
-        )
-    )
-    buys = (
-        src.filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("b_user"),
-            F.col("ts").alias("b_ts"),
-        )
-    )
-    joined = views.join(
-        buys,
-        (F.col("v_user") == F.col("b_user"))
-        & (F.col("b_ts") > F.col("v_ts"))
-        & (F.col("b_ts") <= F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "left_outer",
-    ).select(
+    joined = _view_purchase_join(src, "left_outer").select(
         "view_id",
         "purchase_id",
         F.col("v_user").alias("user_id"),
@@ -789,14 +780,10 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_join_then_agg",
-    oracle="""
-WITH conv AS MATERIALIZED (
-  SELECT b.ts AS b_ts
-  FROM events v
-  JOIN events b ON v.user_id = b.user_id
-              AND b.ts > v.ts
-              AND b.ts <= v.ts + INTERVAL 30 MINUTE
-  WHERE v.event_type = 'view' AND b.event_type = 'purchase'),
+    oracle=f"""
+WITH {_VIEW_BUY_SQL},
+conv AS MATERIALIZED (
+  SELECT b.b_ts FROM v JOIN b ON {_VIEW_BUY_ON}),
 cut AS MATERIALIZED (
   SELECT MAX(ts) - INTERVAL 1 HOUR AS wm FROM events)
 SELECT date_trunc('hour', b_ts) AS hour_start,
@@ -831,29 +818,7 @@ def stream_join_then_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent batch-differential and withholding pins.
     """
     src = stage_events(spark, sf_dir, n_files=3)
-    views = (
-        src.filter(F.col("event_type") == "view")
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("v_ts"),
-        )
-    )
-    buys = (
-        src.filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("user_id").alias("b_user"),
-            F.col("ts").alias("b_ts"),
-        )
-    )
-    conversions = views.join(
-        buys,
-        (F.col("v_user") == F.col("b_user"))
-        & (F.col("b_ts") > F.col("v_ts"))
-        & (F.col("b_ts") <= F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
-    )
+    conversions = _view_purchase_join(src, "inner")
     hourly = conversions.groupBy(
         F.window("b_ts", "1 hour").alias("w")
     ).agg(F.count(F.lit(1)).alias("n_conversions"))

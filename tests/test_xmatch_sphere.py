@@ -1,21 +1,31 @@
-"""RA-wraparound correctness for the spherical cross-match kernel.
+"""Correctness of the binned cell-join kernel and its lint.
 
 The md5-derived fixture catalog happens to contain zero pairs straddling
 RA 0°/360° (verified at sf0.01), so the ring-cell + circular-predicate
 logic is pinned here with planted coordinates: a brute-force circular
 box match over a small catalog must equal the binned kernel exactly,
-and the planted wraparound pairs must be present.
+and the planted wraparound pairs must be present. The kernel's other
+shapes — anisotropic widths without a ring, and an offset y axis — are
+pinned the same way against planted band-edge pairs. A source lint
+keeps the 3×3 explode, the circular RA distance and the haversine text
+inside their twins in ``operators/xmatch.py``.
 """
 
 from __future__ import annotations
 
 import math
+import os
+import re
+
+from pyspark.sql import functions as F
 
 from analyse_the_sky_with_apache_spark_spark.operators.xmatch import (
     _SPH_CIRCLE,
     _SPH_EPS,
+    cell_join,
     sphere_match,
 )
+from tests.test_graph_twins import _top_level_sources
 
 #: (obj_id, ra_c, dec_c) — centi-degrees. Pairs 1–2 and 3–4 straddle the
 #: 0°/360° seam (circular Δra 80 and exactly eps); 5–6 match linearly;
@@ -158,3 +168,154 @@ def test_period_scan_recovers_planted_period(spark):
     assert by_rank[1]["period_days"] == 5
     amps = {r["period_days"]: r["amp"] for r in scan}
     assert amps[5] > amps[7] and amps[5] > amps[3]
+
+
+def _box_pairs(rows, wx, wy):
+    """Brute force: every id pair (i < j) within the (wx, wy) box."""
+    return {
+        (ia, ib)
+        for ia, xa, ya in rows
+        for ib, xb, yb in rows
+        if ia < ib and abs(xa - xb) <= wx and abs(ya - yb) <= wy
+    }
+
+
+def _kernel_pairs(spark, rows, xy, width):
+    base = spark.createDataFrame(rows, "id BIGINT, x BIGINT, y BIGINT")
+    wx, wy = width
+    got = (
+        cell_join(
+            base, base, xy, xy, width,
+            home_cols=["id", "x", "y"],
+            away_cols=[
+                F.col("id").alias("jd"), F.col("x").alias("bx"),
+                F.col("y").alias("by"),
+            ],
+        )
+        .filter(
+            (F.col("id") < F.col("jd"))
+            & (F.abs(F.col("x") - F.col("bx")) <= wx)
+            & (F.abs(F.col("y") - F.col("by")) <= wy)
+        )
+        .select("id", "jd")
+        .collect()
+    )
+    pairs = [(r.id, r.jd) for r in got]
+    assert len(pairs) == len(set(pairs)), "a pair met in two cells"
+    return set(pairs)
+
+
+#: (id, x, y) for the anisotropic 25 × 1 grid: 1–2 sit exactly on both
+#: band edges at once (Δx = 25, Δy = 1) across a cell boundary on each
+#: axis; 3 is one past the x edge from 1, 4 one past the y edge; 5–6 are
+#: an on-edge pair at negative x (``div`` truncates toward zero there).
+_ANISO = [
+    (1, 1000, 5),
+    (2, 1025, 6),
+    (3, 974, 5),
+    (4, 1010, 7),
+    (5, -30, 0),
+    (6, -5, -1),
+    (7, -56, 0),
+]
+
+
+def test_kernel_anisotropic_widths_without_ring(spark):
+    got = _kernel_pairs(spark, _ANISO, ("x", "y"), (25, 1))
+    assert got == _box_pairs(_ANISO, 25, 1)
+    assert {(1, 2), (5, 6)} <= got
+    assert (1, 3) not in got and (1, 4) not in got
+
+
+#: (id, ra, dec) around the south pole for an offset y axis
+#: ``dec + 9000`` on a 300-wide grid: 11–12 straddle the pole cell's
+#: boundary at dec −90°, 13–14 straddle the next boundary up with Δ
+#: exactly the width, 15 is one past the width from 13.
+_POLE = [
+    (11, 500, -9005),
+    (12, 520, -8990),
+    (13, 500, -8701),
+    (14, 800, -8401),
+    (15, 801, -8400),
+    (16, 500, -9000),
+]
+
+
+def test_kernel_offset_y_across_the_pole_cell(spark):
+    got = _kernel_pairs(spark, _POLE, ("x", "(y + 9000)"), (300, 300))
+    assert got == _box_pairs(_POLE, 300, 300)
+    assert {(11, 12), (13, 14), (11, 16)} <= got
+    assert (13, 15) not in got
+
+
+#: raw pair-search idioms (lowercase, whitespace and string seams
+#: removed) and the top-level definitions in operators/xmatch.py allowed
+#: to hold each one: the 3×3 explode, the SQL and Spark circular RA
+#: distance, and the haversine formula (``_CONE_DIST`` keeps its own
+#: fixed-center spelling; see its comment).
+_XMATCH_IDIOMS = {
+    r"sequence\(-1,1\)": {"cell_join"},
+    r"least\(abs\(": {"ra_dist_sql"},
+    r"least\((?:(?!least\().){0,60}(f\.lit\(_sph_circle\)|\{_sph_circle\}|36000-abs)": {
+        "ra_dist",
+        "ra_dist_sql",
+    },
+    r"2\*asin\(sqrt\(": {"haversine_sql", "_CONE_DIST"},
+    r"_sph_haversine": set(),
+}
+
+
+def _flat(text: str) -> str:
+    return re.sub(r"[\"']f?[\"']", "", re.sub(r"\s+", "", text)).lower()
+
+
+def _idiom_sites(path: str) -> list[str]:
+    """Each idiom hit in ``path`` outside the definitions allowed it."""
+    with open(path, encoding="utf-8") as f:
+        flat = _flat(f.read())
+    sources = {n: _flat(src) for n, src in _top_level_sources(path).items()}
+    own = path.endswith(os.path.join("operators", "xmatch.py"))
+    hits = []
+    for idiom, allowed in _XMATCH_IDIOMS.items():
+        allowed = allowed if own else set()
+        n_defs = 0
+        for name, body in sources.items():
+            n = len(re.findall(idiom, body))
+            n_defs += n
+            if n and name not in allowed:
+                hits.append(f"{name}: {idiom} x{n}")
+        if len(re.findall(idiom, flat)) != n_defs:
+            hits.append(f"<module level>: {idiom}")
+    return hits
+
+
+def test_lint_sees_the_raw_idioms(tmp_path):
+    raw = tmp_path / "raw.py"
+    raw.write_text(
+        "def site(eps):\n"
+        '    a = F.expr(f"flatten(transform(sequence(-1, "\n'
+        '               f"1), dx -> x))")\n'
+        "    d = F.least(dra, F.lit(_SPH_CIRCLE) - dra)\n"
+        '    q = "WHERE LEAST(abs(a.ra_c - b.ra_c), 36000 - abs(a.ra_c - b.ra_c))"\n'
+        '    h = "ROUND(2*ASIN(SQRT(x)), 6)"\n'
+    )
+    assert len(_idiom_sites(str(raw))) == 4
+
+
+def test_pair_search_idioms_only_in_their_twins():
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "analyse_the_sky_with_apache_spark_spark",
+    )
+    scanned, hits = 0, []
+    for root, _, files in os.walk(pkg):
+        for name in files:
+            if name.endswith(".py"):
+                path = os.path.join(root, name)
+                scanned += 1
+                hits += [f"{os.path.relpath(path, pkg)}: {h}" for h in _idiom_sites(path)]
+    assert scanned > 20
+    assert not hits, (
+        "pair searches go through operators.xmatch's twins (cell_join, "
+        "ra_dist / ra_dist_sql, haversine_sql):\n" + "\n".join(hits)
+    )

@@ -10,7 +10,8 @@ trees never share an import:
 
 ``plans`` builds every registry key (without running it) and records
 ``queryExecution().optimizedPlan()`` with expression ids, temp paths,
-uuids and the per-process bucket-table suffix stripped, plus the oracle
+uuids and the per-process bucket-table suffix stripped and every
+``Expand`` in canonical form (:func:`_canon_expand`), plus the oracle
 SQL with whitespace collapsed. ``rows`` runs every oracle in DuckDB and
 records the sha256 of its column names and sorted rows. ``diff`` lists
 the keys whose plan, oracle text or row hash differs. Both dumps resume
@@ -36,10 +37,110 @@ import threading
 _ROW_TIMEOUT_S = 240
 
 
+def _split_top(text: str) -> list[str]:
+    """Split a printed expression list on its top-level commas."""
+    parts, depth, begin = [], 0, 0
+    for i, c in enumerate(text):
+        if c in "([":
+            depth += 1
+        elif c in ")]":
+            depth -= 1
+        elif c == "," and depth == 0:
+            parts.append(text[begin:i].strip())
+            begin = i + 1
+    return parts + [text[begin:].strip()]
+
+
+def _close(text: str, start: int) -> int:
+    """Index just past the bracket that closes ``text[start]``."""
+    depth = 0
+    for i in range(start, len(text)):
+        depth += {"[": 1, "(": 1, "]": -1, ")": -1}.get(text[i], 0)
+        if depth == 0:
+            return i + 1
+    return len(text)
+
+
+def _node_col(line: str) -> int:
+    return len(line) - len(line.lstrip(" :+-|"))
+
+
+def _canon_expand(text: str) -> str:
+    """Canonical form of every ``Expand [[…], …], [out…]`` node.
+
+    The order of the projection lists is not semantic, and in the
+    distinct-aggregate rewrite neither is which distinct group gets which
+    ``gid`` literal nor the order of the Expand's output columns: the
+    optimizer derives all three from a hash map keyed on expression ids,
+    so they change with the ids the process used up before the key was
+    built. Output columns are sorted by name, the lists sorted by
+    content, and the ``gid`` literals renumbered in that order — in the
+    Expand and in the ``(gid = k)`` tests of the aggregates above it,
+    whose grouping lists are sorted too. A genuine change to what any
+    group computes still shows.
+    """
+    if "Expand [[" not in text:
+        return text
+    lines = text.splitlines()
+    for i, line in enumerate(lines):
+        m = re.search(r"Expand \[\[", line)
+        if not m:
+            continue
+        start = m.end() - 2
+        end = _close(line, start)
+        rows = [_split_top(r[1:-1]) for r in _split_top(line[start + 1 : end - 1])]
+        out_at = line.index("[", end)
+        out = _split_top(line[out_at + 1 : _close(line, out_at) - 1])
+        cols = sorted(
+            range(len(out)), key=lambda j: (out[j], sorted(r[j] for r in rows))
+        )
+        rows = [[r[j] for j in cols] for r in rows]
+        out = [out[j] for j in cols]
+        relabel = {}
+        if "gid" in out:
+            g = out.index("gid")
+            rows.sort(key=lambda r: r[:g] + r[g + 1 :])
+            old = [r[g] for r in rows]
+            relabel = dict(zip(old, sorted(old, key=int)))
+            for r in rows:
+                r[g] = relabel[r[g]]
+        else:
+            rows.sort()
+        body = ", ".join("[" + ", ".join(r) + "]" for r in rows)
+        lines[i] = f"{line[:start]}[{body}], [{', '.join(out)}]"
+        if not relabel:
+            continue
+        col, aggregates = _node_col(line), 0
+        for j in range(i - 1, -1, -1):
+            if _node_col(lines[j]) >= col or aggregates == 2:
+                continue
+            col = _node_col(lines[j])
+            up = re.sub(
+                r"\(gid = (\d+)\)",
+                lambda k: f"(gid = {relabel.get(k.group(1), k.group(1))})",
+                lines[j],
+            )
+            a = re.search(r"Aggregate \[", up)
+            if a:
+                aggregates += 1
+                keys_end = _close(up, a.end() - 1)
+                keys = _split_top(up[a.end() : keys_end - 1])
+                if keys[-1] == "gid":
+                    res_at = up.index("[", keys_end)
+                    res = _split_top(up[res_at + 1 : _close(up, res_at) - 1])
+                    up = (
+                        f"{up[: a.end() - 1]}[{', '.join(sorted(keys))}], "
+                        f"[{', '.join(sorted(res))}]"
+                    )
+            lines[j] = up
+    return "\n".join(lines)
+
+
 def _norm_plan(text: str) -> str:
     text = re.sub(r"#\d+L?", "", text)
     text = re.sub(r"(file:)?/tmp/[^\s,\]\)]*", "<tmp>", text)
     text = re.sub(r"\b[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}\b", "<uuid>", text)
+    text = _canon_expand(text)
     return re.sub(r"\b(bkt_\w+?_[0-9a-f]{8})_\d+\b", r"\1", text)
 
 
