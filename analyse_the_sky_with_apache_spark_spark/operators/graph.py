@@ -14,9 +14,9 @@ One graph, two engines: `_edges` builds the edge table in Spark and
 `_e_sql` renders the same edge set as the DuckDB CTE ``e`` the oracles
 start from, either every co-purchased pair or the STRONG subgraph of
 pairs co-purchased in ≥ 2 orders. `_adjacency` is that table both ways
-round, and `_bfs` is the one multi-source frontier loop. Min-label
-connected components live in pipeline/dedup.py
-(dedup_connected_components).
+round, and `_bfs` is the one multi-source frontier loop, with `_bfs_sql`
+its recursive-CTE twin. Min-label connected components live in
+pipeline/closure.py (`components` / `components_sql`).
 """
 
 from __future__ import annotations
@@ -28,7 +28,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, session_checkpoint
 from ..functions.exact import grid, grid_sql, md5_int, md5_int_sql
-from ..pipeline.dedup import _CC_ORACLE_CTES
+from ..pipeline.closure import components_sql
+from ..pipeline.dedup import NEAR_DUP_PAIRS_SQL
 from ..registry import register
 
 
@@ -159,6 +160,23 @@ def _bfs(
         if hop < max_hops and nxt.limit(1).count() == 0:
             break
     return visited
+
+def _bfs_sql(seeds: str, keys: Sequence[str], max_hops: int) -> str:
+    """DuckDB twin of `_bfs`: the recursive closure ``reach`` over
+    ``adj`` from the ``keys`` columns of the ``seeds`` CTE, and
+    ``visited(keys…, hop)`` — each row reached within ``max_hops`` at
+    its first hop, the rows `_bfs` returns."""
+    cols = ", ".join(keys)
+    step = ", ".join("adj.nbr AS node" if k == "node" else f"reach.{k}" for k in keys)
+    return f"""reach AS (
+  SELECT {cols}, 0 AS hop FROM {seeds}
+  UNION
+  SELECT {step}, reach.hop + 1 AS hop
+  FROM reach JOIN adj ON adj.node = reach.node
+  WHERE reach.hop < {max_hops}
+),
+visited AS (SELECT {cols}, MIN(hop) AS hop FROM reach GROUP BY {cols})"""
+
 
 def _triangles(e: DataFrame, deg: DataFrame) -> DataFrame:
     """Every triangle of ``e`` once, as ``(apex, u, v)``: each edge is
@@ -441,9 +459,10 @@ _TWOSTAR_MAX_ITERS = 15
 
 @register(
     "graph_components_twostar",
-    oracle=_CC_ORACLE_CTES
-    + """
-SELECT id AS doc_id, MIN(r) AS component FROM reach GROUP BY id
+    oracle=f"""
+WITH RECURSIVE {NEAR_DUP_PAIRS_SQL},
+{components_sql("SELECT doc_id FROM documents")}
+SELECT node_id AS doc_id, component FROM comp
 """,
 )
 def graph_components_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -476,6 +495,14 @@ def graph_components_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("node_id")
     )
+    return _twostar(nodes, pairs).toDF("doc_id", "component")
+
+
+def _twostar(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
+    """`graph_components_twostar`'s loop on any graph: ``nodes(node_id)``
+    and ``pairs(ia, ib)`` as for `components`; returns ``(node_id,
+    component)``, or raises once ``_TWOSTAR_MAX_ITERS`` rounds pass
+    without a fixpoint."""
     edges = (
         pairs.select(F.col("ia").alias("u"), F.col("ib").alias("v"))
         .filter(F.col("u") != F.col("v"))
@@ -529,6 +556,11 @@ def graph_components_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges = after
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"graph_components_twostar: edges still changing after "
+            f"_TWOSTAR_MAX_ITERS={_TWOSTAR_MAX_ITERS} rounds"
+        )
 
     # stars: every non-root points at its root; component = min(self, roots)
     lab = (
@@ -538,7 +570,7 @@ def graph_components_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("nb").alias("nmin"))
     )
     return nodes.join(lab, "node_id", "left").select(
-        F.col("node_id").alias("doc_id"),
+        "node_id",
         F.least(
             F.col("node_id"), F.coalesce(F.col("nmin"), F.col("node_id"))
         ).alias("component"),
@@ -660,15 +692,8 @@ seeds AS (
   JOIN part ON p_partkey = node
   WHERE p_size = 50
 ),
-reach AS (
-  SELECT node, 0 AS hop FROM seeds
-  UNION
-  SELECT adj.nbr AS node, reach.hop + 1 AS hop
-  FROM reach JOIN adj ON adj.node = reach.node
-  WHERE reach.hop < {_BFS_MAX_HOPS}
-)
-SELECT node, CAST(MIN(hop) AS BIGINT) AS hops
-FROM reach GROUP BY node
+{_bfs_sql("seeds", ["node"], _BFS_MAX_HOPS)}
+SELECT node, CAST(hop AS BIGINT) AS hops FROM visited
 """,
 )
 def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1865,15 +1890,10 @@ _HC_SOURCES, _HC_MAX_HOPS = 20, 3
 WITH RECURSIVE {_e_sql(strong=True)},
 {_adj_sql()},
 deg AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS d FROM adj GROUP BY node),
-srcs AS (SELECT node FROM deg ORDER BY d DESC, node LIMIT {_HC_SOURCES}),
-reach AS (
-  SELECT node AS src, node, 0 AS hop FROM srcs
-  UNION
-  SELECT reach.src, adj.nbr AS node, reach.hop + 1 AS hop
-  FROM reach JOIN adj ON adj.node = reach.node
-  WHERE reach.hop < {_HC_MAX_HOPS}
+srcs AS (
+  SELECT node AS src, node FROM deg ORDER BY d DESC, node LIMIT {_HC_SOURCES}
 ),
-md AS (SELECT src, node, MIN(hop) AS hop FROM reach GROUP BY src, node)
+{_bfs_sql("srcs", ["src", "node"], _HC_MAX_HOPS)}
 SELECT src,
        CAST(SUM(CASE WHEN hop = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
        CAST(SUM(CASE WHEN hop = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
@@ -1881,7 +1901,7 @@ SELECT src,
        CAST(SUM(CASE hop WHEN 1 THEN 1000000 WHEN 2 THEN 500000
                          WHEN 3 THEN 333333 ELSE 0 END) AS BIGINT)
          AS harmonic_micro
-FROM md GROUP BY src
+FROM visited GROUP BY src
 ORDER BY src
 """,
 )
@@ -2326,20 +2346,13 @@ _ED_SOURCES, _ED_MAX_HOPS = 20, 4
 WITH RECURSIVE {_e_sql(strong=True)},
 {_adj_sql()},
 deg AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS d FROM adj GROUP BY node),
-srcs AS (SELECT node FROM deg ORDER BY d DESC, node LIMIT {_ED_SOURCES}),
-reach AS (
-  SELECT node AS src, node, 0 AS hop FROM srcs
-  UNION
-  SELECT reach.src, adj.nbr AS node, reach.hop + 1 AS hop
-  FROM reach JOIN adj ON adj.node = reach.node
-  WHERE reach.hop < {_ED_MAX_HOPS}
+srcs AS (
+  SELECT node AS src, node FROM deg ORDER BY d DESC, node LIMIT {_ED_SOURCES}
 ),
-md AS (
-  SELECT src, node, CAST(MIN(hop) AS BIGINT) AS hop
-  FROM reach GROUP BY src, node HAVING MIN(hop) > 0
-),
+{_bfs_sql("srcs", ["src", "node"], _ED_MAX_HOPS)},
 hist AS (
-  SELECT hop, CAST(COUNT(*) AS BIGINT) AS pairs FROM md GROUP BY hop
+  SELECT CAST(hop AS BIGINT) AS hop, CAST(COUNT(*) AS BIGINT) AS pairs
+  FROM visited WHERE hop > 0 GROUP BY hop
 ),
 cum AS (
   SELECT hop, pairs,

@@ -50,6 +50,7 @@ from ..functions.exact import (
     sky_radec,
     sky_radec_sql,
 )
+from ..pipeline.closure import components, components_sql
 from ..registry import register
 
 #: full RA circle in centi-degrees.
@@ -3856,22 +3857,15 @@ pairs AS MATERIALIZED (
   WHERE {ra_dist_sql("a.ra_c", "b.ra_c")} <= {_CATM_EPS}
     AND abs(a.dec_c - b.dec_c) <= {_CATM_EPS}
 ),
-edges AS MATERIALIZED (SELECT ia AS a, ib AS b FROM pairs
-          UNION SELECT ib AS a, ia AS b FROM pairs),
-reach AS (
-  SELECT det_id AS id, det_id AS r FROM det
-  UNION
-  SELECT e.b AS id, reach.r AS r FROM edges e JOIN reach ON e.a = reach.id
-),
-comp AS (SELECT id AS det_id, MIN(r) AS source_id FROM reach GROUP BY id)
-SELECT c.source_id,
+{components_sql("SELECT det_id FROM det")}
+SELECT c.component AS source_id,
        CAST(COUNT(*) AS BIGINT) AS n_det,
        CAST(SUM(d.ra_c) AS BIGINT) AS sum_ra_c,
        CAST(SUM(d.dec_c) AS BIGINT) AS sum_dec_c,
        CAST(SUM(d.ra_c) AS DOUBLE) / COUNT(*) AS mean_ra_c,
        CAST(SUM(d.dec_c) AS DOUBLE) / COUNT(*) AS mean_dec_c
-FROM comp c JOIN det d USING (det_id)
-GROUP BY c.source_id ORDER BY c.source_id
+FROM comp c JOIN det d ON d.det_id = c.node_id
+GROUP BY c.component ORDER BY source_id
 """,
 )
 def sky_catalog_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3884,15 +3878,14 @@ def sky_catalog_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     catalog (one row per object), and it must be transitive: detection
     chains A~B~C merge even when A and C are farther than the radius
     apart — which is why pair matching alone (`xmatch_sphere`) isn't
-    enough and the connected-components kernel
-    (`min_label_propagation`, pipeline.dedup) runs between pairing and
-    the rollup.
+    enough and the connected-components kernel (`components`,
+    pipeline.closure) runs between pairing and the rollup.
 
     The pair stage is the binned mod-ring cell join at a 5-centi-deg
     radius (36000/5 ring cells — wraparound exact); positions are
     exact integers so the merged means are single double divisions of
-    exact longs. The DuckDB oracle recomputes the fixpoint with a
-    recursive CTE — independent algorithms, same catalog.
+    exact longs. The DuckDB oracle recomputes the fixpoint with
+    `components_sql` — independent algorithms, same catalog.
 
     100-TB posture: pairing shuffles on cell id (never all-pairs), CC
     rounds = duplicate-chain diameter (~2 here, bounded by exposure
@@ -3932,9 +3925,7 @@ def sky_catalog_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("ia", "ib")
     )
-    from ..pipeline.dedup import min_label_propagation
-
-    labels = min_label_propagation(
+    labels = components(
         det.select(F.col("det_id").alias("node_id")), pairs
     ).toDF("det_id", "source_id")
     return (

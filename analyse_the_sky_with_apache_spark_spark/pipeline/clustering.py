@@ -30,10 +30,10 @@ from ..functions.exact import (
     grid_sql,
     md5_int,
     md5_int_sql,
-    sky_radec,
-    sky_radec_sql,
 )
+from ..operators.xmatch import sky_catalog, sky_catalog_sql
 from ..registry import register
+from .closure import components, components_sql
 
 _K = 10
 _ITERS = 4
@@ -710,19 +710,14 @@ def ml_linreg_normal(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("feature")
 
 
-#: grid-density clustering: cell edge (centi-degrees) and max CC rounds.
+#: grid-density clustering: cell edge (centi-degrees).
 _GRID_CELL = 1200
-_GRID_MAX_ITERS = 12
-_GRID_RA_SQL, _GRID_DEC_SQL = sky_radec_sql("c_custkey")
 
 
 @register(
     "cluster_grid_density",
     oracle=f"""
-WITH RECURSIVE cat AS (
-  SELECT {_GRID_RA_SQL} AS ra_c, {_GRID_DEC_SQL} AS dec_c
-  FROM customer
-),
+WITH RECURSIVE cat AS ({sky_catalog_sql()}),
 cells AS (
   SELECT ra_c // {_GRID_CELL} AS x, (dec_c + 9000) // {_GRID_CELL} AS y,
          COUNT(*) AS n
@@ -730,29 +725,22 @@ cells AS (
 ),
 tot AS (SELECT COUNT(*) AS n_cells, CAST(SUM(n) AS BIGINT) AS n_pts FROM cells),
 core AS (
-  SELECT x, y, n FROM cells, tot
+  SELECT x, y, n, x * 100 + y AS node_id FROM cells, tot
   WHERE n * n_cells > n_pts
     AND (n * n_cells - n_pts) * (n * n_cells - n_pts)
         >= 4 * n_pts * n_cells
 ),
-edges AS (
-  SELECT a.x AS ax, a.y AS ay, b.x AS bx, b.y AS b_y
+pairs AS (
+  SELECT a.node_id AS ia, b.node_id AS ib
   FROM core a JOIN core b
     ON abs(a.x - b.x) <= 1 AND abs(a.y - b.y) <= 1
-   AND NOT (a.x = b.x AND a.y = b.y)
+   AND a.node_id < b.node_id
 ),
-reach AS (
-  SELECT x, y, x * 100 + y AS anchor FROM core
-  UNION
-  SELECT e.bx, e.b_y, r.anchor
-  FROM reach r JOIN edges e ON e.ax = r.x AND e.ay = r.y
-),
-labeled AS (
-  SELECT x, y, MIN(anchor) AS cluster_id FROM reach GROUP BY x, y
-)
-SELECT cluster_id, COUNT(*) AS n_cells, CAST(SUM(n) AS BIGINT) AS n_points
-FROM labeled JOIN core USING (x, y)
-GROUP BY cluster_id
+{components_sql("SELECT node_id FROM core")}
+SELECT component AS cluster_id, COUNT(*) AS n_cells,
+       CAST(SUM(n) AS BIGINT) AS n_points
+FROM comp JOIN core USING (node_id)
+GROUP BY component
 """,
 )
 def cluster_grid_density(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -771,18 +759,16 @@ def cluster_grid_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernels exist to avoid); the grid form aggregates points ONCE into
     cells (map-side partials, shuffle = #occupied cells), and all the
     graph work — adjacency (8 neighbor offsets as an equi-join on
-    shifted keys), connected components (min-label iteration, bounded
+    shifted keys), connected components (`components`, rounds bounded
     by the cluster diameter in cells) — happens in CELL space, which is
     thousands of times smaller than the data. DuckDB's recursive-CTE
-    transitive closure is the independent fixpoint check
-    (`graph_bfs_hops` precedent).
+    transitive closure (`components_sql`) is the independent fixpoint
+    check.
 
     Determinism: cell ids and the core cut are pure integer arithmetic;
-    cluster ids are the component-minimum cell label.
+    cluster ids are the component-minimum cell label ``x·100 + y``.
     """
-    c = load_table(spark, sf_dir, "customer")
-    ra, dec = sky_radec("c_custkey")
-    cat = c.select(ra.alias("ra_c"), dec.alias("dec_c"))
+    cat = sky_catalog(spark, sf_dir)
     cells = (
         cat.groupBy(
             (F.col("ra_c") / _GRID_CELL).cast("long").alias("x"),
@@ -801,62 +787,20 @@ def cluster_grid_density(spark: SparkSession, sf_dir: str) -> DataFrame:
             (excess > 0)
             & (excess * excess >= 4 * F.col("n_pts") * F.col("n_cells_tot"))
         )
-        .select("x", "y", "n")
+        .select("x", "y", "n", (F.col("x") * 100 + F.col("y")).alias("node_id"))
         .localCheckpoint(eager=True)
     )
     a, b = core.alias("a"), core.alias("b")
-    edges = a.join(
+    pairs = a.join(
         b,
         (F.abs(F.col("a.x") - F.col("b.x")) <= 1)
         & (F.abs(F.col("a.y") - F.col("b.y")) <= 1)
-        & ~((F.col("a.x") == F.col("b.x")) & (F.col("a.y") == F.col("b.y"))),
-    ).select(
-        F.col("a.x").alias("ax"),
-        F.col("a.y").alias("ay"),
-        F.col("b.x").alias("bx"),
-        F.col("b.y").alias("by"),
-    ).localCheckpoint(eager=True)
-    labels = core.select(
-        "x", "y", (F.col("x") * 100 + F.col("y")).alias("cluster_id")
-    ).localCheckpoint(eager=True)
-    for _ in range(_GRID_MAX_ITERS):
-        neigh = (
-            edges.join(
-                labels,
-                (edges.bx == labels.x) & (edges.by == labels.y),
-            )
-            .groupBy("ax", "ay")
-            .agg(F.min("cluster_id").alias("ncid"))
-        )
-        new_labels = (
-            labels.join(
-                neigh,
-                (labels.x == neigh.ax) & (labels.y == neigh.ay),
-                "left",
-            )
-            .select(
-                "x",
-                "y",
-                F.least(
-                    F.col("cluster_id"),
-                    F.coalesce(F.col("ncid"), F.col("cluster_id")),
-                ).alias("cluster_id"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), ["x", "y"])
-            .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
+        & (F.col("a.node_id") < F.col("b.node_id")),
+    ).select(F.col("a.node_id").alias("ia"), F.col("b.node_id").alias("ib"))
+    labels = components(core.select("node_id"), pairs)
     return (
-        labels.join(core, ["x", "y"])
-        .groupBy("cluster_id")
+        labels.join(core, "node_id")
+        .groupBy(F.col("component").alias("cluster_id"))
         .agg(F.count(F.lit(1)).alias("n_cells"), F.sum("n").alias("n_points"))
     )
 

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from ..catalog import fan_out, load_table, session_checkpoint
 from ..functions.exact import grid_sql, md5_int_sql
 from ..registry import register
+from .closure import components, components_sql
 
 
 @register(
@@ -450,15 +451,11 @@ def dedup_corpus_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CC_JACCARD = 0.5
-_CC_MAX_ITERS = 20
 
-
-#: shared recursive-CTE prefix: near-dup edges (jaccard >= _CC_JACCARD)
-#: + transitive reachability; both the CC oracle and the end-to-end
-#: pipeline oracle build on it.
-_CC_ORACLE_CTES = f"""
-WITH RECURSIVE
-sh AS MATERIALIZED (
+#: DuckDB twin of ``jaccard_pairs(spark, sf_dir, _CC_JACCARD)``: the
+#: near-dup graph as CTEs ending in ``pairs(ia, ib)``, every
+#: non-recursive step materialized so no recursion step re-runs it.
+NEAR_DUP_PAIRS_SQL = f"""sh AS MATERIALIZED (
   SELECT DISTINCT doc_id, substr(text, i::INT, {_SHINGLE}) AS s
   FROM documents, range(1, 1000) t(i)
   WHERE i <= n_chars - {_SHINGLE - 1}
@@ -473,21 +470,15 @@ pairs AS MATERIALIZED (
   SELECT ia, ib FROM inter
   JOIN sz x ON x.doc_id = ia JOIN sz y ON y.doc_id = ib
   WHERE i * 1.0 / (x.n + y.n - i) >= {_CC_JACCARD}
-),
-edges AS MATERIALIZED (SELECT ia AS a, ib AS b FROM pairs
-          UNION SELECT ib AS a, ia AS b FROM pairs),
-reach AS (
-  SELECT doc_id AS id, doc_id AS r FROM documents
-  UNION
-  SELECT e.b AS id, reach.r AS r FROM edges e JOIN reach ON e.a = reach.id
 )"""
 
 
 @register(
     "dedup_connected_components",
-    oracle=_CC_ORACLE_CTES
-    + """
-SELECT id AS doc_id, MIN(r) AS component FROM reach GROUP BY id
+    oracle=f"""
+WITH RECURSIVE {NEAR_DUP_PAIRS_SQL},
+{components_sql("SELECT doc_id FROM documents")}
+SELECT node_id AS doc_id, component FROM comp
 """,
 )
 def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -497,71 +488,18 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     The step after pair finding in every corpus dedup pipeline: near-dup
     PAIRS must become duplicate CLUSTERS before survivor selection, and
     pairs are not transitive — A~B, B~C puts A,C in one cluster with no
-    direct edge. Implemented as iterative min-label propagation: each
-    round every node takes the min component id over itself and its
-    neighbors (one join + one groupBy per round), with
-    ``localCheckpoint`` truncating the lineage so the plan stays flat,
-    and a driver-side one-scalar convergence probe (rounds needed =
-    graph diameter, not data size). At 100 TB the same loop runs with
-    the alternating large-star/small-star optimization (Kiveris et al.,
-    "Connected Components in MapReduce"); label propagation is the
-    standard Spark shape since no recursive SQL exists there. The DuckDB
-    oracle computes the same fixpoint declaratively with a recursive CTE
-    — two genuinely independent algorithms checking each other.
+    direct edge. The clustering is :func:`components` (iterative
+    min-label propagation, rounds = graph diameter, not data size);
+    label propagation is the standard Spark shape since no recursive
+    SQL exists there. The DuckDB oracle computes the same fixpoint
+    declaratively with :func:`components_sql`'s recursive CTE — two
+    genuinely independent algorithms checking each other.
     """
     edges = jaccard_pairs(spark, sf_dir, _CC_JACCARD).select("ia", "ib")
     nodes = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("node_id")
     )
-    return min_label_propagation(nodes, edges).toDF("doc_id", "component")
-
-
-def min_label_propagation(
-    nodes: DataFrame, edges: DataFrame, max_iters: int = _CC_MAX_ITERS
-) -> DataFrame:
-    """Iterative min-label propagation — the reusable connected-
-    components kernel (see `dedup_connected_components` for the
-    algorithmic notes; `semantic_dedup_pipeline` runs the same loop
-    over embedding-cosine edges). ``nodes``: one ``node_id`` column
-    (singletons stay in the output); ``edges``: (ia, ib) pairs.
-    Returns (node_id, component).
-    """
-    und = edges.union(
-        edges.select(F.col("ib"), F.col("ia"))
-    ).toDF("src", "dst")
-    labels = nodes.select(
-        "node_id", F.col("node_id").alias("component")
-    )
-    und = und.localCheckpoint(eager=True)
-    labels = labels.localCheckpoint(eager=True)
-    for _ in range(max_iters):
-        neigh = (
-            und.join(labels, und.dst == labels.node_id)
-            .groupBy("src")
-            .agg(F.min("component").alias("ncomp"))
-        )
-        new_labels = (
-            labels.join(neigh, labels.node_id == neigh.src, "left")
-            .select(
-                "node_id",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("ncomp"), F.col("component")),
-                ).alias("component"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node_id")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
+    return components(nodes, edges).toDF("doc_id", "component")
 
 
 #: SQL-native MinHash-LSH geometry: 8 hash functions, 4 bands x 2 rows.
@@ -823,11 +761,11 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "corpus_dedup_pipeline",
-    oracle=_CC_ORACLE_CTES
-    + """,
-comp AS (SELECT id AS doc_id, MIN(r) AS component FROM reach GROUP BY id),
+    oracle=f"""
+WITH RECURSIVE {NEAR_DUP_PAIRS_SQL},
+{components_sql("SELECT doc_id FROM documents")},
 keep AS (
-  SELECT component, MIN(doc_id) AS doc_id, COUNT(*) AS n_members
+  SELECT component, MIN(node_id) AS doc_id, COUNT(*) AS n_members
   FROM comp GROUP BY component
 )
 SELECT d.doc_id, d.lang, d.source, d.n_chars, k.component,
@@ -840,7 +778,7 @@ def corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard pairs → connected components → one survivor per duplicate
     CLUSTER (min doc_id), full row + cluster size — what a training-data
     build actually runs, composed entirely from the engine's own
-    kernels (`jaccard_pairs`, the min-label-propagation loop of
+    kernels (`jaccard_pairs`, the `components` loop of
     `dedup_connected_components`, and the window-keeper idiom of
     `dedup_corpus_survivors` — here keyed by component, not content
     hash, so TRANSITIVE near-dups collapse too).
@@ -848,7 +786,7 @@ def corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale = the sum of its stages, already argued piecewise in
     SCALE.md: banded/shingle-joined pair space (never n²), CC rounds =
     graph diameter, survivor selection one shuffle on the component
-    key. The oracle extends the same recursive CTE the CC oracle uses.
+    key. The oracle extends the CC oracle's `components_sql` closure.
     """
     labels = dedup_connected_components(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents").select(
@@ -871,26 +809,22 @@ def corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "semantic_dedup_pipeline",
-    oracle=f"""
-WITH RECURSIVE
-pairs AS MATERIALIZED (
+#: DuckDB twin of `dedup_embed_cosine`'s pairs: a ``pairs(ia, ib)`` CTE.
+_COS_PAIRS_SQL = f"""pairs AS MATERIALIZED (
   SELECT a.vec_id AS ia, b.vec_id AS ib
   FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
   WHERE list_cosine_similarity(a.embedding::DOUBLE[],
                                b.embedding::DOUBLE[]) >= {_COS_DUP_MIN}
-),
-edges AS MATERIALIZED (SELECT ia AS a, ib AS b FROM pairs
-          UNION SELECT ib AS a, ia AS b FROM pairs),
-reach AS (
-  SELECT vec_id AS id, vec_id AS r FROM embeddings
-  UNION
-  SELECT e.b AS id, reach.r AS r FROM edges e JOIN reach ON e.a = reach.id
-),
-comp AS (SELECT id AS vec_id, MIN(r) AS component FROM reach GROUP BY id),
+)"""
+
+
+@register(
+    "semantic_dedup_pipeline",
+    oracle=f"""
+WITH RECURSIVE {_COS_PAIRS_SQL},
+{components_sql("SELECT vec_id FROM embeddings")},
 keep AS (
-  SELECT component, MIN(vec_id) AS vec_id, COUNT(*) AS n_members
+  SELECT component, MIN(node_id) AS vec_id, COUNT(*) AS n_members
   FROM comp GROUP BY component
 )
 SELECT em.vec_id, em.label, k.component,
@@ -905,7 +839,7 @@ def semantic_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     space (catches paraphrases and translations that share no
     shingles). Edges come from the broadcast-matrix cosine kernel
     (`dedup_embed_cosine`); clustering is the SAME
-    `min_label_propagation` loop (pairs are not transitive in cosine
+    `components` loop (pairs are not transitive in cosine
     space either); survivor selection keys on the component. At 100 TB
     the edge stage swaps to the LSH/IVF candidate rungs — the cluster
     and survivor stages are unchanged.
@@ -913,7 +847,7 @@ def semantic_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup_embed_cosine(spark, sf_dir).select("ia", "ib")
     em = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
     nodes = em.select(F.col("vec_id").alias("node_id"))
-    labels = min_label_propagation(nodes, pairs).toDF("vec_id", "component")
+    labels = components(nodes, pairs).toDF("vec_id", "component")
     rows = em.join(labels, "vec_id")
     wc = Window.partitionBy("component")
     return (
@@ -1803,28 +1737,15 @@ def dedup_jaro_winkler(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_semantic_rep",
     oracle=f"""
-WITH RECURSIVE
-pairs AS MATERIALIZED (
-  SELECT a.vec_id AS ia, b.vec_id AS ib
-  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-  WHERE list_cosine_similarity(a.embedding::DOUBLE[],
-                               b.embedding::DOUBLE[]) >= {_COS_DUP_MIN}
-),
-edges AS MATERIALIZED (SELECT ia AS a, ib AS b FROM pairs
-          UNION SELECT ib AS a, ia AS b FROM pairs),
-reach AS (
-  SELECT vec_id AS id, vec_id AS r FROM embeddings
-  UNION
-  SELECT e.b AS id, reach.r AS r FROM edges e JOIN reach ON e.a = reach.id
-),
-comp AS (SELECT id AS vec_id, MIN(r) AS component FROM reach GROUP BY id),
+WITH RECURSIVE {_COS_PAIRS_SQL},
+{components_sql("SELECT vec_id FROM embeddings")},
 dims AS (
   SELECT vec_id, generate_subscripts(embedding, 1) AS i,
          {grid_sql('CAST(unnest(embedding) AS DOUBLE)', 6)} AS g
   FROM embeddings),
 dl AS (
   SELECT d.vec_id, c.component, d.i, d.g
-  FROM dims d JOIN comp c USING (vec_id)),
+  FROM dims d JOIN comp c ON c.node_id = d.vec_id),
 cent AS (
   SELECT component, i, CAST(SUM(g) AS BIGINT) AS s
   FROM dl GROUP BY 1, 2),
@@ -1857,10 +1778,10 @@ def dedup_semantic_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical across engines.
 
     Pipeline shape: embedding-cosine pairs (`dedup_embed_cosine`'s
-    normalize-first kernel) -> `min_label_propagation` components ->
+    normalize-first kernel) -> `components` ->
     element-wise cluster-sum vectors (one (component, dim)-keyed
     aggregation) -> dot-product argmax. The DuckDB oracle recomputes
-    the fixpoint with a recursive CTE — independent algorithms, same
+    the fixpoint with `components_sql` — independent algorithms, same
     answer.
 
     100-TB posture: the exploded (member, dim) relation is |rows|·64 —
@@ -1873,7 +1794,7 @@ def dedup_semantic_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup_embed_cosine(spark, sf_dir).select("ia", "ib")
     em = load_table(spark, sf_dir, "embeddings")
     nodes = em.select(F.col("vec_id").alias("node_id"))
-    labels = min_label_propagation(nodes, pairs).toDF("vec_id", "component")
+    labels = components(nodes, pairs).toDF("vec_id", "component")
     dims = em.select(
         "vec_id",
         F.posexplode(

@@ -20,7 +20,12 @@ Discipline enforced by convention (SURVEY.md §5.3):
   bin / 3×3-replicate / cell equi-join decision), and spell the sky
   catalog, circular RA distance and haversine through its twins
   (``sky_catalog``/``sky_catalog_sql``, ``ra_dist``/``ra_dist_sql``,
-  ``haversine_sql``).
+  ``haversine_sql``);
+- close pairs into connected components only through
+  ``pipeline.closure.components``/``components_sql``, and run a BFS
+  over the co-purchase graph through ``operators.graph._bfs``/
+  ``_bfs_sql`` — no hand-typed min-label loop or recursive ``reach``
+  CTE.
 """
 
 from __future__ import annotations

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..pipeline.closure import components, components_sql
 from ..registry import register
 from .scans import _SCRATCH
 
@@ -579,11 +580,6 @@ def sky_coadd_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: background" for the synthetic flat field).
 _SRC_THRESH = 3240
 
-#: source extraction: min-label rounds upper bound (= max blob
-#: diameter; the exact convergence probe breaks far earlier on the
-#: scattered 10%-density field).
-_SRC_MAX_ROUNDS = 20
-
 
 @register(
     "sky_source_extract",
@@ -596,18 +592,13 @@ WITH RECURSIVE px AS (
   CROSS JOIN range(0, {_IMG_NX * _IMG_NY}) t(i)
   WHERE ((f.f * 1000003 + t.i) * 7919) % 3600 >= {_SRC_THRESH}
 ),
-edges AS (
-  SELECT a.pid AS u, b.pid AS v
-  FROM px a JOIN px b ON a.f = b.f AND a.pid <> b.pid
+pairs AS (
+  SELECT a.pid AS ia, b.pid AS ib
+  FROM px a JOIN px b ON a.f = b.f AND a.pid < b.pid
    AND abs(a.x - b.x) <= 1 AND abs(a.y - b.y) <= 1
 ),
-reach(pid, r) AS (
-  SELECT pid, pid FROM px
-  UNION
-  SELECT e.u, reach.r FROM reach JOIN edges e ON e.v = reach.pid
-),
-lbl AS (SELECT pid, MIN(r) AS lbl FROM reach GROUP BY pid)
-SELECT lbl AS source_id,
+{components_sql("SELECT pid FROM px")}
+SELECT component AS source_id,
        CAST(MIN(f) AS BIGINT) AS tile,
        CAST(COUNT(*) AS BIGINT) AS n_pix,
        CAST(SUM(k) AS BIGINT) AS flux_centi,
@@ -617,8 +608,8 @@ SELECT lbl AS source_id,
        CAST(MAX(y) AS BIGINT) AS y_max,
        CAST((SUM(x) * 100) // COUNT(*) AS BIGINT) AS cx_centi,
        CAST((SUM(y) * 100) // COUNT(*) AS BIGINT) AS cy_centi
-FROM px JOIN lbl USING (pid)
-GROUP BY lbl ORDER BY source_id
+FROM px JOIN comp ON comp.node_id = px.pid
+GROUP BY component ORDER BY source_id
 """,
 )
 def sky_source_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -631,17 +622,17 @@ def sky_source_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     component's minimum pixel id — deterministic, engine-neutral).
 
     Connectivity is built WITHOUT a band join: each bright pixel
-    explodes its 8 neighbor coordinates and equi-joins back on the
-    exact (tile, x, y) key — the binned-xmatch discipline where the
-    bin IS the coordinate. Component labels spread by min-label
-    propagation with an exact exceptAll convergence probe (rounds
-    bounded by blob diameter — scattered detections converge in a few
-    rounds; a survey-scale field with giant segments would swap in the
-    `graph_components_twostar` O(log² n) kernel, same edge input).
-    The DuckDB oracle re-derives the same catalog from pure range()
-    arithmetic with a recursive-CTE reachability closure, so the
-    write -> list -> decode -> threshold -> CC -> catalog path is
-    hash-checked end to end.
+    explodes its 4 forward neighbor coordinates (one per 8-neighbor
+    pair) and equi-joins back on the exact (tile, x, y) key — the
+    binned-xmatch discipline where the bin IS the coordinate.
+    Component labels spread by `components`' min-label propagation
+    (rounds bounded by blob diameter — scattered detections converge
+    in a few rounds; a survey-scale field with giant segments would
+    swap in the `graph_components_twostar` O(log² n) kernel, same edge
+    input). The DuckDB oracle re-derives the same catalog from pure
+    range() arithmetic with `components_sql`'s reachability closure,
+    so the write -> list -> decode -> threshold -> CC -> catalog path
+    is hash-checked end to end.
 
     100-TB posture: thresholding happens INSIDE the Arrow decode
     kernel (only detections leave the worker — ~10% here, <<1% on a
@@ -680,11 +671,12 @@ def sky_source_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mapInPandas(bright, "f LONG, x LONG, y LONG, k LONG, pid LONG")
         .localCheckpoint(eager=True)
     )
-    offsets = [(-1, -1), (-1, 0), (-1, 1), (0, -1),
-               (0, 1), (1, -1), (1, 0), (1, 1)]
+    # the 4 forward offsets name each 8-neighbor pair once; `components`
+    # walks it both ways round
+    offsets = [(0, 1), (1, -1), (1, 0), (1, 1)]
     nb = px.select(
         "f",
-        F.col("pid").alias("u"),
+        F.col("pid").alias("ia"),
         F.explode(
             F.array(*[
                 F.struct(
@@ -694,52 +686,19 @@ def sky_source_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for dx, dy in offsets
             ])
         ).alias("n"),
-    ).select("f", "u", F.col("n.nx").alias("nx"), F.col("n.ny").alias("ny"))
-    edges = nb.join(
+    ).select("f", "ia", F.col("n.nx").alias("nx"), F.col("n.ny").alias("ny"))
+    pairs = nb.join(
         px.select(
             "f", F.col("x").alias("nx"), F.col("y").alias("ny"),
-            F.col("pid").alias("v"),
+            F.col("pid").alias("ib"),
         ),
         ["f", "nx", "ny"],
-    ).select("u", "v").localCheckpoint(eager=True)
-
-    labels = px.select("pid", F.col("pid").alias("lbl"))
-    for _ in range(_SRC_MAX_ROUNDS):
-        nl = (
-            edges.join(
-                labels.select(
-                    F.col("pid").alias("v"), F.col("lbl").alias("vl")
-                ),
-                "v",
-            )
-            .groupBy("u")
-            .agg(F.min("vl").alias("nmin"))
-        )
-        # r13: carry the previous label through the checkpoint so the
-        # convergence probe is a FILTER over the just-materialized
-        # blocks instead of an exceptAll (a full hash anti-join of two
-        # label tables) — one shuffle fewer per round, same predicate
-        # (pid is unique, so "any row with lbl != prev" == "exceptAll
-        # non-empty").
-        new = (
-            labels.join(nl, labels.pid == nl.u, "left")
-            .select(
-                "pid",
-                F.col("lbl").alias("prev"),
-                F.least(
-                    F.col("lbl"), F.coalesce(F.col("nmin"), F.col("lbl"))
-                ).alias("lbl"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = new.filter(F.col("lbl") != F.col("prev")).limit(1).count()
-        labels = new.select("pid", "lbl")
-        if changed == 0:
-            break
+    )
+    labels = components(px.select(F.col("pid").alias("node_id")), pairs)
 
     return (
-        px.join(labels, "pid")
-        .groupBy(F.col("lbl").alias("source_id"))
+        px.join(labels, px.pid == labels.node_id)
+        .groupBy(F.col("component").alias("source_id"))
         .agg(
             F.min("f").cast("long").alias("tile"),
             F.count(F.lit(1)).cast("long").alias("n_pix"),

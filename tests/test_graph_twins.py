@@ -1,10 +1,16 @@
-"""The co-purchase graph: one definition per engine.
+"""The co-purchase graph and the closures over it: one definition per
+engine.
 
 ``operators/graph.py`` builds its edge table in Spark with ``_edges``
 (both ways round: ``_adjacency``) and renders the same edge set for the
-DuckDB oracles with ``_e_sql`` / ``_adj_sql``. These tests check that
+DuckDB oracles with ``_e_sql`` / ``_adj_sql``; ``_bfs`` / ``_bfs_sql``
+are the frontier loop and its recursive CTE. These tests check that
 the twins agree, and lint the module so no kernel or oracle retypes the
-lineitem self-join or the adjacency union by hand again.
+lineitem self-join or the adjacency union by hand again. A second lint
+covers the whole package: a recursive ``reach`` CTE or a min-label
+``least(…, coalesce(…))`` step outside the closure twins
+(``pipeline/closure.py`` ``components`` / ``components_sql``, ``_bfs_sql``,
+and ``graph_components_twostar``'s own star loop) fails it.
 """
 
 from __future__ import annotations
@@ -14,12 +20,15 @@ import os
 import re
 
 import pytest
+from pyspark.sql import functions as F
 
 from analyse_the_sky_with_apache_spark_spark.catalog import session_checkpoint
 from analyse_the_sky_with_apache_spark_spark.operators.graph import (
     _DIRECTED_E_SQL,
     _adj_sql,
     _adjacency,
+    _bfs,
+    _bfs_sql,
     _directed_edges,
     _e_sql,
     _edges_cached,
@@ -60,6 +69,23 @@ def test_directed_edge_twins_agree(spark, duck):
     got = sorted(tuple(r) for r in _directed_edges(spark, SF_DIR).collect())
     want = sorted(duck.execute(f"WITH {_DIRECTED_E_SQL} SELECT u, v FROM e").fetchall())
     assert got and got == want
+
+
+@pytest.mark.parametrize("keys", [["node"], ["src", "node"]])
+def test_bfs_twins_agree(spark, duck, keys):
+    adj = _adjacency(spark, SF_DIR, strong=True)
+    seeds = adj.select("node").distinct().orderBy("node").limit(5)
+    seeds = seeds.select(*[F.col("node").alias(k) for k in keys])
+    got = sorted(tuple(r) for r in _bfs(adj, seeds, keys, 3).collect())
+    cols = ", ".join(f"node AS {k}" for k in keys)
+    want = duck.execute(
+        f"WITH RECURSIVE {_e_sql(True)}, {_adj_sql()},"
+        f" seeds AS (SELECT {cols} FROM (SELECT DISTINCT node FROM adj"
+        f" ORDER BY node LIMIT 5)), {_bfs_sql('seeds', keys, 3)}"
+        f" SELECT * FROM visited"
+    ).fetchall()
+    assert len(got) > 5 and {0, 1, 2} <= {r[-1] for r in got}
+    assert got == sorted(want)
 
 
 def test_session_checkpoint_builds_once(spark):
@@ -132,4 +158,90 @@ def test_graph_idioms_only_in_their_twins():
         "build the co-purchase graph through operators.graph's twins "
         "(_edges / _e_sql, _directed_edges / _DIRECTED_E_SQL, _adjacency):\n"
         + "\n".join(hits)
+    )
+
+
+_PKG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "analyse_the_sky_with_apache_spark_spark",
+)
+
+
+def _flat(text: str) -> str:
+    """Lowercase, whitespace and string seams (``" f"``) removed."""
+    return re.sub(r"[\"']f?[\"']", "", re.sub(r"\s+", "", text)).lower()
+
+
+def _idiom_sites(path: str, idioms: dict[str, set[str]]) -> list[str]:
+    """Each hit in ``path`` of an ``idioms`` regex (matched on `_flat`
+    text) outside the top-level definitions allowed to hold it, named
+    ``module:name`` with the module relative to the package."""
+    with open(path, encoding="utf-8") as f:
+        flat = _flat(f.read())
+    sources = {n: _flat(src) for n, src in _top_level_sources(path).items()}
+    rel = os.path.relpath(path, _PKG).replace(os.sep, "/")
+    hits = []
+    for idiom, allowed in idioms.items():
+        n_defs = 0
+        for name, body in sources.items():
+            n = len(re.findall(idiom, body))
+            n_defs += n
+            if n and f"{rel}:{name}" not in allowed:
+                hits.append(f"{rel}:{name}: {idiom} x{n}")
+        if len(re.findall(idiom, flat)) != n_defs:
+            hits.append(f"{rel}:<module level>: {idiom}")
+    return hits
+
+
+def _package_sites(idioms: dict[str, set[str]]) -> list[str]:
+    """`_idiom_sites` over every module of the package."""
+    scanned, hits = 0, []
+    for root, _, files in os.walk(_PKG):
+        for name in files:
+            if name.endswith(".py"):
+                scanned += 1
+                hits += _idiom_sites(os.path.join(root, name), idioms)
+    assert scanned > 20
+    return hits
+
+
+#: hand-typed closures, searched in every package module, and the
+#: definitions allowed to hold each one.
+_CLOSURE_IDIOMS = {
+    # a recursive CTE named reach: the component or BFS closure
+    r"reach(\([\w,]*\))?as(materialized)?\(": {
+        "pipeline/closure.py:components_sql",
+        "operators/graph.py:_bfs_sql",
+    },
+    # the min-label step least(label, coalesce(neighbor min, label))
+    r"least\((?:[^(),]|\([^()]*\))*,(f\.)?coalesce\(": {
+        "pipeline/closure.py:components",
+        "operators/graph.py:_twostar",
+    },
+}
+
+
+def test_closure_lint_sees_hand_typed_closures(tmp_path):
+    raw = tmp_path / "raw.py"
+    raw.write_text(
+        'Q = """WITH RECURSIVE reach(pid, r) AS (\n'
+        '  SELECT pid, pid FROM px UNION\n'
+        '  SELECT e.u, reach.r FROM reach JOIN edges e ON e.v = reach.pid)"""\n'
+        "def step(labels):\n"
+        "    return labels.select(F.least(\n"
+        '        F.col("lbl"), F.coalesce(F.col("nmin"), F.col("lbl"))))\n'
+    )
+    assert len(_idiom_sites(str(raw), _CLOSURE_IDIOMS)) == 2
+
+
+def test_closures_only_in_their_twins():
+    for allowed in _CLOSURE_IDIOMS.values():
+        for site in allowed:
+            rel, name = site.split(":")
+            assert name in _top_level_sources(os.path.join(_PKG, rel)), site
+    hits = _package_sites(_CLOSURE_IDIOMS)
+    assert not hits, (
+        "close over pairs with pipeline.closure's components / "
+        "components_sql, and over the co-purchase graph with "
+        "operators.graph's _bfs / _bfs_sql:\n" + "\n".join(hits)
     )

@@ -7,15 +7,15 @@ box match over a small catalog must equal the binned kernel exactly,
 and the planted wraparound pairs must be present. The kernel's other
 shapes — anisotropic widths without a ring, and an offset y axis — are
 pinned the same way against planted band-edge pairs. A source lint
-keeps the 3×3 explode, the circular RA distance and the haversine text
-inside their twins in ``operators/xmatch.py``.
+keeps the 3×3 explode, the circular RA distance, the haversine text and
+the sky-catalog position draw inside their twins in
+``operators/xmatch.py`` (the catalog draw also in its definition in
+``functions/exact.py`` and one allowlisted key).
 """
 
 from __future__ import annotations
 
 import math
-import os
-import re
 
 from pyspark.sql import functions as F
 
@@ -25,7 +25,7 @@ from analyse_the_sky_with_apache_spark_spark.operators.xmatch import (
     cell_join,
     sphere_match,
 )
-from tests.test_graph_twins import _top_level_sources
+from tests.test_graph_twins import _idiom_sites, _package_sites
 
 #: (obj_id, ra_c, dec_c) — centi-degrees. Pairs 1–2 and 3–4 straddle the
 #: 0°/360° seam (circular Δra 80 and exactly eps); 5–6 match linearly;
@@ -249,44 +249,30 @@ def test_kernel_offset_y_across_the_pole_cell(spark):
 
 
 #: raw pair-search idioms (lowercase, whitespace and string seams
-#: removed) and the top-level definitions in operators/xmatch.py allowed
-#: to hold each one: the 3×3 explode, the SQL and Spark circular RA
-#: distance, and the haversine formula (``_CONE_DIST`` keeps its own
-#: fixed-center spelling; see its comment).
+#: removed), searched in every package module, and the top-level
+#: definitions (``module:name``) allowed to hold each one: the 3×3
+#: explode, the SQL and Spark circular RA distance, the haversine
+#: formula (``_CONE_DIST`` keeps its own fixed-center spelling; see its
+#: comment) and the sky-catalog position draw.
+_XM = "operators/xmatch.py"
 _XMATCH_IDIOMS = {
-    r"sequence\(-1,1\)": {"cell_join"},
-    r"least\(abs\(": {"ra_dist_sql"},
+    r"sequence\(-1,1\)": {f"{_XM}:cell_join"},
+    r"least\(abs\(": {f"{_XM}:ra_dist_sql"},
     r"least\((?:(?!least\().){0,60}(f\.lit\(_sph_circle\)|\{_sph_circle\}|36000-abs)": {
-        "ra_dist",
-        "ra_dist_sql",
+        f"{_XM}:ra_dist",
+        f"{_XM}:ra_dist_sql",
     },
-    r"2\*asin\(sqrt\(": {"haversine_sql", "_CONE_DIST"},
+    r"2\*asin\(sqrt\(": {f"{_XM}:haversine_sql", f"{_XM}:_CONE_DIST"},
     r"_sph_haversine": set(),
+    r"sky_radec(_sql)?\(": {
+        "functions/exact.py:sky_radec",
+        "functions/exact.py:sky_radec_sql",
+        f"{_XM}:sky_catalog",
+        f"{_XM}:sky_catalog_sql",
+        # its catalog carries c_mktsegment, which sky_catalog does not
+        "pipeline/stats.py:stat_circular_rayleigh",
+    },
 }
-
-
-def _flat(text: str) -> str:
-    return re.sub(r"[\"']f?[\"']", "", re.sub(r"\s+", "", text)).lower()
-
-
-def _idiom_sites(path: str) -> list[str]:
-    """Each idiom hit in ``path`` outside the definitions allowed it."""
-    with open(path, encoding="utf-8") as f:
-        flat = _flat(f.read())
-    sources = {n: _flat(src) for n, src in _top_level_sources(path).items()}
-    own = path.endswith(os.path.join("operators", "xmatch.py"))
-    hits = []
-    for idiom, allowed in _XMATCH_IDIOMS.items():
-        allowed = allowed if own else set()
-        n_defs = 0
-        for name, body in sources.items():
-            n = len(re.findall(idiom, body))
-            n_defs += n
-            if n and name not in allowed:
-                hits.append(f"{name}: {idiom} x{n}")
-        if len(re.findall(idiom, flat)) != n_defs:
-            hits.append(f"<module level>: {idiom}")
-    return hits
 
 
 def test_lint_sees_the_raw_idioms(tmp_path):
@@ -298,24 +284,15 @@ def test_lint_sees_the_raw_idioms(tmp_path):
         "    d = F.least(dra, F.lit(_SPH_CIRCLE) - dra)\n"
         '    q = "WHERE LEAST(abs(a.ra_c - b.ra_c), 36000 - abs(a.ra_c - b.ra_c))"\n'
         '    h = "ROUND(2*ASIN(SQRT(x)), 6)"\n'
+        '    ra, dec = sky_radec("c_custkey")\n'
     )
-    assert len(_idiom_sites(str(raw))) == 4
+    assert len(_idiom_sites(str(raw), _XMATCH_IDIOMS)) == 5
 
 
 def test_pair_search_idioms_only_in_their_twins():
-    pkg = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "analyse_the_sky_with_apache_spark_spark",
-    )
-    scanned, hits = 0, []
-    for root, _, files in os.walk(pkg):
-        for name in files:
-            if name.endswith(".py"):
-                path = os.path.join(root, name)
-                scanned += 1
-                hits += [f"{os.path.relpath(path, pkg)}: {h}" for h in _idiom_sites(path)]
-    assert scanned > 20
+    hits = _package_sites(_XMATCH_IDIOMS)
     assert not hits, (
         "pair searches go through operators.xmatch's twins (cell_join, "
-        "ra_dist / ra_dist_sql, haversine_sql):\n" + "\n".join(hits)
+        "ra_dist / ra_dist_sql, haversine_sql, sky_catalog / "
+        "sky_catalog_sql):\n" + "\n".join(hits)
     )

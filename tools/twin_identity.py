@@ -11,11 +11,14 @@ trees never share an import:
 ``plans`` builds every registry key (without running it) and records
 ``queryExecution().optimizedPlan()`` with expression ids, temp paths,
 uuids and the per-process bucket-table suffix stripped and every
-``Expand`` in canonical form (:func:`_canon_expand`), plus the oracle
-SQL with whitespace collapsed. ``rows`` runs every oracle in DuckDB and
-records the sha256 of its column names and sorted rows. ``diff`` lists
-the keys whose plan, oracle text or row hash differs. Both dumps resume
-from an existing OUT.json, so an interrupted run continues.
+``Expand`` in canonical form (:func:`_canon_expand`), the oracle SQL
+with whitespace collapsed, and the Spark jobs and stages the build
+itself ran (checkpointing loops run eagerly). ``rows`` runs every
+oracle in DuckDB (2 threads, 3 GB) and records the sha256 of its column
+names and sorted rows. ``diff`` lists the keys whose plan, oracle text
+or row hash differs, and, for information, those whose build jobs or
+stages moved. Both dumps resume from an existing OUT.json, so an
+interrupted run continues.
 
 Typical use: ``git clone`` the parent commit into a scratch directory,
 dump both trees at sf0.001, then run ``rows`` at every scale factor for
@@ -35,6 +38,10 @@ import threading
 
 #: per-oracle DuckDB budget; a run past it is recorded as an error
 _ROW_TIMEOUT_S = 240
+#: DuckDB caps for ``rows``: uncapped, the shingle connected-component
+#: oracles grow the process past 10 GB at sf0.1
+_DUCK_THREADS = 2
+_DUCK_MEMORY = "3GB"
 
 
 def _split_top(text: str) -> list[str]:
@@ -140,6 +147,9 @@ def _norm_plan(text: str) -> str:
     text = re.sub(r"#\d+L?", "", text)
     text = re.sub(r"(file:)?/tmp/[^\s,\]\)]*", "<tmp>", text)
     text = re.sub(r"\b[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}\b", "<uuid>", text)
+    # CollectMetrics prints the id of the DataFrame that declared it,
+    # which counts every DataFrame the process built before
+    text = re.sub(r"(CollectMetrics \w+, \[.*\]), \d+$", r"\1", text, flags=re.M)
     text = _canon_expand(text)
     return re.sub(r"\b(bkt_\w+?_[0-9a-f]{8})_\d+\b", r"\1", text)
 
@@ -157,19 +167,23 @@ def _load(tree: str, out: str):
 def dump_plans(tree: str, sf_dir: str, out: str, keys: list[str]) -> None:
     registry, done = _load(tree, out)
     from analyse_the_sky_with_apache_spark_spark.session import get_spark
+    from perfbench.layers import SparkCounters
 
     qs, oracles = registry.queries(), registry.oracle_sql()
     spark = get_spark("twin-identity")
+    counters = SparkCounters(spark)
     for k in keys or sorted(qs):
         if k in done:
             continue
+        job0, stage0 = counters.ids()
         try:
             df = qs[k](spark, sf_dir)
             plan = _norm_plan(df._jdf.queryExecution().optimizedPlan().toString())
         except Exception as e:  # noqa: BLE001
             plan = f"ERROR {type(e).__name__}: {str(e)[:200]}"
+        job1, stage1 = counters.ids()
         sql = " ".join(oracles[k].split()) if k in oracles else None
-        done[k] = {"plan": plan, "oracle": sql}
+        done[k] = {"plan": plan, "oracle": sql, "jobs": [job1 - job0, stage1 - stage0]}
         json.dump(done, open(out, "w"))
     spark.stop()
 
@@ -185,7 +199,9 @@ def dump_rows(tree: str, sf_dir: str, out: str, keys: list[str]) -> None:
     from tools.canon import duck_views
 
     oracles = registry.oracle_sql()
-    con = duckdb.connect()
+    con = duckdb.connect(
+        config={"threads": _DUCK_THREADS, "memory_limit": _DUCK_MEMORY}
+    )
     duck_views(con, sf_dir)
     for k in keys or sorted(oracles):
         if k in done or k not in oracles:
@@ -224,6 +240,14 @@ def diff(parent: str, change: str) -> int:
                 ):
                     print(f"    {line[:200]}")
         bad += len(errors) + (len(changed) if field == "rows" else 0)
+    moved = [
+        f"  {k}: {a[k]['jobs']} -> {b[k]['jobs']}"
+        for k in sorted(set(a) & set(b))
+        if "jobs" in a[k] and "jobs" in b[k] and a[k]["jobs"] != b[k]["jobs"]
+    ]
+    if moved:
+        print(f"build [jobs, stages]: {len(moved)} keys differ")
+        print("\n".join(moved))
     missing = sorted(set(a) ^ set(b))
     if missing:
         print(f"keys in only one dump: {missing}")
