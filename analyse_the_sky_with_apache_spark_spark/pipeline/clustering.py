@@ -31,7 +31,7 @@ from ..functions.exact import (
     md5_int,
     md5_int_sql,
 )
-from ..operators.xmatch import sky_catalog, sky_catalog_sql
+from ..operators.xmatch import cell_join, sky_catalog, sky_catalog_sql
 from ..registry import register
 from .closure import components, components_sql
 
@@ -758,7 +758,7 @@ def cluster_grid_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs an ε-neighbor graph over n points (the n² trap the xmatch
     kernels exist to avoid); the grid form aggregates points ONCE into
     cells (map-side partials, shuffle = #occupied cells), and all the
-    graph work — adjacency (8 neighbor offsets as an equi-join on
+    graph work — adjacency (`cell_join` at width 1, an equi-join on
     shifted keys), connected components (`components`, rounds bounded
     by the cluster diameter in cells) — happens in CELL space, which is
     thousands of times smaller than the data. DuckDB's recursive-CTE
@@ -790,13 +790,11 @@ def cluster_grid_density(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("x", "y", "n", (F.col("x") * 100 + F.col("y")).alias("node_id"))
         .localCheckpoint(eager=True)
     )
-    a, b = core.alias("a"), core.alias("b")
-    pairs = a.join(
-        b,
-        (F.abs(F.col("a.x") - F.col("b.x")) <= 1)
-        & (F.abs(F.col("a.y") - F.col("b.y")) <= 1)
-        & (F.col("a.node_id") < F.col("b.node_id")),
-    ).select(F.col("a.node_id").alias("ia"), F.col("b.node_id").alias("ib"))
+    pairs = cell_join(
+        core, core, ("x", "y"), ("x", "y"), (1, 1),
+        home_cols=(F.col("node_id").alias("ia"),),
+        away_cols=(F.col("node_id").alias("ib"),),
+    ).filter(F.col("ia") < F.col("ib")).select("ia", "ib")
     labels = components(core.select("node_id"), pairs)
     return (
         labels.join(core, "node_id")

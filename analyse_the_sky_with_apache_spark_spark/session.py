@@ -23,6 +23,21 @@ Config rationale (SURVEY.md §4):
   and catalog.load_table converts to a proper timestamp column.
 - Arrow enabled: collect()/createDataFrame and all pandas_udf boundaries
   move columnar batches instead of pickled rows.
+- ``spark.sql.codegen.cache.maxEntries`` = ``CODEGEN_CACHE_ENTRIES``:
+  Spark keeps each Janino-compiled class in a cache of 100 entries by
+  default, and one pass of the ten headline keys plus the HLL sketch
+  needs about 150 distinct classes, so the cache evicted in a cycle and
+  every warm pass compiled 85–134 classes again (0–10 at 2048; median
+  CPU per pass 8.1 → 6.7 s at sf0.02, local[4]). One sweep of all 67
+  bench.py keys compiles about 1,210 distinct classes (sf0.01), so 2048
+  holds it: a second sweep compiles 56 again, against 1,445 at 100.
+  The JVM keeps ~25 MB more in use after the headline passes, ~75 MB
+  after a sweep of every bench.py key. The conf is static (read once, when the JVM builds its codegen cache), so it
+  is set in ``get_spark``'s builder and not in ``_RUNTIME_CONFS``:
+  ``ensure_confs`` cannot set it at runtime, and a session the driver
+  builds itself keeps Spark's 100. Plans and results do not depend on
+  it; it only decides whether the same generated source is compiled
+  again.
 """
 
 from __future__ import annotations
@@ -30,6 +45,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: generated classes Spark keeps compiled (``spark.sql.codegen.cache.
+#: maxEntries``, static; see "Config rationale" above).
+CODEGEN_CACHE_ENTRIES = 2048
 
 #: confs that are runtime-settable on any session (all SQL confs).
 _RUNTIME_CONFS: dict[str, str] = {
@@ -113,6 +132,7 @@ def get_spark(app_name: str = "analyse-the-sky-spark") -> SparkSession:
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.shuffle.partitions", "32" if cpus == "*" else cpus)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in _RUNTIME_CONFS.items():
         if v == "auto":  # resolved per-session in ensure_confs

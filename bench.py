@@ -5,12 +5,17 @@ registry at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line::
 
     {"metric": "headline_total", "value": N, "unit": "sec",
-     "queries": {"agg_group_basic": sec, ...}, "sf": 0.1}
+     "queries": {"agg_group_basic": sec, ...}, "sf": 0.1,
+     "codegen": {"compiles": n, "compile_ms": x}}
 
 Timing = plan construction + execution + collect (warm session, median of
 ``$SPARK_GRAFT_BENCH_RUNS`` runs, default 3, after 1 warm-up). The first
 Spark action in a session pays JVM/codegen startup; the warm-up keeps the
 per-query numbers comparable to BASELINE.md, which measured warm medians.
+``codegen`` counts the Janino compiles of the timed runs (after the
+warm-up): each key's first run compiles its classes, so a count far
+above the keys' distinct working set means some key's generated source
+changes from build to build, or the codegen class cache evicts.
 """
 
 from __future__ import annotations
@@ -127,6 +132,18 @@ EXTENDED = (
 )
 
 
+def codegen_totals(spark) -> tuple[int, float]:
+    """Janino compiles so far in this JVM and their total milliseconds,
+    from Spark's ``CodegenMetrics`` compilation-time histogram (count,
+    and mean × count; the mean is over the histogram's sample)."""
+    h = (
+        spark.sparkContext._jvm.org.apache.spark.metrics.source
+        .CodegenMetrics.METRIC_COMPILATION_TIME()
+    )
+    n = h.getCount()
+    return n, h.getSnapshot().getMean() * n
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
@@ -154,6 +171,7 @@ def main() -> int:
     # warm-up: JVM + codegen + parquet footer caches
     qs["agg_group_basic"](spark, sf_dir).collect()
 
+    compiles0, compile_ms0 = codegen_totals(spark)
     per_query: dict[str, float] = {}
     for key in HEADLINE + EXTENDED:
         fn = qs[key]
@@ -163,6 +181,7 @@ def main() -> int:
             fn(spark, sf_dir).collect()
             samples.append(time.perf_counter() - t0)
         per_query[key] = round(statistics.median(samples), 4)
+    compiles, compile_ms = codegen_totals(spark)
 
     print(
         json.dumps(
@@ -175,6 +194,10 @@ def main() -> int:
                     sum(per_query[k] for k in EXTENDED), 4
                 ),
                 "sf": sf,
+                "codegen": {
+                    "compiles": compiles - compiles0,
+                    "compile_ms": round(compile_ms - compile_ms0, 1),
+                },
             }
         )
     )
