@@ -26,7 +26,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, session_checkpoint
+from ..catalog import load_table, local_frame, session_checkpoint
 from ..functions.exact import grid, grid_sql, md5_int, md5_int_sql
 from ..pipeline.closure import components_sql
 from ..pipeline.dedup import NEAR_DUP_PAIRS_SQL
@@ -263,7 +263,8 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_nodes"),
         F.sum(F.col("d") * (F.col("d") - 1) / 2).cast("long").alias("w"),
     ).collect()[0]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 n_edges,
@@ -2125,9 +2126,7 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _edges_cached(spark, sf_dir, strong=True)
     adj = _adjacency(spark, sf_dir, strong=True)
     deg = _degrees(adj)
-    ks = spark.createDataFrame(
-        [(2,), (4,), (6,), (8,), (12,)], "k BIGINT"
-    )
+    ks = local_frame(spark, [(2,), (4,), (6,), (8,), (12,)], "k BIGINT")
     club = deg.crossJoin(F.broadcast(ks)).where(
         F.col("d") > F.col("k")
     ).select("k", "node")

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, local_frame
 from ..functions.exact import dsum, dsum_sql, grid, grid_sql
 from ..registry import register
 from .asof import asof_join
@@ -248,7 +248,7 @@ def join_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     astronomy coordinate cross-match, SURVEY.md §2.12).
     """
     ev = load_table(spark, sf_dir, "events")
-    b = spark.createDataFrame(_BUCKETS, ["lo", "hi", "name"])
+    b = local_frame(spark, _BUCKETS, "lo DOUBLE, hi DOUBLE, name STRING")
     return (
         ev.join(
             F.broadcast(b),

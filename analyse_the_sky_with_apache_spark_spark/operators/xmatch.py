@@ -41,7 +41,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, local_frame
 from ..functions.exact import (
     grid,
     grid_sql,
@@ -2384,8 +2384,8 @@ def lightcurve_string_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     mm = ev.groupBy("event_type").agg(
         F.min(v10).alias("mn"), F.max(v10).alias("mx")
     )
-    periods = ev.sparkSession.createDataFrame(
-        [(int(p * day_us),) for p in _PDM_PERIODS_D], "p_us LONG"
+    periods = local_frame(
+        spark, [(int(p * day_us),) for p in _PDM_PERIODS_D], "p_us LONG"
     )
     b = (
         ev.join(mm, "event_type")

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, local_frame
 from ..functions.exact import (
     grid,
     grid_sql,
@@ -293,7 +293,8 @@ def kmeans_lloyd_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     final = assign(cents).groupBy("cluster").agg(
         F.count(F.lit(1)).cast("long").alias("n_members")
     )
-    l1df = spark.createDataFrame(
+    l1df = local_frame(
+        spark,
         [(cl, v) for cl, v in sorted(l1.items())],
         "cluster BIGINT, centroid_l1 BIGINT",
     )

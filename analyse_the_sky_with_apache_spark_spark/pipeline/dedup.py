@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import fan_out, load_table, session_checkpoint
+from ..catalog import fan_out, load_table, local_frame, session_checkpoint
 from ..functions.exact import grid_sql, md5_int_sql
 from ..registry import register
 from .closure import components, components_sql
@@ -976,7 +976,8 @@ def dedup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             (float(n_tp) / n_truth) if n_truth else 0.0,
         )
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         row,
         "n_truth BIGINT, n_cand BIGINT, n_tp BIGINT,"
         " precision DOUBLE, recall DOUBLE",

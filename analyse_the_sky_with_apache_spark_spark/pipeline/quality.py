@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, local_frame
 from ..functions.exact import grid, grid_sql, md5_int, md5_int_sql
 from ..registry import register
 
@@ -1423,7 +1423,8 @@ def dq_benford_firstdigit(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = d.groupBy("digit").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     ).localCheckpoint(eager=True)
-    p = o.sparkSession.createDataFrame(
+    p = local_frame(
+        spark,
         [(dg, float(f"{pb}e0")) for dg, pb in _BENFORD_P],
         "digit INT, pb DOUBLE",
     )
@@ -1729,7 +1730,8 @@ def audit_cross_run_determinism(spark: SparkSession, sf_dir: str) -> DataFrame:
         hashes = [run_hash(n) for n in _AUDIT_CONFS]
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", original)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             ("run_a", _AUDIT_CONFS[0], hashes[0]),
             ("run_b", _AUDIT_CONFS[1], hashes[1]),

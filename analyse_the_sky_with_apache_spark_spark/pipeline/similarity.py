@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, local_frame
 from ..functions.exact import grid, grid_sql
 from ..registry import register
 
@@ -859,7 +859,7 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         (rank, int(vid), rels[vid]) for rank, vid in enumerate(selected)
     ]
-    return spark.createDataFrame(rows, "rank INT, vec_id BIGINT, rel BIGINT")
+    return local_frame(spark, rows, "rank INT, vec_id BIGINT, rel BIGINT")
 
 
 #: per-query retrieval: query sample stride and neighbors returned.

@@ -1,4 +1,4 @@
-"""Physical-plan inspection helpers.
+"""Physical-plan inspection helper.
 
 Correctness checks prove the values; these prove the PLAN — that a filter
 reached the parquet reader, a dimension broadcast, a top-k skipped the
@@ -29,35 +29,3 @@ def plan_of(df: DataFrame, mode: str = "formatted") -> str:
         df._jdf.queryExecution(), mode
     )
 
-
-def has_node(df: DataFrame, node: str) -> bool:
-    """True if the physical plan contains an operator whose name includes
-    ``node`` (e.g. "BroadcastHashJoin", "TakeOrderedAndProject")."""
-    return node in plan_of(df)
-
-
-def pushed_filters(df: DataFrame) -> str:
-    """The ``PushedFilters: [...]`` line of the scan, or '' if none."""
-    for line in plan_of(df).splitlines():
-        if "PushedFilters" in line:
-            return line.strip()
-    return ""
-
-
-def read_schema(df: DataFrame) -> str:
-    """The ``ReadSchema: ...`` line of the scan — what the reader will
-    actually decode; columns absent here are pruned at the source."""
-    for line in plan_of(df).splitlines():
-        if "ReadSchema" in line:
-            return line.strip()
-    return ""
-
-
-def exchange_count(df: DataFrame) -> int:
-    """Number of Exchange (shuffle/broadcast-exchange) nodes in the plan —
-    the scale-cost headline of any query."""
-    return sum(
-        1
-        for line in plan_of(df).splitlines()
-        if line.strip().startswith("(") and "Exchange" in line
-    )

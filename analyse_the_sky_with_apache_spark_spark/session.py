@@ -21,8 +21,12 @@ Config rationale (SURVEY.md §4):
   TIMESTAMP(NANOS) which Spark 4 refuses to read natively
   (PARQUET_TYPE_ILLEGAL). With the flag, ts arrives as BIGINT nanoseconds
   and catalog.load_table converts to a proper timestamp column.
-- Arrow enabled: collect()/createDataFrame and all pandas_udf boundaries
-  move columnar batches instead of pickled rows.
+- Arrow enabled: collect()/toPandas, pandas or Arrow input to
+  createDataFrame, and all pandas_udf boundaries move columnar batches
+  instead of pickled rows. A Python *list* handed to createDataFrame
+  does not: it goes through ``sc.parallelize`` and runs Python tasks on
+  every execution. Build driver-side rows with ``catalog.local_frame``,
+  which sends them as one Arrow table (a Catalyst ``LocalRelation``).
 - ``spark.sql.codegen.cache.maxEntries`` = ``CODEGEN_CACHE_ENTRIES``:
   Spark keeps each Janino-compiled class in a cache of 100 entries by
   default, and one pass of the ten headline keys plus the HLL sketch

@@ -23,7 +23,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, local_frame
 from ..functions.exact import dsum, dsum_sql, grid, grid_sql
 from ..registry import register
 
@@ -458,16 +458,23 @@ def join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).parquet(part_dir)
         with open(done, "w") as f:
             f.write("ok")
+    # the dim is a table too: a filter over literal rows is folded into
+    # the LocalRelation at optimization, and with no filter left on the
+    # dim side Spark inserts no pruning subquery.
+    dim_dir = os.path.join(_SCRATCH, "event_type_dim")
+    if not os.path.exists(os.path.join(dim_dir, "_SUCCESS")):
+        local_frame(
+            spark,
+            [
+                ("click", "engagement"),
+                ("purchase", "revenue"),
+                ("view", "engagement"),
+                ("signup", "acquisition"),
+            ],
+            "event_type STRING, category STRING",
+        ).write.mode("overwrite").parquet(dim_dir)
     ev = spark.read.parquet(part_dir)
-    dim = spark.createDataFrame(
-        [
-            ("click", "engagement"),
-            ("purchase", "revenue"),
-            ("view", "engagement"),
-            ("signup", "acquisition"),
-        ],
-        "event_type STRING, category STRING",
-    ).filter(F.col("category") == "revenue")
+    dim = spark.read.parquet(dim_dir).filter(F.col("category") == "revenue")
     return (
         ev.join(F.broadcast(dim), "event_type")
         .groupBy("category")
@@ -710,7 +717,8 @@ def scan_parquet_footer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                         st.null_count if st is not None else None,
                     )
                 )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "row_group BIGINT, column_name STRING, num_values BIGINT, "
         "min_value BIGINT, max_value BIGINT, null_count BIGINT",
@@ -1161,7 +1169,8 @@ def txn_log_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_file = counts.groupBy(base.alias("file")).agg(
         F.sum("n").cast("long").alias("n_rows")
     )
-    meta = spark.createDataFrame(
+    meta = local_frame(
+        spark,
         [
             (os.path.basename(p), removed[p], removed[p] <= horizon)
             for p in paths
@@ -1430,7 +1439,7 @@ def txn_log_conflict_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         "txn STRING, base_version BIGINT, n_conflicts BIGINT, "
         "conflicting_files STRING, rows_at_risk BIGINT, commit_ok BOOLEAN"
     )
-    clean = spark.createDataFrame(clean_rows, schema)
+    clean = local_frame(spark, clean_rows, schema)
     if not conflict_meta:
         return clean.orderBy("txn")
     # Evidence scan: ONE distributed read over every conflicted file
@@ -1446,8 +1455,8 @@ def txn_log_conflict_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).cast("long").alias("n_rows"))
     )
-    meta = spark.createDataFrame(
-        conflict_meta, "txn STRING, base_version BIGINT, "
+    meta = local_frame(
+        spark, conflict_meta, "txn STRING, base_version BIGINT, "
         "n_conflicts BIGINT, file STRING"
     )
     conflicted = (
@@ -2059,8 +2068,8 @@ def txn_log_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"{grid_sql('o_totalprice', 2)}")
         ).alias("final_cents"),
     )
-    report = spark.createDataFrame(
-        rows, "branch STRING, n_staged BIGINT, n_base BIGINT, "
+    report = local_frame(
+        spark, rows, "branch STRING, n_staged BIGINT, n_base BIGINT, "
         "delta_micro BIGINT, passed BOOLEAN"
     ).withColumn("published", F.col("passed"))
     return (

@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..catalog import local_frame
 from ..functions.exact import dsum, dsum_sql, grid, grid_sql, md5_int, md5_int_sql
 from ..operators.windows import session_starts_sql
 from ..registry import register
@@ -257,9 +258,7 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    return spark.createDataFrame(
-        sorted(acc), "batch_id BIGINT, n_rows BIGINT"
-    )
+    return local_frame(spark, sorted(acc), "batch_id BIGINT, n_rows BIGINT")
 
 
 @register(
@@ -1011,9 +1010,7 @@ def stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    return spark.createDataFrame(
-        sorted(acc), "batch_id BIGINT, n_rows BIGINT"
-    )
+    return local_frame(spark, sorted(acc), "batch_id BIGINT, n_rows BIGINT")
 
 
 def _make_jsonl_stream_sink_source():
@@ -1219,7 +1216,8 @@ def stream_update_mode_emissions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         sorted(acc),
         "batch_id BIGINT, day DATE, event_type STRING, n BIGINT, "
         "sum_value DOUBLE",
@@ -1452,7 +1450,8 @@ def stream_dedup_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             new_keys = df.select("user_id", "event_type").distinct()
         n_new = new_keys.count()
         new_keys.write.mode("append").parquet(index_path)
-        ss.createDataFrame(
+        local_frame(
+            ss,
             [(int(batch_id), n_rows, n_new, n_dup)],
             "batch_id LONG, n_rows LONG, n_new_keys LONG, n_dup_rows LONG",
         ).write.mode("append").parquet(stats_path)
@@ -1639,7 +1638,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("k", "op", "cents")
         )
         if cur["path"] is None:
-            state = ss.createDataFrame([], "k LONG, balance_cents LONG")
+            state = local_frame(ss, [], "k LONG, balance_cents LONG")
         else:
             state = ss.read.parquet(cur["path"])
         merged = state.join(comp, "k", "full_outer").select(
@@ -1668,7 +1667,8 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         new_state.write.mode("overwrite").parquet(new_path)
         cur["path"] = new_path
         state_rows = ss.read.parquet(new_path).count()
-        ss.createDataFrame(
+        local_frame(
+            ss,
             [
                 (
                     int(batch_id), n_ops,
