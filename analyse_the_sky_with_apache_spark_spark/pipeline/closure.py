@@ -4,7 +4,10 @@
 :func:`components_sql` renders the same closure as the DuckDB recursive
 CTE the oracles check it against. Every key that turns pairs into
 clusters — near-dup documents, embedding duplicates, repeat sky
-detections, dense grid cells, bright-pixel blobs — goes through them.
+detections, dense grid cells — goes through them. Bright-pixel blobs
+are not pairs: `sky_source_extract` labels them inside its per-tile
+FITS kernel (``sources.fits._label8``), and only its oracle uses
+:func:`components_sql`.
 
 This module registers no query, so a module the registry loads early
 (``sources.fits``, ``operators.xmatch``) can import it at module level

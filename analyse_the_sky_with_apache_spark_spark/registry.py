@@ -25,7 +25,10 @@ Discipline enforced by convention (SURVEY.md §5.3):
   ``pipeline.closure.components``/``components_sql``, and run a BFS
   over the co-purchase graph through ``operators.graph._bfs``/
   ``_bfs_sql`` — no hand-typed min-label loop or recursive ``reach``
-  CTE.
+  CTE;
+- decode FITS only through ``sources.fits.fits_scan``/``fits_tiles``
+  (the one ``binaryFile`` listing and ``mapInArrow`` kernel), and render
+  oracle pixels only through ``fits_pixels_sql``.
 """
 
 from __future__ import annotations

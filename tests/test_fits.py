@@ -4,6 +4,10 @@ The oracle gate proves the nation round-trip; these tests pin the parts
 the oracle can't see: numeric TFORM coverage (K/E/D/I), multi-HDU
 walks that must SKIP image extensions by exact size arithmetic, string
 padding semantics, malformed-header failure, and the header-only walk.
+They also hold the module's twins to each other: the oracle pixel
+generator `fits_pixels_sql` against numpy and the Spark decode, the
+in-kernel blob labeller `_label8` against `components` and a BFS flood
+fill, and a lint that keeps the FITS idioms inside their helpers.
 """
 
 from __future__ import annotations
@@ -20,6 +24,12 @@ from analyse_the_sky_with_apache_spark_spark.sources.fits import (
     _BLOCK,
     _card,
     _pad,
+)
+from tests.test_graph_twins import (
+    _PKG,
+    _idiom_sites,
+    _package_sites,
+    _top_level_sources,
 )
 
 
@@ -220,3 +230,170 @@ def test_writers_stage_atomically(tmp_path, monkeypatch):
         np.zeros((2, 2), dtype=np.float32),
     )
     assert seen["dst"].endswith("img.fits")
+
+
+# --- the pixel twin: fits_pixels_sql (DuckDB) vs fits_tiles (Spark) ---
+
+
+@pytest.mark.parametrize(
+    "pixel_fn_name, dirname, wcs",
+    [
+        ("_linear_pixels", "sky_tiles_fits", False),
+        ("_quadratic_pixels", "sky_tiles_wcs_fits", True),
+    ],
+)
+def test_pixel_twins_agree(spark, duck, pixel_fn_name, dirname, wcs):
+    """For each pixel formula, the DuckDB rows of `fits_pixels_sql`, the
+    host function's numpy rows and the Spark decode of the staged tiles
+    through `fits_tiles` are the same ``(f, x, y, k, pid)`` set."""
+    import analyse_the_sky_with_apache_spark_spark.sources.fits as fits
+
+    pixel_fn = getattr(fits, pixel_fn_name)
+    want = []
+    for f in range(fits._IMG_TILES):
+        idx = np.arange(fits._IMG_NX * fits._IMG_NY, dtype=np.int64)
+        want += zip(
+            [f] * idx.size,
+            (idx % fits._IMG_NX).tolist(),
+            (idx // fits._IMG_NX).tolist(),
+            pixel_fn(f, idx).tolist(),
+            (f * fits._PID_STRIDE + idx).tolist(),
+        )
+    want.sort()
+    assert sorted(duck.execute(fits.fits_pixels_sql(pixel_fn)).fetchall()) == want
+
+    base = fits._stage_sky_tiles(
+        dirname, cards_fn=fits._wcs_cards if wcs else None, pixel_fn=pixel_fn
+    )
+    decoded = fits.fits_tiles(spark, base, fits._pixel_rows, fits._PIXEL_DDL)
+    assert sorted(tuple(r) for r in decoded.collect()) == want
+
+
+# --- the in-kernel blob labeller vs components and a BFS flood fill ---
+
+
+def _label_masks() -> dict[str, np.ndarray]:
+    """Hand-made detection masks, each shaped (ny, nx)."""
+    diagonal = np.zeros((7, 9), dtype=bool)
+    for i in range(7):
+        diagonal[i, i] = True  # touches only corner to corner
+    diagonal[0, 8] = diagonal[1, 7] = diagonal[2, 8] = True  # a zigzag
+    u_shape = np.zeros((8, 7), dtype=bool)
+    u_shape[0:7, 1] = u_shape[6, 1:6] = u_shape[0:7, 5] = True
+    singles = np.zeros((6, 8), dtype=bool)
+    singles[::2, ::2] = True
+    borders = np.zeros((8, 10), dtype=bool)
+    borders[0, 3:6] = borders[7, 0:2] = borders[3:5, 0] = True
+    borders[2:6, 9] = borders[7, 8:10] = borders[0, 0] = True
+    rng = np.random.default_rng(7)
+    return {
+        "diagonal": diagonal,
+        "u_shape": u_shape,
+        "singles": singles,
+        "full": np.ones((6, 8), dtype=bool),
+        "borders": borders,
+        "random": rng.random((12, 15)) < 0.45,
+    }
+
+
+def _pairs8(mask: np.ndarray, ids: np.ndarray) -> list[tuple[int, int]]:
+    """Every 8-adjacent pair of mask pixels, once."""
+    ny, nx = mask.shape
+    out = []
+    for y, x in zip(*np.nonzero(mask)):
+        for dy, dx in ((0, 1), (1, -1), (1, 0), (1, 1)):
+            yy, xx = y + dy, x + dx
+            if 0 <= yy < ny and 0 <= xx < nx and mask[yy, xx]:
+                out.append((int(ids[y, x]), int(ids[yy, xx])))
+    return out
+
+
+def test_label8_matches_flood_fill_and_components(spark):
+    """`_label8` (the `sky_source_extract` kernel's labeller) gives every
+    mask pixel its blob's minimum id, exactly as the BFS flood fill of
+    `tests/test_round10_ops.py` and `pipeline.closure.components` do,
+    and leaves every other pixel at int64 max."""
+    from analyse_the_sky_with_apache_spark_spark.pipeline.closure import (
+        components,
+    )
+    from analyse_the_sky_with_apache_spark_spark.sources.fits import _label8
+    from tests.test_round10_ops import _flood_fill
+
+    want, nodes, pairs = {}, [], []
+    for n, (name, mask) in enumerate(_label_masks().items()):
+        ids = n * 1000 + np.arange(mask.size, dtype=np.int64).reshape(mask.shape)
+        lab = _label8(mask, ids)
+        assert (lab[~mask] == np.iinfo(np.int64).max).all(), name
+        got = {int(ids[y, x]): int(lab[y, x]) for y, x in zip(*np.nonzero(mask))}
+        flood = {}
+        for comp in _flood_fill({(int(x), int(y)) for y, x in zip(*np.nonzero(mask))}):
+            root = min(int(ids[y, x]) for x, y in comp)
+            flood.update({int(ids[y, x]): root for x, y in comp})
+        assert got == flood, name
+        want.update(got)
+        nodes += [(i,) for i in got]
+        pairs += _pairs8(mask, ids)
+    assert len(set(want.values())) > len(_label_masks())  # several blobs
+
+    labels = components(
+        spark.createDataFrame(nodes, "node_id long"),
+        spark.createDataFrame(pairs, "ia long, ib long"),
+    )
+    assert dict(labels.collect()) == want
+
+
+# --- lint: the FITS idioms live only in their helpers ---
+
+#: FITS idioms searched in sources/fits.py (whitespace-insensitive,
+#: lowercased, `tests.test_graph_twins._flat`) and the top-level
+#: definitions allowed to hold each one.
+_FITS_IDIOMS = {
+    # the archive listing
+    r"[\"']binaryfile[\"']": {"sources/fits.py:fits_scan"},
+    # the image-HDU decode and its centi grid
+    r"parse_fits_images\(": {
+        "sources/fits.py:fits_tiles",
+        "sources/fits.py:parse_fits_images",
+    },
+    r"np\.floor\(": {"sources/fits.py:fits_tiles"},
+    # build-time jobs: only the two self-joins' documented checkpoints
+    r"localcheckpoint\(": {
+        "sources/fits.py:sky_wcs_xmatch",
+        "sources/fits.py:sky_tile_overlap_graph",
+    },
+}
+
+#: the oracle pixel generator, searched in every package module
+_PIXEL_SQL_IDIOMS = {r"crossjoinrange\(": {"sources/fits.py:fits_pixels_sql"}}
+
+
+def test_fits_lint_sees_hand_decodes(tmp_path):
+    raw = tmp_path / "raw.py"
+    raw.write_text(
+        "def key(spark):\n"
+        '    q = """SELECT * FROM range(0, 5) f(f)\n'
+        '           CROSS JOIN range(0, 1200) t(i)"""\n'
+        "    def kernel(batches):\n"
+        "        for pdf in batches:\n"
+        '            for buf in pdf["content"]:\n'
+        "                for _c, px in parse_fits_images(bytes(buf)):\n"
+        "                    yield np.floor(px * 100.0 + 0.5)\n"
+        '    return (spark.read.format("binaryFile").load(base)\n'
+        "            .mapInPandas(kernel, ddl).localCheckpoint(eager=True))\n"
+    )
+    assert len(_idiom_sites(str(raw), _FITS_IDIOMS)) == 4
+    assert len(_idiom_sites(str(raw), _PIXEL_SQL_IDIOMS)) == 1
+
+
+def test_fits_idioms_only_in_their_helpers():
+    path = os.path.join(_PKG, "sources", "fits.py")
+    sources = _top_level_sources(path)
+    for allowed in (*_FITS_IDIOMS.values(), *_PIXEL_SQL_IDIOMS.values()):
+        for site in allowed:
+            assert site.split(":")[1] in sources, site
+    hits = _idiom_sites(path, _FITS_IDIOMS) + _package_sites(_PIXEL_SQL_IDIOMS)
+    assert not hits, (
+        "decode FITS through sources.fits' fits_scan / fits_tiles, render "
+        "oracle pixels through fits_pixels_sql, and checkpoint only the "
+        "two documented self-joins:\n" + "\n".join(hits)
+    )

@@ -206,7 +206,10 @@ def _package_sites(idioms: dict[str, set[str]]) -> list[str]:
 
 
 #: hand-typed closures, searched in every package module, and the
-#: definitions allowed to hold each one.
+#: definitions allowed to hold each one. Labelling the pixels of one
+#: image tile (``sources/fits.py:_label8``, a numpy min over each 3×3
+#: neighbourhood inside the decode kernel) is not a pair closure: no
+#: pair table exists and no label crosses a tile, so it is not listed.
 _CLOSURE_IDIOMS = {
     # a recursive CTE named reach: the component or BFS closure
     r"reach(\([\w,]*\))?as(materialized)?\(": {

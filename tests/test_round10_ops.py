@@ -33,9 +33,31 @@ from tests.conftest import SF_DIR
 load_all_modules()
 
 
+def _flood_fill(bright):
+    """8-connected components of a set of (x, y) pixels, one list of
+    pixels each — BFS, no label propagation, no SQL."""
+    seen, comps = set(), []
+    for start in sorted(bright):
+        if start in seen:
+            continue
+        comp, queue = [], [start]
+        seen.add(start)
+        while queue:
+            x, y = queue.pop()
+            comp.append((x, y))
+            for dx in (-1, 0, 1):
+                for dy in (-1, 0, 1):
+                    nxy = (x + dx, y + dy)
+                    if nxy in bright and nxy not in seen:
+                        seen.add(nxy)
+                        queue.append(nxy)
+        comps.append(comp)
+    return comps
+
+
 def _flood_fill_catalog():
     """Pure-python 8-connected component catalog over the rebuilt
-    tiles — BFS, no label propagation, no SQL."""
+    tiles — `_flood_fill`'s BFS, no label propagation, no SQL."""
     out = []
     for f in range(_IMG_TILES):
         k = _linear_pixels(f, np.arange(_IMG_NX * _IMG_NY, dtype=np.int64))
@@ -43,21 +65,7 @@ def _flood_fill_catalog():
             (int(i % _IMG_NX), int(i // _IMG_NX)): int(k[i])
             for i in np.nonzero(k >= _SRC_THRESH)[0]
         }
-        seen = set()
-        for start in sorted(bright):
-            if start in seen:
-                continue
-            comp, queue = [], [start]
-            seen.add(start)
-            while queue:
-                x, y = queue.pop()
-                comp.append((x, y))
-                for dx in (-1, 0, 1):
-                    for dy in (-1, 0, 1):
-                        nxy = (x + dx, y + dy)
-                        if nxy in bright and nxy not in seen:
-                            seen.add(nxy)
-                            queue.append(nxy)
+        for comp in _flood_fill(bright):
             pid = min(f * 10000 + y * _IMG_NX + x for x, y in comp)
             xs = [x for x, _ in comp]
             ys = [y for _, y in comp]
